@@ -117,7 +117,7 @@ def dedup_minhash_signatures(spark, sf_dir):
     base = d.select("doc_id", shingle_hashes(sh).alias("h")).filter(F.size("h") > 0)
     return base.select(
         "doc_id",
-        F.array_join(minhash_signature(F.col("h")).cast("array<string>"), "-").alias("sig"),
+        F.array_join(minhash_signature("h").cast("array<string>"), "-").alias("sig"),
     ).orderBy("doc_id")
 
 
@@ -381,11 +381,12 @@ def dedup_cluster_components(spark, sf_dir):
     graph (operators/cc.py — the transitive-closure stage after LSH pair
     generation; A~B, B~C => one cluster even though A~C never collided).
     Edges here are deterministic consecutive-id chains (up to 10 nodes, so
-    min-label propagation genuinely iterates ~9 rounds — a single-hop star
-    would not exercise convergence); the oracle replays the exact fixpoint
-    with a recursive CTE.  Each round is one equi-join + groupBy-min on
-    node id with localCheckpoint lineage truncation — no cross product,
-    state is O(collided docs), not O(corpus)."""
+    min-label propagation genuinely iterates — 4 rounds + 1 confirming
+    with pointer jumping, ~9 without; a single-hop star would not exercise
+    convergence); the oracle replays the exact fixpoint with a recursive
+    CTE.  Each round is one label lookup (a window over the looked-up node
+    id) + groupBy-min on node id with localCheckpoint lineage truncation —
+    no cross product, state is O(collided docs), not O(corpus)."""
     from elasticsearch_hadoop_spark.operators.cc import duplicate_clusters
 
     ids = tbl(spark, sf_dir, "documents").select("doc_id")

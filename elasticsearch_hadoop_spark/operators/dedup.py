@@ -73,18 +73,25 @@ def _let(value: Column, body) -> Column:
     return F.transform(F.array(value), body).getItem(0)
 
 
-def _perm_min(hashes: Column, a: int, b: int) -> Column:
-    return F.array_min(
-        F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME))
+# One SQL expression, generated from MINHASH_PERMS / MINHASH_PRIME exactly
+# as the DuckDB oracle's signature fragment is (corpus/dedup.py _SIG_ITEMS).
+_SIGNATURE_SQL = "array({})".format(
+    ", ".join(
+        f"array_min(transform({{h}}, x -> ({a} * x + {b}) % {MINHASH_PRIME}))"
+        for a, b in MINHASH_PERMS
     )
+)
 
 
-def minhash_signature(hashes: Column, perms: list[tuple[int, int]] | None = None) -> Column:
-    """MinHash signature: array of per-permutation minima (null-free as long
-    as the doc has >= 1 shingle).  The hash array is let-bound: md5 runs
-    once per shingle, not once per (shingle, permutation)."""
-    perms = perms or MINHASH_PERMS
-    return _let(hashes, lambda hs: F.array(*[_perm_min(hs, a, b) for a, b in perms]))
+def minhash_signature(hashes: str) -> Column:
+    """MinHash signature of the shingle-hash array in column ``hashes``:
+    array of per-permutation minima (null-free as long as the doc has >= 1
+    shingle).  Parsed from SQL generated from the same constants as the
+    DuckDB oracle, so building it costs one round trip to the JVM instead
+    of several per Column operator.  Taking a named column keeps md5 once
+    per shingle: Catalyst's CollapseProject never inlines a non-cheap
+    producer into a consumer that references it more than once."""
+    return F.expr(_SIGNATURE_SQL.format(h=f"`{hashes}`"))
 
 
 def _bitsum(hashes: Column, j: int) -> Column:
@@ -159,7 +166,8 @@ def minhash_lsh_pairs(
             F.col(id_col),
             shingles(F.col(text_col), n).alias("__sh"),
         )
-        .withColumn("__sig", minhash_signature(shingle_hashes(F.col("__sh"))))
+        .withColumn("__h", shingle_hashes(F.col("__sh")))
+        .select(F.col(id_col), "__sh", minhash_signature("__h").alias("__sig"))
         # materialize the analyzer->shingle->md5->16-perm pipeline ONCE:
         # `base` is referenced FOUR times below (both sides of the band
         # self-join and both sides of the verify join), and Spark re-executes
@@ -172,20 +180,16 @@ def minhash_lsh_pairs(
         .localCheckpoint(eager=False)
     )
 
+    # one parsed expression, like minhash_signature: a Column-built lambda
+    # pays several JVM round trips per operator
     banded = base.select(
         id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.concat_ws(
-                        "-", F.transform(F.slice(F.col("__sig"), b * rows_per_band + 1, rows_per_band), lambda s: s.cast("string"))
-                    ).alias("key"),
-                ),
-            )
+        F.expr(
+            f"explode(transform(sequence(0, {bands - 1}), b -> named_struct('band', b, 'key', "
+            f"concat_ws('-', transform(slice(__sig, b * {rows_per_band} + 1, {rows_per_band}), "
+            "s -> CAST(s AS STRING))))))"
         ).alias("bk"),
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    ).select(id_col, "bk.band", "bk.key")
 
     a, b = banded.alias("a"), banded.alias("b")
     candidates = (

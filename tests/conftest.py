@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -13,6 +14,25 @@ def spark():
 
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a fresh Spark job group; return its result and
+    the number of Spark jobs it ran.  A job count is a cost the host's
+    speed cannot blur, so it can be pinned exactly."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")
