@@ -18,8 +18,10 @@ Parity map (reference op -> this module):
 - A7 dynamic index routing          -> ``index_pattern="logs-{field}"`` or
   ``"{field|date:yyyy-MM-dd}"`` -> ``_index`` column + ``partitionBy``
   (AbstractIndexExtractor / IndexFormatter parity)
-- A8 schema discovery               -> parquet is self-describing; field
-  include/exclude via ``fields=`` on read (es.read.field.include parity)
+- A8 schema discovery               -> every commit records the index
+  schema (ES keeps the mapping in cluster state) and reads pass it to
+  Spark; field include/exclude via ``fields=`` on read
+  (es.read.field.include parity)
 - A10 count                         -> ``count_index`` (``_count`` parity)
 - A11 scripted upsert               -> ``on_match={"col": Column}`` Spark
   expressions instead of painless scripts (UpdateBulkFactory parity)
@@ -54,6 +56,7 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from elasticsearch_hadoop_spark import txn
 from elasticsearch_hadoop_spark.durations import parse_duration
@@ -67,19 +70,28 @@ VALID_OPERATIONS = ("index", "create", "update", "upsert", "delete")
 VALID_MODES = ("append", "overwrite", "error", "ignore")
 
 
-def _merge_schema_json(stored: dict, new_schema) -> dict:
-    """Union a stored schema-JSON with a newly written frame's schema BY
-    FIELD NAME: stored fields keep their position and type (an ES mapping
-    conflict keeps the first mapping), new fields append in their frame
-    order.  Used only for _meta bookkeeping (rollover's empty-generation
-    schema); data reads still resolve their own schema from the files."""
-    fields = list(stored.get("fields", []))
-    seen = {f["name"] for f in fields}
-    for f in new_schema.jsonValue()["fields"]:
-        if f["name"] not in seen:
-            fields.append(f)
-            seen.add(f["name"])
-    return {**stored, "fields": fields}
+def _write_json(path: str, obj) -> None:
+    """Replace the JSON file ``path`` atomically: write a unique temp file,
+    then ``os.replace`` it over the target — a crash or a concurrent reader
+    sees the old or the new document, never a torn one."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
+def _written_schema(df: DataFrame, partition_cols: list[str]) -> dict:
+    """The schema (StructType JSON) a read of ``df`` returns once written
+    with ``partition_cols``: the frame's fields, partition columns last
+    (the Hive layout moves them there)."""
+    schema = df.schema.jsonValue()
+    schema["fields"].sort(key=lambda f: f["name"] in partition_cols)
+    return schema
 
 
 class IndexExistsError(RuntimeError):
@@ -134,14 +146,6 @@ class Catalog:
         except FileNotFoundError:
             return {"seq": 0, "pits": {}}
 
-    def _write_pits(self, state: dict) -> None:
-        # atomic replace: a concurrent reader sees the old or the new
-        # registry, never a torn file
-        tmp = f"{self._pits_path()}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._pits_path())
-
     def _mutate_pits(self, fn):
         """Run ``fn(state) -> (result, dirty)`` under an O_EXCL lock file
         so concurrent Catalog instances can't mint duplicate seq nonces or
@@ -177,7 +181,7 @@ class Catalog:
             state = self._read_pits()
             result, dirty = fn(state)
             if dirty:
-                self._write_pits(state)
+                _write_json(self._pits_path(), state)
             return result
         finally:
             try:
@@ -220,8 +224,7 @@ class Catalog:
             return {}
 
     def _write_meta(self, name: str, meta: dict) -> None:
-        with open(self._meta_path(name), "w") as f:
-            json.dump(meta, f)
+        _write_json(self._meta_path(name), meta)
 
     # --------------------------------------------------------------- aliases
     def _aliases_path(self) -> str:
@@ -259,8 +262,7 @@ class Catalog:
             aliases[alias] = {"indices": list(indices), "filter": filter}
         else:
             aliases[alias] = list(indices)
-        with open(self._aliases_path(), "w") as f:
-            json.dump(aliases, f)
+        _write_json(self._aliases_path(), aliases)
 
     @staticmethod
     def _alias_entry(aliases: dict, part: str) -> tuple[list[str], dict | None]:
@@ -272,8 +274,7 @@ class Catalog:
     def delete_alias(self, alias: str) -> None:
         aliases = self._read_aliases()
         aliases.pop(alias, None)
-        with open(self._aliases_path(), "w") as f:
-            json.dump(aliases, f)
+        _write_json(self._aliases_path(), aliases)
 
     def delete_by_query(self, name: str, query: str | dict) -> int:
         """_delete_by_query parity (the reference's SaveMode.Overwrite path
@@ -431,20 +432,10 @@ class Catalog:
         rolled = any(conditions.values())
         new_index = f"{m.group(1)}-{int(m.group(2)) + 1:06d}"
         if rolled and not dry_run:
-            # the old generation's schema: from its _meta when the write
-            # path recorded it (zero Spark work), else inferred from files
-            # (spark.read.parquet pays a footer job per call)
-            cur_meta = self._read_meta(current)
-            if cur_meta.get("schema"):
-                from pyspark.sql.types import StructType
-
-                schema = StructType.fromJson(cur_meta["schema"])
-            else:
-                schema = self.read_index(current).schema
-            self._create_empty_index(new_index, schema)
+            # the old generation's recorded schema: no Spark job
+            self._create_empty_index(new_index, self._read_files(current).schema)
             aliases[alias] = [*targets, new_index]
-            with open(self._aliases_path(), "w") as f:
-                json.dump(aliases, f)
+            _write_json(self._aliases_path(), aliases)
         return {
             "rolled_over": rolled and not dry_run,
             "dry_run": dry_run,
@@ -456,12 +447,11 @@ class Catalog:
 
     def _create_empty_index(self, name: str, schema) -> None:
         """Create an index as pure METADATA — empty directory + the Spark
-        schema persisted in ``_meta`` — exactly like ES, where index
-        creation touches no data nodes' segments.  The old shape wrote a
-        zero-row parquet file through a full Spark job (~0.7s each, paid
-        on EVERY rollover); ``_read_files`` special-cases the empty dir by
-        rebuilding the frame from the stored schema.  Index templates
-        resolve here like any new-index creation (write_index parity)."""
+        schema recorded in ``_meta`` — exactly like ES, where index
+        creation touches no data nodes' segments.  Reads use the recorded
+        schema like any other index's, so a directory with no files is
+        simply an index with 0 rows.  Index templates resolve here like any
+        new-index creation (write_index parity)."""
         os.makedirs(self.path(name), exist_ok=True)
         meta = self._read_meta(name)
         meta.update(
@@ -525,7 +515,12 @@ class Catalog:
         insert, ``delete`` = remove matching ``_id``s.  ``on_match`` maps
         column -> Column expression applied to matched rows (scripted-update
         parity, A11): expressions see the existing row's columns plus the
-        incoming row's values prefixed ``_new_``.  ``max_records_per_file``
+        incoming row's values prefixed ``_new_``.  Stored duplicates of an
+        ``_id`` (blind appends never dedupe) fare differently by shape: a
+        scripted update (``on_match``) rewrites and keeps EVERY stored copy
+        of a matched ``_id``, while a whole-document write (``index``,
+        ``upsert`` or ``update`` without ``on_match``) collapses them to
+        the one incoming document.  ``max_records_per_file``
         bounds output file sizes (the bulk-batch-size analogue at the
         storage layer; SCALE.md knobs) — essential when a partitionBy key
         concentrates rows.  ``sort_by`` sorts rows within each output task
@@ -665,15 +660,6 @@ class Catalog:
                 "updated_at": time.time(),
             }
         )
-        # keep the index's Spark schema in _meta (ES keeps the mapping in
-        # cluster state): overwrite/create set it outright; appends/merges
-        # union new fields in by name (first type wins, like an ES mapping
-        # conflict).  rollover reads it instead of paying a per-call
-        # schema-inference Spark job on the old generation.
-        if mode == "overwrite" or not existed:
-            meta["schema"] = out.schema.jsonValue()
-        elif meta.get("schema"):
-            meta["schema"] = _merge_schema_json(meta["schema"], out.schema)
         if tpl_mappings is not None and "mappings" not in meta:
             meta["mappings"] = tpl_mappings
         if pipeline_name:
@@ -808,8 +794,10 @@ class Catalog:
             replacements = w_id
         return untouched.unionByName(replacements, allowMissingColumns=True)
 
-    def _writer(self, df: DataFrame, partition_cols: list[str], max_records_per_file):
-        writer = df.write.mode("overwrite")
+    def _writer(
+        self, df: DataFrame, partition_cols: list[str], max_records_per_file, mode="overwrite"
+    ):
+        writer = df.write.mode(mode)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         if partition_cols:
@@ -838,34 +826,40 @@ class Catalog:
         validate=None,
     ) -> None:
         """Derive-and-replace commit: ``build(existing_df_or_None)`` returns
-        the index's new full contents.
+        the index's new full contents, and the commit records the schema
+        of what it wrote (``_written_schema``) for every later read.
 
-        Non-transactional: read once, write a temp dir, atomic swap (exactly
-        the old single-writer _commit).  Transactional: write the result to
-        an immutable uuid data dir and claim the next manifest version; if
-        another writer won the race, re-run ``build`` against the winner's
-        snapshot and try again (txn.commit_replace's optimistic loop).
+        Non-transactional: read once, write a temp dir, atomic swap
+        (``_commit``; the record lives in ``_meta``).  Transactional: write
+        the result to an immutable uuid data dir and claim the next
+        manifest version, whose body carries the record; if another writer
+        won the race, re-run ``build`` against the winner's snapshot and
+        try again (txn.commit_replace's optimistic loop).
 
         ``validate`` (when given) runs after the build's write job finishes
         but BEFORE the result becomes visible (pre-swap / pre-publish) — the
         hook that lets contract checks ride the write job's own Observation
         metrics instead of paying a separate pre-check job; a raise aborts
         the commit with the index untouched."""
-        self._assert_not_follower(name)
+        meta = self._read_meta(name)
+        self._assert_not_follower(name, meta)
         target = self.path(name)
         if not self.transactional:
             existing = (
                 self._read_files(name) if needs_existing and self.exists(name) else None
             )
-            self._commit(build(existing), name, partition_cols, replace=True,
+            self._commit(build(existing), name, partition_cols,
                          max_records_per_file=max_records_per_file,
                          validate=validate)
             return
-        txn.adopt(target)  # pre-existing plain data becomes committed v1
-        version, dirs = txn.latest(target)
+        # pre-existing plain data becomes committed v1
+        txn.adopt(target, meta.get("schema"))
+        version, dirs, schema = txn.snapshot(target)
 
-        def produce(dirs_: list[str]) -> str:
-            existing = self._read_dirs(dirs_) if (needs_existing and dirs_) else None
+        def produce(dirs_: list[str], schema_: dict | None) -> tuple[str, dict]:
+            existing = (
+                self._read_dirs(name, dirs_, schema_) if (needs_existing and dirs_) else None
+            )
             out = build(existing)
             d = txn.new_data_dir(target)
             self._writer(out, partition_cols, max_records_per_file).parquet(d)
@@ -877,9 +871,10 @@ class Catalog:
                     # eagerly rather than waiting for vacuum
                     shutil.rmtree(d, ignore_errors=True)
                     raise
-            return d
+            return d, _written_schema(out, partition_cols)
 
-        txn.commit_replace(target, version, produce(dirs), recompute=produce)
+        d, written = produce(dirs, schema)
+        txn.commit_replace(target, version, d, recompute=produce, schema=written)
 
     def _append_files(
         self,
@@ -888,23 +883,26 @@ class Catalog:
         partition_cols: list[str],
         max_records_per_file: int | None = None,
     ) -> None:
-        """Blind append.  Transactional mode writes a complete uuid data dir
-        first, then publishes it with a manifest-union claim — a lost race
-        retries only the (tiny) manifest write, never the data."""
-        self._assert_not_follower(name)
+        """Blind append; the record becomes the union of the index's and
+        the frame's schemas (txn.merge_schema_json).  A plain index records
+        it BEFORE the data job, so a crash leaves at worst an all-null
+        column, never written data readers cannot see.  Transactional mode
+        writes a complete uuid data dir first, then publishes it with a
+        manifest-union claim — a lost race retries only the (tiny) manifest
+        write, never the data."""
+        meta = self._read_meta(name)
+        self._assert_not_follower(name, meta)
         target = self.path(name)
+        schema = _written_schema(df, partition_cols)
         if not self.transactional:
-            writer = df.write.mode("append")
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", max_records_per_file)
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            writer.parquet(target)
+            meta["schema"] = txn.merge_schema_json(meta.get("schema"), schema, partition_cols)
+            self._write_meta(name, meta)
+            self._writer(df, partition_cols, max_records_per_file, mode="append").parquet(target)
             return
-        txn.adopt(target)  # pre-existing plain data becomes committed v1
+        txn.adopt(target, meta.get("schema"))  # pre-existing plain data becomes committed v1
         d = txn.new_data_dir(target)
         self._writer(df, partition_cols, max_records_per_file).parquet(d)
-        txn.commit_append(target, d)
+        txn.commit_append(target, d, schema=schema, partition_cols=partition_cols)
 
     def compact_index(self, name: str, target_files: int | None = None) -> None:
         """Compact an index's data into ``target_files`` files (default:
@@ -985,17 +983,16 @@ class Catalog:
         out = df.coalesce(target_shards) if kind == "shrink" else df.repartition(target_shards)
         # preserve dynamic-routing Hive layout, like compact_index
         partition_cols = ["_index"] if meta.get("index_pattern") else []
-        self._writer(out, partition_cols, None).parquet(self.path(target))
+        self._commit(out, target, partition_cols)
         # ES copies index settings (minus shard count) to the target —
         # but NOT follower identity: a resize target is a plain index, so
         # the ccr_* keys are stripped (copying them would mint a target
         # that refuses all writes and that ccr_poll tries to sync over
         # non-transactional parquet; ES likewise requires unfollow before
-        # resizing a follower)
-        if meta:
-            tmeta = {k: v for k, v in meta.items() if not k.startswith("ccr_")}
-            tmeta["resized_from"] = src
-            self._write_meta(target, tmeta)
+        # resizing a follower).  The commit's own schema record wins.
+        tmeta = {k: v for k, v in meta.items() if not k.startswith("ccr_")}
+        tmeta.update(self._read_meta(target), resized_from=src)
+        self._write_meta(target, tmeta)
         return {
             "source": src,
             "target": target,
@@ -1056,10 +1053,10 @@ class Catalog:
         path = self.path(names[0])
         if not txn.is_transactional(path):
             raise ValueError(f"index {names[0]!r} is not transactional")
-        dirs = txn.manifest_at(path, version)
+        _, dirs, schema = txn.snapshot(path, version)
         if not dirs:
             raise ValueError(f"version {version} of {names[0]!r} is empty")
-        return self._read_dirs(dirs)
+        return self._read_dirs(names[0], dirs, schema)
 
     def open_point_in_time(
         self, name: str, keep_alive: str = "5m", now: float | None = None
@@ -1173,95 +1170,63 @@ class Catalog:
                 out.extend(txn.vacuum(self.path(idx), min_age_seconds))
         return out
 
-    @staticmethod
-    def _single_write_job(paths: list[str]) -> bool:
-        """True when every data file under ``paths`` carries the SAME
-        part-file job UUID — i.e. one Spark write job produced them all.
-        One job writes one schema, so the mergeSchema footer-merge job
-        (a distributed footer read launched at PLANNING time, one extra
-        Spark job per read) is provably redundant and the single-footer
-        fast path is exact.  Any unrecognized filename or a second UUID
-        returns False — the reader then keeps full mergeSchema semantics
-        (ES dynamic-mapping drift parity for multi-commit appends).  The
-        driver-side listing is the same walk Spark's file index performs
-        at planning anyway."""
-        uuids: set[str] = set()
-        for p in paths:
-            for root, _dirs, files in os.walk(p):
-                for f in files:
-                    if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                        continue
-                    m = re.match(r"part-\d+-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})", f)
-                    if m is None:
-                        return False
-                    uuids.add(m.group(1))
-                    if len(uuids) > 1:
-                        return False
-        return True
-
-    def _read_dirs(self, dirs: list[str]) -> DataFrame:
-        reader = self.spark.read
-        if not self._single_write_job(dirs):
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*dirs)
+    def _read_dirs(self, idx: str, dirs: list[str], schema: dict | None) -> DataFrame:
+        """Read ``dirs`` with the schema their commit recorded: no footer
+        inference, so building the frame runs no Spark job and the columns
+        come out in the recorded order whatever the file listing order."""
+        if schema is None:
+            raise ValueError(f"index {idx!r} has no recorded schema")
+        return self.spark.read.schema(StructType.fromJson(schema)).parquet(*dirs)
 
     def _read_files(self, idx: str) -> DataFrame:
         """One resolved index's current contents: the latest manifest's data
-        dirs when the index is transactional, else the plain directory.
-        mergeSchema either way (ES dynamic-mapping drift parity — see
-        _read_resolved) unless every file came from one write job, where
-        the single-footer read is provably identical (_single_write_job)."""
+        dirs and schema when the index is transactional, else the plain
+        directory and the schema recorded in its ``_meta``."""
         path = self.path(idx)
         if txn.is_transactional(path):
-            _, dirs = txn.latest(path)
+            _, dirs, schema = txn.snapshot(path)
             if not dirs:
                 raise ValueError(f"index {idx!r} has no committed data")
-            return self._read_dirs(dirs)
-        if not os.listdir(path):
-            # metadata-only index (fresh rollover generation): rebuild the
-            # empty frame from the schema _create_empty_index persisted —
-            # StructType.fromJson round-trips the Spark schema exactly
-            meta = self._read_meta(idx)
-            if meta.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return self.spark.createDataFrame(
-                    [], StructType.fromJson(meta["schema"])
-                )
-        return self._read_dirs([path])
+            return self._read_dirs(idx, dirs, schema)
+        return self._read_dirs(idx, [path], self._read_meta(idx).get("schema"))
 
     def _commit(
         self,
         df: DataFrame,
         name: str,
         partition_cols: list[str],
-        replace: bool,
         max_records_per_file: int | None = None,
         validate=None,
     ) -> None:
-        """Write to a temp dir, atomically swap in (single-writer commit).
-        The transactional path never routes here — see _commit_build.
+        """Write to a temp dir, atomically swap in (single-writer commit),
+        and record the written schema in ``_meta``.  Until the swap the
+        record is the union of the old and new schemas, so a crash at any
+        point leaves at worst an all-null column, never data readers cannot
+        see.  The transactional path never routes here — see _commit_build.
         ``validate`` runs between the temp write and the swap — see
         _commit_build."""
         target = self.path(name)
         tmp = os.path.join(self.root, f".tmp-{name}-{uuid.uuid4().hex[:8]}")
-        writer = df.write.mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
+        self._writer(df, partition_cols, max_records_per_file).parquet(tmp)
         if validate is not None:
             try:
                 validate()
             except Exception:
                 shutil.rmtree(tmp, ignore_errors=True)
                 raise
+        schema = _written_schema(df, partition_cols)
+        meta = self._read_meta(name)
+        union = txn.merge_schema_json(meta.get("schema"), schema, partition_cols)
+        meta["schema"] = union
+        self._write_meta(name, meta)
         old = None
         if os.path.exists(target):
             old = os.path.join(self.root, f".old-{name}-{uuid.uuid4().hex[:8]}")
             os.rename(target, old)
         os.rename(tmp, target)
+        if union != schema:
+            meta["schema"] = schema
+            self._write_meta(name, meta)
         if old:
             shutil.rmtree(old, ignore_errors=True)
 
@@ -1359,11 +1324,9 @@ class Catalog:
         return [(idx, resolved[idx]) for idx in order]
 
     def _read_resolved(self, name: str) -> DataFrame:
-        # mergeSchema: ES dynamic-mapping parity — a blind append may add
-        # fields, and without it Spark takes ONE file's footer (listing-order
-        # dependent: the new column can silently vanish). Cost is one footer
-        # read per file at planning; an index with millions of files should
-        # persist its schema in _meta and pass it explicitly instead.
+        # each index reads with the schema its commits recorded (ES keeps
+        # the mapping in cluster state): a blind append's new field
+        # surfaces whatever the file listing order, and no footer is read
         pairs = self._resolve_parts(name)
         if len(pairs) == 1:
             n, flt = pairs[0]
@@ -1571,10 +1534,7 @@ class Catalog:
                 if not dirs:
                     return None  # slow path raises "no committed data"
             else:
-                if not os.listdir(path) and self._read_meta(idx).get("schema"):
-                    continue  # metadata-only empty generation: 0 rows
                 dirs = [path]
-            idx_files = 0
             for d in dirs:
                 for root, subdirs, files in os.walk(d):
                     subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
@@ -1582,17 +1542,12 @@ class Catalog:
                         if f.startswith(("_", ".")) or not f.endswith(".parquet"):
                             continue
                         n_files += 1
-                        idx_files += 1
                         if n_files > self._FOOTER_COUNT_MAX_FILES:
                             return None
                         try:
                             total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
                         except Exception:
                             return None
-            if idx_files == 0:
-                # a data-less plain dir: the scan path would raise its
-                # schema-inference error — don't silently answer 0
-                return None
         return total
 
     def snapshot_index(self, name: str, repo: str, snapshot: str) -> dict:
@@ -1610,11 +1565,13 @@ class Catalog:
             raise IndexExistsError(f"snapshot {snapshot!r} of {name!r} exists")
         df = self._read_resolved(name)
         df.write.parquet(os.path.join(dest, "data"))
-        meta = self._read_meta(name)
-        manifest = {"index": name, "snapshot": snapshot, "meta": meta}
-        os.makedirs(dest, exist_ok=True)
-        with open(os.path.join(dest, "_snapshot.json"), "w") as fh:
-            json.dump(manifest, fh)
+        manifest = {
+            "index": name,
+            "snapshot": snapshot,
+            "meta": self._read_meta(name),
+            "schema": df.schema.jsonValue(),
+        }
+        _write_json(os.path.join(dest, "_snapshot.json"), manifest)
         return manifest
 
     def restore_index(
@@ -1634,12 +1591,11 @@ class Catalog:
             raise IndexExistsError(
                 f"index {target!r} exists — restore with rename_to, like ES"
             )
-        df = self.spark.read.parquet(os.path.join(src, "data"))
-        df.write.parquet(self.path(target))
         with open(os.path.join(src, "_snapshot.json")) as fh:
             manifest = json.load(fh)
-        if manifest.get("meta"):
-            self._write_meta(target, manifest["meta"])
+        df = self._read_dirs(name, [os.path.join(src, "data")], manifest.get("schema"))
+        self._commit(df, target, [])
+        self._write_meta(target, {**(manifest.get("meta") or {}), **self._read_meta(target)})
 
     def list_snapshots(self, repo: str) -> list[dict]:
         """ES GET _snapshot/<repo>/_all: the repository's snapshot
@@ -1711,7 +1667,7 @@ class Catalog:
             raise ValueError(f"{follower_index!r} is not a CCR follower")
         lpath = os.path.join(meta["ccr_leader_root"], meta["ccr_leader_index"])
         fpath = self.path(follower_index)
-        lv, ldirs = txn.latest(lpath)
+        lv, ldirs, lschema = txn.snapshot(lpath)
         if lv == meta["ccr_leader_version"]:
             return {
                 "leader_version": lv,
@@ -1740,7 +1696,8 @@ class Catalog:
                     shutil.rmtree(tmp, ignore_errors=True)
         fv = txn.latest(fpath)[0] + 1
         if txn.try_commit(
-            fpath, fv, ldirs, meta={"replace": True, "ccr_leader_version": lv}
+            fpath, fv, ldirs,
+            meta={"replace": True, "ccr_leader_version": lv, "schema": lschema},
         ):
             meta["ccr_leader_version"] = lv
         else:
@@ -1794,8 +1751,7 @@ class Catalog:
             raise ValueError("component template needs a template: {...} block")
         comps = self._read_component_templates()
         comps[name] = body
-        with open(self._component_templates_path(), "w") as f:
-            json.dump(comps, f)
+        _write_json(self._component_templates_path(), comps)
 
     def _resolve_template(self, body: dict) -> dict:
         """Merge composed_of component templates under the index
@@ -1841,14 +1797,12 @@ class Catalog:
             self.get_pipeline(pname)  # fail at declaration if unregistered
         templates = self._read_templates()
         templates[name] = body
-        with open(self._templates_path(), "w") as f:
-            json.dump(templates, f)
+        _write_json(self._templates_path(), templates)
 
     def delete_index_template(self, name: str) -> None:
         templates = self._read_templates()
         templates.pop(name, None)
-        with open(self._templates_path(), "w") as f:
-            json.dump(templates, f)
+        _write_json(self._templates_path(), templates)
 
     def _match_template(self, index_name: str) -> dict | None:
         import fnmatch
@@ -1871,7 +1825,7 @@ class Catalog:
 
     def get_mapping(self, name: str) -> dict:
         """GET <index>/_mapping: the template-applied (or put) mapping, else
-        a mapping inferred from the parquet schema (dynamic-mapping
+        a mapping derived from the recorded schema (dynamic-mapping
         analogue)."""
         meta = self._read_meta(name)
         if meta.get("mappings"):
@@ -1897,8 +1851,8 @@ class Catalog:
         {"type", "searchable", "aggregatable"[, "indices"]}}}}`` — the
         per-type ``indices`` list appears only on CONFLICTING fields
         (ES omits it when all indices agree).  Types come from each
-        index's mapping (template-applied or schema-inferred via
-        get_mapping), so the answer needs no data read — a pure metadata
+        index's mapping (template-applied or derived from the recorded
+        schema via get_mapping), so the answer needs no data read — a pure metadata
         pass, O(#indices) not O(rows).  Everything here is searchable;
         ES's text-fields-not-aggregatable rule is applied to ``text``
         mappings."""
@@ -1946,8 +1900,7 @@ class Catalog:
         except FileNotFoundError:
             pipelines = {}
         pipelines[name] = body
-        with open(self._pipelines_path(), "w") as f:
-            json.dump(pipelines, f)
+        _write_json(self._pipelines_path(), pipelines)
 
     def get_pipeline(self, name: str) -> dict | list:
         try:
@@ -2055,8 +2008,7 @@ class Catalog:
         if self.exists(name) or name in self._read_aliases():
             raise IndexExistsError(f"{name!r} is already an index/alias")
         streams[name] = {"created_at": time.time()}
-        with open(self._data_streams_path(), "w") as f:
-            json.dump(streams, f)
+        _write_json(self._data_streams_path(), streams)
 
     def write_data_stream(
         self, df: DataFrame, name: str, max_docs_per_generation: int | None = None
@@ -2108,8 +2060,7 @@ class Catalog:
             self.drop_index(t)
         self.delete_alias(name)
         streams.pop(name)
-        with open(self._data_streams_path(), "w") as f:
-            json.dump(streams, f)
+        _write_json(self._data_streams_path(), streams)
 
     def cat_indices(self) -> list[dict]:
         """ES ``GET _cat/indices``: one row per managed index — name,
@@ -2374,17 +2325,8 @@ class Catalog:
         if len(names) != 1:
             raise ValueError(f"streaming read supports a single index, got {names}")
         path = self.path(names[0])
-
-        def _default_schema():
-            # the write path records the index schema in _meta — zero Spark
-            # work; fall back to file inference (one footer job) otherwise
-            meta = self._read_meta(names[0])
-            if meta.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return StructType.fromJson(meta["schema"])
-            return self._read_files(names[0]).schema
-
+        if schema is None:
+            schema = self._read_files(names[0]).schema  # the recorded one
         if txn.is_transactional(path):
             if txn.has_replace_commit(path):
                 raise ValueError(
@@ -2392,12 +2334,8 @@ class Catalog:
                     "stream would re-deliver replaced snapshots as duplicates — "
                     "use the esdocs streaming sink for merge-style pipelines"
                 )
-            if schema is None:
-                schema = _default_schema()
             stream_path = os.path.join(txn.enable_streaming(path), "*")
         else:
-            if schema is None:
-                schema = _default_schema()
             stream_path = path
         df = self.spark.readStream.schema(schema).parquet(stream_path)
         if query is not None:
@@ -2432,7 +2370,12 @@ class Catalog:
         writer.saveAsTable(table)
         self._write_meta(
             name,
-            {"bucket_cols": bucket_cols, "num_buckets": num_buckets, "table": table},
+            {
+                "bucket_cols": bucket_cols,
+                "num_buckets": num_buckets,
+                "table": table,
+                "schema": df.schema.jsonValue(),
+            },
         )
 
     def read_bucketed(self, name: str) -> DataFrame:

@@ -10,7 +10,8 @@ reduced to its core:
 - An index's live data is defined by a MANIFEST, not by directory listing.
   Version N's manifest lives at ``<index>/_txn/v{N:012d}.json`` and names
   the data directories (each written exactly once, under a uuid, never
-  mutated) that make up the snapshot.
+  mutated) that make up the snapshot, plus the snapshot's schema, which
+  readers pass to Spark instead of inferring it from parquet footers.
 - Committing version N+1 is ``open(v{N+1}.json, O_CREAT|O_EXCL)`` — an
   atomic claim on POSIX filesystems (and on object stores via
   put-if-absent).  Exactly one concurrent writer wins; losers re-read the
@@ -68,7 +69,7 @@ def init_log(index_path: str) -> None:
     os.makedirs(os.path.join(index_path, _DATA_DIR), exist_ok=True)
 
 
-def adopt(index_path: str) -> bool:
+def adopt(index_path: str, schema: dict | None = None) -> bool:
     """Bring an index directory under the log, ADOPTING any pre-existing
     plain (non-transactional) data: existing entries move into a uuid data
     dir and are published with an append-union commit, so earlier writes
@@ -90,7 +91,9 @@ def adopt(index_path: str) -> bool:
     plain entries in the root of an already-transactional index — the
     residue of a crashed adoption or a plain-mode writer racing the
     conversion — are swept into the log the same way, so they become
-    readable instead of sitting invisible outside every manifest."""
+    readable instead of sitting invisible outside every manifest.
+    ``schema`` is the plain data's recorded schema (the index ``_meta``
+    record); the adoption commit unions it into the manifest's."""
     if not os.path.isdir(index_path):
         init_log(index_path)
         return False
@@ -113,27 +116,58 @@ def adopt(index_path: str) -> bool:
     if not moved:
         shutil.rmtree(d, ignore_errors=True)
         return False
-    commit_append(index_path, d)
+    commit_append(index_path, d, schema=schema)
     return True
 
 
 def latest(index_path: str) -> tuple[int, list[str]]:
     """(version, data dirs) of the newest committed manifest; (0, []) for a
-    fresh log.  A version file appears atomically with its full body
-    (written to a private temp file, claimed via hard link — see
-    try_commit), so whatever this lists is complete."""
-    tdir = _txn_path(index_path)
-    try:
-        names = [n for n in os.listdir(tdir) if n.startswith("v") and n.endswith(".json")]
-    except FileNotFoundError:
-        return 0, []
-    if not names:
-        return 0, []
-    top = max(names)
-    version = int(top[1:-5])
-    with open(os.path.join(tdir, top)) as fh:
-        manifest = json.load(fh)
-    return version, [os.path.join(index_path, _DATA_DIR, d) for d in manifest["dirs"]]
+    fresh log."""
+    return snapshot(index_path)[:2]
+
+
+def snapshot(
+    index_path: str, version: int | None = None
+) -> tuple[int, list[str], dict | None]:
+    """(version, data dirs, recorded schema) of committed ``version``, by
+    default the newest; (0, [], None) for a fresh log.  The schema is the
+    Spark StructType JSON the committer recorded in the manifest body, so
+    dirs and schema always come from one snapshot.  A version file appears
+    atomically with its full body (written to a private temp file, claimed
+    via hard link — see try_commit), so whatever this lists is complete.
+    Raises KeyError for an uncommitted explicit version (time travel — the
+    Delta ``versionAsOf`` / ES point-in-time analogue; it works until
+    vacuum sweeps the superseded dirs)."""
+    if version is None:
+        try:
+            names = [
+                n for n in os.listdir(_txn_path(index_path))
+                if n.startswith("v") and n.endswith(".json")
+            ]
+        except FileNotFoundError:
+            names = []
+        if not names:
+            return 0, [], None
+        version = int(max(names)[1:-5])
+    body = manifest_body(index_path, version)
+    dirs = [os.path.join(index_path, _DATA_DIR, d) for d in body["dirs"]]
+    return version, dirs, body.get("schema")
+
+
+def merge_schema_json(stored: dict | None, new: dict | None, last=()) -> dict | None:
+    """Union two recorded schemas (Spark StructType JSON) BY FIELD NAME:
+    ``stored`` fields keep their position and type (an ES mapping conflict
+    keeps the first mapping), ``new`` fields append in their own order, and
+    the fields named in ``last`` — partition columns, which a parquet read
+    returns after the data columns — move to the end.  Either side may be
+    None (nothing recorded yet)."""
+    if not stored or not new:
+        return stored or new
+    fields = list(stored["fields"])
+    seen = {f["name"] for f in fields}
+    fields += [f for f in new["fields"] if f["name"] not in seen]
+    fields.sort(key=lambda f: f["name"] in last)  # stable: only moves `last`
+    return {**stored, "fields": fields}
 
 
 def has_replace_commit(index_path: str) -> bool:
@@ -164,19 +198,6 @@ def manifest_body(index_path: str, version: int) -> dict:
             return json.load(fh)
     except FileNotFoundError:
         raise KeyError(f"{index_path} has no committed version {version}") from None
-
-
-def manifest_at(index_path: str, version: int) -> list[str]:
-    """Data dirs of a SPECIFIC committed version (time travel — the Delta
-    `versionAsOf` / ES point-in-time analogue).  Works until vacuum sweeps
-    the superseded dirs; raises KeyError for an uncommitted version."""
-    path = _version_file(index_path, version)
-    try:
-        with open(path) as fh:
-            manifest = json.load(fh)
-    except FileNotFoundError:
-        raise KeyError(f"{index_path} has no committed version {version}") from None
-    return [os.path.join(index_path, _DATA_DIR, d) for d in manifest["dirs"]]
 
 
 def data_root(index_path: str) -> str:
@@ -311,17 +332,26 @@ def enable_streaming(index_path: str) -> str:
     return stream_root(index_path)
 
 
-def commit_append(index_path: str, data_dir: str, max_retries: int = 500) -> int:
+def commit_append(
+    index_path: str,
+    data_dir: str,
+    max_retries: int = 500,
+    schema: dict | None = None,
+    partition_cols=(),
+) -> int:
     """Publish ``data_dir`` as an append.  Lost races only re-read the
     manifest and re-claim — the data is already on disk, nothing recomputes.
-    Jittered backoff keeps a heavily-contended log fair (without it a
-    loser can starve: every retry pays a listdir while winners immediately
-    contend again).  Returns the committed version."""
+    Each attempt records the union of the winner's schema and ``schema``
+    (merge_schema_json), so concurrent appends of different new fields all
+    stay visible.  Jittered backoff keeps a heavily-contended log fair
+    (without it a loser can starve: every retry pays a listdir while
+    winners immediately contend again).  Returns the committed version."""
     import random
 
     for attempt in range(max_retries):
-        version, dirs = latest(index_path)
-        if try_commit(index_path, version + 1, dirs + [data_dir]):
+        version, dirs, recorded = snapshot(index_path)
+        merged = merge_schema_json(recorded, schema, partition_cols)
+        if try_commit(index_path, version + 1, dirs + [data_dir], meta={"schema": merged}):
             return version + 1
         time.sleep(random.random() * min(0.05, 0.001 * (attempt + 1)))
     raise CommitConflictError(f"append to {index_path} lost {max_retries} races")
@@ -333,23 +363,27 @@ def commit_replace(
     data_dir: str,
     recompute=None,
     max_retries: int = 10,
+    schema: dict | None = None,
 ) -> int:
-    """Publish ``data_dir`` as the FULL new snapshot, valid only if the
-    index is still at ``base_version``.  On a lost race the derivation is
-    stale: ``recompute(new_snapshot_dirs) -> new_data_dir`` re-runs the
-    caller's read-modify-write against the winner's snapshot (the
-    optimistic MERGE INTO loop).  Without a recompute hook a conflict is an
-    error."""
+    """Publish ``data_dir`` (whose recorded schema is ``schema``) as the
+    FULL new snapshot, valid only if the index is still at
+    ``base_version``.  On a lost race the derivation is stale:
+    ``recompute(new_snapshot_dirs, new_snapshot_schema) -> (new_data_dir,
+    new_schema)`` re-runs the caller's read-modify-write against the
+    winner's snapshot (the optimistic MERGE INTO loop).  Without a
+    recompute hook a conflict is an error."""
     version = base_version
     for _ in range(max_retries):
-        if try_commit(index_path, version + 1, [data_dir], meta={"replace": True}):
+        if try_commit(
+            index_path, version + 1, [data_dir], meta={"replace": True, "schema": schema}
+        ):
             return version + 1
         if recompute is None:
             raise CommitConflictError(
                 f"replace of {index_path} based on v{version} lost the race"
             )
-        version, dirs = latest(index_path)
-        stale, data_dir = data_dir, recompute(dirs)
+        version, dirs, recorded = snapshot(index_path)
+        stale, (data_dir, schema) = data_dir, recompute(dirs, recorded)
         shutil.rmtree(stale, ignore_errors=True)
     raise CommitConflictError(f"replace of {index_path} lost {max_retries} races")
 

@@ -368,13 +368,72 @@ def test_typed_roundtrip_fidelity(spark, cat):
 def test_blind_append_schema_drift_unions_fields(spark, cat):
     """ES dynamic-mapping parity: a blind append introducing a new field
     must surface it on read regardless of parquet file listing order
-    (mergeSchema — without it Spark takes one arbitrary footer)."""
+    (the append records the union schema; reads pass it to Spark)."""
     cat.write_index(docs(spark, [{"k": 1, "v": "a"}]), "dyn")
     cat.write_index(docs(spark, [{"k": 2, "v": "b", "extra": 99}]), "dyn")
     got = cat.read_index("dyn")
     assert set(got.columns) == {"k", "v", "extra"}
     by_k = {r.k: r for r in got.collect()}
     assert by_k[2].extra == 99 and by_k[1].extra is None
+
+
+def test_blind_append_drift_column_order_is_deterministic(spark, tmp_path):
+    """Appended fields read back in the order they were added, whatever
+    order the file listing returns the parquet files in (a footer-inferred
+    schema followed the listing)."""
+    for i in range(8):
+        c = Catalog(spark, str(tmp_path / f"c{i}"))
+        c.write_index(docs(spark, [{"k": 1, "name": "a"}]), "dyn")
+        c.write_index(docs(spark, [{"k": 2, "name": "b", "x": 1}]), "dyn")
+        c.write_index(docs(spark, [{"k": 3, "name": "c", "y": 2}]), "dyn")
+        assert c.read_index("dyn").columns == ["k", "name", "x", "y"], i
+
+
+def test_read_index_builds_without_spark_jobs(spark, cat):
+    """Every read passes the recorded schema to Spark, so building the
+    frame infers nothing from parquet footers and runs no Spark job."""
+    from tests.conftest import count_jobs
+
+    cat.write_index(docs(spark, BASE), "plain")
+    cat.write_index(docs(spark, BASE), "merged", id_col="k")
+    cat.write_index(
+        docs(spark, [{"k": 2, "v": "B", "n": 21}]), "merged",
+        operation="upsert", id_col="k",
+    )
+    cat.write_index(docs(spark, [{"k": 1, "v": "a"}]), "drift")
+    cat.write_index(docs(spark, [{"k": 2, "v": "b", "extra": 9}]), "drift")
+    cat.write_index(docs(spark, BASE), "gen-000001")
+    cat.put_alias("gen", "gen-000001")
+    assert cat.rollover("gen", max_docs=1)["rolled_over"]
+    for name in ("plain", "merged", "drift", "gen-000002"):
+        _, jobs = count_jobs(spark, lambda: cat.read_index(name))
+        assert jobs == 0, name
+    assert cat.read_index("gen-000002").columns == ["k", "v", "n"]
+
+
+def test_sidecar_json_write_is_atomic(spark, cat, monkeypatch):
+    """A write that dies part-way through must leave the previous sidecar
+    intact: a torn _meta would make the index unreadable."""
+    import json
+
+    cat.write_index(docs(spark, BASE), "torn")
+    cat.put_alias("al", "torn")
+    before = cat._read_meta("torn")
+
+    def dying_dump(obj, fp, *args, **kwargs):
+        fp.write(json.dumps(obj)[:7])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", dying_dump)
+    with pytest.raises(OSError, match="disk full"):
+        cat._write_meta("torn", {**before, "extra": 1})
+    with pytest.raises(OSError, match="disk full"):
+        cat.put_alias("al2", "torn")
+    monkeypatch.undo()
+    assert cat._read_meta("torn") == before
+    assert cat._read_aliases() == {"al": ["torn"]}
+    assert as_dicts(cat.read_index("torn")) == BASE
+    assert not [f for f in os.listdir(cat.root) if ".tmp-" in f]
 
 
 def test_update_by_query(spark, cat):

@@ -6,6 +6,7 @@ numbers; plans/r14/ the before/after evidence)."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,10 +41,27 @@ def test_segments_global_uses_partial_min_not_window(spark, sf_dir):
     # r15: winners come from groupBy(seg).agg(min(struct(id,pos))) — the
     # struct already IS the kept row, so there is no window (r14's window
     # shipped every exploded row of a hot segment to one task) and no
-    # join-back; the partial_min pre-combines hot segments map-side
+    # join-back; the partial min pre-combines hot segments map-side
     plan = plan_of(spark, sf_dir, "dedup_segments_global")
     assert count_nodes(plan, "Window") == 0
-    assert "partial_min(struct(" in plan  # map-side combine = skew bound
+    # operator sections in id order: ids number the tree bottom-up, so
+    # the linear posexplode -> segment shuffle chain is contiguous
+    ops = re.split(r"^(?=\(\d+\) )", plan, flags=re.M)[1:]
+    gen = next(i for i, op in enumerate(ops) if count_nodes(op, "Generate"))
+    seg = next(i for i in range(gen, len(ops)) if count_nodes(ops[i], "Exchange"))
+
+    def neighbour(step: int) -> str:
+        i = seg + step
+        while count_nodes(ops[i], "Sort"):
+            i += step
+        return ops[i]
+
+    agg = r"\w*Aggregate"
+    # map-side combine = skew bound: one aggregate on each side of the
+    # segment Exchange, and none other between the explode and it
+    assert count_nodes(neighbour(-1), agg) == 1
+    assert count_nodes(neighbour(+1), agg) == 1
+    assert count_nodes("".join(ops[gen:seg]), agg) == 1
     assert count_nodes(plan, "SortMergeJoin") + count_nodes(
         plan, "ShuffledHashJoin"
     ) + count_nodes(plan, "BroadcastHashJoin") <= 1  # only the totals join
@@ -114,20 +132,3 @@ def test_rollover_generation_is_metadata_only(spark, sf_dir, tmp_path):
     df = cat.read_index("g-000002")
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == [f.name for f in orders.schema.fields]
-
-
-def test_single_write_job_detector(tmp_path):
-    from elasticsearch_hadoop_spark.catalog import Catalog
-
-    d = tmp_path / "idx"
-    d.mkdir()
-    u1 = "0f0e0d0c-1111-2222-3333-444455556666"
-    u2 = "0f0e0d0c-9999-8888-7777-444455556666"
-    (d / f"part-00000-{u1}-c000.snappy.parquet").write_bytes(b"")
-    (d / f"part-00001-{u1}-c000.snappy.parquet").write_bytes(b"")
-    (d / "_SUCCESS").write_bytes(b"")
-    assert Catalog._single_write_job([str(d)])
-    (d / f"part-00000-{u2}-c000.snappy.parquet").write_bytes(b"")
-    assert not Catalog._single_write_job([str(d)])
-    (d / "oddly-named.parquet").write_bytes(b"")
-    assert not Catalog._single_write_job([str(d)])

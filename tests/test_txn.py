@@ -62,9 +62,9 @@ def test_replace_recompute_sees_winner_snapshot(tmp_path):
     txn.commit_append(p, winner)  # v1
     seen = []
 
-    def recompute(dirs):
+    def recompute(dirs, schema):
         seen.append(list(dirs))
-        return txn.new_data_dir(p)
+        return txn.new_data_dir(p), schema
 
     # stale writer based its rewrite on v0
     v = txn.commit_replace(p, 0, txn.new_data_dir(p), recompute=recompute)
@@ -378,6 +378,47 @@ def test_stream_sees_only_committed_dirs(spark, cat):
     )
     q.awaitTermination()
     assert spark.read.parquet(out).count() == 80
+
+
+def test_concurrent_appends_of_new_columns_both_readable(spark, cat, monkeypatch):
+    """Two appenders add different columns; the loser of the version race
+    unions its schema with the winner's, so both columns stay readable."""
+    cat.write_index(_df(spark, 0, 3, "a"), "t")  # v1
+    claim = txn.try_commit
+    raced = []
+
+    def racing_claim(path, version, dirs, meta=None):
+        if not raced:
+            raced.append(version)
+            # another appender claims this version first, adding y
+            cat.write_index(_df(spark, 3, 5, "b").withColumn("y", F.lit(2)), "t")
+        return claim(path, version, dirs, meta)
+
+    monkeypatch.setattr(txn, "try_commit", racing_claim)
+    cat.write_index(_df(spark, 5, 7, "c").withColumn("x", F.lit(1)), "t")
+    assert raced == [2] and txn.latest(cat.path("t"))[0] == 3
+    got = cat.read_index("t")
+    assert got.columns == ["k", "tag", "y", "x"]
+    rows = {r["k"]: (r["x"], r["y"]) for r in got.collect()}
+    assert rows == {
+        **{k: (None, None) for k in range(3)},
+        **{k: (None, 2) for k in (3, 4)},
+        **{k: (1, None) for k in (5, 6)},
+    }
+
+
+def test_reads_run_no_spark_job(spark, cat):
+    """Reads use the schema recorded in the manifest: building the frame,
+    at the latest version or a pinned one, infers nothing from footers."""
+    from tests.conftest import count_jobs
+
+    cat.write_index(_df(spark, 0, 5, "a"), "t")
+    cat.write_index(_df(spark, 5, 8, "b").withColumn("x", F.lit(1)), "t")
+    _, jobs = count_jobs(spark, lambda: cat.read_index("t"))
+    assert jobs == 0
+    v1, jobs = count_jobs(spark, lambda: cat.read_index_version("t", 1))
+    assert jobs == 0
+    assert v1.columns == ["k", "tag"] and v1.count() == 5
 
 
 def test_merge_on_empty_committed_log(spark, cat):
