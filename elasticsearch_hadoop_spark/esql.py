@@ -2211,7 +2211,8 @@ def _where_knn(df: DataFrame, body: str) -> DataFrame:
     exact kNN, the semantics ES documents when k equals num_candidates;
     operators/similarity has the IVF/LSH paths for when approximation is
     wanted explicitly."""
-    from elasticsearch_hadoop_spark.functions.similarity import cosine_similarity
+    from elasticsearch_hadoop_spark.functions import sql
+    from elasticsearch_hadoop_spark.functions.similarity import cosine_sql
 
     # ES|QL precedence: OR binds looser than AND.  A top-level OR whose
     # branch contains KNN means KNN sits under the OR ("a OR b AND
@@ -2258,8 +2259,8 @@ def _where_knn(df: DataFrame, body: str) -> DataFrame:
     for p in rest:
         if p.strip():
             df = df.filter(_where_pred(p.strip()))
-    score = cosine_similarity(
-        F.col(field).cast("array<double>"), F.lit(qv)
+    score = F.expr(
+        cosine_sql(f"CAST({sql.ident(field)} AS ARRAY<DOUBLE>)", sql.double_array(qv))
     )
     # a stored vector whose width differs from the query would NULL out
     # the similarity and quietly fall out of the top-k — raise instead

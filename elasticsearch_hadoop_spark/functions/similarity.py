@@ -34,6 +34,26 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
 
 
+# The same three formulas as SQL text over SQL operands (a column
+# reference, an array literal from functions.sql.double_array, or a
+# lambda variable): a scoring expression then parses in one JVM round
+# trip.  The trees equal the Column functions above, so the doubles do.
+def dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0.0D AS DOUBLE), (acc, x) -> acc + x)"
+
+
+def norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, CAST(0.0D AS DOUBLE), (acc, x) -> acc + x * x))"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    na, nb = norm_sql(a), norm_sql(b)
+    return (
+        f"CASE WHEN ({na} > 0) AND ({nb} > 0) "
+        f"THEN {dot_sql(a, b)} / ({na} * {nb}) ELSE 0.0D END"
+    )
+
+
 def sparse_dot(weights_col: Column, query_weights: dict) -> Column:
     """ES ``sparse_vector`` / ELSER-style scoring: the dot product of a
     ``map<string,double>`` token-weight column with the query expansion's

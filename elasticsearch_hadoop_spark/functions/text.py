@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from elasticsearch_hadoop_spark.functions import sql
+
 # A small English stopword set (public-domain list subset); used for
 # stopword-ratio quality scoring and the language-ID heuristic.
 ENGLISH_STOPWORDS = (
@@ -46,12 +48,32 @@ def py_standard_analyze(text: object) -> list[str]:
     return [t for t in _TOKEN_SPLIT_RE.split(str(text).lower()) if t]
 
 
+def any_term_sql(field: str, terms: list[str]) -> str:
+    """SQL predicate: some analyzed token of ``field`` equals one of
+    ``terms`` (non-empty analyzed tokens).  Exactly
+    ``arrays_overlap(standard_analyze(field), terms)`` without the
+    higher-order empty-token filter — split's empty strings never equal
+    a non-empty term — so it runs in whole-stage codegen.  A NULL field
+    gives NULL.  The terms are an array literal, passed to generated
+    code by reference, so the generated class is reused across queries
+    (an ``rlike`` pattern would be inlined and compiled per query)."""
+    return (
+        f"arrays_overlap(split(lower({field}), '{TOKEN_SPLIT_REGEX}'), "
+        f"{sql.string_array(terms)})"
+    )
+
+
 def standard_analyze(col: Column | str) -> Column:
     """ES standard-analyzer analogue: lowercase, split on non-alphanumeric
-    runs, drop empty tokens.  Returns array<string>."""
-    c = F.col(col) if isinstance(col, str) else col
+    runs, drop empty tokens.  Returns array<string>.  A column given by
+    name is parsed from SQL text in one JVM round trip."""
+    if isinstance(col, str):
+        return F.expr(
+            f"filter(split(lower({sql.ident(col)}), '{TOKEN_SPLIT_REGEX}'), "
+            "t -> length(t) > 0)"
+        )
     return F.filter(
-        F.split(F.lower(c), TOKEN_SPLIT_REGEX),
+        F.split(F.lower(col), TOKEN_SPLIT_REGEX),
         lambda t: F.length(t) > 0,
     )
 

@@ -21,10 +21,22 @@ without changing anything downstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from elasticsearch_hadoop_spark.functions.similarity import cosine_similarity
+from elasticsearch_hadoop_spark.functions import sql
+from elasticsearch_hadoop_spark.functions.similarity import cosine_similarity, cosine_sql
+
+
+def _cosine_to(vec_col: str, query_vec: list[float]) -> Column:
+    """cosine(vec_col, query_vec) parsed from SQL: one JVM round trip
+    instead of one per operator and per vector element."""
+    return F.expr(
+        cosine_sql(
+            f"CAST({sql.ident(vec_col)} AS ARRAY<DOUBLE>)",
+            sql.double_array(query_vec),
+        )
+    )
 
 
 def brute_force_topk(
@@ -35,11 +47,9 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k for one query vector: scan + TakeOrderedAndProject."""
-    q = F.lit([float(x) for x in query_vec])  # single array literal (planning cost)
     return (
         embeddings.select(
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
+            F.col(id_col), _cosine_to(vec_col, query_vec).alias("cosine")
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
@@ -55,10 +65,11 @@ def assign_ivf_cells(
     """Attach nearest-centroid (by cosine) cell id — the coarse quantizer.
     At scale: write the table partitioned/bucketed by this column.
 
-    The centroid matrix is ONE nested-array literal, not k×dim `lit()`
-    nodes — with per-element literals Catalyst planning time explodes
-    (~90 s for 8×64 at 4 Lloyd's iterations; ~1 s this way)."""
-    cent_arr = F.lit([[float(x) for x in c] for c in centroids])
+    The centroid matrix is ONE nested-array literal (parsed from SQL in
+    one JVM round trip), not k×dim `lit()` nodes — with per-element
+    literals Catalyst planning time explodes (~90 s for 8×64 at 4
+    Lloyd's iterations; ~1 s this way)."""
+    cent_arr = sql.double_array_lit(centroids)
     v = F.col(vec_col).cast("array<double>")
     # argmax over centroid index of cosine(v, centroid_i)
     scores = F.transform(cent_arr, lambda c: cosine_similarity(v, c))
@@ -93,13 +104,12 @@ def ivf_topk(
     order = sorted(range(len(centroids)), key=lambda i: (-cos(query_vec, centroids[i]), i))
     probe_cells = order[:nprobe]
 
-    q = F.lit([float(x) for x in query_vec])  # single array literal (planning cost)
     return (
         embeddings_with_cells.filter(F.col(cell_col).isin(probe_cells))
         .select(
             F.col(id_col),
             F.col(cell_col),
-            cosine_similarity(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
+            _cosine_to(vec_col, query_vec).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
@@ -159,11 +169,10 @@ def topk_per_group(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Top-k most-similar per group (window row_number idiom)."""
-    q = F.lit([float(x) for x in query_vec])  # single array literal (planning cost)
     scored = embeddings.select(
         F.col(id_col),
         F.col(group_col),
-        cosine_similarity(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
+        _cosine_to(vec_col, query_vec).alias("cosine"),
     )
     w = Window.partitionBy(group_col).orderBy(F.col("cosine").desc(), F.col(id_col))
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
@@ -198,7 +207,7 @@ def lsh_bucket_expr(vec, planes: list[list[float]]):
     Pure Column math (zip_with product + aggregate sum per plane); the
     plane matrix enters as ONE nested-array literal (see the IVF planning
     note above)."""
-    plane_arr = F.lit([[float(x) for x in p] for p in planes])
+    plane_arr = sql.double_array_lit(planes)
     v = vec.cast("array<double>")
 
     def dot(p):
@@ -279,8 +288,8 @@ def _sq_code_expr(v, mins: list[float], maxs: list[float]):
     between engines; the double arithmetic itself is order-identical on
     Spark / DuckDB / CPython, so codes agree bit-for-bit.  Degenerate
     dimensions (mx == mn) quantize to code 0."""
-    mn_arr = F.lit([float(x) for x in mins])
-    mx_arr = F.lit([float(x) for x in maxs])
+    mn_arr = sql.double_array_lit(mins)
+    mx_arr = sql.double_array_lit(maxs)
     shifted = F.zip_with(v, mn_arr, lambda x, m: x - m)
     rng = F.zip_with(mx_arr, mn_arr, lambda a, b: a - b)
     return F.zip_with(
@@ -364,11 +373,9 @@ def sq_topk(
         .orderBy(F.col("sq_score").desc(), F.col(id_col))
         .limit(rescore_k)
     )
-    q = F.lit([float(x) for x in query_vec])
     return (
         cand.select(
-            F.col(id_col),
-            cosine_similarity(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
+            F.col(id_col), _cosine_to(vec_col, query_vec).alias("cosine")
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
@@ -390,13 +397,12 @@ def lsh_topk(
     table the isin() filter is partition pruning — same scale shape as
     ivf_topk, trading IVF's trained quantizer for a training-free hash."""
     probes = lsh_probe_buckets(query_vec, planes, hamming_radius)
-    q = F.lit([float(x) for x in query_vec])
     return (
         embeddings_with_buckets.filter(F.col(bucket_col).isin(probes))
         .select(
             F.col(id_col),
             F.col(bucket_col),
-            cosine_similarity(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
+            _cosine_to(vec_col, query_vec).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
@@ -516,12 +522,11 @@ def hamming_topk(
     if not rescore_k:
         return scored.select(id_col, "hamming").limit(k)
     cand = scored.limit(rescore_k)
-    q = F.lit([float(x) for x in query_vec])
     return (
         cand.select(
             F.col(id_col),
             F.col("hamming"),
-            cosine_similarity(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
+            _cosine_to(vec_col, query_vec).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)

@@ -65,7 +65,12 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from elasticsearch_hadoop_spark.functions.text import analyze_tokens, py_standard_analyze
+from elasticsearch_hadoop_spark.functions import sql
+from elasticsearch_hadoop_spark.functions.text import (
+    TOKEN_SPLIT_REGEX,
+    analyze_tokens,
+    py_standard_analyze,
+)
 
 
 class QueryDslError(ValueError):
@@ -232,8 +237,13 @@ def _match(body, id_col):
         # operator=and containment test below would otherwise
         # vacuously match EVERY document on an empty token set.)
         return F.lit(ztq == "all")
-    qtokens = F.array_distinct(analyze_tokens(F.lit(str(value))))
-    ftokens = analyze_tokens(_resolve(field))
+    # Query tokens are a literal analyzed at compile time.  The field
+    # side is the analyzer without its higher-order empty-token filter,
+    # so the predicate stays in whole-stage codegen: every test below
+    # compares against the query tokens, which are never empty, so the
+    # empty strings split leaves behind never change the result.
+    qtokens = F.expr(sql.string_array(dict.fromkeys(py_standard_analyze(value))))
+    ftokens = F.split(F.lower(_resolve(field)), TOKEN_SPLIT_REGEX)
     if operator == "and":
         # ES ignores minimum_should_match under operator=and (all
         # tokens are required anyway)

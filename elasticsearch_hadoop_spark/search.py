@@ -21,7 +21,13 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from elasticsearch_hadoop_spark.functions.text import TOKEN_SPLIT_REGEX
+from elasticsearch_hadoop_spark.functions import sql
+from elasticsearch_hadoop_spark.functions.text import (
+    TOKEN_SPLIT_REGEX,
+    any_term_sql,
+    py_standard_analyze,
+    standard_analyze,
+)
 
 _TOKEN_RX = re.compile(TOKEN_SPLIT_REGEX)
 
@@ -279,90 +285,118 @@ def bm25_corpus_stats(df: DataFrame, field: str, terms: list[str]) -> dict:
     across queries: ``{"doc_count": N, "sum_dl": Σdl, "df": {term: df}}``
     (docCount semantics: documents missing the field are outside all
     three).  Feed the result to ``bm25_score(..., stats=...)`` to skip
-    the per-query stats pass.  One hash aggregation to a single row."""
-    from elasticsearch_hadoop_spark.functions.text import standard_analyze
-
+    the per-query stats pass.  One hash aggregation to a single row,
+    with the same semantics as the scorer's own stats pass."""
     terms = list(dict.fromkeys(terms))
     if not terms:
         raise ValueError("bm25_corpus_stats needs at least one term")
-    toks = df.select(standard_analyze(F.col(field)).alias("__t"))
-    row = toks.agg(
-        # docCount = docs with AT LEAST ONE term (Lucene: a NULL or
-        # empty-analyzed field leaves no postings or norm behind)
-        F.count(F.when(F.size("__t") > 0, 1)).alias("n"),
-        F.sum(F.size("__t").cast("long")).alias("sdl"),
-        *[
-            F.sum(F.array_contains("__t", t).cast("int")).alias(f"df_{i}")
-            for i, t in enumerate(terms)
-        ],
-    ).collect()[0]
+    row = _bm25_stats(df, field, terms, "").collect()[0]
     return {
         "doc_count": int(row["n"]),
         "sum_dl": int(row["sdl"] or 0),
-        "df": {t: int(row[f"df_{i}"] or 0) for i, t in enumerate(terms)},
+        "df": {t: int(row[f"df_{j}"] or 0) for j, t in enumerate(terms)},
     }
 
 
-def _bm25_idf(n: Column, dfc: Column) -> Column:
-    """Lucene's BM25 idf: ln(1 + (N - df + 0.5) / (df + 0.5)).  The ONE
-    place the expression is built — bm25_score and bm25_score_multi both
-    call it, so the formula cannot drift between the single-leaf and
-    field-batched paths."""
-    return F.log(F.lit(1.0) + (n - dfc + 0.5) / (dfc + 0.5))
+# Lucene's BM25 as SQL text: the ONE set of formula strings every scorer
+# path renders (computed stats, precomputed stats=, field-batched), so
+# the formula cannot drift between them, and each expression parses in
+# one JVM round trip.  The placeholders are SQL operands: helper-column
+# references, or double literals for precomputed statistics.
+#
+# Corpus statistics, over a frame carrying the analyzed {toks} and {dl}:
+# - docCount, not the row count: both the idf N and avgdl exclude
+#   documents missing the field (NULL dl) AND documents whose analyzed
+#   field is empty — neither leaves postings or a norm behind, exactly
+#   like BM25Similarity's computeIdf/avgFieldLength;
+# - Σdl sums exactly as a long, so avgdl is the SAME double on every
+#   engine and partitioning (a double-summed avg would be
+#   order-dependent);
+# - one df counter per term.
+_BM25_N = "CAST(count(CASE WHEN {dl} > 0 THEN 1 END) AS DOUBLE)"
+_BM25_SDL = "CAST(sum({dl}) AS DOUBLE)"
+_BM25_DF = "CAST(sum(CAST(array_contains({toks}, {term}) AS INT)) AS DOUBLE)"
+_BM25_DL = "CAST(size({toks}) AS BIGINT)"
+_BM25_TF = "CAST(size(filter({toks}, x -> x = {term})) AS DOUBLE)"
+_BM25_IDF = "ln(1.0D + ({n} - {df} + 0.5D) / ({df} + 0.5D))"
+# The length norm k1·(1−b + b·dl/avgdl), bound once per field.  An
+# all-empty corpus has avgdl = 0 — no document can match there, but the
+# norm computes for every row, so the division is guarded (ANSI mode
+# raises on /0).
+_BM25_NORM = (
+    "{k1} * ({one_minus_b} + CASE WHEN {sdl} > 0 "
+    "THEN ({b} * CAST({dl} AS DOUBLE)) / ({sdl} / {n}) ELSE 0.0D END)"
+)
+# One term clause's contribution: mult · idf · tf(k1+1)/(tf+norm).
+# tf = 0 contributes exactly 0 — and guards the k1 = 0 edge, where
+# tf + norm would be 0/0 under ANSI division.
+_BM25_TERM = (
+    "CASE WHEN {tf} > 0 "
+    "THEN {mult} * {idf} * (({tf} * {k1_plus_1}) / ({tf} + {norm})) ELSE 0.0D END"
+)
+# A document MISSING the field has no postings at all: score NULL
+# (field absent), not 0.0 (present but no match).
+_BM25_SCORE = "CASE WHEN {dl} IS NOT NULL THEN {terms} END"
 
 
-def _bm25_norm(k1: float, b: float, dl: Column, sdl: Column, n: Column) -> Column:
-    """The shared length norm k1·(1−b + b·dl/avgdl), bound once per
-    field (bind-once discipline).  An all-empty corpus has avgdl = 0 —
-    no document can match there, but the norm column computes for every
-    row, so the division is guarded (ANSI mode raises on /0)."""
-    rel_dl = F.when(sdl > 0, (F.lit(b) * dl) / (sdl / n)).otherwise(F.lit(0.0))
-    return F.lit(k1) * (F.lit(1.0 - b) + rel_dl)
-
-
-def _bm25_term(
-    tf: Column, idf: Column, k1: float, norm: Column, mult: float
-) -> Column:
-    """One term clause's contribution: mult · idf · tf(k1+1)/(tf+norm).
-    tf = 0 contributes exactly 0 — and guards the k1 = 0 edge, where
-    tf + norm would be 0/0 under ANSI division."""
-    return F.when(
-        tf > 0,
-        F.lit(float(mult)) * idf * ((tf * F.lit(k1 + 1.0)) / (tf + norm)),
-    ).otherwise(F.lit(0.0))
-
-
-def _bm25_stats_aggs(terms, n_name, sdl_name, df_name) -> list[Column]:
-    """The corpus-statistics aggregation columns over a frame carrying
-    ``__bm_toks``/``__bm_dl`` — the ONE place the stats semantics live
-    for both scorers (like the formula helpers above):
-
-    - docCount, not the row count: both the idf N and avgdl exclude
-      documents missing the field (NULL dl) AND documents whose analyzed
-      field is empty — neither leaves postings or a norm behind, exactly
-      like BM25Similarity's computeIdf/avgFieldLength;
-    - Σdl sums exactly as a long, so avgdl is the SAME double on every
-      engine and partitioning (a double-summed avg would be
-      order-dependent);
-    - one df counter per term (``df_name(i, term)`` names them)."""
-    return [
-        F.count(F.when(F.col("__bm_dl") > 0, 1)).cast("double").alias(n_name),
-        F.sum("__bm_dl").cast("double").alias(sdl_name),
+def _bm25_stats(base: DataFrame, field: str, terms: list[str], p: str) -> DataFrame:
+    """The 1-row corpus-statistics frame for ``field``: columns
+    ``{p}n``, ``{p}sdl`` and ``{p}df_{j}`` for each of ``terms``."""
+    toks = base.select(standard_analyze(field).alias("__bm_toks")).selectExpr(
+        "__bm_toks", f"{_BM25_DL.format(toks='__bm_toks')} AS __bm_dl"
+    )
+    return toks.selectExpr(
+        f"{_BM25_N.format(dl='__bm_dl')} AS {p}n",
+        f"{_BM25_SDL.format(dl='__bm_dl')} AS {p}sdl",
         *[
-            F.sum(F.array_contains("__bm_toks", t).cast("int"))
-            .cast("double")
-            .alias(df_name(i, t))
-            for i, t in enumerate(terms)
+            f"{_BM25_DF.format(toks='__bm_toks', term=sql.string(t))} AS {p}df_{j}"
+            for j, t in enumerate(terms)
         ],
+    )
+
+
+def _bm25_columns(
+    scored: DataFrame, field: str, terms: list[str], p: str,
+    n: str, sdl: str, k1: float, b: float,
+) -> tuple[DataFrame, list[str]]:
+    """Attach the per-document helpers for ``field``: ``{p}toks`` (the
+    analyzed field, computed once per row), ``{p}dl``, ``{p}norm`` and
+    one ``{p}tf_{j}`` per term.  Returns the frame and the helper
+    names."""
+    toks, dl = sql.ident(f"{p}toks"), sql.ident(f"{p}dl")
+    scored = scored.withColumn(f"{p}toks", standard_analyze(field))
+    scored = scored.withColumn(f"{p}dl", F.expr(_BM25_DL.format(toks=toks)))
+    norm = _BM25_NORM.format(
+        k1=sql.double(k1), one_minus_b=sql.double(1.0 - b), b=sql.double(b),
+        sdl=sdl, n=n, dl=dl,
+    )
+    scored = scored.withColumn(f"{p}norm", F.expr(norm))
+    for j, t in enumerate(terms):
+        scored = scored.withColumn(
+            f"{p}tf_{j}", F.expr(_BM25_TF.format(toks=toks, term=sql.string(t)))
+        )
+    return scored, [f"{p}toks", f"{p}dl", f"{p}norm"] + [
+        f"{p}tf_{j}" for j in range(len(terms))
     ]
 
 
-def _bm25_tf(toks_col: str, term: str) -> Column:
-    """Term frequency in the analyzed document — shared by both scorers
-    for the same can't-drift reason as the formula helpers."""
-    return F.size(
-        F.filter(F.col(toks_col), lambda x: x == F.lit(term))
-    ).cast("double")
+def _bm25_score_sql(
+    p: str, uniq: list[str], jmap: dict[str, int], mult: dict[str, int],
+    n: str, dfs: list[str], k1: float,
+) -> str:
+    """The score of one leaf over the helpers ``_bm25_columns`` attached:
+    the term clauses summed left to right in query order."""
+    terms = " + ".join(
+        _BM25_TERM.format(
+            tf=sql.ident(f"{p}tf_{jmap[t]}"),
+            mult=sql.double(mult[t]),
+            idf=_BM25_IDF.format(n=n, df=dfs[jmap[t]]),
+            k1_plus_1=sql.double(k1 + 1.0),
+            norm=sql.ident(f"{p}norm"),
+        )
+        for t in uniq
+    )
+    return _BM25_SCORE.format(dl=sql.ident(f"{p}dl"), terms=terms)
 
 
 def bm25_score(
@@ -396,8 +430,11 @@ def bm25_score(
     oracle-checkable here.
 
     ``matched_only`` keeps ES's match-query contract: only documents
-    containing at least one query term come back (score > 0 always holds
-    for a match: idf > 0 even at df = N).  Like Lucene, ``N`` and
+    containing at least one query term come back.  It is a filter on
+    the raw field BEFORE scoring (``functions.text.any_term_sql``: some
+    analyzed token equals a query term), which keeps exactly the rows
+    with score > 0 — every present term adds a positive amount (idf > 0
+    even at df = N) and an absent one adds 0.  Like Lucene, ``N`` and
     ``avgdl`` are the field's docCount statistics — documents MISSING
     the field (NULL) are outside them, and with ``matched_only=False``
     such rows carry a NULL score (field absent), never 0.0 (present, no
@@ -405,25 +442,28 @@ def bm25_score(
 
     Scale shape: TWO passes over the corpus — a tiny stats aggregation
     (N, Σdl, one df counter per unique term: ONE hash agg to a 1-row
-    frame, broadcast back) and the scoring pass (tokens materialized
-    once per row, per-term tf as array codegen, top-k downstream is a
-    TakeOrderedAndProject).  Pass ``stats=`` (from ``bm25_corpus_stats``,
-    the index-build step) to skip the first pass and amortize it across
-    queries.  ``stats_over=`` aggregates the corpus statistics over a
-    DIFFERENT frame than the one being scored (same rows required for ES
-    semantics — the caller's contract): a caller chaining several
-    score columns onto one frame points every stats pass at the pristine
-    source so the plans stay one-scan-per-leaf instead of re-scanning
-    the accumulated frame (esql._where_scored, round 12 — without it a
-    3-leaf WHERE planned 2^3 source scans).  Integer inputs (counts, doc
-    lengths) keep every float derived identically on any engine — Σdl
-    sums exactly as a long, so avgdl is bit-identical regardless of
-    partitioning."""
-    from elasticsearch_hadoop_spark.functions.text import (
-        py_standard_analyze,
-        standard_analyze,
-    )
-
+    frame, broadcast back and attached by a nested-loop join with no
+    condition) and the scoring pass.  The scoring pass first drops
+    non-matching rows with the codegen'd raw-field predicate, then
+    analyzes each surviving document ONCE (the analyzer is a
+    higher-order function, interpreted, with no subexpression
+    elimination — a filter on the computed score would be inlined into
+    the join condition and re-analyze the document per reference), then
+    computes per-term tf over that array; top-k downstream is a
+    TakeOrderedAndProject.  Every expression parses from SQL text in one
+    JVM round trip.  Pass ``stats=`` (from ``bm25_corpus_stats``, the
+    index-build step) to skip the first pass and amortize it across
+    queries: the statistics enter the expressions as literals, so that
+    plan has no join at all.  ``stats_over=`` aggregates the corpus
+    statistics over a DIFFERENT frame than the one being scored (same
+    rows required for ES semantics — the caller's contract): a caller
+    chaining several score columns onto one frame points every stats
+    pass at the pristine source so the plans stay one-scan-per-leaf
+    instead of re-scanning the accumulated frame (esql._where_scored,
+    round 12 — without it a 3-leaf WHERE planned 2^3 source scans).
+    Integer inputs (counts, doc lengths) keep every float derived
+    identically on any engine — Σdl sums exactly as a long, so avgdl is
+    bit-identical regardless of partitioning."""
     terms = py_standard_analyze(query_text)
     if not terms:
         raise ValueError("bm25 needs at least one analyzed query term")
@@ -437,19 +477,19 @@ def bm25_score(
         raise ValueError("pass stats= or stats_over=, not both")
     uniq = list(dict.fromkeys(terms))
     mult = {t: terms.count(t) for t in uniq}
+    # the matched-only cut on the raw field; the corpus statistics still
+    # come from the unfiltered frame
+    src = df.filter(F.expr(any_term_sql(sql.ident(field), uniq))) if matched_only else df
 
     if stats is None:
         # the single-leaf case IS the one-leaf batched case — delegate,
         # so there is exactly ONE scan-orchestration to maintain
         # (review r12f); only the precomputed-stats path below keeps its
-        # own body (the literal 1-row frame replaces the stats pass)
-        out = bm25_score_multi(
-            df, [(field, query_text, out_col)],
-            k1=k1, b=b, stats_over=stats_over,
+        # own body (literal statistics replace the stats pass)
+        return bm25_score_multi(
+            src, [(field, query_text, out_col)],
+            k1=k1, b=b, stats_over=stats_over if stats_over is not None else df,
         )
-        if matched_only:
-            out = out.filter(F.col(out_col) > 0)
-        return out
 
     taken = [c for c in df.columns if c.startswith("__bm_")]
     if taken:
@@ -458,57 +498,23 @@ def bm25_score(
             f"input columns may not use the reserved '__bm_' namespace: "
             f"{taken}"
         )
-    toks = df.withColumn("__bm_toks", standard_analyze(F.col(field)))
-    toks = toks.withColumn("__bm_dl", F.size("__bm_toks").cast("long"))
-    # precomputed corpus statistics (bm25_corpus_stats): skip the
-    # stats pass entirely — the literals take the 1-row frame's place
     missing = [t for t in uniq if t not in stats.get("df", {})]
     if missing:
         raise ValueError(f"stats missing df for query terms: {missing}")
-    stats_df = df.sparkSession.createDataFrame(
-        [
-            (
-                float(stats["doc_count"]),
-                float(stats["sum_dl"]),
-                *[float(stats["df"][t]) for t in uniq],
-            )
-        ],
-        ", ".join(
-            ["__bm_n double", "__bm_sdl double"]
-            + [f"__bm_df_{i} double" for i in range(len(uniq))]
-        ),
+    over = [t for t in uniq if not 0 <= stats["df"][t] <= stats["doc_count"]]
+    if over:
+        # df <= N is what keeps every idf, and so every matched score,
+        # positive: the matched-only cut relies on it
+        raise ValueError(f"stats df outside [0, doc_count] for terms: {over}")
+    n = sql.double(stats["doc_count"])
+    scored, helpers = _bm25_columns(
+        src, field, uniq, "__bm_", n, sql.double(stats["sum_dl"]), k1, b
     )
-    scored = toks.crossJoin(F.broadcast(stats_df))
-    scored = scored.withColumn(
-        "__bm_norm",
-        _bm25_norm(
-            k1, b,
-            F.col("__bm_dl").cast("double"),
-            F.col("__bm_sdl"),
-            F.col("__bm_n"),
-        ),
+    score = _bm25_score_sql(
+        "__bm_", uniq, {t: j for j, t in enumerate(uniq)}, mult,
+        n, [sql.double(stats["df"][t]) for t in uniq], k1,
     )
-    for i, t in enumerate(uniq):
-        scored = scored.withColumn(f"__bm_tf_{i}", _bm25_tf("__bm_toks", t))
-    score = None
-    for i, t in enumerate(uniq):
-        idf = _bm25_idf(F.col("__bm_n"), F.col(f"__bm_df_{i}"))
-        term = _bm25_term(
-            F.col(f"__bm_tf_{i}"), idf, k1, F.col("__bm_norm"), mult[t]
-        )
-        score = term if score is None else score + term
-    # a document MISSING the field has no postings at all: score NULL
-    # (field absent), not 0.0 (present but no match) — visible only with
-    # matched_only=False
-    scored = scored.withColumn(
-        out_col, F.when(F.col("__bm_dl").isNotNull(), score)
-    )
-    if matched_only:
-        scored = scored.filter(F.col(out_col) > 0)
-    drop = ["__bm_toks", "__bm_dl", "__bm_n", "__bm_sdl", "__bm_norm"]
-    drop += [f"__bm_df_{i}" for i in range(len(uniq))]
-    drop += [f"__bm_tf_{i}" for i in range(len(uniq))]
-    return scored.drop(*drop)
+    return scored.withColumn(out_col, F.expr(score)).drop(*helpers)
 
 
 def bm25_score_multi(
@@ -522,10 +528,9 @@ def bm25_score_multi(
     with ONE corpus-statistics aggregation per DISTINCT field — leaves
     sharing a field share its N/Σdl pass and a single 1-row df-counter
     frame covering the union of their terms.  Per-leaf semantics are
-    exactly ``bm25_score(..., matched_only=False)``: the idf/norm/term
-    expressions come from the same ``_bm25_idf``/``_bm25_norm``/
-    ``_bm25_term`` helpers, so the doubles are identical — only the
-    stats passes are shared.
+    exactly ``bm25_score(..., matched_only=False)``: every path renders
+    the same ``_BM25_*`` formula strings, so the doubles are identical —
+    only the stats passes are shared.
 
     Scale shape (the reason this exists — review r12a follow-up): a
     scored WHERE with k leaves over one field plans k+1 corpus scans
@@ -536,11 +541,6 @@ def bm25_score_multi(
     chained-score-columns caller's contract, see bm25_score)."""
     if not leaves:
         return df
-    from elasticsearch_hadoop_spark.functions.text import (
-        py_standard_analyze,
-        standard_analyze,
-    )
-
     out_cols = [c for _, _, c in leaves]
     if len(set(out_cols)) != len(out_cols):
         raise ValueError(f"bm25_score_multi needs unique out_cols: {out_cols}")
@@ -578,61 +578,26 @@ def bm25_score_multi(
     base = stats_over if stats_over is not None else df
     scored = df
     helper_cols: list[str] = []
-    field_ix: dict[str, tuple[int, dict[str, int]]] = {}
+    field_ix: dict[str, tuple[str, dict[str, int]]] = {}
     for fi, (field, terms) in enumerate(by_field.items()):
-        src = base.select(
-            standard_analyze(F.col(field)).alias("__bm_toks")
-        ).withColumn("__bm_dl", F.size("__bm_toks").cast("long"))
-        # the same stats semantics as bm25_score — _bm25_stats_aggs is
-        # the single source for both scorers
-        stats_df = src.agg(
-            *_bm25_stats_aggs(
-                terms,
-                f"__bmm_n_{fi}",
-                f"__bmm_sdl_{fi}",
-                lambda j, t, _fi=fi: f"__bmm_df_{_fi}_{j}",
-            )
-        )
-        helper_cols += [f"__bmm_n_{fi}", f"__bmm_sdl_{fi}"]
-        helper_cols += [f"__bmm_df_{fi}_{j}" for j in range(len(terms))]
+        p = f"__bmm_{fi}_"
+        stats_df = _bm25_stats(base, field, terms, p)
+        helper_cols += [f"{p}n", f"{p}sdl"] + [f"{p}df_{j}" for j in range(len(terms))]
         scored = scored.crossJoin(F.broadcast(stats_df))
-        scored = scored.withColumn(
-            f"__bmm_toks_{fi}", standard_analyze(F.col(field))
-        ).withColumn(f"__bmm_dl_{fi}", F.size(f"__bmm_toks_{fi}").cast("long"))
-        scored = scored.withColumn(
-            f"__bmm_norm_{fi}",
-            _bm25_norm(
-                k1, b,
-                F.col(f"__bmm_dl_{fi}").cast("double"),
-                F.col(f"__bmm_sdl_{fi}"),
-                F.col(f"__bmm_n_{fi}"),
-            ),
-        )
-        helper_cols += [f"__bmm_toks_{fi}", f"__bmm_dl_{fi}", f"__bmm_norm_{fi}"]
         # per-(field, term) tf — computed once even when several leaves
         # share a term
-        for j, t in enumerate(terms):
-            scored = scored.withColumn(
-                f"__bmm_tf_{fi}_{j}", _bm25_tf(f"__bmm_toks_{fi}", t)
-            )
-            helper_cols.append(f"__bmm_tf_{fi}_{j}")
-        field_ix[field] = (fi, {t: j for j, t in enumerate(terms)})
+        scored, helpers = _bm25_columns(
+            scored, field, terms, p,
+            sql.ident(f"{p}n"), sql.ident(f"{p}sdl"), k1, b,
+        )
+        helper_cols += helpers
+        field_ix[field] = (p, {t: j for j, t in enumerate(terms)})
 
     for field, uniq, mult, out_col in per_leaf:
-        fi, jmap = field_ix[field]
-        score = None
-        for t in uniq:
-            j = jmap[t]
-            idf = _bm25_idf(F.col(f"__bmm_n_{fi}"), F.col(f"__bmm_df_{fi}_{j}"))
-            term = _bm25_term(
-                F.col(f"__bmm_tf_{fi}_{j}"), idf, k1,
-                F.col(f"__bmm_norm_{fi}"), mult[t],
-            )
-            score = term if score is None else score + term
-        # NULL for a missing field (no postings), like bm25_score
-        scored = scored.withColumn(
-            out_col, F.when(F.col(f"__bmm_dl_{fi}").isNotNull(), score)
-        )
+        p, jmap = field_ix[field]
+        dfs = [sql.ident(f"{p}df_{j}") for j in range(len(jmap))]
+        score = _bm25_score_sql(p, uniq, jmap, mult, sql.ident(f"{p}n"), dfs, k1)
+        scored = scored.withColumn(out_col, F.expr(score))
     # drop exactly the helpers added above — a prefix scan would eat a
     # caller's own __bmm_-named columns (review r12d)
     return scored.drop(*helper_cols)
@@ -650,7 +615,9 @@ def bm25_topk(
     """The ES ``match`` + ``size`` shape: top-``k`` documents by BM25,
     score ties broken by ``tiebreak`` columns for determinism.  Plans as
     TakeOrderedAndProject over the scoring pass — per-partition top-k
-    heaps, never a global sort."""
+    heaps, never a global sort.  Scale shape as ``bm25_score``: the
+    stats aggregation, and a scoring pass that analyzes only the
+    documents holding a query term, once each."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     out = bm25_score(df, field, query_text, k1=k1, b=b)
@@ -678,8 +645,6 @@ def highlight(
     inline ``(?i)`` + ``\\b`` pattern is RE2/Java-portable, so a SQL
     oracle can replay it verbatim."""
     import re as _re
-
-    from elasticsearch_hadoop_spark.functions.text import py_standard_analyze
 
     terms = py_standard_analyze(query_text)
     if not terms:
@@ -712,8 +677,6 @@ def suggest_terms(
     against it (BroadcastNestedLoopJoin — vocab × inputs, and a vocabulary
     is orders of magnitude smaller than its corpus); ranking is a
     WindowGroupLimit per input.  No all-pairs anything."""
-    from elasticsearch_hadoop_spark.functions.text import standard_analyze
-
     if not inputs:
         raise ValueError("suggest_terms needs at least one input token")
     vocab = (
@@ -818,8 +781,6 @@ def suggest_phrase(
     only corpus-wide work is the single explode + hash agg that builds
     the vocab, and the unpartitioned total window runs on that same
     bounded vocab frame."""
-    from elasticsearch_hadoop_spark.functions.text import standard_analyze
-
     toks = [t for t in _TOKEN_RX.split(text.lower()) if t]
     if not toks:
         raise ValueError("suggest_phrase needs at least one input token")
@@ -1312,10 +1273,7 @@ def knn_search(
     at scale is `operators/similarity` (IVF / RP-LSH partition-pruned
     probing), which this endpoint's caller composes when the exact scan
     is too hot."""
-    from elasticsearch_hadoop_spark.functions.similarity import (
-        cosine_similarity,
-        dot,
-    )
+    from elasticsearch_hadoop_spark.functions.similarity import cosine_sql, dot_sql
     from elasticsearch_hadoop_spark.query_dsl import compile_query
 
     field = knn["field"]
@@ -1325,22 +1283,22 @@ def knn_search(
     out = df
     if knn.get("filter"):
         out = out.filter(compile_query(knn["filter"]))
-    a = F.col(field).cast("array<double>")
-    b = F.lit(qv)
+    # the score parses from SQL in one JVM round trip
+    a = f"CAST({sql.ident(field)} AS ARRAY<DOUBLE>)"
+    b = sql.double_array(qv)
     if sim == "cosine":
-        score = (F.lit(1.0) + cosine_similarity(a, b)) / F.lit(2.0)
+        score = f"(1.0D + {cosine_sql(a, b)}) / 2.0D"
     elif sim == "dot_product":
-        score = (F.lit(1.0) + dot(a, b)) / F.lit(2.0)
+        score = f"(1.0D + {dot_sql(a, b)}) / 2.0D"
     elif sim == "l2_norm":
-        d2 = F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
+        d2 = (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+            "CAST(0.0D AS DOUBLE), (acc, x) -> acc + x)"
         )
-        score = F.lit(1.0) / (F.lit(1.0) + d2)
+        score = f"1.0D / (1.0D + {d2})"
     else:
         raise ValueError(f"knn: unsupported similarity {sim!r}")
-    out = out.withColumn("_score", score)
+    out = out.withColumn("_score", F.expr(score))
     order = [F.col("_score").desc()]
     if tiebreaker is not None:
         order.append(F.col(tiebreaker).asc())
@@ -1635,8 +1593,6 @@ def termvectors(
     shape of GET <index>/_termvectors/<id>.  One posexplode + a hash
     aggregation on (doc, term); positions collect sorted so the output is
     deterministic."""
-    from elasticsearch_hadoop_spark.functions.text import standard_analyze
-
     toks = df.select(
         F.col(id_col),
         F.posexplode(standard_analyze(F.col(field))).alias("position", "term"),

@@ -35,6 +35,31 @@ def count_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def count_py4j_calls(fn):
+    """Run ``fn()``; return its result and the number of Py4J commands it
+    sent to the JVM.  Commands that release Python-collected JVM objects
+    are not counted: when they are sent depends on Python's garbage
+    collector, not on ``fn``.  The count is the same on every host, so it
+    can be pinned."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = 0
+
+    def counting(self, command, *args, **kwargs):
+        nonlocal calls
+        if not command.startswith("m\nd\n"):  # memory, delete
+            calls += 1
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return out, calls
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_TEST_DIR

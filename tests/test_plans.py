@@ -463,6 +463,20 @@ def test_bm25_topk_take_ordered_no_udf(spark, sf_dir):
     assert count_nodes(plan, "BroadcastNestedLoopJoin") <= 1  # the 1-row stats attach
 
 
+def test_bm25_topk_analyzes_each_document_once(spark, sf_dir):
+    """The matched-only cut is a codegen'd filter on the raw field below
+    the stats attach, so nothing is pushed into the nested-loop join and
+    the interpreted analyzer appears exactly twice: once in the stats
+    pass and once in the scoring projection.  A filter on the computed
+    score got inlined into the join condition, which re-analyzed each
+    document per reference (11 analyzers for this 2-term query)."""
+    plan = plan_of(spark, sf_dir, "search_bm25_topk")
+    assert count_nodes(plan, "BroadcastNestedLoopJoin") == 1
+    assert re.findall(r"^Join condition: (.*)$", plan, flags=re.M) == ["None"]
+    assert plan.count("filter(split(lower(") == 2
+    assert "arrays_overlap(split(lower(" in plan
+
+
 def test_esql_match_score_two_pass_take_ordered(spark, sf_dir):
     """Round 11: the scored MATCH pipeline is BM25's two-pass shape —
     exactly one stats scan + one scoring scan (a duplicated stats pass
