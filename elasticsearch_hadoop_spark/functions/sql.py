@@ -16,13 +16,19 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def quote(name: str) -> str:
+    """One back-quoted identifier: a column or struct field name taken
+    whole, dots included."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def ident(name: str) -> str:
     """A column reference with ``F.col``'s name semantics: dots select
     struct fields, and a name the caller already back-quoted passes
     through unchanged."""
     if "`" in name:
         return name
-    return ".".join(f"`{part}`" for part in name.split("."))
+    return ".".join(quote(part) for part in name.split("."))
 
 
 def double(x: float) -> str:

@@ -59,8 +59,9 @@ from __future__ import annotations
 import json
 import math
 import re
+from contextlib import contextmanager
 from contextvars import ContextVar
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -86,6 +87,17 @@ class QueryDslError(ValueError):
 # ContextVar holding an immutable tuple: each thread/context sees only its
 # own nesting, and a failed compile cannot leak a resolver into a peer.
 _RESOLVER_STACK: ContextVar[tuple] = ContextVar("es_query_resolver_stack", default=())
+
+
+@contextmanager
+def resolving(resolver: Callable[[str], Column]):
+    """Compile clauses with ``resolver(field)`` in place of ``F.col(field)``
+    for every field a clause names."""
+    token = _RESOLVER_STACK.set(_RESOLVER_STACK.get() + (resolver,))
+    try:
+        yield
+    finally:
+        _RESOLVER_STACK.reset(token)
 
 
 def _resolve(field: str) -> Column:
@@ -433,11 +445,8 @@ def _nested(body, id_col):
                 out = out[part]
             return out
 
-        token = _RESOLVER_STACK.set(_RESOLVER_STACK.get() + (res,))
-        try:
+        with resolving(res):
             return _compile_clause(inner, id_col)
-        finally:
-            _RESOLVER_STACK.reset(token)
 
     return F.coalesce(F.exists(_resolve(path), build), F.lit(False))
 

@@ -1,6 +1,7 @@
 """SparkSession factory + fixture loading.
 
-Scale notes (100 TB design, tested on local[32]):
+Scale notes (100 TB design, tested on local[32]; without
+``SPARK_GRAFT_CPUS`` the master is local[<host cores>]):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting.
 - ``spark.sql.shuffle.partitions`` defaults to 2x cores locally; on a real
   cluster this is overridden to ~2-3x total executor cores (AQE coalesces
@@ -39,7 +40,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scan/AQE-friendly defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)

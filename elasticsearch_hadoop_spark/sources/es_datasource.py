@@ -33,12 +33,19 @@ Reference parity map (path citations per SURVEY.md §0 — upstream layout):
 - **metadata column** — ``read.metadata=true`` adds a ``_metadata``
   map<string,string> column (``es.read.metadata``, ScrollReader metadata).
 
-Scale notes: this source is the *API-parity* path and is row-at-a-time
-Python — exactly as row-at-a-time as the reference's own JSON scroll reader.
-The 100 TB path for the same data is ``read_json_docs`` (Spark's native JVM
-JSON reader, json_docs.py) or Parquet via the Catalog; this source is for
-bulk-file interchange and keeps per-file streaming (never materializes a
-file in memory: line-iterator in, incremental write out).
+Scale notes: ``read_docs`` is the read path.  It is a native Spark plan
+over the same bulk files: Spark's text reader takes each file whole,
+one generator pairs action and source lines in one pass (no shuffle, no
+window), ``from_json`` parses the sources with json_docs' wire schema,
+json_docs' SQL coercions type them, the ``query`` option compiles through
+``query_dsl.compile_query``, and Catalyst places the caller's filters.
+A file is one row there, so it must fit in one (2 GB) string.
+``format("esdocs")`` is the *API-parity* path and the differential oracle
+for ``read_docs``: row-at-a-time Python, exactly as row-at-a-time as the
+reference's own JSON scroll reader, streaming each file (line-iterator
+in, incremental write out).  Both readers share one leniency table (see
+json_docs).  For plain NDJSON with no action lines use ``read_json_docs``;
+for indexed data, Parquet via the Catalog.
 """
 
 from __future__ import annotations
@@ -46,13 +53,16 @@ from __future__ import annotations
 import base64
 import fnmatch
 import json
+import math
 import os
 import re
 import uuid
 from dataclasses import dataclass
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
+from decimal import Decimal
 from typing import Any, Iterator
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -105,6 +115,10 @@ except ModuleNotFoundError:  # module loaded by file path, not package name
     from elasticsearch_hadoop_spark.sources.json_docs import mapping_to_struct
 
 METADATA_COL = "_metadata"
+from elasticsearch_hadoop_spark.functions.sql import ident as sql_ident
+from elasticsearch_hadoop_spark.functions.sql import quote
+from elasticsearch_hadoop_spark.functions.sql import string as sql_string
+from elasticsearch_hadoop_spark.functions.sql import string_array as sql_string_array
 from elasticsearch_hadoop_spark.functions.text import TOKEN_SPLIT_REGEX
 
 _TOKEN_RE = re.compile(TOKEN_SPLIT_REGEX)
@@ -115,17 +129,88 @@ _TOKEN_RE = re.compile(TOKEN_SPLIT_REGEX)
 # --------------------------------------------------------------------------
 
 
+# An ISO-8601 date as Spark's string -> timestamp cast reads the common
+# forms: a date, optionally a time (seconds and fraction optional) after
+# "T" or a space, optionally "Z" or an offset.  Offset-less text is UTC
+# (the engine's session zone).
+_ISO_TS = re.compile(
+    r"(\d{4})(?:-(\d{1,2})(?:-(\d{1,2})(?:[T ](\d{1,2}):(\d{1,2})"
+    r"(?::(\d{1,2})(?:\.(\d{1,9}))?)?)?)?)?(Z|[+-]\d{2}:?\d{2})?"
+)
+_INT_TEXT = re.compile(r"[+-]?\d+")
+_NUM_TEXT = re.compile(r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
+_FLOAT_WORDS = {"inf", "+inf", "-inf", "infinity", "+infinity", "-infinity", "nan"}
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+_EPOCH = datetime(1970, 1, 1)
+
+
+def _json_text(v: Any) -> str:
+    """What a VARIANT cast to string gives: a JSON string's content, any
+    other value as compact JSON text with object keys sorted."""
+    if isinstance(v, str):
+        return v
+    return json.dumps(v, separators=(",", ":"), ensure_ascii=False, sort_keys=True)
+
+
 def _parse_ts(v: Any) -> datetime | None:
-    if v is None:
+    """A date's wire value -> naive UTC datetime: digits other than a bare
+    4-digit year are epoch millis, anything else an ISO-8601 date."""
+    if v is None or isinstance(v, (bool, dict, list)):
         return None
-    if isinstance(v, (int, float)):  # epoch millis (DateUtils parity)
-        return datetime.fromtimestamp(v / 1000.0, tz=timezone.utc).replace(tzinfo=None)
-    s = str(v).replace("T", " ").replace("Z", "")
-    for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S", "%Y-%m-%d"):
+    s = _json_text(v)
+    t = s.strip()
+    try:
+        if len(s) != 4 and _INT_TEXT.fullmatch(t):
+            return _EPOCH + timedelta(milliseconds=int(t))
+        m = _ISO_TS.fullmatch(t)
+        if m is None:
+            return None
+        y, mo, d, h, mi, sec, frac, zone = m.groups()
+        out = datetime(
+            int(y), int(mo or 1), int(d or 1), int(h or 0), int(mi or 0), int(sec or 0),
+            int((frac or "0")[:6].ljust(6, "0")),
+        )
+        if zone and zone != "Z":
+            sign = -1 if zone[0] == "-" else 1
+            hh, mm = int(zone[1:3]), int(zone[-2:])
+            out -= sign * timedelta(hours=hh, minutes=mm)
+        return out
+    except (ValueError, OverflowError):
+        return None
+
+
+def _integral(v: Any, bits: int) -> int | None:
+    """A number, or a numeric string, truncated toward zero ("12.7" -> 12,
+    as ES's coerce does); NULL when it is none or does not fit."""
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, float):
+        if not math.isfinite(v):
+            return None
+        v = int(v)
+    elif isinstance(v, str):
+        t = v.strip()
+        if not _NUM_TEXT.fullmatch(t):
+            return None
+        v = int(Decimal(t))
+    elif not isinstance(v, int):
+        return None
+    return v if -(1 << (bits - 1)) <= v < (1 << (bits - 1)) else None
+
+
+def _floating(v: Any) -> float | None:
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, str):
+        t = v.strip()
+        if not (_NUM_TEXT.fullmatch(t) or t.lower() in _FLOAT_WORDS):
+            return None
+        return float(t)
+    if isinstance(v, (int, float)):
         try:
-            return datetime.strptime(s, fmt)
-        except ValueError:
-            continue
+            return float(v)
+        except OverflowError:
+            return None
     return None
 
 
@@ -157,6 +242,8 @@ def _field_is_geo(f: T.StructField) -> bool:
 
 
 def _coerce(v: Any, dt: T.DataType, geo: bool = False) -> Any:
+    """One parsed JSON value -> ``dt``: the leniency table in json_docs'
+    docstring, which ``json_docs._coerce_sql`` applies on the JVM."""
     if v is None:
         return None
     if geo and not isinstance(dt, T.ArrayType):
@@ -186,15 +273,20 @@ def _coerce(v: Any, dt: T.DataType, geo: bool = False) -> Any:
     if isinstance(dt, T.TimestampType):
         return _parse_ts(v)
     if isinstance(dt, T.BinaryType):
-        return base64.b64decode(v) if isinstance(v, str) else bytes(v)
+        try:
+            return base64.b64decode(v) if isinstance(v, str) else None
+        except ValueError:
+            return None
     if isinstance(dt, T.BooleanType):
-        return bool(v)
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return int(v)
+        if isinstance(v, bool):
+            return v
+        return {"true": True, "false": False}.get(v) if isinstance(v, str) else None
+    if type(dt) in _INT_BITS:
+        return _integral(v, _INT_BITS[type(dt)])
     if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return float(v)
+        return _floating(v)
     if isinstance(dt, T.StringType):
-        return v if isinstance(v, str) else json.dumps(v)
+        return _json_text(v)
     return v
 
 
@@ -468,6 +560,9 @@ def _aslist(x: Any) -> list:
 
 _BULK_OPS = ("index", "create", "update", "delete")
 # keys the bulk wire-format allows in an action header's body
+# JSON's whitespace (RFC 8259): a line of nothing else is blank
+_JSON_SPACE = " \t\r\n"
+
 _BULK_HEADER_KEYS = frozenset(
     {"_id", "_index", "_type", "_routing", "routing", "retry_on_conflict",
      "version", "version_type", "if_seq_no", "if_primary_term", "pipeline"}
@@ -596,16 +691,7 @@ class EsDocsReader(DataSourceReader):
 
     def partitions(self) -> list[_FilePartition]:
         """A1: one partition per bulk file (the shard analogue)."""
-        if os.path.isfile(self.path):
-            return [_FilePartition(self.path)]
-        files = sorted(
-            os.path.join(self.path, f)
-            for f in os.listdir(self.path)
-            if f.endswith((".json", ".ndjson")) and not f.startswith(("_", "."))
-        )
-        if not files:
-            raise FileNotFoundError(f"esdocs: no .json/.ndjson files under {self.path}")
-        return [_FilePartition(p) for p in files]
+        return [_FilePartition(p) for p in _bulk_files(self.path)]
 
     # Types the Arrow fast path handles losslessly.  Structs ride the
     # Arrow channel since round 4 (_coerce's tuple encoding re-shaped to
@@ -674,7 +760,13 @@ class EsDocsReader(DataSourceReader):
 
     def _read_rows(self, partition: _FilePartition) -> Iterator[tuple]:
         fields = [f for f in self.schema.fields if f.name != METADATA_COL]
+        # the query sees every mapped field, projected or not, and no
+        # unmapped one: ES queries the index, not the source document
+        mapped = (
+            _mapped_struct(self.options).fields if self.query else fields
+        )
         fname = os.path.basename(partition.path)
+        index = self.options.get("index", fname.rsplit(".", 1)[0])
         # Bulk files alternate action header / source line.  Track that
         # alternation per file: a line parses as an action ONLY if it is a
         # single-key {op: {header-keys...}} object AND we are not expecting
@@ -686,7 +778,7 @@ class EsDocsReader(DataSourceReader):
         pending_hdr: dict = {}
         with open(partition.path, encoding="utf-8") as fh:
             for lineno, line in enumerate(fh):
-                line = line.strip()
+                line = line.strip(_JSON_SPACE)
                 if not line:
                     continue
                 doc = json.loads(line)
@@ -699,23 +791,69 @@ class EsDocsReader(DataSourceReader):
                 if pending_op == "update" and isinstance(doc, dict) and set(doc) == {"doc"}:
                     doc = doc["doc"]
                 pending_op = None
-                if self.query and not match_doc(doc, self.query):
-                    continue
-                if not all(_filter_ok(doc, f) for f in self.pushed):
-                    continue
-                row = tuple(
-                    _coerce(doc.get(f.name), f.dataType, _field_is_geo(f))
-                    for f in fields
-                )
+                values = {
+                    f.name: _coerce(doc.get(f.name), f.dataType, _field_is_geo(f))
+                    for f in mapped
+                }
+                # the document's own _id, else its header's, else file#lineno
+                doc_id = _json_text(next(
+                    v for v in (doc.get("_id"), hdr.get("_id"), f"{fname}#{lineno}")
+                    if v is not None
+                ))
+                if self.query or self.pushed:
+                    view = {f.name: _as_doc(values[f.name], f.dataType) for f in mapped}
+                    view["_id"] = doc_id
+                    if self.query and not match_doc(view, self.query):
+                        continue
+                    if not all(_filter_ok(view, f) for f in self.pushed):
+                        continue
+                row = tuple(values[f.name] for f in fields)
                 if self.with_meta:
-                    meta = {
-                        "_id": str(
-                            doc.get("_id", hdr.get("_id", f"{fname}#{lineno}"))
-                        ),
-                        "_index": self.options.get("index", fname.rsplit(".", 1)[0]),
-                    }
-                    row = row + (meta,)
+                    row = row + ({"_id": doc_id, "_index": index},)
                 yield row
+
+
+def _as_doc(v: Any, dt: T.DataType) -> Any:
+    """A coerced value as the nested dicts ``match_doc`` walks: struct
+    tuples become dicts."""
+    if v is None:
+        return None
+    if isinstance(dt, T.StructType):
+        return {f.name: _as_doc(x, f.dataType) for f, x in zip(dt.fields, v)}
+    if isinstance(dt, T.ArrayType):
+        return [_as_doc(x, dt.elementType) for x in v]
+    return v
+
+
+def _mapped_struct(options: dict) -> T.StructType:
+    """The read's mapped fields (before ``fields`` projection)."""
+    mapping = options.get("mapping")
+    if not mapping:
+        raise ValueError(
+            "esdocs: 'mapping' option (ES _mapping JSON) is required for reads; "
+            "for writes the DataFrame schema is used"
+        )
+    return mapping_to_struct(
+        json.loads(mapping) if isinstance(mapping, str) else mapping,
+        array_include=options.get("field.as.array.include"),
+        map_include=options.get("field.as.map.include"),
+    )
+
+
+def _bulk_files(path: str) -> list[str]:
+    """A1: the bulk files one read covers: ``path`` itself when it is a
+    file, else its ``.json``/``.ndjson`` files that are not hidden or
+    ``_``-prefixed, in name order."""
+    if os.path.isfile(path):
+        return [path]
+    files = sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith((".json", ".ndjson")) and not f.startswith(("_", "."))
+    )
+    if not files:
+        raise FileNotFoundError(f"esdocs: no .json/.ndjson files under {path}")
+    return files
 
 
 @dataclass
@@ -840,31 +978,20 @@ class EsDocsStreamWriter(DataSourceStreamWriter):
 
 class EsDocsDataSource(DataSource):
     """format("esdocs") — see module docstring. Register with
-    ``spark.dataSource.register(EsDocsDataSource)``."""
+    ``spark.dataSource.register(EsDocsDataSource)``.
+
+    Load a fresh relation per differently-filtered action.  Observed on
+    Spark 4.1: after a *filtered* action on a Python-data-source
+    DataFrame, another action on the SAME DataFrame object reuses the
+    filter-pushed scan (an unfiltered ``.count()`` returns the filtered
+    count).  ``read_docs`` plans no Python scan and has no such state."""
 
     @classmethod
     def name(cls) -> str:
         return "esdocs"
 
     def schema(self) -> T.StructType:
-        mapping = self.options.get("mapping")
-        if not mapping:
-            raise ValueError(
-                "esdocs: 'mapping' option (ES _mapping JSON) is required for reads; "
-                "for writes the DataFrame schema is used"
-            )
-        include = self.options.get("fields")
-        struct = mapping_to_struct(
-            json.loads(mapping),
-            array_include=self.options.get("field.as.array.include"),
-            map_include=self.options.get("field.as.map.include"),
-        )
-        if include:
-            wanted = [c.strip() for c in include.split(",")]
-            struct = T.StructType([f for f in struct.fields if f.name in wanted])
-        if str(self.options.get("read.metadata", "false")).lower() == "true":
-            struct = struct.add(METADATA_COL, T.MapType(T.StringType(), T.StringType()))
-        return struct
+        return _read_schema(self.options)
 
     def reader(self, schema: T.StructType) -> EsDocsReader:
         return EsDocsReader(schema, dict(self.options))
@@ -885,28 +1012,159 @@ def register(spark) -> None:
 
 
 # --------------------------------------------------------------------------
-# veneer: always build a FRESH relation per call.
-#
-# Observed sharp edge (Spark 4.1, local repro in tests/test_es_datasource.py
-# history): after running a *filtered* action on a Python-data-source
-# DataFrame, re-running an action on the SAME DataFrame object reuses the
-# filter-pushed scan (an unfiltered .count() on it returns the filtered
-# count). A freshly loaded DataFrame is always correct. Until that is fixed
-# upstream, load per query — these helpers do exactly that, and our own code
-# never reuses an esdocs DataFrame across differently-filtered actions.
+# read_docs: the same read as format("esdocs"), as a native Spark plan
 # --------------------------------------------------------------------------
+
+# universal newlines, as Python's text mode splits a file
+_NEWLINE = r"'\r\n|\r|\n'"
+# necessary for _is_bulk_action: the first key is an op, or is spelled
+# with an escape (``"\u0069ndex"`` decodes to one)
+_ACTION_PREFIX = r"""'^\\s*\\{\\s*"(index|create|update|delete"|[^"]*\\\\)'"""
+_HEADER_KEYS_SQL = sql_string_array(sorted(_BULK_HEADER_KEYS))
+
+
+def _action_sql(line: str) -> str:
+    """``_is_bulk_action`` on one raw line: struct(op, header ``_id``) when
+    it is action-shaped, else NULL.  The body is a VARIANT, so a string
+    body that reads like an object is still a string."""
+    body = "map_values(m)[0]"
+    header = f"try_cast({body} AS MAP<STRING,VARIANT>)"
+    return (
+        f"CASE WHEN {line} RLIKE {_ACTION_PREFIX} THEN transform("
+        f"array(from_json({line}, 'map<string,variant>')), m -> CASE WHEN size(m) = 1"
+        " AND map_keys(m)[0] IN ('index', 'create', 'update', 'delete')"
+        f" AND (is_variant_null({body}) OR ({header} IS NOT NULL"
+        f" AND size(array_except(map_keys({header}), {_HEADER_KEYS_SQL})) = 0))"
+        f" THEN named_struct('op', map_keys(m)[0], 'id', try_variant_get({body}, '$._id', 'string'))"
+        " END)[0] END"
+    )
+
+
+def _sources_sql(wire_ddl: str) -> str:
+    """One bulk file's text -> one row per source document, as an
+    ``inline`` over the file's row: ``n`` (its line number), ``id`` (its
+    action header's ``_id``), ``f`` (the file name) and ``d`` (its fields
+    as VARIANTs, parsed with ``wire_ddl``).
+
+    The pairing is ``EsDocsReader._read_rows`` in one pass over the file's
+    non-blank lines, with no shuffle and no window.  Each line gets one
+    character: ``1`` when it is action-shaped with an op other than
+    ``delete``, ``d`` for a delete-shaped line, else ``0``.  In a run of
+    ``1`` lines, actions and sources alternate, so replacing ``11`` with
+    ``AB`` leaves ``A``/``1`` on actions and ``B`` on sources.  A ``0``
+    line is a source; a ``d`` line is a source only after a pending
+    action (``A`` or ``1``), and a delete action otherwise.  The document
+    is parsed inside the generator, so a filter on its fields cannot be
+    pushed below the parse and repeat it once per predicate."""
+    lines = (
+        f"filter(transform(split(value, {_NEWLINE}, -1), (l, n) -> named_struct('n', n, 'l', l)),"
+        r" x -> x.l RLIKE '[^ \\t]')"
+    )
+    actions = f"transform({lines}, x -> named_struct('n', x.n, 'l', x.l, 'a', {_action_sql('x.l')}))"
+    kinds = (
+        "array_join(transform(a, x -> CASE WHEN x.a IS NULL THEN '0'"
+        " WHEN x.a.op = 'delete' THEN 'd' ELSE '1' END), '')"
+    )
+    roles = f"split(regexp_replace({kinds}, '11', 'AB'), '')"
+    paired = (
+        "filter(transform(a, (x, i) -> named_struct('n', x.n, 'l', x.l, 'r', r[i],"
+        " 'h', CASE WHEN i > 0 AND r[i - 1] IN ('A', '1') THEN a[i - 1].a END)),"
+        " y -> y.r IN ('B', '0') OR (y.r = 'd' AND y.h IS NOT NULL))"
+    )
+    # update's {"doc": {...}} wrapper unwraps; FAILFAST: a malformed line
+    # fails the read, as json.loads does
+    doc = (
+        "CASE WHEN y.h.op = 'update' AND json_object_keys(y.l) = array('doc')"
+        " THEN get_json_object(y.l, '$.doc') ELSE y.l END"
+    )
+    file = "url_decode(replace(_metadata.file_name, '+', '%2B'))"
+    source = (
+        f"named_struct('n', y.n, 'id', y.h.id, 'f', {file},"
+        f" 'd', from_json({doc}, {sql_string(wire_ddl)}, map('mode', 'FAILFAST')))"
+    )
+    # let-bind the line array (a) and the roles (r)
+    return (
+        f"inline(transform(array({actions}), a -> transform(array({roles}), r ->"
+        f" transform({paired}, y -> {source}))[0])[0])"
+    )
+
+
+def _read_schema(options: dict) -> T.StructType:
+    """A read's output schema: the mapped fields named by ``fields`` (all
+    when unset), then ``_metadata`` when ``read.metadata`` is true."""
+    struct = _mapped_struct(options)
+    include = options.get("fields")
+    if include:
+        wanted = [c.strip() for c in include.split(",")]
+        struct = T.StructType([f for f in struct.fields if f.name in wanted])
+    if str(options.get("read.metadata", "false")).lower() == "true":
+        struct = struct.add(METADATA_COL, T.MapType(T.StringType(), T.StringType()))
+    return struct
+
+
+def _field_in(struct: T.StructType, path: str) -> bool:
+    """Whether a dotted field path is in the mapping."""
+    for part in path.split("."):
+        if not isinstance(struct, T.StructType) or part not in struct.fieldNames():
+            return False
+        struct = struct[part].dataType
+    return True
 
 
 def read_docs(spark, path: str, mapping: str | dict, **options):
-    """Fresh ``format("esdocs")`` read. ``mapping`` is the ES _mapping JSON
-    (dict or string); extra options pass through (query, fields,
-    read.metadata, field.as.array.include, ...)."""
-    if not isinstance(mapping, str):
-        mapping = json.dumps(mapping)
-    r = spark.read.format("esdocs").option("path", path).option("mapping", mapping)
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load()
+    """Read bulk-format NDJSON (one file, or a directory's ``.json`` /
+    ``.ndjson`` files) into the DataFrame ``format("esdocs")`` returns,
+    row for row, as a native Spark plan: Spark's text reader takes each
+    file whole (one row per file, so a file must fit in one row),
+    ``_sources_sql`` pairs its lines, ``from_json`` parses each source
+    with json_docs' wire schema, and ``json_docs._coerce_sql`` types it.
+    ``mapping`` is the ES _mapping JSON (dict or string).  Options are
+    ``format("esdocs")``'s: ``query`` (compiled with
+    ``query_dsl.compile_query``; a clause on an unmapped field matches
+    nothing, as in ES), ``fields``, ``read.metadata``, ``index``,
+    ``field.as.array.include`` and ``field.as.map.include``.  Filters on the
+    result are Catalyst's to place."""
+    from elasticsearch_hadoop_spark.query_dsl import compile_query, resolving
+    from elasticsearch_hadoop_spark.sources.json_docs import coerced_columns, wire_ddl
+
+    options = dict(options, mapping=mapping)
+    mapped = _mapped_struct(options)
+    out = _read_schema(options)
+    # the wire also takes the document's own _id, the first choice for its id
+    wire = T.StructType(mapped.fields + [T.StructField("_id", T.VariantType())])
+    query = options.get("query")
+    if isinstance(query, str):
+        query = json.loads(query)
+    with_meta = METADATA_COL in out.fieldNames()
+    # the query sees every mapped field; the result only the projected ones
+    fields = mapped if query else T.StructType(
+        [f for f in out.fields if f.name != METADATA_COL]
+    )
+    cols = coerced_columns(fields, "d.")
+    doc_id = "coalesce(CAST(d.`_id` AS STRING), id, concat(f, '#', n))"
+    if with_meta:
+        index = options.get("index")
+        index = sql_string(index) if index is not None else r"regexp_replace(f, '\\.[^.]*$', '')"
+        cols.append((METADATA_COL, f"map('_id', {doc_id}, '_index', {index})"))
+    if query:  # for ids clauses
+        cols.append(("_id", doc_id))
+    frame = (
+        spark.read.text(_bulk_files(path), wholetext=True)
+        .selectExpr(_sources_sql(wire_ddl(wire)))
+        .selectExpr(*[f"{e} AS {quote(n)}" for n, e in cols])
+    )
+    if not query:
+        return frame
+
+    def resolve(field):
+        # F.expr parses in one round trip; F.col costs a dozen
+        if field == "_id" or _field_in(mapped, field):
+            return F.expr(sql_ident(field))
+        return F.expr("CAST(NULL AS STRING)")
+
+    with resolving(resolve):
+        frame = frame.filter(compile_query(query, id_col="_id"))
+    return frame.selectExpr(*[quote(n) for n in out.fieldNames()])
 
 
 def write_docs(df, path: str, mode: str = "append", **options) -> None:

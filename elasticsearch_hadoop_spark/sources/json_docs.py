@@ -16,16 +16,58 @@ Two layers:
    extension from §1.2 for open-keyed objects -> MapType.
 
 2. ``read_json_docs(spark, path, mapping=...)`` — NDJSON files -> typed
-   DataFrame.  Wire-format leniency matches the reference's ScrollReader:
-   dates accept ISO-8601 strings *or* epoch-millis numbers per document
-   (DateUtils parity), ``binary`` is base64-decoded.  Error handling mirrors
-   ``es.read.data.error.handlers``: ``errors="fail"`` (FAILFAST),
-   ``"skip"`` (DROPMALFORMED), ``"log"`` (PERMISSIVE + ``_corrupt_record``
-   column retained).
+   DataFrame.  Error handling mirrors ``es.read.data.error.handlers``:
+   ``errors="fail"`` (FAILFAST), ``"skip"`` (DROPMALFORMED), ``"log"``
+   (PERMISSIVE + ``_corrupt_record`` column retained).  A malformed line
+   is one that is not JSON; a value of the wrong type is read leniently.
+
+Leniency — one table for ``read_json_docs``, ``es_datasource.read_docs``
+(both through ``_coerce_sql``) and the ``format("esdocs")`` reader
+(``es_datasource._coerce``), matching what ES accepts:
+
+==================  ========================================================
+mapped as           wire value -> value read
+==================  ========================================================
+any scalar          an array: its first element (``[7, 8]`` -> 7; ``[]`` -> NULL)
+array               a scalar: wrapped (``"solo"`` -> ``["solo"]``)
+integral            a number or numeric string, truncated (``"12.7"`` -> 12);
+                    anything else, or out of range -> NULL
+float / double      a number or numeric string (``"1.5"`` -> 1.5); else NULL
+boolean             ``true``/``false`` or ``"true"``/``"false"``; else NULL
+keyword / text      a string; any other value as its JSON text
+date                digits (other than a bare 4-digit year) -> epoch millis,
+                    NULL outside years 1-9999; else ISO-8601 with a 4-digit
+                    year, ``Z`` or an offset converted to UTC and none read
+                    as UTC (``"2020"`` -> 2020-01-01)
+binary              a base64 string; else NULL
+object / map        a JSON object; else NULL
+geo_point           ``{"lat", "lon"}``, ``[lon, lat]`` or ``"lat,lon"``; else NULL
+==================  ========================================================
+
+A numeric string is a decimal with an optional exponent (``"1e2"``);
+Spark's double cast also takes forms such as ``"1.5d"`` that the Python
+reader reads as NULL, and the JVM readers take an integral through
+DECIMAL(38,18), so a 19th fraction digit can round it up.  Every field
+comes off the wire as a VARIANT, so a string stays a string whatever its
+text (``"[WIP] fix"`` read for an array field is ``["[WIP] fix"]``).  A
+non-string value's JSON text is compact with object keys sorted on all
+three readers.  A float is written as a double: the JVM's way by the JVM
+readers (``1.0E20``, ``1.0E-5``) and Python's by the esdocs reader
+(``1e+20``, ``1e-05``), which agree from 1e-3 to 1e7; inside an object
+or array rendered as text, the JVM readers drop a float's trailing zeros
+(``{"a":0}`` for ``{"a": 0.0}``).  An object value that repeats a key is
+malformed to the VARIANT parser (a FAILFAST read fails, and
+``read_docs`` reads an action line whose header repeats a key as a
+source line), where the esdocs reader keeps the last value.  Only JSON's
+whitespace (space, tab, CR, LF) makes a bulk line blank on both bulk
+readers; a line of U+00A0 is malformed.
 
 Scale: schema is fixed up-front (no per-row inference); parsing is Spark's
-native JSON reader (JVM, vectorized, parallel by file split); the date/binary
-coercions are Column expressions (whole-stage codegen), never Python.
+native JSON reader (JVM, vectorized, parallel by file split; in
+``read_docs`` one bulk file is one text row, so a file must fit in one
+2 GB string); every coercion is SQL text compiled once per read (whole-
+stage codegen outside arrays and objects, which bind each parsed value to
+a lambda variable once), never Python.
 """
 
 from __future__ import annotations
@@ -33,9 +75,11 @@ from __future__ import annotations
 import warnings
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from elasticsearch_hadoop_spark.functions.sql import quote
+from elasticsearch_hadoop_spark.functions.sql import string as sql_string
 
 # ES field type -> Spark type (SURVEY.md §1.2 table).  Dates handled apart.
 _SCALAR = {
@@ -193,127 +237,137 @@ def _is_geo_field(f: T.StructField) -> bool:
     return (f.metadata or {}).get("es_type") == "geo_point"
 
 
-def _wire_type(dt: T.DataType, geo: bool = False) -> T.DataType:
-    """Schema used for the raw JSON parse: dates and binary come off the wire
-    as strings (ISO-8601/epoch-millis, base64) and are coerced afterwards.
-    geo_point fields parse as raw STRING whatever their JSON shape — Spark's
-    JSON reader captures an object/array token verbatim when the schema says
-    string — so all three ES wire forms survive to the coercion layer."""
-    if geo:
-        if isinstance(dt, T.ArrayType):
-            return T.ArrayType(_wire_type(dt.elementType, True), dt.containsNull)
-        return T.StringType()
-    if isinstance(dt, T.TimestampType):
-        return T.StringType()
-    if isinstance(dt, T.BinaryType):
-        return T.StringType()
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_wire_type(dt.elementType), dt.containsNull)
-    if isinstance(dt, T.MapType):
-        return T.MapType(dt.keyType, _wire_type(dt.valueType), dt.valueContainsNull)
-    if isinstance(dt, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(
-                    f.name, _wire_type(f.dataType, _is_geo_field(f)), f.nullable, f.metadata
-                )
-                for f in dt.fields
-            ]
-        )
-    return dt
+def _wire_type(dt: T.StructType) -> T.StructType:
+    """Schema used for the raw JSON parse: every field comes off the wire
+    as a VARIANT, which keeps the token's kind (the string ``"[WIP] fix"``
+    stays a string, an array stays an array), and ``_coerce_sql`` types
+    it.  A typed parse would turn a numeric string, a scalar where an
+    array is mapped or the reverse into NULL (or fail a FAILFAST read);
+    ES accepts all of them."""
+    return T.StructType([T.StructField(f.name, T.VariantType()) for f in dt.fields])
 
 
-def _geo_point_coerce(col: Column) -> Column:
-    """Raw geo_point wire text -> struct(lat, lon), per document.
+def wire_ddl(dt: T.StructType) -> str:
+    """``_wire_type(dt)`` as a DDL string for ``from_json`` and ``CAST``."""
+    return "struct<{}>".format(",".join(f"{quote(n)}:variant" for n in dt.fieldNames()))
+
+
+# a "lat,lon" geo_point string, escaped for a SQL string literal
+_NUM_PAIR = r"^-?\\d+(\\.\\d+)?\\s*,\\s*-?\\d+(\\.\\d+)?$"
+
+
+def _geo_point_sql(e: str) -> str:
+    """A geo_point's wire VARIANT -> struct(lat, lon), per document.
 
     ES accepts three wire shapes for one geo_point field —
     ``{"lat": 41.12, "lon": -71.34}``, ``[-71.34, 41.12]`` (GeoJSON order:
     LON first), and ``"41.12,-71.34"`` (lat first) — and the reference picks
     a parser by sampling one document (SURVEY.md §1.2).  Deciding per
-    document from the leading character is strictly more lenient (mixed-form
-    indices parse too) and stays whole-stage-codegen."""
-    s = F.trim(col)
-    arr = F.from_json(s, T.ArrayType(T.DoubleType()))
-    parts = F.split(s, ",")
-    num_pair = r"^-?\d+(\.\d+)?\s*,\s*-?\d+(\.\d+)?$"
+    document from the value's kind is strictly more lenient (mixed-form
+    indices parse too).  Geohash / WKT / malformed text is a NULL point,
+    not struct(NULL, NULL), so ``loc IS NOT NULL`` does not count documents
+    with no parsed location."""
+    t = f"trim(CAST({e} AS STRING))"
     return (
-        F.when(s.isNull(), F.lit(None).cast(GEO_POINT_STRUCT))
-        .when(s.startswith("{"), F.from_json(s, GEO_POINT_STRUCT))
-        .when(
-            s.startswith("["),
-            F.struct(
-                F.element_at(arr, 2).alias("lat"), F.element_at(arr, 1).alias("lon")
-            ),
-        )
-        .when(
-            s.rlike(num_pair),
-            F.struct(
-                F.trim(parts.getItem(0)).cast("double").alias("lat"),
-                F.trim(parts.getItem(1)).cast("double").alias("lon"),
-            ),
-        )
-        # geohash / WKT / malformed: null point, not struct(null, null) —
-        # loc.isNotNull() must not count documents with no parsed location
-        .otherwise(F.lit(None).cast(GEO_POINT_STRUCT))
+        f"coalesce(try_cast({e} AS STRUCT<lat:DOUBLE,lon:DOUBLE>),"
+        f" CASE WHEN size(try_cast({e} AS ARRAY<VARIANT>)) >= 2 THEN named_struct("
+        f"'lat', try_variant_get({e}, '$[1]', 'double'),"
+        f" 'lon', try_variant_get({e}, '$[0]', 'double')) END,"
+        f" CASE WHEN {t} RLIKE '{_NUM_PAIR}' THEN named_struct("
+        f"'lat', CAST(trim(split({t}, ',')[0]) AS DOUBLE),"
+        f" 'lon', CAST(trim(split({t}, ',')[1]) AS DOUBLE)) END)"
     )
 
 
-def _coerce(col: Column, wire: T.DataType, target: T.DataType, geo: bool = False) -> Column:
-    """Wire value -> target type, recursively (ScrollReader coercion parity).
+_INTEGRAL_SQL = {
+    T.ByteType: "TINYINT", T.ShortType: "SMALLINT", T.IntegerType: "INT", T.LongType: "BIGINT",
+}
+# the epoch millis of 0001-01-01 and of 9999-12-31 23:59:59.999
+_MILLIS_RANGE = "-62135596800000 AND 253402300799999"
 
-    Dates: ISO-8601 string OR epoch-millis number, per document
-    (DateUtils.parseDate parity).  Binary: base64 decode.  geo_point: the
-    three ES wire shapes, per document."""
-    if geo:
-        if isinstance(target, T.ArrayType):
-            return F.transform(
-                col, lambda x: _coerce(x, wire.elementType, target.elementType, True)
-            )
-        return _geo_point_coerce(col)
+
+def _coerce_sql(e: str, target: T.DataType, geo: bool = False, depth: int = 0) -> str:
+    """SQL text that turns ``e``, a field's wire VARIANT (SQL NULL when the
+    field is missing, a variant null when it is JSON null), into ``target``
+    — the leniency table in the module docstring.  ``e`` must be a column,
+    field or lambda-variable reference, cheap to repeat: a parsed object or
+    array is bound to a lambda variable once and its parts are referenced
+    through it, so the text grows linearly with the mapping's depth.
+    ``es_datasource._coerce`` is the same table for one parsed Python
+    value; the two must agree."""
+    if geo and not isinstance(target, T.ArrayType):
+        return _geo_point_sql(e)
+    if isinstance(target, T.ArrayType):
+        x = f"x{depth}"
+        elem = _coerce_sql(x, target.elementType, geo, depth + 1)
+        return (
+            f"transform(coalesce(try_cast({e} AS ARRAY<VARIANT>),"
+            f" CASE WHEN {e} IS NOT NULL AND NOT is_variant_null({e}) THEN array({e}) END), {x} -> {elem})"
+        )
+    # a multi-valued field where the mapping says scalar: the first value
+    s = (
+        f"(CASE WHEN try_cast({e} AS ARRAY<VARIANT>) IS NULL THEN {e}"
+        f" ELSE try_element_at(try_cast({e} AS ARRAY<VARIANT>), 1) END)"
+    )
+    if isinstance(target, T.StructType):
+        p = f"p{depth}"
+        fields = ", ".join(
+            f"{sql_string(f.name)}, "
+            + _coerce_sql(f"{p}.{quote(f.name)}", f.dataType, _is_geo_field(f), depth + 1)
+            for f in target.fields
+        )
+        return (
+            f"transform(array(try_cast({s} AS {wire_ddl(target)})),"
+            f" {p} -> CASE WHEN {p} IS NOT NULL THEN named_struct({fields}) END)[0]"
+        )
+    if isinstance(target, T.MapType):
+        v = f"v{depth}"
+        val = _coerce_sql(v, target.valueType, False, depth + 1)
+        return (
+            f"transform_values(try_cast({s} AS MAP<STRING,VARIANT>), (k{depth}, {v}) -> {val})"
+        )
+    # a scalar's text: a string's content, any other value as JSON
+    t = f"CAST({s} AS STRING)"
     if isinstance(target, T.TimestampType):
-        # try ISO-8601 first, then epoch millis (a bare number parses via
-        # try_cast to long); both NULL -> stays NULL
-        return F.coalesce(
-            F.try_to_timestamp(col),
-            F.timestamp_millis(col.try_cast("long")),
+        # digits other than a bare 4-digit year are epoch millis (NULL out
+        # of year 1..9999); anything else starting with a 4-digit year is
+        # an ISO-8601 date (an offset-less one in the session zone); the
+        # year test keeps try_to_timestamp from raising on a longer year
+        ms = f"try_cast({t} AS BIGINT)"
+        return (
+            rf"CASE WHEN length({t}) != 4 AND {t} RLIKE '^\\s*[+-]?\\d+\\s*$'"
+            f" THEN CASE WHEN {ms} BETWEEN {_MILLIS_RANGE} THEN timestamp_millis({ms}) END"
+            rf" WHEN {t} RLIKE '^\\s*\\d{{4}}(?!\\d)' THEN try_to_timestamp({t}) END"
         )
     if isinstance(target, T.BinaryType):
-        return F.unbase64(col)
-    if isinstance(target, T.ArrayType):
-        return F.transform(col, lambda x: _coerce(x, wire.elementType, target.elementType))
-    if isinstance(target, T.MapType):
-        return F.map_from_arrays(
-            F.map_keys(col),
-            F.transform(
-                F.map_values(col), lambda v: _coerce(v, wire.valueType, target.valueType)
-            ),
-        )
-    if isinstance(target, T.StructType):
-        return F.struct(
-            *[
-                _coerce(
-                    col.getField(f.name), wf.dataType, f.dataType, _is_geo_field(f)
-                ).alias(f.name)
-                for f, wf in zip(target.fields, wire.fields)
-            ]
-        )
-    return col
+        return f"CASE WHEN schema_of_variant({s}) = 'STRING' THEN try_to_binary({t}, 'base64') END"
+    if isinstance(target, T.BooleanType):
+        return f"CASE {t} WHEN 'true' THEN true WHEN 'false' THEN false END"
+    if type(target) in _INTEGRAL_SQL:
+        # "12.7" truncates to 12, as ES's coerce does
+        return f"try_cast(try_cast({t} AS DECIMAL(38,18)) AS {_INTEGRAL_SQL[type(target)]})"
+    if isinstance(target, T.FloatType):
+        return f"try_cast({t} AS FLOAT)"
+    if isinstance(target, T.DoubleType):
+        return f"try_cast({t} AS DOUBLE)"
+    if isinstance(target, T.NullType):
+        return "NULL"
+    # a JSON number with a fraction parses as a decimal whose text drops
+    # trailing zeros ("0.0" -> "0"); read it back through a double, as
+    # the esdocs reader's json.loads does ("0.0", "12.5")
+    return (
+        f"CASE WHEN startswith(schema_of_variant({s}), 'DECIMAL')"
+        f" THEN CAST(CAST({s} AS DOUBLE) AS STRING) ELSE {t} END"
+    )
 
 
-def _needs_coercion_field(f: T.StructField) -> bool:
-    return _is_geo_field(f) or _needs_coercion(f.dataType)
-
-
-def _needs_coercion(dt: T.DataType) -> bool:
-    if isinstance(dt, (T.TimestampType, T.BinaryType)):
-        return True
-    if isinstance(dt, T.ArrayType):
-        return _needs_coercion(dt.elementType)
-    if isinstance(dt, T.MapType):
-        return _needs_coercion(dt.valueType)
-    if isinstance(dt, T.StructType):
-        return any(_needs_coercion_field(f) for f in dt.fields)
-    return False
+def coerced_columns(target: T.StructType, prefix: str = "") -> list[tuple[str, str]]:
+    """(name, SQL) per field of ``target``: the field's wire VARIANT
+    (``prefix`` + name) coerced to its mapped type."""
+    return [
+        (f.name, _coerce_sql(prefix + quote(f.name), f.dataType, _is_geo_field(f)))
+        for f in target.fields
+    ]
 
 
 def read_json_docs(
@@ -357,13 +411,10 @@ def read_json_docs(
         reader = spark.read.schema(parse_schema).option("mode", mode)
         if errors == "log":
             reader = reader.option("columnNameOfCorruptRecord", "_corrupt_record")
-        df = reader.json(path)
-        for f, wf in zip(target.fields, wire.fields):
-            if _needs_coercion_field(f):
-                df = df.withColumn(
-                    f.name,
-                    _coerce(F.col(f.name), wf.dataType, f.dataType, _is_geo_field(f)),
-                )
+        cols = [f"{e} AS {quote(n)}" for n, e in coerced_columns(target)]
+        if errors == "log":
+            cols.append("_corrupt_record")
+        df = reader.json(path).selectExpr(*cols)
 
     if include_fields:
         keep = [c for c in include_fields if c in df.columns]

@@ -133,7 +133,7 @@ def test_write_read_round_trip(registered, docs_dir, tmp_path):
 def test_write_overwrite_and_delete_op(registered, docs_dir, tmp_path):
     # NB: a fresh _read() per action — reusing one esdocs DataFrame across
     # differently-filtered actions hits the Spark 4.1 pushed-scan reuse bug
-    # documented in es_datasource.py (the veneer helpers exist for this).
+    # documented on es_datasource.EsDocsDataSource.
     out = str(tmp_path / "out_idx2")
     _read(registered, docs_dir).write.format("esdocs").option("path", out).mode(
         "append"

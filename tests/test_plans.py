@@ -574,3 +574,90 @@ def test_esql_ts_rate_subday_one_window_two_aggs(spark, sf_dir):
     assert count_nodes(plan, "BroadcastHashJoin") == 0
     assert "PythonUDF" not in plan
     assert count_nodes(plan, "Scan parquet") == 1
+
+
+BULK_MAPPING = {
+    "properties": {
+        "event_id": {"type": "long"},
+        "user_id": {"type": "long"},
+        "event_type": {"type": "keyword"},
+        "value": {"type": "double"},
+    }
+}
+
+
+@pytest.fixture(scope="module")
+def bulk_events(spark, sf_dir, tmp_path_factory):
+    """A bulk file of 300 events, as esbench's read_docs requests read."""
+    import json
+
+    from elasticsearch_hadoop_spark.corpus._util import tbl
+
+    rows = (
+        tbl(spark, sf_dir, "events")
+        .select(*BULK_MAPPING["properties"]).orderBy("event_id").limit(300).collect()
+    )
+    path = tmp_path_factory.mktemp("bulk_events")
+    with open(path / "part-0.ndjson", "w") as fh:
+        for r in rows:
+            fh.write(json.dumps({"index": {"_id": r.event_id}}) + "\n")
+            fh.write(json.dumps(r.asDict()) + "\n")
+    return str(path)
+
+
+def _read_docs_request(spark, path):
+    """esbench's read_docs request: a term query, two range filters and
+    an aggregate."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from elasticsearch_hadoop_spark.sources.es_datasource import read_docs
+
+    df = read_docs(spark, path, BULK_MAPPING, query=json.dumps({"term": {"event_type": "click"}}))
+    df = df.filter(F.col("value") >= 3.0).filter(F.col("user_id") <= 4000)
+    return df.agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"), F.sum("user_id").alias("u"))
+
+
+def test_read_docs_is_one_native_pass(spark, bulk_events):
+    """read_docs plans Spark's text reader and pairs bulk lines inside one
+    generator: no Python scan or Python evaluation, no Window (pairing
+    neighbouring lines with lag() costs a shuffle, a sort and a job), and
+    no Exchange but the aggregate's.  Building runs no job; collecting
+    runs 2, the aggregate's map stage and its result stage."""
+    from tests.conftest import count_jobs
+
+    agg, build_jobs = count_jobs(spark, lambda: _read_docs_request(spark, bulk_events))
+    assert build_jobs == 0
+    plan = formatted_plan(agg)
+    # Spark's text reader, not the Python DataSource's "BatchScan esdocs"
+    assert count_nodes(plan, "Scan text") == 1
+    assert "BatchScan" not in plan and "EvalPython" not in plan
+    assert count_nodes(plan, "Window") == 0
+    assert count_nodes(plan, "Exchange") == 1
+    assert count_nodes(plan, "Generate") == 1
+    (row,), collect_jobs = count_jobs(spark, agg.collect)
+    assert collect_jobs == 2
+    assert row.n > 0
+
+
+def test_read_docs_build_py4j_budget(spark, bulk_events):
+    """read_docs renders the pairing, the coercions and the query's field
+    references as SQL text, so its build takes about 50 Py4J round trips
+    (51 for this mapping); a Column-built version of the same plan took
+    about 250.  The rest of the request is the caller's: on PySpark 4.1
+    the two Column filters and the aggregate alone take 113 (``F.col`` is
+    13 round trips, ``F.expr`` 3), so the whole request is not pinned."""
+    import json
+
+    from elasticsearch_hadoop_spark.sources.es_datasource import read_docs
+    from tests.conftest import count_py4j_calls
+
+    def build():
+        return read_docs(
+            spark, bulk_events, BULK_MAPPING, query=json.dumps({"term": {"event_type": "click"}})
+        )
+
+    build()
+    _, calls = count_py4j_calls(build)
+    assert calls <= 60, calls
