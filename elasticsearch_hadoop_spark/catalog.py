@@ -35,11 +35,13 @@ Parity map (reference op -> this module):
 Scale notes (100 TB):
 - Merge ops (update/upsert/delete/create-conflict-check) are hash joins on
   ``_id`` — the only shuffle is on the merge key, and the incoming batch is
-  broadcast when small (Spark AQE decides).  The commit is
-  write-new-directory + atomic rename: coarse but correct single-writer
-  semantics.  A production deployment swaps the commit layer for Delta/
-  Iceberg ``MERGE INTO`` (same join shape, finer-grained file rewrite);
-  nothing above the commit changes.
+  broadcast when small (Spark AQE decides).  Every commit goes through
+  the ``txn.py`` manifest log: write a new immutable data directory, then
+  claim the next manifest version (the Delta protocol's core), so
+  concurrent writers retry instead of losing a write.  A production
+  deployment swaps the commit layer for Delta/Iceberg ``MERGE INTO``
+  (same join shape, finer-grained file rewrite); nothing above the
+  commit changes.
 - ``index_pattern`` routing writes with ``partitionBy(_index)`` -> Hive-style
   directory layout, so per-index reads are partition-pruned scans.
 - Append never reads existing data: blind parquet append, no shuffle.
@@ -68,6 +70,15 @@ _PATTERN_RE = re.compile(r"\{([A-Za-z0-9_.]+)(\|date:([^}]+))?\}")
 # subset compatible with Spark's date_format patterns (yyyy MM dd HH mm ss).
 VALID_OPERATIONS = ("index", "create", "update", "upsert", "delete")
 VALID_MODES = ("append", "overwrite", "error", "ignore")
+
+
+def _read_json(path: str, default=None):
+    """The JSON document at ``path``; ``default`` (an empty dict) if none."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {} if default is None else default
 
 
 def _write_json(path: str, obj) -> None:
@@ -116,14 +127,23 @@ class DocumentMissingError(RuntimeError):
 class Catalog:
     """Managed parquet indices under a root directory.
 
-    ``transactional=True`` switches the commit layer from the single-writer
-    atomic directory swap to the optimistic-concurrency manifest log in
+    Every write commits through the optimistic-concurrency manifest log in
     ``txn.py`` (Delta-protocol core: immutable uuid data dirs + O_EXCL
-    version-file claims).  Concurrent blind appends always both land
-    (manifest-union retry, no data rewrite); concurrent merge/upsert/
-    delete_by_query rewrites retry their read-modify-write against the
-    winner's snapshot — ES's server-side concurrent-bulk-writer semantics,
-    re-expressed as a commit protocol (SURVEY.md §2.A A5)."""
+    version-file claims), and the manifest records the index schema.
+    Concurrent blind appends always both land (manifest-union retry, no
+    data rewrite); concurrent merge/upsert/delete_by_query rewrites retry
+    their read-modify-write against the winner's snapshot — ES's
+    server-side concurrent-bulk-writer semantics, re-expressed as a commit
+    protocol (SURVEY.md §2.A A5).
+
+    ``transactional`` decides only what happens to the snapshots a
+    rewrite supersedes.  ``True`` keeps them until ``vacuum_index``, which
+    time travel (``read_index_version``), points in time and CCR
+    followers need.  ``False`` deletes their data dirs as soon as the
+    rewrite commits, so storage stays at one live snapshot, and prunes the
+    manifests older than ``txn.LOG_RETENTION_SECONDS``, so the log stays
+    short.  An index exists once its first commit lands: a first write
+    that fails leaves no index behind."""
 
     def __init__(self, spark: SparkSession, root: str, transactional: bool = False):
         self.spark = spark
@@ -140,11 +160,7 @@ class Catalog:
         return os.path.join(self.root, "_pits.json")
 
     def _read_pits(self) -> dict:
-        try:
-            with open(self._pits_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"seq": 0, "pits": {}}
+        return _read_json(self._pits_path(), {"seq": 0, "pits": {}})
 
     def _mutate_pits(self, fn):
         """Run ``fn(state) -> (result, dirty)`` under an O_EXCL lock file
@@ -207,9 +223,8 @@ class Catalog:
         return os.path.isdir(self.path(name))
 
     def list_indices(self) -> list[str]:
-        return sorted(
-            d for d in os.listdir(self.root) if os.path.isdir(os.path.join(self.root, d))
-        )
+        # a directory whose first write died before committing is no index
+        return sorted(d for d in os.listdir(self.root) if txn.has_commit(self.path(d)))
 
     def drop_index(self, name: str) -> None:
         shutil.rmtree(self.path(name), ignore_errors=True)
@@ -217,11 +232,7 @@ class Catalog:
             os.remove(self._meta_path(name))
 
     def _read_meta(self, name: str) -> dict:
-        try:
-            with open(self._meta_path(name)) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _read_json(self._meta_path(name))
 
     def _write_meta(self, name: str, meta: dict) -> None:
         _write_json(self._meta_path(name), meta)
@@ -231,11 +242,7 @@ class Catalog:
         return os.path.join(self.root, "_aliases.json")
 
     def _read_aliases(self) -> dict[str, list[str]]:
-        try:
-            with open(self._aliases_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _read_json(self._aliases_path())
 
     def put_alias(
         self, alias: str, *indices: str, filter: str | dict | None = None
@@ -282,15 +289,12 @@ class Catalog:
         SURVEY.md §3.2). Rewrites the index keeping only non-matching rows;
         returns the number deleted. One scan + one write, no driver-side
         row handling."""
-        names = self.resolve_pattern(name)
-        if len(names) != 1:
-            raise ValueError(f"delete_by_query takes a single index, got {names}")
-        (idx,) = names
+        idx = self._one_index(name, "delete_by_query")
         pred = compile_query(query)
         # before/kept counts ride the rewrite job as Observation metrics
         # (CollectMetrics accumulators) — previously two EXTRA full-scan
         # count jobs bracketed the write; at scale that tripled the I/O of
-        # every delete_by_query.  A transactional retry re-invokes build,
+        # every delete_by_query.  A lost commit race re-invokes build,
         # so each invocation gets fresh Observations; the committed result
         # is the last pair.
         obs: list[tuple[Observation, Observation]] = []
@@ -336,15 +340,12 @@ class Catalog:
         every document matching ``query``; returns the match count.  One
         scan + one rewrite — the non-matching rows pass through untouched,
         no row-at-a-time path."""
-        names = self.resolve_pattern(name)
-        if len(names) != 1:
-            raise ValueError(f"update_by_query takes a single index, got {names}")
-        (idx,) = names
+        idx = self._one_index(name, "update_by_query")
         pred = compile_query(query)
         # matched count rides the rewrite job as an Observation metric on
         # the PRE-update rows (pred must see the old values) — previously a
         # separate full-scan count job ran before the rewrite.  Fresh
-        # Observation per build invocation (transactional retry re-invokes).
+        # Observation per build invocation (a lost commit race re-invokes).
         obs: list[Observation] = []
 
         def build(df: DataFrame) -> DataFrame:
@@ -432,8 +433,11 @@ class Catalog:
         rolled = any(conditions.values())
         new_index = f"{m.group(1)}-{int(m.group(2)) + 1:06d}"
         if rolled and not dry_run:
-            # the old generation's recorded schema: no Spark job
-            self._create_empty_index(new_index, self._read_files(current).schema)
+            # a rollover that died before re-pointing the alias already
+            # committed the next generation: only the alias step remains
+            if not txn.has_commit(self.path(new_index)):
+                # the old generation's recorded schema: no Spark job
+                self._create_empty_index(new_index, self._read_files(current).schema)
             aliases[alias] = [*targets, new_index]
             _write_json(self._aliases_path(), aliases)
         return {
@@ -446,36 +450,32 @@ class Catalog:
         }
 
     def _create_empty_index(self, name: str, schema) -> None:
-        """Create an index as pure METADATA — empty directory + the Spark
-        schema recorded in ``_meta`` — exactly like ES, where index
-        creation touches no data nodes' segments.  Reads use the recorded
-        schema like any other index's, so a directory with no files is
-        simply an index with 0 rows.  Index templates resolve here like any
-        new-index creation (write_index parity)."""
-        os.makedirs(self.path(name), exist_ok=True)
-        meta = self._read_meta(name)
-        meta.update(
-            {
-                "created_at": time.time(),
-                "updated_at": time.time(),
-                "schema": schema.jsonValue(),
-            }
-        )
-        tpl = self._match_template(name)
-        if tpl is not None:
-            t = self._resolve_template(tpl)
-            settings = t.get("settings") or {}
-            pipeline = settings.get("index.default_pipeline") or settings.get(
-                "default_pipeline"
-            )
-            sort_field = settings.get("index.sort.field") or settings.get("sort.field")
-            if pipeline:
-                meta["default_pipeline"] = pipeline
-            if sort_field:
-                meta["index_sort"] = sort_field
-            if t.get("mappings") is not None and "mappings" not in meta:
-                meta["mappings"] = t["mappings"]
+        """Create an index as pure METADATA — a manifest that lists no
+        data dirs and records the Spark schema — exactly like ES, where
+        index creation touches no data nodes' segments.  Reads return 0
+        rows with the recorded schema.  Index templates resolve here like
+        any new-index creation (write_index parity)."""
+        txn.commit_replace(self.path(name), 0, None, schema=schema.jsonValue())
+        meta = {**self._template_meta(name), **self._read_meta(name)}
+        meta.update({"created_at": time.time(), "updated_at": time.time()})
         self._write_meta(name, meta)
+
+    def _template_meta(self, name: str) -> dict:
+        """What a new index keeps in its ``_meta`` from the highest-priority
+        matching index template (composed_of merged in): its
+        ``default_pipeline``, ``index_sort`` and ``mappings``."""
+        tpl = self._match_template(name)
+        if tpl is None:
+            return {}
+        t = self._resolve_template(tpl)
+        settings = t.get("settings") or {}
+        out = {
+            "default_pipeline": settings.get("index.default_pipeline")
+            or settings.get("default_pipeline"),
+            "index_sort": settings.get("index.sort.field") or settings.get("sort.field"),
+            "mappings": t.get("mappings"),
+        }
+        return {k: v for k, v in out.items() if v}
 
     def write_alias(self, df: DataFrame, alias: str, **kwargs) -> None:
         """Write through a rollover alias: documents land in the alias's
@@ -537,7 +537,9 @@ class Catalog:
             raise ValueError(f"operation={operation!r} requires id_col")
 
         target = self.path(name)
-        existed = self.exists(name)
+        # a directory whose first write died before committing is not an
+        # index yet: the retry creates it (template, mode="error")
+        existed = txn.has_commit(target)
         prior_meta = self._read_meta(name) if existed else {}
         if existed and mode == "error":
             raise IndexExistsError(name)
@@ -556,21 +558,10 @@ class Catalog:
         # every later write re-reads them from _meta and applies them
         # again — in ES, index.default_pipeline runs on EVERY indexing
         # request to the index, not just the first batch (ADVICE r4).
-        tpl_mappings = None
-        pipeline_name = prior_meta.get("default_pipeline")
-        sort_field = prior_meta.get("index_sort")
-        if not existed:
-            tpl = self._match_template(name)
-            if tpl is not None:
-                t = self._resolve_template(tpl)  # composed_of merged in
-                settings = t.get("settings") or {}
-                pipeline_name = settings.get(
-                    "index.default_pipeline"
-                ) or settings.get("default_pipeline")
-                sort_field = settings.get("index.sort.field") or settings.get(
-                    "sort.field"
-                )
-                tpl_mappings = t.get("mappings")
+        tpl_meta = {} if existed else self._template_meta(name)
+        settings = prior_meta if existed else tpl_meta
+        pipeline_name = settings.get("default_pipeline")
+        sort_field = settings.get("index_sort")
         if pipeline_name:
             from elasticsearch_hadoop_spark.ingest import compile_pipeline
 
@@ -607,51 +598,43 @@ class Catalog:
 
         partition_cols = ["_index"] if index_pattern is not None else []
 
-        if mode == "overwrite" or not existed:
+        if mode == "overwrite" or not self.exists(name):
             # truncate-then-write parity; also the create path
             self._commit_build(
                 name, partition_cols, lambda _existing: cluster(out),
                 max_records_per_file=max_records_per_file, needs_existing=False,
             )
-        elif operation in ("index", "create", "update", "upsert", "delete"):
-            if id_col is None and operation == "index":
-                # plain append, no identity: blind parquet append, no read.
-                # Transactional mode publishes via manifest-union retry —
-                # concurrent appends both land, no data rewrite on a race.
-                self._append_files(cluster(out), name, partition_cols, max_records_per_file)
-            else:
-                final = out
-                checks: list = []
+        elif id_col is None and operation == "index":
+            # plain append, no identity: blind parquet append, no read,
+            # published via manifest-union retry — concurrent appends
+            # both land, no data rewrite on a race.
+            self._append_files(cluster(out), name, partition_cols, max_records_per_file)
+        else:
+            checks: list = []
 
-                def merge_build(existing: DataFrame | None) -> DataFrame:
-                    if existing is None:
-                        # index dir exists but holds no committed data (a
-                        # first write that crashed after init_log): merge
-                        # against an empty snapshot — upsert/index insert
-                        # everything, update raises DocumentMissingError,
-                        # delete is a no-op — instead of crashing on None.
-                        existing = self.spark.createDataFrame([], final.schema)
-                    return cluster(
-                        self._merge(existing, final, operation, on_match, checks=checks)
-                    )
+            def merge_build(existing: DataFrame | None) -> DataFrame:
+                if existing is None:
+                    # a directory without a commit (a first write that died
+                    # after init_log) merges against an empty snapshot
+                    existing = self.spark.createDataFrame([], out.schema)
+                return cluster(self._merge(existing, out, operation, on_match, checks=checks))
 
-                self._commit_build(
-                    name,
-                    partition_cols,
-                    merge_build,
-                    max_records_per_file=max_records_per_file,
-                    # update's missing-_id contract is enforced from the
-                    # merge job's own Observation metrics (zero extra scans),
-                    # AFTER the build wrote but BEFORE the commit publishes —
-                    # a failure leaves the index untouched, like the old
-                    # pre-check.  checks[-1] is the latest build invocation's
-                    # closure (a transactional retry re-invokes build).
-                    validate=(lambda: checks[-1]()) if operation == "update" else None,
-                )
+            self._commit_build(
+                name,
+                partition_cols,
+                merge_build,
+                max_records_per_file=max_records_per_file,
+                # update's missing-_id contract is enforced from the merge
+                # job's own Observation metrics (zero extra scans), AFTER
+                # the build wrote but BEFORE the commit publishes, so a
+                # failure leaves the index untouched.  checks[-1] is the
+                # latest build's closure (a lost race re-invokes build).
+                validate=(lambda: checks[-1]()) if operation == "update" else None,
+            )
 
         # merge (not replace) the meta: created_at (rollover/data-stream
         # age) and template mappings must survive later writes
-        meta = self._read_meta(name)
+        meta = {**tpl_meta, **self._read_meta(name)}
         meta.update(
             {
                 "id_col": id_col,
@@ -660,12 +643,6 @@ class Catalog:
                 "updated_at": time.time(),
             }
         )
-        if tpl_mappings is not None and "mappings" not in meta:
-            meta["mappings"] = tpl_mappings
-        if pipeline_name:
-            meta["default_pipeline"] = pipeline_name
-        if sort_field:
-            meta["index_sort"] = sort_field
         self._write_meta(name, meta)
 
     def _merge(
@@ -678,9 +655,9 @@ class Catalog:
     ) -> DataFrame:
         """Hash-join merge on _id.  Incoming batch is usually the small side
         -> AQE broadcasts it; existing data shuffles at most once on _id.
-        ``existing`` is the snapshot the commit layer resolved — under the
-        transactional log a lost race re-invokes this against the winner's
-        snapshot (optimistic MERGE INTO).
+        ``existing`` is the snapshot the commit layer resolved — a lost
+        commit race re-invokes this against the winner's snapshot
+        (optimistic MERGE INTO).
 
         ``operation="update"``'s missing-_id check rides the merge job
         itself: the merge joins already touch every (incoming, existing)
@@ -826,55 +803,61 @@ class Catalog:
         validate=None,
     ) -> None:
         """Derive-and-replace commit: ``build(existing_df_or_None)`` returns
-        the index's new full contents, and the commit records the schema
-        of what it wrote (``_written_schema``) for every later read.
-
-        Non-transactional: read once, write a temp dir, atomic swap
-        (``_commit``; the record lives in ``_meta``).  Transactional: write
-        the result to an immutable uuid data dir and claim the next
-        manifest version, whose body carries the record; if another writer
-        won the race, re-run ``build`` against the winner's snapshot and
-        try again (txn.commit_replace's optimistic loop).
+        the index's new full contents.  The result goes to an immutable
+        uuid data dir, and the next manifest version, which records the
+        schema of what was written (``_written_schema``), is claimed over
+        it.  If another writer won the race, ``build`` re-runs against the
+        winner's snapshot and the claim is retried (txn.commit_replace's
+        optimistic loop).  ``build`` gets None only when the index has no
+        committed version yet.
 
         ``validate`` (when given) runs after the build's write job finishes
-        but BEFORE the result becomes visible (pre-swap / pre-publish) — the
-        hook that lets contract checks ride the write job's own Observation
-        metrics instead of paying a separate pre-check job; a raise aborts
-        the commit with the index untouched."""
-        meta = self._read_meta(name)
-        self._assert_not_follower(name, meta)
-        target = self.path(name)
-        if not self.transactional:
-            existing = (
-                self._read_files(name) if needs_existing and self.exists(name) else None
-            )
-            self._commit(build(existing), name, partition_cols,
-                         max_records_per_file=max_records_per_file,
-                         validate=validate)
-            return
-        # pre-existing plain data becomes committed v1
-        txn.adopt(target, meta.get("schema"))
-        version, dirs, schema = txn.snapshot(target)
+        but BEFORE the result becomes visible (pre-publish) — the hook that
+        lets contract checks ride the write job's own Observation metrics
+        instead of paying a separate pre-check job; a raise aborts the
+        commit with the index untouched."""
+        created = not self.exists(name)
+        target = self._adopt(name)
+        base: list[str] = []  # the snapshot the committed attempt replaced
 
-        def produce(dirs_: list[str], schema_: dict | None) -> tuple[str, dict]:
+        def produce(dirs: list[str], schema: dict | None) -> tuple[str, dict]:
+            base[:] = dirs
             existing = (
-                self._read_dirs(name, dirs_, schema_) if (needs_existing and dirs_) else None
+                self._read_dirs(name, dirs, schema)
+                if (needs_existing and schema is not None)
+                else None
             )
             out = build(existing)
             d = txn.new_data_dir(target)
-            self._writer(out, partition_cols, max_records_per_file).parquet(d)
-            if validate is not None:
-                try:
+            try:
+                self._writer(out, partition_cols, max_records_per_file).parquet(d)
+                if validate is not None:
                     validate()
-                except Exception:
-                    # uncommitted uuid dir: invisible to readers; drop it
-                    # eagerly rather than waiting for vacuum
-                    shutil.rmtree(d, ignore_errors=True)
-                    raise
+            except Exception:
+                # uncommitted uuid dir: invisible to readers; drop it
+                # eagerly rather than waiting for vacuum
+                shutil.rmtree(d, ignore_errors=True)
+                raise
             return d, _written_schema(out, partition_cols)
 
-        d, written = produce(dirs, schema)
-        txn.commit_replace(target, version, d, recompute=produce, schema=written)
+        try:
+            version, dirs, schema = txn.snapshot(target)
+            d, written = produce(dirs, schema)
+            version = txn.commit_replace(target, version, d, recompute=produce, schema=written)
+        except Exception:
+            if created:
+                txn.discard_empty(target)
+            raise
+        self._retire(target, version, base)
+
+    def _retire(self, target: str, version: int, superseded=()) -> None:
+        """The retention decision after commit ``version``: a transactional
+        catalog keeps the snapshot a replace commit superseded until
+        vacuum_index (time travel, PITs, followers), and its whole log; any
+        other deletes the ``superseded`` data dirs now and prunes old
+        manifests, so storage holds one live snapshot and a short log."""
+        if not self.transactional:
+            txn.drop_superseded(target, version, superseded)
 
     def _append_files(
         self,
@@ -883,66 +866,69 @@ class Catalog:
         partition_cols: list[str],
         max_records_per_file: int | None = None,
     ) -> None:
-        """Blind append; the record becomes the union of the index's and
-        the frame's schemas (txn.merge_schema_json).  A plain index records
-        it BEFORE the data job, so a crash leaves at worst an all-null
-        column, never written data readers cannot see.  Transactional mode
-        writes a complete uuid data dir first, then publishes it with a
-        manifest-union claim — a lost race retries only the (tiny) manifest
-        write, never the data."""
+        """Blind append: write a complete uuid data dir, then publish it
+        with a manifest-union claim whose schema is the union of the
+        index's and the frame's (txn.merge_schema_json) — a lost race
+        retries only the (tiny) manifest write, never the data."""
+        created = not self.exists(name)
+        target = self._adopt(name)
+        d = txn.new_data_dir(target)
+        try:
+            self._writer(df, partition_cols, max_records_per_file).parquet(d)
+        except Exception:
+            shutil.rmtree(d, ignore_errors=True)
+            if created:
+                txn.discard_empty(target)
+            raise
+        version = txn.commit_append(
+            target, d, schema=_written_schema(df, partition_cols), partition_cols=partition_cols
+        )
+        self._retire(target, version)
+
+    def _adopt(self, name: str) -> str:
+        """The index path, after refusing a follower and bringing any data
+        an earlier version wrote outside the log under it (txn.adopt).
+        That layout kept its schema in ``_meta``, which moves into the
+        manifest."""
         meta = self._read_meta(name)
         self._assert_not_follower(name, meta)
         target = self.path(name)
-        schema = _written_schema(df, partition_cols)
-        if not self.transactional:
-            meta["schema"] = txn.merge_schema_json(meta.get("schema"), schema, partition_cols)
+        txn.adopt(target, meta.get("schema"))
+        if "schema" in meta:
+            del meta["schema"]
             self._write_meta(name, meta)
-            self._writer(df, partition_cols, max_records_per_file, mode="append").parquet(target)
-            return
-        txn.adopt(target, meta.get("schema"))  # pre-existing plain data becomes committed v1
-        d = txn.new_data_dir(target)
-        self._writer(df, partition_cols, max_records_per_file).parquet(d)
-        txn.commit_append(target, d, schema=schema, partition_cols=partition_cols)
+        return target
 
     def compact_index(self, name: str, target_files: int | None = None) -> None:
         """Compact an index's data into ``target_files`` files (default:
-        session shuffle parallelism).  On a transactional index this is
-        just a REPLACE commit whose build coalesces the union — concurrent
-        appends that land mid-compaction win the race and the compaction
-        retries over the enlarged snapshot, so nothing is lost.  The
+        session shuffle parallelism).  This is just a REPLACE commit whose
+        build coalesces the union — concurrent appends that land
+        mid-compaction win the race and the compaction retries over the
+        enlarged snapshot, so nothing is lost.  The
         100 TB housekeeping op: manifest length and small-file count reset
         to O(1) without blocking writers."""
-        names = self.resolve_pattern(name)
-        if len(names) != 1:
-            raise ValueError(f"compact_index takes a single index, got {names}")
+        idx = self._one_index(name, "compact_index")
         n = target_files or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         # preserve dynamic-routing Hive layout: a routed index compacted
         # flat would lose partition-pruned reads permanently
-        partition_cols = ["_index"] if self._read_meta(names[0]).get("index_pattern") else []
+        partition_cols = ["_index"] if self._read_meta(idx).get("index_pattern") else []
 
         def build(df: DataFrame) -> DataFrame:
             if df is None:
-                raise ValueError(f"index {names[0]!r} has no committed data to compact")
+                raise ValueError(f"index {idx!r} has no committed data to compact")
             return df.coalesce(n)
 
-        self._commit_build(names[0], partition_cols, build)
+        self._commit_build(idx, partition_cols, build)
 
     # ------------------------------------------------- shrink / split / clone
     def _data_file_count(self, name: str) -> int:
         """The index's LIVE parquet data-file count — the shard-count
         analogue (ES _shrink/_split arithmetic runs on primary shard
         counts; here a 'shard' is one parquet file, the parallel-read
-        unit).  On a transactional index only the latest manifest's dirs
-        count: superseded versions retained for time travel are dead
-        weight, not shards."""
-        path = self.path(name)
-        if txn.is_transactional(path):
-            _, dirs = txn.latest(path)
-            roots = dirs
-        else:
-            roots = [path]
+        unit).  Only the latest manifest's dirs count: superseded versions
+        retained for time travel are dead weight, not shards."""
         n = 0
-        for r in roots:
+        for r in txn.latest(self.path(name))[1]:
             for root, _dirs, files in os.walk(r):
                 n += sum(1 for f in files if f.endswith(".parquet"))
         return n
@@ -950,10 +936,7 @@ class Catalog:
     def _resize_index(
         self, source: str, target: str, target_shards: int, kind: str
     ) -> dict:
-        names = self.resolve_pattern(source)
-        if len(names) != 1:
-            raise ValueError(f"_{kind} takes a single source index, got {names}")
-        src = names[0]
+        src = self._one_index(source, f"_{kind}")
         if self.exists(target):
             raise IndexExistsError(f"target index {target!r} already exists")
         if target_shards < 1:
@@ -974,8 +957,7 @@ class Catalog:
         # the target directly: ES _shrink/_split copy segments verbatim,
         # so neither index templates, default pipelines, nor id dedupe may
         # touch the data (write_index would apply all three to a new
-        # index).  The target is a plain single-swap index either way; a
-        # transactional source contributes its LIVE manifest only.
+        # index).  The source contributes its LIVE manifest only.
         df = self._read_files(src)
         meta = self._read_meta(src)
         # shrink merges without a shuffle (ES hard-links segments into
@@ -983,13 +965,12 @@ class Catalog:
         out = df.coalesce(target_shards) if kind == "shrink" else df.repartition(target_shards)
         # preserve dynamic-routing Hive layout, like compact_index
         partition_cols = ["_index"] if meta.get("index_pattern") else []
-        self._commit(out, target, partition_cols)
+        self._commit_build(target, partition_cols, lambda _: out, needs_existing=False)
         # ES copies index settings (minus shard count) to the target —
-        # but NOT follower identity: a resize target is a plain index, so
-        # the ccr_* keys are stripped (copying them would mint a target
-        # that refuses all writes and that ccr_poll tries to sync over
-        # non-transactional parquet; ES likewise requires unfollow before
-        # resizing a follower).  The commit's own schema record wins.
+        # but NOT follower identity: a resize target is a regular index,
+        # so the ccr_* keys are stripped (copying them would mint a target
+        # that refuses all writes and that ccr_poll tries to sync; ES
+        # likewise requires unfollow before resizing a follower).
         tmeta = {k: v for k, v in meta.items() if not k.startswith("ccr_")}
         tmeta.update(self._read_meta(target), resized_from=src)
         self._write_meta(target, tmeta)
@@ -1018,10 +999,7 @@ class Catalog:
         """ES ``POST /<src>/_clone/<dst>``: byte-identical copy with the
         same layout (ES clones via hard links; copytree is the portable
         analogue — no rows are read or rewritten)."""
-        names = self.resolve_pattern(source)
-        if len(names) != 1:
-            raise ValueError(f"_clone takes a single source index, got {names}")
-        src = names[0]
+        src = self._one_index(source, "_clone")
         if self.exists(target):
             raise IndexExistsError(f"target index {target!r} already exists")
         shutil.copytree(self.path(src), self.path(target))
@@ -1041,22 +1019,17 @@ class Catalog:
         }
 
     def read_index_version(self, name: str, version: int) -> DataFrame:
-        """Time travel on a transactional index: the index exactly as of
+        """Time travel in a transactional catalog: the index exactly as of
         committed ``version`` (the ES snapshot / point-in-time analogue —
         a reader pins a manifest and is immune to concurrent rewrites).
         Valid until vacuum_index sweeps the superseded data dirs; the
         retention window (txn.vacuum) is therefore also the time-travel
         horizon, exactly as in Delta."""
-        names = self.resolve_pattern(name)
-        if len(names) != 1:
-            raise ValueError(f"time travel takes a single index, got {names}")
-        path = self.path(names[0])
-        if not txn.is_transactional(path):
-            raise ValueError(f"index {names[0]!r} is not transactional")
-        _, dirs, schema = txn.snapshot(path, version)
-        if not dirs:
-            raise ValueError(f"version {version} of {names[0]!r} is empty")
-        return self._read_dirs(names[0], dirs, schema)
+        idx = self._one_index(name, "time travel")
+        if not self.transactional:
+            raise ValueError(f"index {idx!r} is not transactional")
+        _, dirs, schema = txn.snapshot(self.path(idx), version)
+        return self._read_dirs(idx, dirs, schema)
 
     def open_point_in_time(
         self, name: str, keep_alive: str = "5m", now: float | None = None
@@ -1065,8 +1038,8 @@ class Catalog:
         CURRENT committed version so searches through the PIT see a
         frozen snapshot regardless of concurrent writes.  Returns an
         opaque id (base64 of index+version).  Requires a transactional
-        index: the manifest log IS the snapshot mechanism (default
-        single-swap indexes have no pinnable versions).  ``keep_alive``
+        catalog: the manifest log IS the snapshot mechanism, and only such
+        a catalog keeps superseded versions readable.  ``keep_alive``
         bounds the id's life from ``now`` (explicit like the watcher's —
         deterministic and testable); every ``pit_read`` with a
         keep_alive EXTENDS it, exactly ES's touch-to-extend rule.  The
@@ -1075,13 +1048,10 @@ class Catalog:
         import base64
         import time as _time
 
-        names = self.resolve_pattern(name)
-        if len(names) != 1:
-            raise ValueError(f"a PIT pins a single index, got {names}")
-        path = self.path(names[0])
-        if not txn.is_transactional(path):
-            raise ValueError(f"index {names[0]!r} is not transactional")
-        version, _ = txn.latest(path)
+        idx = self._one_index(name, "a point in time")
+        if not self.transactional:
+            raise ValueError(f"index {idx!r} is not transactional")
+        version, _ = txn.latest(self.path(idx))
         now = _time.time() if now is None else now
         # a per-open nonce keeps every _pit open a DISTINCT context (ES
         # semantics) — without it two PITs on the same snapshot would
@@ -1092,7 +1062,7 @@ class Catalog:
             state["seq"] += 1
             pit_id = base64.b64encode(
                 json.dumps(
-                    {"index": names[0], "version": version, "n": state["seq"]}
+                    {"index": idx, "version": version, "n": state["seq"]}
                 ).encode()
             ).decode()
             state["pits"][pit_id] = now + parse_duration(keep_alive)
@@ -1153,82 +1123,34 @@ class Catalog:
     def index_history(self, name: str) -> list[dict]:
         """The commit log as data: one dict per committed version
         (version, ts, replace?, #dirs) — DESCRIBE HISTORY parity."""
-        names = self.resolve_pattern(name)
-        if len(names) != 1:
-            raise ValueError(f"history takes a single index, got {names}")
-        return txn.history(self.path(names[0]))
+        idx = self._one_index(name, "history")
+        return txn.history(self.path(idx))
 
     def vacuum_index(self, name: str, min_age_seconds: float = 3600.0) -> list[str]:
         """Sweep data directories no manifest references (losing writers,
         superseded replace snapshots), skipping dirs younger than the
-        retention window — see txn.vacuum.  No-op on non-transactional
-        indices."""
-        names = self.resolve_pattern(name)
+        retention window — see txn.vacuum."""
         out: list[str] = []
-        for idx in names:
-            if txn.is_transactional(self.path(idx)):
-                out.extend(txn.vacuum(self.path(idx), min_age_seconds))
+        for idx in self.resolve_pattern(name):
+            out.extend(txn.vacuum(self.path(idx), min_age_seconds))
         return out
 
     def _read_dirs(self, idx: str, dirs: list[str], schema: dict | None) -> DataFrame:
         """Read ``dirs`` with the schema their commit recorded: no footer
         inference, so building the frame runs no Spark job and the columns
-        come out in the recorded order whatever the file listing order."""
+        come out in the recorded order whatever the file listing order.
+        No dirs (an index created empty) read as 0 rows."""
         if schema is None:
-            raise ValueError(f"index {idx!r} has no recorded schema")
+            raise ValueError(f"index {idx!r} has no committed data")
+        if not dirs:
+            return self.spark.createDataFrame([], StructType.fromJson(schema))
         return self.spark.read.schema(StructType.fromJson(schema)).parquet(*dirs)
 
     def _read_files(self, idx: str) -> DataFrame:
         """One resolved index's current contents: the latest manifest's data
-        dirs and schema when the index is transactional, else the plain
-        directory and the schema recorded in its ``_meta``."""
-        path = self.path(idx)
-        if txn.is_transactional(path):
-            _, dirs, schema = txn.snapshot(path)
-            if not dirs:
-                raise ValueError(f"index {idx!r} has no committed data")
-            return self._read_dirs(idx, dirs, schema)
-        return self._read_dirs(idx, [path], self._read_meta(idx).get("schema"))
-
-    def _commit(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_cols: list[str],
-        max_records_per_file: int | None = None,
-        validate=None,
-    ) -> None:
-        """Write to a temp dir, atomically swap in (single-writer commit),
-        and record the written schema in ``_meta``.  Until the swap the
-        record is the union of the old and new schemas, so a crash at any
-        point leaves at worst an all-null column, never data readers cannot
-        see.  The transactional path never routes here — see _commit_build.
-        ``validate`` runs between the temp write and the swap — see
-        _commit_build."""
-        target = self.path(name)
-        tmp = os.path.join(self.root, f".tmp-{name}-{uuid.uuid4().hex[:8]}")
-        self._writer(df, partition_cols, max_records_per_file).parquet(tmp)
-        if validate is not None:
-            try:
-                validate()
-            except Exception:
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-        schema = _written_schema(df, partition_cols)
-        meta = self._read_meta(name)
-        union = txn.merge_schema_json(meta.get("schema"), schema, partition_cols)
-        meta["schema"] = union
-        self._write_meta(name, meta)
-        old = None
-        if os.path.exists(target):
-            old = os.path.join(self.root, f".old-{name}-{uuid.uuid4().hex[:8]}")
-            os.rename(target, old)
-        os.rename(tmp, target)
-        if union != schema:
-            meta["schema"] = schema
-            self._write_meta(name, meta)
-        if old:
-            shutil.rmtree(old, ignore_errors=True)
+        dirs, read with the schema it records."""
+        _, dirs, schema = txn.snapshot(self.path(idx))
+        return self._read_dirs(idx, dirs, schema)
 
     # ----------------------------------------------------------------- read
     def read_index(
@@ -1274,6 +1196,13 @@ class Catalog:
         if not metadata:
             df = df.drop(*[c for c in meta_cols if c in df.columns])
         return df
+
+    def _one_index(self, name: str, op: str) -> str:
+        """The one index ``name`` resolves to; ``op`` names the caller."""
+        names = self.resolve_pattern(name)
+        if len(names) != 1:
+            raise ValueError(f"{op} takes a single index, got {names}")
+        return names[0]
 
     def resolve_pattern(self, name: str) -> list[str]:
         """Expand the comma/wildcard resource syntax to managed index names.
@@ -1514,9 +1443,9 @@ class Catalog:
         """Driver-side row count from parquet footers, or None when the
         fast path does not apply (filtered alias, too many files, or any
         unreadable footer).  Walks exactly the files a Spark read would:
-        txn-committed dirs for transactional indices, the plain directory
-        otherwise, skipping '_'/'.'-prefixed entries (invisible to parquet
-        readers too, so the two paths count the same files)."""
+        the latest manifest's dirs, skipping '_'/'.'-prefixed entries
+        (invisible to parquet readers too, so the two paths count the same
+        files)."""
         try:
             pairs = self._resolve_parts(name)
         except Exception:
@@ -1528,13 +1457,9 @@ class Catalog:
         total = 0
         n_files = 0
         for idx, _ in pairs:
-            path = self.path(idx)
-            if txn.is_transactional(path):
-                _, dirs = txn.latest(path)
-                if not dirs:
-                    return None  # slow path raises "no committed data"
-            else:
-                dirs = [path]
+            _, dirs, schema = txn.snapshot(self.path(idx))
+            if schema is None:
+                return None  # slow path raises "no committed data"
             for d in dirs:
                 for root, subdirs, files in os.walk(d):
                     subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
@@ -1553,9 +1478,9 @@ class Catalog:
     def snapshot_index(self, name: str, repo: str, snapshot: str) -> dict:
         """ES ``_snapshot``: a point-in-time copy of the index into a
         repository directory.  The committed row set materializes as
-        parquet under ``repo/<snapshot>/<name>/data`` (for a
-        transactional index that is exactly the latest committed
-        version — in-flight writers are invisible by construction), and
+        parquet under ``repo/<snapshot>/<name>/data`` (exactly the latest
+        committed version — in-flight writers are invisible by
+        construction), and
         the index ``_meta`` travels with it.  Returns the snapshot
         manifest.  Restore is ``restore_index``; snapshots are immutable
         once taken (re-snapshotting the same name raises, like ES's
@@ -1580,9 +1505,7 @@ class Catalog:
         """ES ``_restore``: materialize a snapshot as a (new) index.  The
         target must not exist — ES likewise refuses to restore over an
         open index; pass ``rename_to`` for the rename-on-restore pattern.
-        The restored index is a plain commit; a transactional catalog
-        adopts it into the manifest log on its next transactional write
-        (txn.adopt's append-union publication)."""
+        The restored rows are the new index's first commit."""
         src = os.path.join(repo, snapshot, name)
         if not os.path.exists(os.path.join(src, "_snapshot.json")):
             raise ValueError(f"no snapshot {snapshot!r} of {name!r} in {repo!r}")
@@ -1594,8 +1517,10 @@ class Catalog:
         with open(os.path.join(src, "_snapshot.json")) as fh:
             manifest = json.load(fh)
         df = self._read_dirs(name, [os.path.join(src, "data")], manifest.get("schema"))
-        self._commit(df, target, [])
-        self._write_meta(target, {**(manifest.get("meta") or {}), **self._read_meta(target)})
+        self._commit_build(target, [], lambda _: df, needs_existing=False)
+        # a snapshot an earlier version took carries its schema in the meta
+        meta = {k: v for k, v in (manifest.get("meta") or {}).items() if k != "schema"}
+        self._write_meta(target, {**meta, **self._read_meta(target)})
 
     def list_snapshots(self, repo: str) -> list[dict]:
         """ES GET _snapshot/<repo>/_all: the repository's snapshot
@@ -1619,8 +1544,9 @@ class Catalog:
         self, leader: "Catalog", leader_index: str, follower_index: str | None = None
     ) -> dict:
         """ES CCR ``PUT /<follower>/_ccr/follow``: bootstrap a follower of
-        a transactional leader index and record the leader pointer in the
-        follower's _meta; ``ccr_poll`` pulls subsequent changes.
+        an index of a transactional leader catalog and record the leader
+        pointer in the follower's _meta; ``ccr_poll`` pulls subsequent
+        changes.
 
         The unit of replication is the leader's manifest version: data
         dirs are immutable once committed (txn.py), so a sync copies only
@@ -1628,15 +1554,14 @@ class Catalog:
         manifest naming the leader's live set — the same shape as ES
         CCR's file-based bootstrap + incremental op shipping, without a
         row ever being rewritten.  Leader REPLACE commits (merges,
-        compactions) replicate as manifest swaps; superseded dirs on the
-        follower become vacuum-able, like on the leader.
+        compactions) replicate as manifest swaps; the follower catalog's
+        own retention keeps or deletes the dirs they supersede.
 
         Followers are read-only (ES: a follower index rejects writes) —
         ``write_index`` refuses; ``unfollow_index`` converts one to a
         regular index."""
         follower_index = follower_index or leader_index
-        lpath = leader.path(leader_index)
-        if not txn.is_transactional(lpath):
+        if not leader.transactional:
             raise ValueError(
                 "follow_index needs a transactional leader — the manifest "
                 "log IS the replication protocol"
@@ -1694,12 +1619,15 @@ class Catalog:
                     # another poll renamed its copy first — identical
                     # content (immutable source), drop ours
                     shutil.rmtree(tmp, ignore_errors=True)
-        fv = txn.latest(fpath)[0] + 1
+        fv, fdirs = txn.latest(fpath)
+        fv += 1
         if txn.try_commit(
             fpath, fv, ldirs,
             meta={"replace": True, "ccr_leader_version": lv, "schema": lschema},
         ):
             meta["ccr_leader_version"] = lv
+            live = {os.path.basename(d.rstrip("/")) for d in ldirs}
+            self._retire(fpath, fv, [d for d in fdirs if os.path.basename(d) not in live])
         else:
             # a concurrent poll won the claim — adopt the WINNER's leader
             # version (it may be older or newer than ours; stamping our
@@ -1726,21 +1654,13 @@ class Catalog:
         return os.path.join(self.root, "_index_templates.json")
 
     def _read_templates(self) -> dict:
-        try:
-            with open(self._templates_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _read_json(self._templates_path())
 
     def _component_templates_path(self) -> str:
         return os.path.join(self.root, "_component_templates.json")
 
     def _read_component_templates(self) -> dict:
-        try:
-            with open(self._component_templates_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _read_json(self._component_templates_path())
 
     def put_component_template(self, name: str, body: dict) -> None:
         """ES ``_component_template``: a reusable settings/mappings block
@@ -1894,20 +1814,12 @@ class Catalog:
         from elasticsearch_hadoop_spark.ingest import compile_pipeline
 
         compile_pipeline(body)
-        try:
-            with open(self._pipelines_path()) as f:
-                pipelines = json.load(f)
-        except FileNotFoundError:
-            pipelines = {}
+        pipelines = _read_json(self._pipelines_path())
         pipelines[name] = body
         _write_json(self._pipelines_path(), pipelines)
 
     def get_pipeline(self, name: str) -> dict | list:
-        try:
-            with open(self._pipelines_path()) as f:
-                pipelines = json.load(f)
-        except FileNotFoundError:
-            pipelines = {}
+        pipelines = _read_json(self._pipelines_path())
         if name not in pipelines:
             raise ValueError(f"no such ingest pipeline: {name!r}")
         return pipelines[name]
@@ -1917,11 +1829,7 @@ class Catalog:
         return os.path.join(self.root, "_data_streams.json")
 
     def _read_data_streams(self) -> dict:
-        try:
-            with open(self._data_streams_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
+        return _read_json(self._data_streams_path())
 
     def downsample_index(
         self,
@@ -2306,37 +2214,30 @@ class Catalog:
         one. ``query`` compiles to a Column predicate exactly as in
         read_index, so per-batch filtering inherits pushdown.
 
-        Works with blind-append writes (write_index without id_col);
-        merge-based operations rewrite files in place, which a file stream
-        will not re-read — use the esdocs streaming sink for those.
-        Transactional indices stream from the ``_stream`` publish farm
+        The stream reads the ``_stream`` publish farm
         (txn.enable_streaming): every commit hard-links its
         manifest-referenced data dirs there, so the stream sees exactly the
         committed set — never an in-flight writer's or crashed job's dir
         from the raw ``_data`` pool (those are orphans vacuum deletes, and
         rows delivered from them would silently diverge from batch reads).
-        That only holds for APPEND-ONLY logs — a REPLACE commit (overwrite,
-        merge ops, delete/update_by_query, compact_index) writes a full new
-        snapshot dir that a file stream would re-deliver as duplicates of
-        every already-streamed row, so a log with any replace commit is
-        refused (same rule as the non-transactional caveat above, enforced
-        instead of just documented)."""
-        names = self.resolve_pattern(name)
-        if len(names) != 1:
-            raise ValueError(f"streaming read supports a single index, got {names}")
-        path = self.path(names[0])
+        That only holds for APPEND-ONLY logs (blind-append writes,
+        write_index without id_col) — a REPLACE commit after creation
+        (overwrite, merge ops, delete/update_by_query, compact_index)
+        writes a full new snapshot dir that a file stream would re-deliver
+        as duplicates of every already-streamed row, so a log with any
+        replace commit is refused; use the esdocs streaming sink for
+        merge-style pipelines."""
+        idx = self._one_index(name, "a streaming read")
+        path = self.path(idx)
         if schema is None:
-            schema = self._read_files(names[0]).schema  # the recorded one
-        if txn.is_transactional(path):
-            if txn.has_replace_commit(path):
-                raise ValueError(
-                    f"index {names[0]!r} has replace commits in its log; a file "
-                    "stream would re-deliver replaced snapshots as duplicates — "
-                    "use the esdocs streaming sink for merge-style pipelines"
-                )
-            stream_path = os.path.join(txn.enable_streaming(path), "*")
-        else:
-            stream_path = path
+            schema = self._read_files(idx).schema  # the recorded one
+        if txn.has_replace_commit(path):
+            raise ValueError(
+                f"index {idx!r} has replace commits in its log; a file "
+                "stream would re-deliver replaced snapshots as duplicates — "
+                "use the esdocs streaming sink for merge-style pipelines"
+            )
+        stream_path = os.path.join(txn.enable_streaming(path), "*")
         df = self.spark.readStream.schema(schema).parquet(stream_path)
         if query is not None:
             df = df.filter(compile_query(query))
@@ -2374,7 +2275,6 @@ class Catalog:
                 "bucket_cols": bucket_cols,
                 "num_buckets": num_buckets,
                 "table": table,
-                "schema": df.schema.jsonValue(),
             },
         )
 

@@ -71,3 +71,26 @@ def string(s: str) -> str:
 def string_array(values) -> str:
     """SQL for an ``array<string>`` literal."""
     return "array({})".format(", ".join(string(v) for v in values))
+
+
+# the epoch millis of 0001-01-01 and of 9999-12-31 23:59:59.999
+MILLIS_RANGE = "-62135596800000 AND 253402300799999"
+
+
+def timestamp_millis(ms: str) -> str:
+    """``timestamp_millis(ms)`` that is NULL outside years 1-9999: Spark's
+    own raises ``long overflow`` for a large value and fails the job."""
+    return f"CASE WHEN {ms} BETWEEN {MILLIS_RANGE} THEN timestamp_millis({ms}) END"
+
+
+def timestamp_seconds(secs: str) -> str:
+    """``timestamp_seconds(secs)`` that is NULL outside years 1-9999:
+    Spark's own saturates at year 294247, a value Python cannot collect."""
+    return f"CASE WHEN {secs} * 1000 BETWEEN {MILLIS_RANGE} THEN timestamp_seconds({secs}) END"
+
+
+def iso_timestamp(text: str) -> str:
+    """``try_to_timestamp(text)`` for text that starts with a 4-digit year,
+    else NULL: ``try_to_timestamp('123456')`` is year 123456, a value
+    Python cannot collect."""
+    return rf"CASE WHEN {text} RLIKE '^\\s*\\d{{4}}(?!\\d)' THEN try_to_timestamp({text}) END"

@@ -107,6 +107,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from elasticsearch_hadoop_spark.functions import sql
 from elasticsearch_hadoop_spark.runtime_fields import RuntimeFieldError, compile_script
 
 _CTX_REF = re.compile(r"ctx\.([A-Za-z_][A-Za-z0-9_.]*)")
@@ -443,6 +444,27 @@ def _template_value(value) -> Column:
     return F.concat(*pieces)
 
 
+def _date_attempts(field: str, formats: list) -> Column:
+    """The first of ``formats`` that parses ``field`` (the ``date`` and
+    ``date_index_name`` processors).  Every attempt is NON-THROWING: under
+    ANSI a strict parse on attempt 1 would crash the job instead of
+    falling through to the next format, and an epoch or a year outside
+    1-9999 gives NULL instead of failing the whole pipeline."""
+    col = sql.ident(field)
+    text = f"CAST({col} AS STRING)"
+    attempts = []
+    for fmt in formats:
+        if fmt == "ISO8601":
+            attempts.append(sql.iso_timestamp(text))
+        elif fmt == "UNIX":
+            attempts.append(sql.timestamp_seconds(f"try_cast({col} AS DOUBLE)"))
+        elif fmt == "UNIX_MS":
+            attempts.append(sql.timestamp_millis(f"try_cast({col} AS BIGINT)"))
+        else:
+            attempts.append(f"try_to_timestamp({text}, {sql.string(fmt)})")
+    return F.expr(f"coalesce({', '.join(attempts)})")
+
+
 def _guarded(df: DataFrame, field: str, new: Column, cond: str | None) -> DataFrame:
     """Apply a column edit, honoring the processor's ``if`` (rows failing
     the predicate keep their old value — or null for a brand-new field)."""
@@ -613,24 +635,7 @@ def _apply_one(
     if kind == "date":
         formats = cfg.get("formats") or ["ISO8601"]
         tgt = cfg.get("target_field", "@timestamp")
-        # every attempt must be NON-THROWING (try_* variants): under ANSI
-        # a strict parse on attempt 1 would crash the job instead of
-        # falling through to the next format
-        attempts = []
-        for fmt in formats:
-            if fmt == "ISO8601":
-                attempts.append(F.try_to_timestamp(F.col(field)))
-            elif fmt == "UNIX":
-                attempts.append(
-                    F.timestamp_seconds(F.col(field).try_cast("double"))
-                )
-            elif fmt == "UNIX_MS":
-                attempts.append(
-                    F.timestamp_millis(F.col(field).try_cast("bigint"))
-                )
-            else:
-                attempts.append(F.try_to_timestamp(F.col(field), F.lit(fmt)))
-        return _guarded(df, tgt, F.coalesce(*attempts), cond)
+        return _guarded(df, tgt, _date_attempts(field, formats), cond)
 
     if kind == "split":
         return _guarded(df, target, F.split(F.col(field), cfg["separator"]), cond)
@@ -860,25 +865,7 @@ def _apply_one(
                 f"date_index_name: date_rounding must be one of "
                 f"{sorted(_DATE_ROUNDING)}, got {cfg.get('date_rounding')!r}"
             )
-        formats = cfg.get("date_formats") or ["ISO8601"]
-        # non-throwing attempts, same first-match-wins contract as `date`
-        attempts = []
-        for fmt in formats:
-            if fmt == "ISO8601":
-                attempts.append(F.try_to_timestamp(F.col(field).cast("string")))
-            elif fmt == "UNIX":
-                attempts.append(
-                    F.timestamp_seconds(F.col(field).try_cast("double"))
-                )
-            elif fmt == "UNIX_MS":
-                attempts.append(
-                    F.timestamp_millis(F.col(field).try_cast("bigint"))
-                )
-            else:
-                attempts.append(
-                    F.try_to_timestamp(F.col(field).cast("string"), F.lit(fmt))
-                )
-        ts = F.coalesce(*attempts)
+        ts = _date_attempts(field, cfg.get("date_formats") or ["ISO8601"])
         rendered = F.date_format(
             F.date_trunc(trunc, ts), cfg.get("index_name_format", "yyyy-MM-dd")
         )

@@ -24,10 +24,22 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
-def count_nodes(plan: str, node: str) -> int:
-    """Count physical operators named ``node`` ("Exchange",
-    "BroadcastHashJoin", "SortMergeJoin", ...) in a formatted plan."""
-    return len(re.findall(rf"^\(\d+\) {node}\b", plan, flags=re.M))
+JOIN_NODES = (
+    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+)
+
+
+def count_nodes(plan: str, *nodes: str) -> int:
+    """Count physical operators named any of ``nodes`` ("Exchange",
+    "BroadcastExchange", "BroadcastHashJoin", ...) in a formatted plan."""
+    names = "|".join(nodes)
+    return len(re.findall(rf"^\(\d+\) (?:{names})\b", plan, flags=re.M))
+
+
+def join_strategies(plan: str) -> list[str]:
+    """The join operators the plan uses, sorted."""
+    return [j for j in sorted(JOIN_NODES) if count_nodes(plan, j)]
 
 
 def pushed_filters(plan: str) -> list[str]:

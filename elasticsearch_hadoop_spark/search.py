@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from elasticsearch_hadoop_spark.functions import sql
+from elasticsearch_hadoop_spark.plans import count_nodes, join_strategies, pushed_filters
 from elasticsearch_hadoop_spark.functions.text import (
     TOKEN_SPLIT_REGEX,
     any_term_sql,
@@ -1184,28 +1185,15 @@ def profile(df: DataFrame, execute: bool = True) -> dict:
     explain = df._sc._jvm.PythonSQLUtils.explainString
     physical = explain(qe, "formatted")
     cg = re.search(r"Found (\d+) WholeStageCodegen", explain(qe, "codegen"))
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", physical)
-    read_schema = re.findall(r"ReadSchema: (\S+)", physical)
-    joins = re.findall(
-        r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-        r"BroadcastNestedLoopJoin|CartesianProduct)\b",
-        physical,
-    )
     return {
         "parsed": qe.analyzed().toString(),
         "optimized": qe.optimizedPlan().toString(),
         "physical": physical,
-        "pushed_filters": [p for p in pushed if p],
-        "read_schemas": read_schema,
-        "join_strategies": sorted(set(joins)),
+        "pushed_filters": pushed_filters(physical),
+        "read_schemas": re.findall(r"ReadSchema: (\S+)", physical),
+        "join_strategies": join_strategies(physical),
         "codegen_stages": int(cg.group(1)) if cg else 0,
-        "exchanges": len(
-            re.findall(
-                r"^\(\d+\) (?:Broadcast|Shuffle)?Exchange",
-                physical,
-                flags=re.M,
-            )
-        ),
+        "exchanges": count_nodes(physical, "Exchange", "BroadcastExchange", "ShuffleExchange"),
     }
 
 

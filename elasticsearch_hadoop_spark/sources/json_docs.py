@@ -78,7 +78,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from elasticsearch_hadoop_spark.functions.sql import quote
+from elasticsearch_hadoop_spark.functions.sql import iso_timestamp, quote, timestamp_millis
 from elasticsearch_hadoop_spark.functions.sql import string as sql_string
 
 # ES field type -> Spark type (SURVEY.md §1.2 table).  Dates handled apart.
@@ -282,8 +282,6 @@ def _geo_point_sql(e: str) -> str:
 _INTEGRAL_SQL = {
     T.ByteType: "TINYINT", T.ShortType: "SMALLINT", T.IntegerType: "INT", T.LongType: "BIGINT",
 }
-# the epoch millis of 0001-01-01 and of 9999-12-31 23:59:59.999
-_MILLIS_RANGE = "-62135596800000 AND 253402300799999"
 
 
 def _coerce_sql(e: str, target: T.DataType, geo: bool = False, depth: int = 0) -> str:
@@ -332,12 +330,10 @@ def _coerce_sql(e: str, target: T.DataType, geo: bool = False, depth: int = 0) -
         # digits other than a bare 4-digit year are epoch millis (NULL out
         # of year 1..9999); anything else starting with a 4-digit year is
         # an ISO-8601 date (an offset-less one in the session zone); the
-        # year test keeps try_to_timestamp from raising on a longer year
-        ms = f"try_cast({t} AS BIGINT)"
+        # year test keeps try_to_timestamp from parsing a longer year
         return (
             rf"CASE WHEN length({t}) != 4 AND {t} RLIKE '^\\s*[+-]?\\d+\\s*$'"
-            f" THEN CASE WHEN {ms} BETWEEN {_MILLIS_RANGE} THEN timestamp_millis({ms}) END"
-            rf" WHEN {t} RLIKE '^\\s*\\d{{4}}(?!\\d)' THEN try_to_timestamp({t}) END"
+            f" THEN {timestamp_millis(f'try_cast({t} AS BIGINT)')} ELSE {iso_timestamp(t)} END"
         )
     if isinstance(target, T.BinaryType):
         return f"CASE WHEN schema_of_variant({s}) = 'STRING' THEN try_to_binary({t}, 'base64') END"

@@ -1,11 +1,11 @@
-"""Optimistic-concurrency commit log for managed indices.
+"""Optimistic-concurrency commit log: the one commit protocol of every
+managed index.
 
-The default Catalog commit is write-new-directory + atomic rename — correct
-for a single writer, but two concurrent writers can interleave their swaps
-and one writer's output silently vanishes.  The reference engine tolerates
-concurrent bulk writers natively (server-side versioning); this module
-closes that gap Spark-side with the same protocol Delta/Iceberg use,
-reduced to its core:
+The reference engine tolerates concurrent bulk writers natively
+(server-side versioning).  This module gives every Catalog write the same
+guarantee Spark-side, with the protocol Delta/Iceberg use reduced to its
+core, so that no write ever leaves a window with no index at the target
+and no concurrent write silently vanishes:
 
 - An index's live data is defined by a MANIFEST, not by directory listing.
   Version N's manifest lives at ``<index>/_txn/v{N:012d}.json`` and names
@@ -28,16 +28,22 @@ a reader never sees a half-commit, because data directories are complete
 before the manifest claim and are immutable afterwards.
 
 Orphan data dirs from losing replace-writers or crashed jobs are invisible
-(not in any manifest) and are swept by ``vacuum``.
+(not in any manifest) and are swept by ``vacuum``.  The dirs a replace
+commit supersedes either stay for time travel until ``vacuum`` sweeps
+them, or are deleted as soon as the commit wins (``drop_superseded``,
+which also prunes the manifests older than ``LOG_RETENTION_SECONDS``, so
+the log stays short); the committer chooses.
 
-At 100 TB the manifest lists directories (one per commit), not files —
-listing cost is O(commits), and compaction is just a REPLACE commit whose
-recompute reads the union and writes one directory.
+At 100 TB the manifest lists directories (one per commit), not files, and
+compaction is just a REPLACE commit whose recompute reads the union and
+writes one directory.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
+import math
 import os
 import shutil
 import time
@@ -46,6 +52,13 @@ import uuid
 _TXN_DIR = "_txn"
 _DATA_DIR = "_data"
 _STREAM_DIR = "_stream"
+
+# How long drop_superseded keeps a manifest after its successor was
+# committed.  Pruning frees version slots that a stale writer could claim
+# again; try_commit tells such a claim from a fresh one by the age of the
+# versions above it (_filled_pruned_slot), which this window makes
+# unmistakable.
+LOG_RETENTION_SECONDS = 60.0
 
 
 class CommitConflictError(RuntimeError):
@@ -60,46 +73,49 @@ def _version_file(index_path: str, version: int) -> str:
     return os.path.join(_txn_path(index_path), f"v{version:012d}.json")
 
 
-def is_transactional(index_path: str) -> bool:
-    return os.path.isdir(_txn_path(index_path))
-
-
 def init_log(index_path: str) -> None:
     os.makedirs(_txn_path(index_path), exist_ok=True)
     os.makedirs(os.path.join(index_path, _DATA_DIR), exist_ok=True)
 
 
+def has_commit(index_path: str) -> bool:
+    """True once the log holds a committed version, or for a directory an
+    earlier version wrote outside any log (adopt brings it under one).  An
+    initialized log without a version — a first write that died before its
+    claim — is no index yet."""
+    if os.path.isdir(_txn_path(index_path)):
+        return bool(_versions(index_path))
+    return os.path.isdir(index_path)
+
+
+def discard_empty(index_path: str) -> None:
+    """Remove the empty log init_log made for a first write that failed, so
+    the failure leaves no index behind.  Only empty directories go, so a
+    concurrent writer's manifest or data dir keeps the index."""
+    for d in (_txn_path(index_path), os.path.join(index_path, _DATA_DIR), index_path):
+        try:
+            os.rmdir(d)
+        except OSError:
+            return
+
+
 def adopt(index_path: str, schema: dict | None = None) -> bool:
-    """Bring an index directory under the log, ADOPTING any pre-existing
-    plain (non-transactional) data: existing entries move into a uuid data
-    dir and are published with an append-union commit, so earlier writes
-    stay readable instead of silently vanishing behind an empty manifest.
-    A no-op on an already-transactional or fresh/missing directory.
+    """Bring an index directory under the log, ADOPTING the plain data an
+    earlier version wrote there (parquet in the index directory, which it
+    swapped in by rename): the entries move into a uuid data dir that an
+    append commit publishes with ``schema`` (that layout's ``_meta``
+    record), so they stay readable instead of vanishing behind an empty
+    manifest.  A no-op on a fresh or missing directory.
 
-    Concurrency: adoption races are survivable, not fatal.  If another
-    writer claims a version first (a concurrent adopter, or a first
-    transactional append that initialized the log mid-adoption), the
-    adopted dir lands via the same manifest-union retry every append uses —
-    the plain data is never orphaned behind someone else's v1.  Entries a
-    concurrent adopter already moved are skipped (the competitor's commit
+    Runs on every write, so stray entries in the root of an index already
+    under the log (a crashed adoption) are swept in the same way.  Races
+    are survivable: the adopted dir lands through the append retry, and
+    entries a concurrent adopter moved first are skipped (its commit
     carries them).  A crash between the renames and the commit leaves an
-    uncommitted uuid dir, which vacuum's retention window preserves long
-    enough for inspection; run adoption without concurrent PLAIN-mode
-    readers (they would observe files mid-move).
-
-    Runs on every transactional write (not just first conversion): stray
-    plain entries in the root of an already-transactional index — the
-    residue of a crashed adoption or a plain-mode writer racing the
-    conversion — are swept into the log the same way, so they become
-    readable instead of sitting invisible outside every manifest.
-    ``schema`` is the plain data's recorded schema (the index ``_meta``
-    record); the adoption commit unions it into the manifest's."""
-    if not os.path.isdir(index_path):
-        init_log(index_path)
-        return False
+    uncommitted uuid dir that vacuum's window keeps for inspection."""
     entries = [
         n
-        for n in os.listdir(index_path)
+        for n in (os.listdir(index_path) if os.path.isdir(index_path) else [])
         if n not in (_TXN_DIR, _DATA_DIR, _STREAM_DIR) and not n.startswith(".")
     ]
     init_log(index_path)
@@ -126,6 +142,29 @@ def latest(index_path: str) -> tuple[int, list[str]]:
     return snapshot(index_path)[:2]
 
 
+def _versions(index_path: str) -> list[int]:
+    """The committed versions the log holds, ascending."""
+    try:
+        names = os.listdir(_txn_path(index_path))
+    except FileNotFoundError:
+        return []
+    return sorted(int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json"))
+
+
+def _latest_body(index_path: str) -> tuple[int, dict]:
+    """(version, manifest body) of the newest committed version; (0, {})
+    for a fresh log.  Re-lists when drop_superseded prunes the listed
+    newest manifest before it is read (a newer one exists by then)."""
+    while True:
+        versions = _versions(index_path)
+        if not versions:
+            return 0, {}
+        try:
+            return versions[-1], manifest_body(index_path, versions[-1])
+        except KeyError:
+            continue
+
+
 def snapshot(
     index_path: str, version: int | None = None
 ) -> tuple[int, list[str], dict | None]:
@@ -139,17 +178,11 @@ def snapshot(
     Delta ``versionAsOf`` / ES point-in-time analogue; it works until
     vacuum sweeps the superseded dirs)."""
     if version is None:
-        try:
-            names = [
-                n for n in os.listdir(_txn_path(index_path))
-                if n.startswith("v") and n.endswith(".json")
-            ]
-        except FileNotFoundError:
-            names = []
-        if not names:
+        version, body = _latest_body(index_path)
+        if not version:
             return 0, [], None
-        version = int(max(names)[1:-5])
-    body = manifest_body(index_path, version)
+    else:
+        body = manifest_body(index_path, version)
     dirs = [os.path.join(index_path, _DATA_DIR, d) for d in body["dirs"]]
     return version, dirs, body.get("schema")
 
@@ -170,22 +203,28 @@ def merge_schema_json(stored: dict | None, new: dict | None, last=()) -> dict | 
     return {**stored, "fields": fields}
 
 
-def has_replace_commit(index_path: str) -> bool:
-    """True if any manifest in the log was a replace commit (overwrite,
-    merge rewrite, compaction) — the condition under which a file stream
-    over the data pool would deliver duplicates."""
-    tdir = _txn_path(index_path)
-    try:
-        names = [n for n in os.listdir(tdir) if n.startswith("v") and n.endswith(".json")]
-    except FileNotFoundError:
-        return False
-    for n in sorted(names):
-        if int(n[1:-5]) == 1:
-            continue  # v1 "replace" is just index creation — nothing is replaced
-        with open(os.path.join(tdir, n)) as fh:
-            if json.load(fh).get("replace"):
-                return True
-    return False
+def has_replace_commit(index_path: str, version: int | None = None) -> bool:
+    """True if a commit up to ``version`` (default the newest) was a replace
+    commit (overwrite, merge rewrite, compaction) — the condition under
+    which a file stream over the data pool would deliver duplicates.  Each
+    manifest carries the answer as a running ``replaced`` flag, so this
+    reads one manifest however long the log was before pruning; a log an
+    earlier version wrote, without the flag, is scanned.  Raises KeyError
+    for an uncommitted or pruned explicit version."""
+    if version is None:
+        version, body = _latest_body(index_path)
+        if not version:
+            return False
+    else:
+        body = manifest_body(index_path, version)
+    if "replaced" in body:
+        return body["replaced"]
+    # v1 "replace" is just index creation — nothing is replaced
+    return any(
+        manifest_body(index_path, v).get("replace")
+        for v in _versions(index_path)
+        if 1 < v <= version
+    )
 
 
 def manifest_body(index_path: str, version: int) -> dict:
@@ -226,7 +265,10 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
     publish a manifest pointing at swept data (a corrupted snapshot).  The
     check-then-link window is not airtight against a concurrent vacuum —
     size the retention window above the longest write job, the check turns
-    a silent corruption into a crash for jobs that overrun it anyway."""
+    a silent corruption into a crash for jobs that overrun it anyway.
+
+    A claim that lands in a version slot drop_superseded pruned is
+    withdrawn and reported lost, like any lost race."""
     init_log(index_path)
     path = _version_file(index_path, version)
     if os.path.exists(path):  # cheap pre-check; the link below is the real claim
@@ -240,31 +282,42 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
             f"commit of {index_path} v{version} references data dirs that no "
             f"longer exist (vacuumed mid-write?): {swept}"
         )
+    replaced = bool((meta or {}).get("replace")) and version > 1
+    if version > 1 and not replaced:
+        try:
+            replaced = has_replace_commit(index_path, version - 1)
+        except KeyError:
+            return False  # predecessor pruned: a newer version is committed
     body = {
         "version": version,
         "dirs": names,
         "ts": time.time(),
         **(meta or {}),
+        "replaced": replaced,
     }
     tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as fh:
         json.dump(body, fh)
         fh.flush()
         os.fsync(fh.fileno())
+    written = os.stat(tmp).st_mtime
     try:
         os.link(tmp, path)
     except FileExistsError:
         return False
     finally:
         os.unlink(tmp)
+    if _filled_pruned_slot(index_path, version, written):
+        # a newer snapshot is committed, so this one would never be read
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(path)
+        return False
     # Stream-farm publication is best-effort AFTER the durable claim: a
-    # publish failure must not make a committed write report as failed
-    # (the caller would retry and append duplicates).  A missed dir is
-    # retried by the next commit (publication is idempotent over ALL
-    # manifest dirs) and by enable_streaming's backfill.  Replace commits
-    # beyond v1 (compaction, merge rewrites) never publish: their snapshot
-    # would double-deliver every row to an already-running stream — new
-    # streams over such logs are refused anyway (has_replace_commit).
+    # failed publish must not report a committed write as failed (a retry
+    # would append duplicates); the next commit and enable_streaming's
+    # backfill re-publish it.  Replace commits beyond v1 never publish:
+    # they would re-deliver every row to a running stream, and new streams
+    # over such logs are refused (has_replace_commit).
     if (version == 1 or not (meta or {}).get("replace")) and os.path.isdir(
         stream_root(index_path)
     ):
@@ -277,6 +330,27 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
     return True
 
 
+def _mtime(path: str) -> float:
+    try:
+        return os.path.getmtime(path)
+    except FileNotFoundError:
+        return math.inf  # pruned since the listing
+
+
+def _filled_pruned_slot(index_path: str, version: int, written: float) -> bool:
+    """True when the just-linked ``version`` (its body written at
+    ``written``) took the slot of a manifest drop_superseded pruned.  That
+    pruning waits until the manifest's successor is LOG_RETENTION_SECONDS
+    old and goes in version order, so such a slot always has a newer
+    version far older than the claim; a fresh claim's successors are all
+    written after it."""
+    return any(
+        _mtime(_version_file(index_path, v)) < written - LOG_RETENTION_SECONDS / 2
+        for v in _versions(index_path)
+        if v > version
+    )
+
+
 def stream_root(index_path: str) -> str:
     return os.path.join(index_path, _STREAM_DIR)
 
@@ -284,16 +358,12 @@ def stream_root(index_path: str) -> str:
 def _publish_stream_dirs(index_path: str, dir_names: list[str]) -> None:
     """Mirror committed data dirs into ``_stream/`` as hard-link farms.
 
-    A Structured Streaming file source over ``_data/*`` would deliver rows
-    from never-committed directories (in-flight writers, crashed jobs,
-    adoption losers) that no manifest references and vacuum will delete —
-    stream and batch reads would permanently diverge.  Instead, commits
-    publish each manifest-referenced dir here (hard links: atomic, free,
-    same-filesystem) and streams glob ``_stream/*`` — they see exactly the
-    committed set.  Publication is idempotent (existing dirs skipped, so a
-    long append-only log only ever walks its newest dir) and atomic
-    (built under a tmp name, renamed in; a racing publisher's rename loses
-    with ENOTEMPTY and cleans up)."""
+    A file stream over ``_data/*`` would also deliver never-committed dirs
+    (in-flight writers, crashed jobs) that vacuum later deletes, so stream
+    and batch reads would diverge.  Streams glob ``_stream/*`` instead,
+    which holds exactly the committed dirs.  Publication is idempotent
+    (existing dirs are skipped) and atomic (built under a tmp name and
+    renamed in; a racing publisher's rename loses and cleans up)."""
     sroot = stream_root(index_path)
     os.makedirs(sroot, exist_ok=True)
     for name in dir_names:
@@ -360,54 +430,85 @@ def commit_append(
 def commit_replace(
     index_path: str,
     base_version: int,
-    data_dir: str,
+    data_dir: str | None,
     recompute=None,
     max_retries: int = 10,
     schema: dict | None = None,
 ) -> int:
     """Publish ``data_dir`` (whose recorded schema is ``schema``) as the
     FULL new snapshot, valid only if the index is still at
-    ``base_version``.  On a lost race the derivation is stale:
+    ``base_version``.  A ``data_dir`` of None commits an empty snapshot:
+    no dirs, 0 rows, ``schema`` still recorded.  On a lost race the
+    derivation is stale:
     ``recompute(new_snapshot_dirs, new_snapshot_schema) -> (new_data_dir,
     new_schema)`` re-runs the caller's read-modify-write against the
     winner's snapshot (the optimistic MERGE INTO loop).  Without a
     recompute hook a conflict is an error."""
     version = base_version
     for _ in range(max_retries):
-        if try_commit(
-            index_path, version + 1, [data_dir], meta={"replace": True, "schema": schema}
-        ):
+        dirs = [data_dir] if data_dir else []
+        if try_commit(index_path, version + 1, dirs, meta={"replace": True, "schema": schema}):
             return version + 1
         if recompute is None:
             raise CommitConflictError(
                 f"replace of {index_path} based on v{version} lost the race"
             )
         version, dirs, recorded = snapshot(index_path)
-        stale, (data_dir, schema) = data_dir, recompute(dirs, recorded)
-        shutil.rmtree(stale, ignore_errors=True)
+        stale = data_dir
+        try:
+            data_dir, schema = recompute(dirs, recorded)
+        finally:
+            # never committed: drop it even when recompute raises
+            if stale:
+                shutil.rmtree(stale, ignore_errors=True)
     raise CommitConflictError(f"replace of {index_path} lost {max_retries} races")
 
 
+def drop_superseded(index_path: str, version: int, dirs=()) -> None:
+    """Delete the data ``dirs`` that committed ``version`` superseded, and
+    the manifests before it whose successor is older than
+    ``LOG_RETENTION_SECONDS``.  Only the writer that won ``version`` calls
+    this, right after winning, with the dirs its snapshot replaced; later
+    commits build on ``version``, so no newer manifest lists them.  A
+    reader still scanning the superseded snapshot loses its files, and
+    time travel to it ends — keep superseded dirs and ``vacuum`` them
+    instead when either matters.  Pruning keeps the log, and so every
+    ``snapshot`` listing, as short as the commits of the last window."""
+    for d in dirs:
+        _remove_data_dir(index_path, os.path.basename(d.rstrip("/")))
+    now = time.time()
+    versions = _versions(index_path)
+    # version order, so the oldest version above a pruned slot is always
+    # old enough for _filled_pruned_slot to see
+    for old, succ in zip(versions, versions[1:]):
+        if succ > version or now - _mtime(_version_file(index_path, succ)) < LOG_RETENTION_SECONDS:
+            break
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(_version_file(index_path, old))
+
+
+def _remove_data_dir(index_path: str, name: str) -> None:
+    # mirror FIRST: if the sweep dies between the two deletes, a later
+    # vacuum re-visits the name via the surviving _data dir — the other
+    # order leaves a mirror no listdir(_data) pass would ever revisit,
+    # permanently streaming rows no manifest references
+    spath = os.path.join(stream_root(index_path), name)
+    if os.path.isdir(spath):
+        shutil.rmtree(spath, ignore_errors=True)
+    shutil.rmtree(os.path.join(index_path, _DATA_DIR, name), ignore_errors=True)
+
+
 def history(index_path: str) -> list[dict]:
-    """Every committed version, newest first: version, commit ts, whether
-    it was a replace, and how many data dirs it references."""
-    tdir = _txn_path(index_path)
-    try:
-        names = [n for n in os.listdir(tdir) if n.startswith("v") and n.endswith(".json")]
-    except FileNotFoundError:
-        return []
+    """Every committed version the log holds, newest first: version, commit
+    ts, whether it was a replace, and how many data dirs it references."""
     out = []
-    for n in sorted(names, reverse=True):
-        with open(os.path.join(tdir, n)) as fh:
-            m = json.load(fh)
-        out.append(
-            {
-                "version": m["version"],
-                "ts": m.get("ts"),
-                "replace": bool(m.get("replace")),
-                "n_dirs": len(m.get("dirs", [])),
-            }
-        )
+    for v in reversed(_versions(index_path)):
+        try:
+            m = manifest_body(index_path, v)
+        except KeyError:
+            continue  # pruned since the listing
+        out.append({"version": v, "ts": m.get("ts"), "replace": bool(m.get("replace")),
+                    "n_dirs": len(m.get("dirs", []))})
     return out
 
 
@@ -415,38 +516,25 @@ def vacuum(index_path: str, min_age_seconds: float = 3600.0) -> list[str]:
     """Delete data directories not referenced by the LATEST manifest
     (losing writers, crashed jobs, superseded replace snapshots).
 
-    ``min_age_seconds`` is the retention window (Delta VACUUM's), counted
-    from the moment a dir became unreachable:
-
-    - a dir that WAS committed ages from the commit that superseded it
-      (the first manifest after the last one referencing it) — a
-      just-replaced snapshot stays readable for the full window even if
-      its files are old, so the window really is the time-travel horizon;
-    - a dir never referenced by any manifest (in-flight writer, crashed
-      job) ages from its own mtime — a writer whose job finishes inside
-      the window is safe; one that overruns it loses the dir and its
-      commit then FAILS LOUDLY (try_commit re-verifies every referenced
-      dir exists) instead of publishing a manifest over swept data.  Size
-      the window above the longest write job.
-
-    Pass 0 only when no writer can be active and no reader may hold an
-    older manifest."""
-    tdir = _txn_path(index_path)
-    try:
-        names = sorted(
-            n for n in os.listdir(tdir) if n.startswith("v") and n.endswith(".json")
-        )
-    except FileNotFoundError:
-        names = []
+    ``min_age_seconds`` is the retention window (Delta VACUUM's).  A dir
+    that WAS committed ages from the commit that superseded it, so a
+    just-replaced snapshot stays readable for the whole window: the window
+    is the time-travel horizon.  A dir no manifest ever referenced
+    (in-flight writer, crashed job) ages from its own mtime; a writer whose
+    job overruns the window loses its dir and its commit fails loudly
+    (try_commit re-verifies every referenced dir), so size the window above
+    the longest write job.  Pass 0 only when no writer can be active and no
+    reader may hold an older manifest."""
     last_ref: dict[str, int] = {}
     manifest_mtime: dict[int, float] = {}
-    for n in names:
-        version = int(n[1:-5])
-        path = os.path.join(tdir, n)
-        manifest_mtime[version] = os.path.getmtime(path)
-        with open(path) as fh:
-            for d in json.load(fh).get("dirs", []):
-                last_ref[d] = version
+    for version in _versions(index_path):
+        try:
+            manifest_mtime[version] = os.path.getmtime(_version_file(index_path, version))
+            body = manifest_body(index_path, version)
+        except (OSError, KeyError):
+            continue  # pruned since the listing
+        for d in body.get("dirs", []):
+            last_ref[d] = version
 
     _, live = latest(index_path)
     live_names = {os.path.basename(d.rstrip("/")) for d in live}
@@ -458,56 +546,33 @@ def vacuum(index_path: str, min_age_seconds: float = 3600.0) -> list[str]:
             continue
         path = os.path.join(data_root, name)
         try:
-            if name in last_ref:
-                unreachable_since = manifest_mtime.get(
-                    last_ref[name] + 1, os.path.getmtime(path)
-                )
-            else:
-                unreachable_since = os.path.getmtime(path)
-            if now - unreachable_since < min_age_seconds:
-                continue
+            since = manifest_mtime.get(last_ref.get(name, -1) + 1) or os.path.getmtime(path)
         except OSError:
             continue
-        # mirror FIRST: if the sweep dies between the two deletes, a later
-        # vacuum re-visits the name via the surviving _data dir — the other
-        # order leaves a mirror no listdir(_data) pass would ever revisit,
-        # permanently streaming rows no manifest references
-        spath = os.path.join(stream_root(index_path), name)
-        if os.path.isdir(spath):
-            shutil.rmtree(spath, ignore_errors=True)
-        shutil.rmtree(path, ignore_errors=True)
-        removed.append(name)
+        if now - since >= min_age_seconds:
+            _remove_data_dir(index_path, name)
+            removed.append(name)
     # orphaned mirrors (their _data dir already gone — a crashed earlier
     # sweep): hard links keep the swept bytes alive until this runs
     sroot = stream_root(index_path)
     if os.path.isdir(sroot):
         data_names = set(os.listdir(data_root)) if os.path.isdir(data_root) else set()
         for name in os.listdir(sroot):
+            p = os.path.join(sroot, name)
             if name.startswith(".tmp-"):
-                # a crashed publisher's half-built ".tmp-*" link farm
-                # (the exact prefix _publish_stream_dirs mints — other
-                # dot-entries are not ours to delete): streams never read
-                # dotfiles, but the hard links keep swept bytes alive
-                # forever — sweep farms that outlived the retention
-                # window.  Age keys off the NEWEST entry inside the farm,
-                # not the top dir's mtime: a publisher still linking into
-                # nested subdirs never touches the top dir, so the
-                # directory's own mtime would age an in-flight farm into
-                # deletion mid-commit.
-                p = os.path.join(sroot, name)
+                # a crashed publisher's half-built link farm (the prefix
+                # _publish_stream_dirs mints; other dot-entries are not
+                # ours).  It ages from its NEWEST entry: a publisher still
+                # linking into nested subdirs never touches the top dir.
                 try:
-                    newest = os.path.getmtime(p)
-                    for root, dirs, files in os.walk(p):
-                        for entry in dirs + files:
-                            newest = max(
-                                newest,
-                                os.path.getmtime(os.path.join(root, entry)),
-                            )
-                    if now - newest >= min_age_seconds:
-                        shutil.rmtree(p, ignore_errors=True)
+                    newest = max([os.path.getmtime(p)] + [
+                        os.path.getmtime(os.path.join(root, e))
+                        for root, dirs, files in os.walk(p) for e in dirs + files
+                    ])
                 except OSError:
-                    pass
+                    continue
+                if now - newest >= min_age_seconds:
+                    shutil.rmtree(p, ignore_errors=True)
             elif not name.startswith(".") and name not in data_names:
-                # foreign dot-entries are left alone: not ours to delete
-                shutil.rmtree(os.path.join(sroot, name), ignore_errors=True)
+                shutil.rmtree(p, ignore_errors=True)
     return removed

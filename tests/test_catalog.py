@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from elasticsearch_hadoop_spark import txn
 from elasticsearch_hadoop_spark.catalog import (
     Catalog,
     DocumentConflictError,
@@ -193,7 +194,8 @@ def test_index_pattern_routing(spark, cat):
     ]
     df = docs(spark, rows).withColumn("ts", F.to_timestamp("ts"))
     cat.write_index(df, "ev", id_col="k", index_pattern="ev-{typ}-{ts|date:yyyy.MM.dd}")
-    parts = {d for d in os.listdir(cat.path("ev")) if d.startswith("_index=")}
+    (live,) = txn.latest(cat.path("ev"))[1]
+    parts = {d for d in os.listdir(live) if d.startswith("_index=")}
     assert parts == {
         "_index=ev-click-2024.03.01",
         "_index=ev-view-2024.03.02",
@@ -221,6 +223,24 @@ def test_dedupe_last_order(spark):
     ).withColumn("_id", F.col("k").cast("string"))
     out = {r["_id"]: r["v"] for r in dedupe_last(df, "_id").collect()}
     assert out == {"1": "y", "2": "z"}
+
+
+@pytest.mark.parametrize("slices", [1, 3, 8])
+@pytest.mark.parametrize("shuffle_partitions", [1, 7, 64])
+def test_index_keeps_last_occurrence_across_layouts(spark, cat, slices, shuffle_partitions):
+    """ES bulk order: the last occurrence of an _id in a batch wins,
+    whatever the batch's partitioning or the shuffle width."""
+    rows = [(i % 5, i) for i in range(40)]  # each _id repeats 8 times, in order
+    batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, slices), "k long, n long")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        cat.write_index(docs(spark, [{"k": 99, "n": -1}]), "bulk", id_col="k")
+        cat.write_index(batch, "bulk", operation="index", id_col="k")
+        got = {r["k"]: r["n"] for r in cat.read_index("bulk").collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert got == {99: -1, **{k: 35 + k for k in range(5)}}
 
 
 def test_multi_index_comma_and_wildcard(spark, cat):
@@ -469,7 +489,8 @@ def test_reindex_with_query_transform_and_alias_swap(spark, cat):
 def test_max_records_per_file_bounds_files(spark, cat):
     df = docs(spark, [{"k": i, "v": str(i), "n": i} for i in range(100)]).coalesce(1)
     cat.write_index(df, "bounded", mode="overwrite", max_records_per_file=10)
-    files = [f for f in os.listdir(cat.path("bounded")) if f.endswith(".parquet")]
+    (live,) = txn.latest(cat.path("bounded"))[1]
+    files = [f for f in os.listdir(live) if f.endswith(".parquet")]
     assert len(files) >= 10  # 100 rows / <=10 per file
     assert cat.count_index("bounded") == 100
 

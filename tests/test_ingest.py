@@ -681,6 +681,36 @@ def test_date_formats_ansi_safe_fallthrough(spark):
     assert rows(pipe2(df))[0]["@timestamp"].year == 2024
 
 
+def test_date_out_of_range_is_null_not_a_failed_pipeline(spark):
+    """An epoch or a year outside 1-9999 gives NULL for that document: it
+    must neither overflow inside the JVM (timestamp_millis of a 17-digit
+    value) nor store a year Python cannot collect (try_to_timestamp of
+    '123456' is year 123456)."""
+    df = spark.createDataFrame(
+        [(1, "99999999999999999"), (2, "123456"), (3, "2024-01-02"), (4, "1700000000000")],
+        "id int, ts string",
+    )
+
+    def parsed(formats):
+        pipe = compile_pipeline([{"date": {"field": "ts", "formats": formats}}])
+        return {r["id"]: r["@timestamp"] for r in rows(pipe(df))}
+
+    assert parsed(["UNIX_MS"])[1] is None
+    assert parsed(["UNIX_MS"])[4].year == 2023
+    assert parsed(["UNIX"])[1] is None
+    iso = parsed(["ISO8601"])
+    assert iso[2] is None and iso[4] is None and iso[3].year == 2024
+    # a value the ISO attempt rejects falls through to the next format
+    assert parsed(["ISO8601", "UNIX_MS"])[4].year == 2023
+    fmts = ["ISO8601", "UNIX_MS"]
+    pipe = compile_pipeline(
+        [{"date_index_name": {"field": "ts", "date_rounding": "d", "date_formats": fmts}}]
+    )
+    assert {r["id"]: r["_index"] for r in rows(pipe(df))} == {
+        1: None, 2: "1970-01-01", 3: "2024-01-02", 4: "2023-11-14",
+    }
+
+
 def test_user_agent_ie11_version_fallback(spark):
     df = spark.createDataFrame(
         [(1, "Mozilla/5.0 (Windows NT 10.0; Trident/7.0; rv:11.0) like Gecko")],

@@ -117,8 +117,10 @@ def test_footer_count_matches_scan_count(spark, sf_dir, tmp_path):
 
 
 def test_rollover_generation_is_metadata_only(spark, sf_dir, tmp_path):
-    # a fresh generation must cost no Spark write: bare dir + schema in
-    # _meta, and read back as an empty frame with the parent's schema
+    # a fresh generation must cost no Spark write: a manifest that lists
+    # no data dirs and records the schema, read back as an empty frame
+    # with the parent's schema
+    from elasticsearch_hadoop_spark import txn
     from elasticsearch_hadoop_spark.catalog import Catalog
 
     cat = Catalog(spark, str(tmp_path))
@@ -128,7 +130,7 @@ def test_rollover_generation_is_metadata_only(spark, sf_dir, tmp_path):
     res = cat.rollover("g", max_docs=1)
     assert res["rolled_over"]
     gen2 = os.path.join(str(tmp_path), "g-000002")
-    assert os.path.isdir(gen2) and os.listdir(gen2) == []
+    assert txn.latest(gen2) == (1, []) and os.listdir(txn.data_root(gen2)) == []
     df = cat.read_index("g-000002")
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == [f.name for f in orders.schema.fields]

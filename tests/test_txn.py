@@ -1,6 +1,7 @@
-"""Optimistic-concurrency commit log (txn.py + Catalog(transactional=True)):
-concurrent appends must both land, replace commits must detect lost races
-and re-derive, and readers must only ever see committed manifests."""
+"""Optimistic-concurrency commit log (txn.py), the commit protocol of every
+Catalog: concurrent appends must both land, replace commits must detect
+lost races and re-derive, a crash at any step must leave the old or the new
+snapshot, and readers must only ever see committed manifests."""
 
 from __future__ import annotations
 
@@ -90,18 +91,23 @@ def test_vacuum_sweeps_orphans_respecting_retention(tmp_path):
 
 
 def test_adopt_preserves_plain_data(spark, tmp_path):
-    """Opening an existing NON-transactional index with
-    Catalog(transactional=True) must adopt its data as committed v1, not
-    hide it behind an empty manifest (silent data loss)."""
+    """An index directory in the layout an earlier version wrote (parquet
+    files in the index directory, the schema in ``_meta["schema"]``) is
+    adopted as a committed snapshot on the next write, not hidden behind an
+    empty manifest (silent data loss), and its schema moves into the
+    manifest."""
     root = str(tmp_path / "idx")
-    plain = Catalog(spark, root)
-    plain.write_index(_df(spark, 0, 5, "old"), "t")
-    tcat = Catalog(spark, root, transactional=True)
-    tcat.write_index(_df(spark, 5, 8, "new"), "t")  # append under the log
-    got = {(r["k"], r["tag"]) for r in tcat.read_index("t").collect()}
+    cat = Catalog(spark, root)
+    old = _df(spark, 0, 5, "old")
+    old.write.parquet(cat.path("t"))
+    cat._write_meta("t", {"schema": old.schema.jsonValue()})
+    cat.write_index(_df(spark, 5, 8, "new"), "t")  # append under the log
+    got = {(r["k"], r["tag"]) for r in cat.read_index("t").collect()}
     assert got == {(i, "old") for i in range(5)} | {(i, "new") for i in range(5, 8)}
-    # and the plain-mode reader sees the same through the manifest
-    assert {(r["k"], r["tag"]) for r in plain.read_index("t").collect()} == got
+    assert "schema" not in cat._read_meta("t")
+    assert txn.latest(cat.path("t"))[0] == 2  # the adoption, then the append
+    tcat = Catalog(spark, root, transactional=True)
+    assert {(r["k"], r["tag"]) for r in tcat.read_index("t").collect()} == got
 
 
 def test_manifest_files_never_half_written(tmp_path):
@@ -215,23 +221,56 @@ def test_txn_reader_never_sees_halfcommit(spark, cat):
     assert cat.count_index("t") == 50
 
 
-def test_txn_append_fuzz_threads(tmp_path):
-    """Log-level stress: 8 threads x 20 appends racing on one log. Every
-    append must land exactly once (manifest union), the final version must
-    equal the total commit count, and no thread may error."""
+def _append_fuzz(tmp_path, prune):
+    import random
+    import sys
+    import time
     from concurrent.futures import ThreadPoolExecutor
 
     p = str(tmp_path / "t")
     txn.init_log(p)
     dirs = [txn.new_data_dir(p) for _ in range(160)]
 
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        versions = list(ex.map(lambda d: txn.commit_append(p, d), dirs))
+    def append(d):
+        time.sleep(random.random() * 0.01)
+        v = txn.commit_append(p, d)
+        if prune:
+            txn.drop_superseded(p, v)
+        return v
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            versions = list(ex.map(append, dirs))
+    finally:
+        sys.setswitchinterval(interval)
 
     assert sorted(versions) == list(range(1, 161))  # every version claimed once
     v, live = txn.latest(p)
     assert v == 160
     assert sorted(map(str, live)) == sorted(dirs)  # no append lost
+    return p
+
+
+def test_txn_append_fuzz_threads(tmp_path):
+    """Log-level stress: 8 threads x 20 appends racing on one log. Every
+    append must land exactly once (manifest union), the final version must
+    equal the total commit count, and no thread may error."""
+    _append_fuzz(tmp_path, prune=False)
+
+
+def test_txn_append_fuzz_threads_pruning(tmp_path, monkeypatch):
+    """The same stress with every commit pruning the log behind it, as a
+    default catalog does: pruning loses no append, and once the window has
+    passed the log holds only the newest manifest."""
+    import time
+
+    monkeypatch.setattr(txn, "LOG_RETENTION_SECONDS", 0.2)
+    p = _append_fuzz(tmp_path, prune=True)
+    time.sleep(txn.LOG_RETENTION_SECONDS)
+    txn.drop_superseded(p, 160)
+    assert txn._versions(p) == [160]
 
 
 def test_time_travel_and_history(spark, cat):
@@ -540,3 +579,275 @@ def test_vacuum_sweeps_aged_publisher_tmp_farms(tmp_path):
     assert os.path.isdir(foreign)
     # the committed mirror is untouched
     assert os.path.basename(d1) in os.listdir(txn.stream_root(p))
+
+
+# ------------------------------------------- one protocol: crashes and races
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _rows(spark, root, name="t"):
+    """What a fresh Catalog over ``root`` reads from ``name``."""
+    return {(r["k"], r["tag"]) for r in Catalog(spark, root).read_index(name).collect()}
+
+
+@pytest.mark.parametrize("step", ["after_data_write", "after_manifest_claim", "before_drop"])
+def test_crash_leaves_old_or_new_snapshot(spark, tmp_path, monkeypatch, step):
+    """A default catalog's upsert dies at one commit step: after its data
+    dir is written, after it claims the manifest, or before it deletes the
+    snapshot it superseded.  A fresh Catalog then reads exactly the old or
+    the new snapshot, and vacuum sweeps the one orphan dir the crash left."""
+    import os
+
+    root = str(tmp_path / "idx")
+    cat = Catalog(spark, root)
+    cat.write_index(_df(spark, 0, 5, "old"), "t", id_col="k")
+    old = _rows(spark, root)
+    new = {(i, "old") for i in range(3)} | {(i, "new") for i in range(3, 8)}
+
+    def crash(*_args, **_kwargs):
+        raise _Crash(step)
+
+    if step == "after_data_write":
+        monkeypatch.setattr(txn, "commit_replace", crash)
+    elif step == "after_manifest_claim":
+        claim = txn.try_commit
+
+        def claim_then_crash(*args, **kwargs):
+            assert claim(*args, **kwargs)
+            crash()
+
+        monkeypatch.setattr(txn, "try_commit", claim_then_crash)
+    else:
+        monkeypatch.setattr(txn, "drop_superseded", crash)
+    with pytest.raises(_Crash):
+        cat.write_index(_df(spark, 3, 8, "new"), "t", operation="upsert", id_col="k")
+    monkeypatch.undo()
+
+    assert _rows(spark, root) == (old if step == "after_data_write" else new)
+    path = cat.path("t")
+    assert len(os.listdir(txn.data_root(path))) == 2  # the live dir and the orphan
+    assert len(Catalog(spark, root).vacuum_index("t", min_age_seconds=0)) == 1
+    _, live = txn.latest(path)
+    assert sorted(os.listdir(txn.data_root(path))) == sorted(os.path.basename(d) for d in live)
+    assert _rows(spark, root) == (old if step == "after_data_write" else new)
+
+
+def test_concurrent_upserts_lose_no_write(spark, tmp_path, monkeypatch):
+    """Two threads upsert disjoint _ids into one default catalog, both
+    deriving their rewrite from the same snapshot before either claims the
+    next version.  Afterwards each write is visible unless its writer
+    raised: no write is silently lost."""
+    root = str(tmp_path / "idx")
+    Catalog(spark, root).write_index(_df(spark, 0, 4, "base"), "t", id_col="k")
+    barrier = threading.Barrier(2)
+    commit = txn.commit_replace
+
+    def commit_together(*args, **kwargs):
+        barrier.wait(timeout=120)
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(txn, "commit_replace", commit_together)
+    writes = {"a": range(10, 14), "b": range(20, 24)}
+    errors = {}
+
+    def upsert(tag):
+        try:
+            ids = writes[tag]
+            Catalog(spark, root).write_index(
+                _df(spark, ids.start, ids.stop, tag), "t", operation="upsert", id_col="k"
+            )
+        except Exception as ex:  # noqa: BLE001
+            errors[tag] = ex
+
+    threads = [threading.Thread(target=upsert, args=(tag,)) for tag in writes]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    monkeypatch.undo()
+    got = _rows(spark, root)
+    assert len(errors) < 2, errors
+    assert {(i, "base") for i in range(4)} <= got
+    for tag, ids in writes.items():
+        if tag not in errors:
+            assert {(i, tag) for i in ids} <= got, (tag, errors)
+
+
+def test_default_catalog_keeps_one_snapshot(spark, tmp_path):
+    """A default catalog deletes the data dirs its replace commit
+    superseded as soon as the commit wins; a transactional one keeps them
+    for time travel until vacuum_index."""
+    import os
+
+    for transactional, dirs_left in ((False, 1), (True, 3)):
+        cat = Catalog(spark, str(tmp_path / f"t{transactional}"), transactional=transactional)
+        cat.write_index(_df(spark, 0, 5, "a"), "t", id_col="k")
+        cat.write_index(_df(spark, 3, 8, "b"), "t", operation="upsert", id_col="k")
+        cat.delete_by_query("t", {"term": {"k": 0}})
+        assert cat.count_index("t") == 7
+        assert len(os.listdir(txn.data_root(cat.path("t")))) == dirs_left
+        assert len(txn.history(cat.path("t"))) == 3
+
+
+def test_empty_index_is_a_manifest_without_dirs(spark, tmp_path):
+    """An index created empty (rollover's next generation) commits a
+    manifest that lists no dirs: it reads as 0 rows with its recorded
+    schema, and a later write merges against that schema."""
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    cat.write_index(_df(spark, 0, 3, "a").withColumn("x", F.lit(1)), "g-000001", id_col="k")
+    cat.put_alias("g", "g-000001")
+    assert cat.rollover("g", max_docs=1)["rolled_over"]
+    version, dirs = txn.latest(cat.path("g-000002"))
+    assert (version, dirs) == (1, [])
+    assert cat.count_index("g-000002") == 0
+    empty = cat.read_index("g-000002")
+    assert empty.columns == ["k", "tag", "x"] and empty.count() == 0
+    cat.write_index(_df(spark, 5, 7, "b"), "g-000002", operation="upsert", id_col="k")
+    got = cat.read_index("g-000002")
+    assert got.columns == ["k", "tag", "x"]
+    assert {(r["k"], r["x"]) for r in got.collect()} == {(5, None), (6, None)}
+
+
+
+@pytest.mark.parametrize("failure", ["job_raises", "process_died"])
+def test_failed_first_write_leaves_no_index(spark, tmp_path, failure):
+    """A first write that fails before its claim leaves no index: the name
+    does not exist, and the retry creates the index with its template's
+    default pipeline and accepts mode="error".  A job that raises removes
+    the empty log it made; one a dead process left behind is not an index
+    either."""
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    cat.put_pipeline("norm", [{"lowercase": {"field": "tag"}}])
+    cat.put_index_template(
+        "t-logs",
+        {"index_patterns": ["logs-*"], "priority": 10,
+         "template": {"settings": {"index.default_pipeline": "norm"}}},
+    )
+    if failure == "job_raises":
+        bad = _df(spark, 0, 3, "X").withColumn("v", F.raise_error(F.lit("boom")))
+        with pytest.raises(Exception, match="boom"):
+            cat.write_index(bad, "logs-a", id_col="k")
+        assert not cat.exists("logs-a") and "logs-a" not in cat.list_indices()
+    else:
+        txn.init_log(cat.path("logs-a"))
+        assert "logs-a" not in cat.list_indices()
+    cat.write_index(_df(spark, 0, 3, "X"), "logs-a", mode="error", id_col="k")
+    assert {r["tag"] for r in cat.read_index("logs-a").collect()} == {"x"}
+    assert cat._read_meta("logs-a")["default_pipeline"] == "norm"
+    with pytest.raises(Exception, match="logs-a"):
+        cat.write_index(_df(spark, 0, 3, "X"), "logs-a", mode="error", id_col="k")
+
+
+def test_default_catalog_log_stays_short(spark, tmp_path, monkeypatch):
+    """A default catalog prunes the manifests its commits superseded, so a
+    long-running writer's reads list one manifest, not one per commit; the
+    running replace flag survives the pruning.  A transactional catalog
+    keeps its whole log for time travel."""
+    import os
+
+    monkeypatch.setattr(txn, "LOG_RETENTION_SECONDS", 0.0)
+    for transactional in (False, True):
+        cat = Catalog(spark, str(tmp_path / f"t{transactional}"), transactional=transactional)
+        p = cat.path("t")
+        cat.write_index(_df(spark, 0, 2, "a"), "t", id_col="k")
+        cat.write_index(_df(spark, 2, 4, "b"), "t", operation="upsert", id_col="k")
+        for i in range(4):
+            cat.write_index(_df(spark, 10 + i, 11 + i, "c"), "t")
+        manifests = os.listdir(os.path.join(p, "_txn"))
+        assert len(manifests) == (6 if transactional else 1), manifests
+        assert txn.latest(p)[0] == 6 and txn.has_replace_commit(p)
+        assert cat.count_index("t") == 8
+        _, live = txn.latest(p)
+        assert len(os.listdir(txn.data_root(p))) == (6 if transactional else len(live))
+
+
+def test_pruned_log_stays_one_manifest_over_many_commits(tmp_path, monkeypatch):
+    """Hundreds of commits, each pruning behind itself: the log holds one
+    manifest throughout, and the running replace flag keeps answering
+    has_replace_commit from it."""
+    import os
+
+    monkeypatch.setattr(txn, "LOG_RETENTION_SECONDS", 0.0)
+    p = str(tmp_path / "t")
+    txn.init_log(p)
+    for i in range(300):
+        if i == 150:
+            v = txn.commit_replace(p, txn.latest(p)[0], txn.new_data_dir(p))
+        else:
+            v = txn.commit_append(p, txn.new_data_dir(p))
+        txn.drop_superseded(p, v)
+        assert os.listdir(os.path.join(p, "_txn")) == [f"v{v:012d}.json"]
+        assert txn.has_replace_commit(p) == (i >= 150)
+    assert txn.latest(p)[0] == 300 and len(txn.latest(p)[1]) == 150
+
+
+def test_claim_in_a_pruned_slot_is_withdrawn(tmp_path):
+    """A writer that read the log before pruning may claim a version whose
+    manifest was pruned; that claim must lose, not publish a snapshot
+    nobody reads."""
+    import os
+
+    p = str(tmp_path / "t")
+    txn.init_log(p)
+    for _ in range(3):
+        txn.commit_append(p, txn.new_data_dir(p))
+    old = os.path.getmtime(txn._version_file(p, 3)) - 2 * txn.LOG_RETENTION_SECONDS
+    for v in (1, 2, 3):
+        os.utime(txn._version_file(p, v), (old, old))
+    txn.drop_superseded(p, 3)
+    assert txn._versions(p) == [3]
+    # an append reads its predecessor before claiming; a replace is caught
+    # after linking by the age of the version above it
+    assert not txn.try_commit(p, 2, [txn.new_data_dir(p)])
+    assert not txn.try_commit(p, 2, [txn.new_data_dir(p)], meta={"replace": True})
+    assert txn._versions(p) == [3]
+    assert txn.commit_append(p, txn.new_data_dir(p)) == 4
+
+
+def test_replace_drops_its_dir_when_recompute_raises(tmp_path):
+    """A replace writer that lost the race and whose re-derivation raised
+    leaves no uncommitted copy of its snapshot behind."""
+    import os
+
+    p = str(tmp_path / "t")
+    txn.init_log(p)
+    txn.commit_append(p, txn.new_data_dir(p))  # the winner's v1
+    stale = txn.new_data_dir(p)
+
+    def recompute(dirs, schema):
+        raise _Crash("snapshot gone")
+
+    with pytest.raises(_Crash):
+        txn.commit_replace(p, 0, stale, recompute=recompute)
+    assert not os.path.exists(stale)
+
+
+def test_rollover_resumes_after_dying_before_the_alias_step(spark, tmp_path, monkeypatch):
+    """A rollover that committed the next generation but died before
+    re-pointing the alias completes on the next call instead of failing on
+    the generation it already created."""
+    from elasticsearch_hadoop_spark import catalog as catalog_mod
+
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    cat.write_index(_df(spark, 0, 3, "a"), "g-000001", id_col="k")
+    cat.put_alias("g", "g-000001")
+    write_json = catalog_mod._write_json
+
+    def die_on_alias(path, obj):
+        if path == cat._aliases_path():
+            raise _Crash("died before the alias step")
+        write_json(path, obj)
+
+    monkeypatch.setattr(catalog_mod, "_write_json", die_on_alias)
+    with pytest.raises(_Crash):
+        cat.rollover("g", max_docs=1)
+    monkeypatch.undo()
+    assert txn.latest(cat.path("g-000002"))[0] == 1
+    assert cat.resolve_pattern("g") == ["g-000001"]
+    assert cat.rollover("g", max_docs=1)["new_index"] == "g-000002"
+    assert cat.resolve_pattern("g") == ["g-000001", "g-000002"]
+    assert cat.count_index("g") == 3

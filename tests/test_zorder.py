@@ -9,6 +9,7 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from elasticsearch_hadoop_spark import txn
 from elasticsearch_hadoop_spark.catalog import Catalog
 from elasticsearch_hadoop_spark.operators.zorder import column_bounds, zorder, zvalue
 
@@ -96,7 +97,7 @@ def test_zorder_applies_to_merged_output(spark, tmp_path):
     )
     cat.write_index(batch, "t", operation="upsert", id_col="k", zorder_by=["x", "y"])
     assert cat.count_index("t") == 20500
-    path = cat.path("t")
+    (path,) = txn.latest(cat.path("t"))[1]
     n_files = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     if n_files >= 4:  # span check only meaningful with multiple files
         for idx in (1, 2):  # columns: k=0, x=1, y=2

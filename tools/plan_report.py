@@ -10,14 +10,13 @@ Usage: python tools/plan_report.py [sf_dir]  (writes /root/repo/PLANS.md)
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-MARKS = (
-    "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-    "BroadcastNestedLoopJoin", "CartesianProduct",
+from elasticsearch_hadoop_spark.plans import JOIN_NODES, count_nodes, formatted_plan, pushed_filters
+
+MARKS = JOIN_NODES + (
     "TakeOrderedAndProject", "WindowGroupLimit", "HashAggregate",
     "Exchange", "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
     "FlatMapGroupsInPandas",
@@ -29,7 +28,6 @@ def main() -> int:
     from bench import EXTENSION, HEADLINE
 
     from elasticsearch_hadoop_spark.corpus import load_all
-    from elasticsearch_hadoop_spark.plans import count_nodes, formatted_plan
     from elasticsearch_hadoop_spark.session import get_spark
 
     spark = get_spark(app_name="plan_report", master="local[8]", shuffle_partitions=8)
@@ -49,19 +47,19 @@ def main() -> int:
     for name in list(HEADLINE) + list(EXTENSION):
         plan = formatted_plan(registry[name].fn(spark, sf_dir))
         counts = {m: count_nodes(plan, m) for m in MARKS}
-        pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-        pushed_nonempty = [p for p in pushed if p.strip()]
+        scans = count_nodes(plan, "Scan parquet")
+        pushed_nonempty = pushed_filters(plan)
         lines.append(f"## {name}")
         lines.append("")
         present = ", ".join(f"{m}×{c}" for m, c in counts.items() if c)
         lines.append(f"- operators: {present or '(scan/project only)'}")
-        if pushed:
+        if scans:
             lines.append(
-                f"- parquet scans: {len(pushed)}, with pushed filters on "
+                f"- parquet scans: {scans}, with pushed filters on "
                 f"{len(pushed_nonempty)}"
             )
             for p in pushed_nonempty[:3]:
-                lines.append(f"  - `[{p.strip()[:140]}]`")
+                lines.append(f"  - `[{p[:140]}]`")
         flags = []
         if counts["CartesianProduct"]:
             flags.append("CARTESIAN PRODUCT — must be a documented exact-verify path")
