@@ -287,48 +287,35 @@ class Catalog:
         """_delete_by_query parity (the reference's SaveMode.Overwrite path
         truncates via delete-by-query — RestRepository truncate/delete, per
         SURVEY.md §3.2). Rewrites the index keeping only non-matching rows;
-        returns the number deleted. One scan + one write, no driver-side
-        row handling."""
+        returns the number deleted: the rewritten snapshot's recorded row
+        count minus the rows the rewrite wrote.  One scan + one write, no
+        driver-side row handling."""
         idx = self._one_index(name, "delete_by_query")
         pred = compile_query(query)
-        # before/kept counts ride the rewrite job as Observation metrics
-        # (CollectMetrics accumulators) — previously two EXTRA full-scan
-        # count jobs bracketed the write; at scale that tripled the I/O of
-        # every delete_by_query.  A lost commit race re-invokes build,
-        # so each invocation gets fresh Observations; the committed result
-        # is the last pair.
-        obs: list[tuple[Observation, Observation]] = []
 
         def build(df: DataFrame) -> DataFrame:
             if df is None:
                 raise ValueError(f"index {idx!r} has no committed data")
-            o_in, o_out = Observation(), Observation()
-            obs.append((o_in, o_out))
-            d = df.observe(o_in, F.count(F.lit(1)).alias("n"))
-            return d.filter(~pred | pred.isNull()).observe(
-                o_out, F.count(F.lit(1)).alias("n")
-            )
+            return df.filter(~pred | pred.isNull())
 
-        self._commit_build(idx, [], build)
-        o_in, o_out = obs[-1]
-        return o_in.get["n"] - o_out.get["n"]
+        base, kept = self._commit_build(idx, [], build)
+        return base - kept
 
     def stats_index(self, name: str) -> dict:
         """_stats parity: per-index doc count, store size in bytes, field
-        names.  Doc count is answered from parquet footer metadata (the
-        aggregate-pushdown path — no data read), store size from the
-        filesystem; neither scans rows."""
+        names.  The doc count is the one the manifest records
+        (count_index), the store size comes from the filesystem and the
+        fields from the recorded schema; none of them scans rows."""
         out: dict[str, dict] = {}
         for idx in self.resolve_pattern(name):
             path = self.path(idx)
             size = 0
             for root, _dirs, files in os.walk(path):
                 size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-            df = self._read_files(idx)
             out[idx] = {
-                "doc_count": df.count(),
+                "doc_count": self.count_index(idx),
                 "store_bytes": size,
-                "fields": df.columns,
+                "fields": self._read_files(idx).columns,
             }
         return out
 
@@ -398,9 +385,10 @@ class Catalog:
         meets any condition, create the next generation (``name-000002``
         style) and atomically extend the alias.  Reads through the alias
         keep seeing every generation (alias union); writes via
-        ``write_alias`` land in the newest.  The doc-count condition uses
-        the parquet-footer count fast path — no scan; age comes from index
-        meta (creation-stamped here) with dir-ctime fallback.
+        ``write_alias`` land in the newest.  The doc-count condition reads
+        the count the write index's manifest records (count_index) — no
+        scan; age comes from index meta (creation-stamped here) with
+        dir-ctime fallback.
 
         This is the time-partitioning idiom at 100 TB: generations bound
         per-index size so compaction/vacuum/Z-order work on bounded
@@ -455,7 +443,7 @@ class Catalog:
         index creation touches no data nodes' segments.  Reads return 0
         rows with the recorded schema.  Index templates resolve here like
         any new-index creation (write_index parity)."""
-        txn.commit_replace(self.path(name), 0, None, schema=schema.jsonValue())
+        txn.commit_replace(self.path(name), 0, None, schema=schema.jsonValue(), rows=0)
         meta = {**self._template_meta(name), **self._read_meta(name)}
         meta.update({"created_at": time.time(), "updated_at": time.time()})
         self._write_meta(name, meta)
@@ -598,7 +586,7 @@ class Catalog:
 
         partition_cols = ["_index"] if index_pattern is not None else []
 
-        if mode == "overwrite" or not self.exists(name):
+        if id_col is None and (mode == "overwrite" or not self.exists(name)):
             # truncate-then-write parity; also the create path
             self._commit_build(
                 name, partition_cols, lambda _existing: cluster(out),
@@ -614,16 +602,19 @@ class Catalog:
 
             def merge_build(existing: DataFrame | None) -> DataFrame:
                 if existing is None:
-                    # a directory without a commit (a first write that died
-                    # after init_log) merges against an empty snapshot
+                    # a new index, an overwrite, or a directory without a
+                    # commit (a first write that died after init_log)
+                    # merges against an empty snapshot, so the batch still
+                    # dedupes on _id and keeps its operation's contract
                     existing = self.spark.createDataFrame([], out.schema)
-                return cluster(self._merge(existing, out, operation, on_match, checks=checks))
+                return self._merge(existing, out, operation, on_match, checks, cluster)
 
             self._commit_build(
                 name,
                 partition_cols,
                 merge_build,
                 max_records_per_file=max_records_per_file,
+                needs_existing=mode != "overwrite",
                 # update's missing-_id contract is enforced from the merge
                 # job's own Observation metrics (zero extra scans), AFTER
                 # the build wrote but BEFORE the commit publishes, so a
@@ -651,21 +642,27 @@ class Catalog:
         incoming: DataFrame,
         operation: str,
         on_match: dict[str, Column] | None,
-        checks: list | None = None,
+        checks: list,
+        layout,
     ) -> DataFrame:
         """Hash-join merge on _id.  Incoming batch is usually the small side
         -> AQE broadcasts it; existing data shuffles at most once on _id.
         ``existing`` is the snapshot the commit layer resolved — a lost
         commit race re-invokes this against the winner's snapshot
-        (optimistic MERGE INTO).
+        (optimistic MERGE INTO).  ``layout(frame)`` arranges the merged
+        rows for the write (write_index's z-order clustering).
 
         ``operation="update"``'s missing-_id check rides the merge job
-        itself: the merge joins already touch every (incoming, existing)
-        id pair, so Observation metrics on those joins count the misses
-        for free, and the appended ``checks`` closure (run by the commit
+        itself: the incoming ids no existing row matches travel up the
+        merge and through ``layout`` as marked rows, an Observation above
+        them counts them, and a filter above it drops them.  Nothing but
+        the write sits above that Observation, so no optimizer rewrite can
+        prune it: one placed under a join that turns out empty, under a
+        constant-false filter, or under the range shuffle of a z-order
+        whose stage comes out empty, is removed with that subtree and
+        never reports.  The appended ``checks`` closure (run by the commit
         layer post-write, pre-publish) raises DocumentMissingError from
-        the counts.  The old shape ran a separate pre-check join job —
-        at scale that doubled the update's join I/O."""
+        the count."""
         # last occurrence wins within the incoming batch (bulk-order parity)
         w_id = incoming
         if operation != "delete":
@@ -673,7 +670,7 @@ class Catalog:
 
         if operation == "delete":
             ids = w_id.select("_id").distinct()
-            return existing.join(ids, on="_id", how="left_anti")
+            return layout(existing.join(ids, on="_id", how="left_anti"))
 
         if operation == "create":
             conflicts = w_id.join(existing.select("_id"), on="_id", how="left_semi")
@@ -681,105 +678,75 @@ class Catalog:
             if n:
                 some = [r["_id"] for r in conflicts.select("_id").limit(5).collect()]
                 raise DocumentConflictError(f"create conflicts on _id, e.g. {some}")
-            return existing.unionByName(w_id, allowMissingColumns=True)
+            return layout(existing.unionByName(w_id, allowMissingColumns=True))
 
-        def missing_check(get_missing):
-            """Closure for the commit layer: read the merge job's metrics;
-            on a miss, fetch example ids with a query on the error path
-            only (the happy path never runs a second join job)."""
-
-            def check():
-                n = get_missing()
-                if n:
-                    missing = w_id.join(
-                        existing.select("_id"), on="_id", how="left_anti"
-                    )
-                    some = [
-                        r["_id"] for r in missing.select("_id").limit(5).collect()
-                    ]
-                    raise DocumentMissingError(
-                        f"update for missing _id ({n} total), e.g. {some}"
-                    )
-
-            if checks is not None:
-                checks.append(check)
-
-        # update / upsert
+        # the incoming documents no stored row has
+        absent = w_id.join(existing.select("_id"), on="_id", how="left_anti")
+        # update marks every row to write with __found = TRUE and carries
+        # each absent incoming _id as a row with __found NULL
+        found = F.lit(True).alias("__found")
+        untouched = existing.join(w_id.select("_id"), on="_id", how="left_anti")
         if on_match:
             # scripted update (A11): matched rows = existing row + _new_* cols
             new_side = w_id.select(
                 F.col("_id"), *[F.col(c).alias(f"_new_{c}") for c in w_id.columns if c != "_id"]
             )
-            if operation == "update":
-                # misses counted with a left-join presence marker riding this
-                # same plan.  The count is EXACT even when blind appends left
-                # duplicate _ids in `existing`: duplicates fan out only the
-                # MATCHED marker rows, never the null-marker (missing) rows —
-                # unlike the old o_in - o_match subtraction, whose inner-join
-                # fan-out could mask a real miss or raise a spurious one.
-                # dropDuplicates collapses the fan-out back to one row per
-                # incoming id (copies are identical) so the merge join below
-                # keeps its one-match-per-existing-row semantics.
-                o_miss = Observation()
-                new_side = (
-                    new_side.join(
-                        existing.select("_id").withColumn("__ex", F.lit(True)),
-                        on="_id",
-                        how="left",
-                    )
-                    .observe(
-                        o_miss, F.count(F.when(F.col("__ex").isNull(), 1)).alias("n")
-                    )
-                    .dropDuplicates(["_id"])
-                    .drop("__ex")
-                )
             matched = existing.join(new_side, on="_id", how="inner")
             for col_name, expr in on_match.items():
                 matched = matched.withColumn(col_name, expr)
-            matched = matched.select(existing.columns)
-            if operation == "update":
-                missing_check(lambda: o_miss.get["n"])
-            untouched = existing.join(w_id.select("_id"), on="_id", how="left_anti")
-            result = untouched.unionByName(matched)
+            result = untouched.unionByName(matched.select(existing.columns))
             if operation == "upsert":
-                inserts = w_id.join(existing.select("_id"), on="_id", how="left_anti")
-                result = result.unionByName(inserts, allowMissingColumns=True)
-            return result
-
-        # whole-document replace (ES index/upsert semantics)
-        untouched = existing.join(w_id.select("_id"), on="_id", how="left_anti")
-        if operation == "update":
-            # left-join + presence marker instead of left_semi: same join
-            # shape and cost, but the pre-join rows can carry an Observation
-            # that counts the misses the filter drops
-            o_miss = Observation()
-            marked = w_id.join(
-                existing.select("_id").withColumn("__ex", F.lit(True)),
-                on="_id",
-                how="left",
-            ).observe(o_miss, F.count(F.when(F.col("__ex").isNull(), 1)).alias("n"))
-            # duplicate _ids in `existing` (blind appends) fan the marker
-            # join out; collapse to ONE replacement per incoming doc (the
-            # old left_semi's guarantee) — copies are identical rows
-            replacements = (
-                marked.filter(F.col("__ex").isNotNull())
-                .dropDuplicates(["_id"])
-                .drop("__ex")
+                return layout(result.unionByName(absent, allowMissingColumns=True))
+            marked = result.select("*", found).unionByName(
+                absent.select("_id"), allowMissingColumns=True
             )
-            missing_check(lambda: o_miss.get["n"])
-        else:  # index / upsert: all incoming docs land
-            replacements = w_id
-        return untouched.unionByName(replacements, allowMissingColumns=True)
+        elif operation != "update":
+            # whole-document index / upsert: all incoming docs land
+            return layout(untouched.unionByName(w_id, allowMissingColumns=True))
+        else:
+            # whole-document update: the presence marker's left join keeps
+            # the absent ids; duplicate _ids in `existing` (blind appends)
+            # fan it out, so collapse to ONE replacement per incoming doc —
+            # the copies are identical rows
+            replacements = w_id.join(
+                existing.select("_id", found), on="_id", how="left"
+            ).dropDuplicates(["_id"])
+            marked = untouched.select("*", found).unionByName(
+                replacements, allowMissingColumns=True
+            )
 
-    def _writer(
-        self, df: DataFrame, partition_cols: list[str], max_records_per_file, mode="overwrite"
-    ):
-        writer = df.write.mode(mode)
+        o_miss = Observation()
+
+        def check():
+            # example ids are fetched on the error path only
+            n = o_miss.get["n"]
+            if n:
+                some = [r["_id"] for r in absent.select("_id").limit(5).collect()]
+                raise DocumentMissingError(f"update for missing _id ({n} total), e.g. {some}")
+
+        checks.append(check)
+        return (
+            layout(marked)
+            .observe(o_miss, F.count_if(F.col("__found").isNull()).alias("n"))
+            .filter(F.col("__found").isNotNull())
+            .drop("__found")
+        )
+
+    @staticmethod
+    def _write(df: DataFrame, path: str, partition_cols: list[str], max_records_per_file) -> int:
+        """Write ``df`` as parquet under ``path`` and return how many rows
+        it wrote.  The count is an Observation on the frame as written, so
+        it rides the write job, and at the top of the plan no optimizer
+        rewrite of ``df`` (a constant-false filter, a ``limit(0)``, a join
+        with an empty side) can prune it: it always reports."""
+        written = Observation()
+        writer = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        return writer
+        writer.parquet(path)
+        return written.get["n"]
 
     def _assert_not_follower(self, name: str, meta: dict | None = None) -> None:
         """ES: a CCR follower index rejects every write/rewrite until
@@ -801,15 +768,19 @@ class Catalog:
         max_records_per_file: int | None = None,
         needs_existing: bool = True,
         validate=None,
-    ) -> None:
+    ) -> tuple[int | None, int]:
         """Derive-and-replace commit: ``build(existing_df_or_None)`` returns
         the index's new full contents.  The result goes to an immutable
         uuid data dir, and the next manifest version, which records the
-        schema of what was written (``_written_schema``), is claimed over
-        it.  If another writer won the race, ``build`` re-runs against the
-        winner's snapshot and the claim is retried (txn.commit_replace's
-        optimistic loop).  ``build`` gets None only when the index has no
-        committed version yet.
+        schema (``_written_schema``) and row count of what was written, is
+        claimed over it.  If another writer won the race, ``build`` re-runs
+        against the winner's snapshot and the claim is retried
+        (txn.commit_replace's optimistic loop).  ``build`` gets None when
+        the index has no committed version yet or ``needs_existing`` is
+        false.  Returns the row counts of the snapshot the commit replaced
+        and of the one it wrote; a replaced snapshot whose manifest records
+        no count (an earlier layout's) is counted with one scan when
+        ``build`` read it, else reported as None.
 
         ``validate`` (when given) runs after the build's write job finishes
         but BEFORE the result becomes visible (pre-publish) — the hook that
@@ -818,19 +789,22 @@ class Catalog:
         commit with the index untouched."""
         created = not self.exists(name)
         target = self._adopt(name)
-        base: list[str] = []  # the snapshot the committed attempt replaced
+        # (dirs, rows, written rows) of the latest attempt — the committed
+        # one once commit_replace returns
+        last: list = []
 
-        def produce(dirs: list[str], schema: dict | None) -> tuple[str, dict]:
-            base[:] = dirs
+        def produce(dirs: list[str], schema: dict | None, rows: int | None):
             existing = (
                 self._read_dirs(name, dirs, schema)
                 if (needs_existing and schema is not None)
                 else None
             )
+            if rows is None and existing is not None:
+                rows = existing.count()
             out = build(existing)
             d = txn.new_data_dir(target)
             try:
-                self._writer(out, partition_cols, max_records_per_file).parquet(d)
+                n = self._write(out, d, partition_cols, max_records_per_file)
                 if validate is not None:
                     validate()
             except Exception:
@@ -838,17 +812,22 @@ class Catalog:
                 # eagerly rather than waiting for vacuum
                 shutil.rmtree(d, ignore_errors=True)
                 raise
-            return d, _written_schema(out, partition_cols)
+            last[:] = [dirs, rows, n]
+            return d, _written_schema(out, partition_cols), n
 
         try:
-            version, dirs, schema = txn.snapshot(target)
-            d, written = produce(dirs, schema)
-            version = txn.commit_replace(target, version, d, recompute=produce, schema=written)
+            version, *snap = txn.snapshot(target)
+            d, written, n = produce(*snap)
+            version = txn.commit_replace(
+                target, version, d, recompute=produce, schema=written, rows=n
+            )
         except Exception:
             if created:
                 txn.discard_empty(target)
             raise
-        self._retire(target, version, base)
+        superseded, base_rows, rows = last
+        self._retire(target, version, superseded)
+        return base_rows, rows
 
     def _retire(self, target: str, version: int, superseded=()) -> None:
         """The retention decision after commit ``version``: a transactional
@@ -874,14 +853,15 @@ class Catalog:
         target = self._adopt(name)
         d = txn.new_data_dir(target)
         try:
-            self._writer(df, partition_cols, max_records_per_file).parquet(d)
+            n = self._write(df, d, partition_cols, max_records_per_file)
         except Exception:
             shutil.rmtree(d, ignore_errors=True)
             if created:
                 txn.discard_empty(target)
             raise
         version = txn.commit_append(
-            target, d, schema=_written_schema(df, partition_cols), partition_cols=partition_cols
+            target, d, schema=_written_schema(df, partition_cols),
+            partition_cols=partition_cols, rows=n,
         )
         self._retire(target, version)
 
@@ -1028,7 +1008,7 @@ class Catalog:
         idx = self._one_index(name, "time travel")
         if not self.transactional:
             raise ValueError(f"index {idx!r} is not transactional")
-        _, dirs, schema = txn.snapshot(self.path(idx), version)
+        _, dirs, schema, _ = txn.snapshot(self.path(idx), version)
         return self._read_dirs(idx, dirs, schema)
 
     def open_point_in_time(
@@ -1149,7 +1129,7 @@ class Catalog:
     def _read_files(self, idx: str) -> DataFrame:
         """One resolved index's current contents: the latest manifest's data
         dirs, read with the schema it records."""
-        _, dirs, schema = txn.snapshot(self.path(idx))
+        _, dirs, schema, _ = txn.snapshot(self.path(idx))
         return self._read_dirs(idx, dirs, schema)
 
     # ----------------------------------------------------------------- read
@@ -1420,60 +1400,19 @@ class Catalog:
                 out[k] = v
         return out
 
-    # above this many data files the driver-side footer loop loses to the
-    # distributed count job — shard/generation sizing (rollover, compact)
-    # keeps real indices far below it
-    _FOOTER_COUNT_MAX_FILES = 256
-
     def count_index(self, name: str, query: str | dict | None = None) -> int:
         """_count parity (A10).  The unfiltered count of plain (unfiltered-
-        alias) targets is answered from parquet footer row counts read on
-        the DRIVER — exactly ES's shard-stats doc count, zero Spark jobs
-        (the count job, even footer-stats-pushed, costs 2-3 AQE jobs /
-        ~1 s of scheduling per call, and rollover conditions pay it on
-        every write).  Filtered counts and odd layouts fall back to the
-        scan path."""
+        alias) targets is the sum of the row counts their manifests record
+        — ES's shard-stats doc count: no Spark job, no file read, whatever
+        the index's file count.  A query, a filtered alias, or a target
+        whose manifest records no count (data an earlier layout wrote)
+        counts by scan."""
         if query is None:
-            n = self._footer_count(name)
-            if n is not None:
-                return n
-        return self.read_index(name, query=query).count()
-
-    def _footer_count(self, name: str) -> int | None:
-        """Driver-side row count from parquet footers, or None when the
-        fast path does not apply (filtered alias, too many files, or any
-        unreadable footer).  Walks exactly the files a Spark read would:
-        the latest manifest's dirs, skipping '_'/'.'-prefixed entries
-        (invisible to parquet readers too, so the two paths count the same
-        files)."""
-        try:
             pairs = self._resolve_parts(name)
-        except Exception:
-            return None  # let the slow path raise its own typed error
-        if any(flt is not None for _, flt in pairs):
-            return None
-        import pyarrow.parquet as pq
-
-        total = 0
-        n_files = 0
-        for idx, _ in pairs:
-            _, dirs, schema = txn.snapshot(self.path(idx))
-            if schema is None:
-                return None  # slow path raises "no committed data"
-            for d in dirs:
-                for root, subdirs, files in os.walk(d):
-                    subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
-                    for f in files:
-                        if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                            continue
-                        n_files += 1
-                        if n_files > self._FOOTER_COUNT_MAX_FILES:
-                            return None
-                        try:
-                            total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                        except Exception:
-                            return None
-        return total
+            rows = [txn.snapshot(self.path(idx))[3] for idx, _ in pairs]
+            if all(flt is None for _, flt in pairs) and None not in rows:
+                return sum(rows)
+        return self.read_index(name, query=query).count()
 
     def snapshot_index(self, name: str, repo: str, snapshot: str) -> dict:
         """ES ``_snapshot``: a point-in-time copy of the index into a
@@ -1592,7 +1531,7 @@ class Catalog:
             raise ValueError(f"{follower_index!r} is not a CCR follower")
         lpath = os.path.join(meta["ccr_leader_root"], meta["ccr_leader_index"])
         fpath = self.path(follower_index)
-        lv, ldirs, lschema = txn.snapshot(lpath)
+        lv, ldirs, lschema, lrows = txn.snapshot(lpath)
         if lv == meta["ccr_leader_version"]:
             return {
                 "leader_version": lv,
@@ -1623,7 +1562,7 @@ class Catalog:
         fv += 1
         if txn.try_commit(
             fpath, fv, ldirs,
-            meta={"replace": True, "ccr_leader_version": lv, "schema": lschema},
+            meta={"replace": True, "ccr_leader_version": lv, "schema": lschema, "rows": lrows},
         ):
             meta["ccr_leader_version"] = lv
             live = {os.path.basename(d.rstrip("/")) for d in ldirs}
@@ -1946,7 +1885,7 @@ class Catalog:
 
     def data_stream_stats(self, name: str) -> dict:
         """GET _data_stream/<name>/_stats: generations + per-backing doc
-        counts (footer-stats counts, no scan)."""
+        counts (the counts their manifests record, no scan)."""
         if name not in self._read_data_streams():
             raise ValueError(f"no such data stream: {name!r}")
         targets = self._read_aliases().get(name, [])
@@ -1972,8 +1911,8 @@ class Catalog:
 
     def cat_indices(self) -> list[dict]:
         """ES ``GET _cat/indices``: one row per managed index — name,
-        docs.count, store.size (bytes on disk) — from footer stats and a
-        directory walk, no data scan."""
+        docs.count, store.size (bytes on disk) — from the row counts the
+        manifests record and a directory walk, no data scan."""
         out = []
         for n in self.list_indices():
             size = 0

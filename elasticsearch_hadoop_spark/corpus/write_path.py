@@ -537,9 +537,9 @@ SELECT CAST((SELECT count(*) FROM orders) AS BIGINT) AS n_all,
 )
 def writepath_count(spark, sf_dir):
     """Count fast path round trip (catalog.count_index — ES ``_count``
-    parity, A10): unfiltered count (answered from parquet footer stats —
-    no row scan) plus two query-DSL filtered counts (range + term compile
-    to pushed parquet filters)."""
+    parity, A10): unfiltered count (answered from the row count the
+    manifest records — no row scan) plus two query-DSL filtered counts
+    (range + term compile to pushed parquet filters)."""
     root = _workdir(sf_dir, "count")
     cat = Catalog(spark, root)
     cat.write_index(tbl(spark, sf_dir, "orders"), "ord", mode="overwrite")
@@ -720,7 +720,7 @@ def writepath_rollover(spark, sf_dir):
     rollover(max_docs=1) creates gen-000002 and re-points the write
     index, batch 2 lands there via write_alias; a read THROUGH the alias
     unions both generations while per-generation reads stay partition-
-    isolated — the count condition uses the footer-stats fast path, and
+    isolated — the count condition reads the manifest-recorded count, and
     the output labels every doc with the generation that actually stored
     it (a mis-rolled write shows up as a wrong gen label, not just a
     wrong total)."""
@@ -740,8 +740,8 @@ def writepath_rollover(spark, sf_dir):
     assert res["rolled_over"] and res["new_index"] == "gen-000002", res
     cat.write_alias(b2, "gen")
 
-    # alias must resolve to BOTH generations (checked from footer stats —
-    # count_index's driver-side fast path, zero Spark jobs; the returned
+    # alias must resolve to BOTH generations (checked from the counts the
+    # manifests record — count_index runs zero Spark jobs; the returned
     # frame below grades the per-generation reads and their contents, and
     # writepath_data_stream grades the alias-union READ itself)
     assert cat.count_index("gen") == cat.count_index("gen-000001") + cat.count_index(

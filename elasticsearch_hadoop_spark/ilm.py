@@ -22,8 +22,8 @@ server-side scheduler — here the *tick* is an explicit, idempotent
 library call the caller schedules however they like, e.g. per streaming
 micro-batch or from a cron):
 
-- ``hot.rollover``            -> ``catalog.rollover`` (footer-stats doc
-  count, no scan; creation-stamped age)
+- ``hot.rollover``            -> ``catalog.rollover`` (the doc count the
+  manifest records, no scan; creation-stamped age)
 - ``warm.forcemerge``         -> ``catalog.compact_index`` with
   ``max_num_segments`` target files (a REPLACE commit, writers unblocked)
 - ``warm.readonly``           -> an index-meta marker (documented subset:
@@ -213,7 +213,7 @@ def apply_lifecycle(catalog, target: str, policy, now: float | None = None):
     _backing_indices(catalog, target)  # validate before any action
     actions: list[dict] = []
 
-    # hot: rollover check on the write index (footer-stats count)
+    # hot: rollover check on the write index (manifest-recorded count)
     roll = (phases.get("hot", {}).get("actions") or {}).get("rollover")
     if roll:
         kwargs = {}

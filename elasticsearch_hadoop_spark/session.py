@@ -55,9 +55,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # unfiltered COUNT/MIN/MAX answered from parquet footer stats —
-        # count_index() on a 100 TB index reads metadata, not data
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         # fixtures' events.ts is TIMESTAMP(NANOS) — Spark 4 needs this to read it
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

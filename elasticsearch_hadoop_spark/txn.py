@@ -11,7 +11,11 @@ and no concurrent write silently vanishes:
   Version N's manifest lives at ``<index>/_txn/v{N:012d}.json`` and names
   the data directories (each written exactly once, under a uuid, never
   mutated) that make up the snapshot, plus the snapshot's schema, which
-  readers pass to Spark instead of inferring it from parquet footers.
+  readers pass to Spark instead of inferring it from parquet footers, and
+  its total row count ``rows``, which answers ``_count`` without a scan.
+  ``rows`` is null where no committer knew it (data adopted from an
+  earlier layout, a manifest an earlier version wrote, or an append on
+  top of either); the next replace commit records it again.
 - Committing version N+1 is ``open(v{N+1}.json, O_CREAT|O_EXCL)`` — an
   atomic claim on POSIX filesystems (and on object stores via
   put-if-absent).  Exactly one concurrent writer wins; losers re-read the
@@ -167,24 +171,25 @@ def _latest_body(index_path: str) -> tuple[int, dict]:
 
 def snapshot(
     index_path: str, version: int | None = None
-) -> tuple[int, list[str], dict | None]:
-    """(version, data dirs, recorded schema) of committed ``version``, by
-    default the newest; (0, [], None) for a fresh log.  The schema is the
-    Spark StructType JSON the committer recorded in the manifest body, so
-    dirs and schema always come from one snapshot.  A version file appears
-    atomically with its full body (written to a private temp file, claimed
-    via hard link — see try_commit), so whatever this lists is complete.
+) -> tuple[int, list[str], dict | None, int | None]:
+    """(version, data dirs, recorded schema, recorded row count) of
+    committed ``version``, by default the newest; (0, [], None, None) for a
+    fresh log.  The schema is the Spark StructType JSON the committer
+    recorded in the manifest body, so dirs, schema and count always come
+    from one snapshot.  A version file appears atomically with its full
+    body (written to a private temp file, claimed via hard link — see
+    try_commit), so whatever this lists is complete.
     Raises KeyError for an uncommitted explicit version (time travel — the
     Delta ``versionAsOf`` / ES point-in-time analogue; it works until
     vacuum sweeps the superseded dirs)."""
     if version is None:
         version, body = _latest_body(index_path)
         if not version:
-            return 0, [], None
+            return 0, [], None, None
     else:
         body = manifest_body(index_path, version)
     dirs = [os.path.join(index_path, _DATA_DIR, d) for d in body["dirs"]]
-    return version, dirs, body.get("schema")
+    return version, dirs, body.get("schema"), body.get("rows")
 
 
 def merge_schema_json(stored: dict | None, new: dict | None, last=()) -> dict | None:
@@ -408,20 +413,28 @@ def commit_append(
     max_retries: int = 500,
     schema: dict | None = None,
     partition_cols=(),
+    rows: int | None = None,
 ) -> int:
-    """Publish ``data_dir`` as an append.  Lost races only re-read the
-    manifest and re-claim — the data is already on disk, nothing recomputes.
-    Each attempt records the union of the winner's schema and ``schema``
-    (merge_schema_json), so concurrent appends of different new fields all
-    stay visible.  Jittered backoff keeps a heavily-contended log fair
-    (without it a loser can starve: every retry pays a listdir while
-    winners immediately contend again).  Returns the committed version."""
+    """Publish ``data_dir``, which holds ``rows`` rows, as an append.  Lost
+    races only re-read the manifest and re-claim — the data is already on
+    disk, nothing recomputes.  Each attempt records the union of the
+    winner's schema and ``schema`` (merge_schema_json), so concurrent
+    appends of different new fields all stay visible, and the winner's
+    row count plus ``rows`` (none when either is unknown).  Jittered
+    backoff keeps a heavily-contended log fair (without it a loser can
+    starve: every retry pays a listdir while winners immediately contend
+    again).  Returns the committed version."""
     import random
 
     for attempt in range(max_retries):
-        version, dirs, recorded = snapshot(index_path)
-        merged = merge_schema_json(recorded, schema, partition_cols)
-        if try_commit(index_path, version + 1, dirs + [data_dir], meta={"schema": merged}):
+        version, dirs, recorded, base = snapshot(index_path)
+        if not version:
+            base = 0  # a fresh log holds no rows
+        meta = {
+            "schema": merge_schema_json(recorded, schema, partition_cols),
+            "rows": None if base is None or rows is None else base + rows,
+        }
+        if try_commit(index_path, version + 1, dirs + [data_dir], meta=meta):
             return version + 1
         time.sleep(random.random() * min(0.05, 0.001 * (attempt + 1)))
     raise CommitConflictError(f"append to {index_path} lost {max_retries} races")
@@ -434,29 +447,31 @@ def commit_replace(
     recompute=None,
     max_retries: int = 10,
     schema: dict | None = None,
+    rows: int | None = None,
 ) -> int:
-    """Publish ``data_dir`` (whose recorded schema is ``schema``) as the
-    FULL new snapshot, valid only if the index is still at
-    ``base_version``.  A ``data_dir`` of None commits an empty snapshot:
-    no dirs, 0 rows, ``schema`` still recorded.  On a lost race the
-    derivation is stale:
-    ``recompute(new_snapshot_dirs, new_snapshot_schema) -> (new_data_dir,
-    new_schema)`` re-runs the caller's read-modify-write against the
+    """Publish ``data_dir`` (whose recorded schema is ``schema`` and which
+    holds ``rows`` rows) as the FULL new snapshot, valid only if the index
+    is still at ``base_version``.  A ``data_dir`` of None commits an empty
+    snapshot: no dirs, ``schema`` still recorded.  On a lost race the
+    derivation is stale: ``recompute(new_snapshot_dirs,
+    new_snapshot_schema, new_snapshot_rows) -> (new_data_dir, new_schema,
+    new_rows)`` re-runs the caller's read-modify-write against the
     winner's snapshot (the optimistic MERGE INTO loop).  Without a
     recompute hook a conflict is an error."""
     version = base_version
     for _ in range(max_retries):
         dirs = [data_dir] if data_dir else []
-        if try_commit(index_path, version + 1, dirs, meta={"replace": True, "schema": schema}):
+        meta = {"replace": True, "schema": schema, "rows": rows}
+        if try_commit(index_path, version + 1, dirs, meta=meta):
             return version + 1
         if recompute is None:
             raise CommitConflictError(
                 f"replace of {index_path} based on v{version} lost the race"
             )
-        version, dirs, recorded = snapshot(index_path)
+        version, dirs, recorded, recorded_rows = snapshot(index_path)
         stale = data_dir
         try:
-            data_dir, schema = recompute(dirs, recorded)
+            data_dir, schema, rows = recompute(dirs, recorded, recorded_rows)
         finally:
             # never committed: drop it even when recompute raises
             if stale:

@@ -9,7 +9,6 @@ import os
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from elasticsearch_hadoop_spark.corpus import load_all
 from elasticsearch_hadoop_spark.plans import count_nodes, formatted_plan
@@ -87,33 +86,6 @@ def test_fn_json_parses_once(spark, sf_dir):
     assert "get_json_object" not in plan
     # one JsonToStructs, shared by all three outputs
     assert plan.count("from_json(StructField(k,StringType,true)") <= 1
-
-
-def test_footer_count_matches_scan_count(spark, sf_dir, tmp_path):
-    # the driver-side footer count must agree with the scan count across
-    # overwrite, blind append, and merge shapes — and refuse (fall back)
-    # on filtered aliases
-    from elasticsearch_hadoop_spark.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path))
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
-    cat.write_index(cust, "c", mode="overwrite")
-    assert cat.count_index("c") == cat.read_index("c").count()
-    cat.write_index(cust.limit(7), "c")  # blind append (2nd write job uuid)
-    assert cat._footer_count("c") == cat.read_index("c").count()
-    cat.write_index(
-        cust.limit(5).withColumn("extra", F.lit(1)), "c2",
-        mode="overwrite", id_col="c_custkey",
-    )
-    cat.write_index(
-        cust.limit(9).withColumn("extra", F.lit(2)), "c2",
-        operation="upsert", id_col="c_custkey",
-    )
-    assert cat.count_index("c2") == cat.read_index("c2").count() == 9
-    # filtered alias → fast path must decline, slow path must filter
-    cat.put_alias("small", "c2", filter={"range": {"extra": {"gte": 2}}})
-    assert cat._footer_count("small") is None
-    assert cat.count_index("small") == cat.read_index("small").count()
 
 
 def test_rollover_generation_is_metadata_only(spark, sf_dir, tmp_path):

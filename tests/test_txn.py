@@ -63,9 +63,9 @@ def test_replace_recompute_sees_winner_snapshot(tmp_path):
     txn.commit_append(p, winner)  # v1
     seen = []
 
-    def recompute(dirs, schema):
+    def recompute(dirs, schema, rows):
         seen.append(list(dirs))
-        return txn.new_data_dir(p), schema
+        return txn.new_data_dir(p), schema, rows
 
     # stale writer based its rewrite on v0
     v = txn.commit_replace(p, 0, txn.new_data_dir(p), recompute=recompute)
@@ -233,7 +233,7 @@ def _append_fuzz(tmp_path, prune):
 
     def append(d):
         time.sleep(random.random() * 0.01)
-        v = txn.commit_append(p, d)
+        v = txn.commit_append(p, d, rows=1)
         if prune:
             txn.drop_superseded(p, v)
         return v
@@ -247,9 +247,10 @@ def _append_fuzz(tmp_path, prune):
         sys.setswitchinterval(interval)
 
     assert sorted(versions) == list(range(1, 161))  # every version claimed once
-    v, live = txn.latest(p)
+    v, live, _, rows = txn.snapshot(p)
     assert v == 160
     assert sorted(map(str, live)) == sorted(dirs)  # no append lost
+    assert rows == 160  # every retry re-added its count to the winner's
     return p
 
 
@@ -818,7 +819,7 @@ def test_replace_drops_its_dir_when_recompute_raises(tmp_path):
     txn.commit_append(p, txn.new_data_dir(p))  # the winner's v1
     stale = txn.new_data_dir(p)
 
-    def recompute(dirs, schema):
+    def recompute(dirs, schema, rows):
         raise _Crash("snapshot gone")
 
     with pytest.raises(_Crash):
