@@ -142,8 +142,9 @@ class Catalog:
     followers need.  ``False`` deletes their data dirs as soon as the
     rewrite commits, so storage stays at one live snapshot, and prunes the
     manifests older than ``txn.LOG_RETENTION_SECONDS``, so the log stays
-    short.  An index exists once its first commit lands: a first write
-    that fails leaves no index behind."""
+    short.  An index exists once its first commit lands (``exists``): a
+    first write that fails leaves no index behind, and every index,
+    bucketed ones included, is read through its log."""
 
     def __init__(self, spark: SparkSession, root: str, transactional: bool = False):
         self.spark = spark
@@ -220,11 +221,11 @@ class Catalog:
         return os.path.join(self.root, f"{name}._meta.json")
 
     def exists(self, name: str) -> bool:
-        return os.path.isdir(self.path(name))
+        # a directory whose first write died before committing is no index
+        return txn.has_commit(self.path(name))
 
     def list_indices(self) -> list[str]:
-        # a directory whose first write died before committing is no index
-        return sorted(d for d in os.listdir(self.root) if txn.has_commit(self.path(d)))
+        return sorted(d for d in os.listdir(self.root) if self.exists(d))
 
     def drop_index(self, name: str) -> None:
         shutil.rmtree(self.path(name), ignore_errors=True)
@@ -293,12 +294,7 @@ class Catalog:
         idx = self._one_index(name, "delete_by_query")
         pred = compile_query(query)
 
-        def build(df: DataFrame) -> DataFrame:
-            if df is None:
-                raise ValueError(f"index {idx!r} has no committed data")
-            return df.filter(~pred | pred.isNull())
-
-        base, kept = self._commit_build(idx, [], build)
+        base, kept, _ = self._commit_build(idx, [], lambda df: df.filter(~pred | pred.isNull()))
         return base - kept
 
     def stats_index(self, name: str) -> dict:
@@ -336,8 +332,6 @@ class Catalog:
         obs: list[Observation] = []
 
         def build(df: DataFrame) -> DataFrame:
-            if df is None:
-                raise ValueError(f"index {idx!r} has no committed data")
             o = Observation()
             obs.append(o)
             out = df.observe(o, F.count(F.when(pred, F.lit(1))).alias("n"))
@@ -423,7 +417,7 @@ class Catalog:
         if rolled and not dry_run:
             # a rollover that died before re-pointing the alias already
             # committed the next generation: only the alias step remains
-            if not txn.has_commit(self.path(new_index)):
+            if not self.exists(new_index):
                 # the old generation's recorded schema: no Spark job
                 self._create_empty_index(new_index, self._read_files(current).schema)
             aliases[alias] = [*targets, new_index]
@@ -524,10 +518,9 @@ class Catalog:
         if operation in ("update", "upsert", "delete") and id_col is None:
             raise ValueError(f"operation={operation!r} requires id_col")
 
-        target = self.path(name)
         # a directory whose first write died before committing is not an
         # index yet: the retry creates it (template, mode="error")
-        existed = txn.has_commit(target)
+        existed = self.exists(name)
         prior_meta = self._read_meta(name) if existed else {}
         if existed and mode == "error":
             raise IndexExistsError(name)
@@ -733,19 +726,29 @@ class Catalog:
         )
 
     @staticmethod
-    def _write(df: DataFrame, path: str, partition_cols: list[str], max_records_per_file) -> int:
+    def _write(
+        df: DataFrame, path: str, partition_cols: list[str], max_records_per_file, bucketing=None
+    ) -> int:
         """Write ``df`` as parquet under ``path`` and return how many rows
         it wrote.  The count is an Observation on the frame as written, so
         it rides the write job, and at the top of the plan no optimizer
         rewrite of ``df`` (a constant-false filter, a ``limit(0)``, a join
-        with an empty side) can prune it: it always reports."""
+        with an empty side) can prune it: it always reports.  With
+        ``bucketing`` = (table, num_buckets, bucket_cols, sort_cols) the
+        files are bucketed, and the session catalog's ``table`` is
+        re-pointed at ``path`` (write_bucketed)."""
         written = Observation()
         writer = df.observe(written, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
+        if bucketing is None:
+            writer.parquet(path)
+        else:
+            table, num_buckets, bucket_cols, sort_cols = bucketing
+            writer = writer.option("path", path).bucketBy(num_buckets, *bucket_cols)
+            (writer.sortBy(*sort_cols) if sort_cols else writer).saveAsTable(table, format="parquet")
         return written.get["n"]
 
     def _assert_not_follower(self, name: str, meta: dict | None = None) -> None:
@@ -768,19 +771,21 @@ class Catalog:
         max_records_per_file: int | None = None,
         needs_existing: bool = True,
         validate=None,
-    ) -> tuple[int | None, int]:
+        bucketing=None,
+    ) -> tuple[int, int, str]:
         """Derive-and-replace commit: ``build(existing_df_or_None)`` returns
         the index's new full contents.  The result goes to an immutable
-        uuid data dir, and the next manifest version, which records the
-        schema (``_written_schema``) and row count of what was written, is
-        claimed over it.  If another writer won the race, ``build`` re-runs
-        against the winner's snapshot and the claim is retried
-        (txn.commit_replace's optimistic loop).  ``build`` gets None when
-        the index has no committed version yet or ``needs_existing`` is
-        false.  Returns the row counts of the snapshot the commit replaced
-        and of the one it wrote; a replaced snapshot whose manifest records
-        no count (an earlier layout's) is counted with one scan when
-        ``build`` read it, else reported as None.
+        uuid data dir (written by ``_write``, with its ``bucketing``), and
+        the next manifest version, which records the schema
+        (``_written_schema``) and row count of what was written, is claimed
+        over it.  If another writer won the race, ``build`` re-runs against
+        the winner's snapshot and the claim is retried
+        (txn.commit_replace's optimistic loop); so does a build that fails
+        after another writer committed, whose retention may have deleted
+        the snapshot the build was reading.  ``build`` gets None when the
+        index has no committed version yet or ``needs_existing`` is false.
+        Returns the row counts of the snapshot the commit replaced and of
+        the one it wrote, and the committed data dir.
 
         ``validate`` (when given) runs after the build's write job finishes
         but BEFORE the result becomes visible (pre-publish) — the hook that
@@ -788,23 +793,22 @@ class Catalog:
         instead of paying a separate pre-check job; a raise aborts the
         commit with the index untouched."""
         created = not self.exists(name)
-        target = self._adopt(name)
-        # (dirs, rows, written rows) of the latest attempt — the committed
-        # one once commit_replace returns
+        self._assert_not_follower(name)
+        target = self.path(name)
+        # (dirs, rows, written rows, written dir) of the latest attempt —
+        # the committed one once commit_replace returns
         last: list = []
 
-        def produce(dirs: list[str], schema: dict | None, rows: int | None):
+        def produce(dirs: list[str], schema: dict | None, rows: int):
             existing = (
                 self._read_dirs(name, dirs, schema)
                 if (needs_existing and schema is not None)
                 else None
             )
-            if rows is None and existing is not None:
-                rows = existing.count()
             out = build(existing)
             d = txn.new_data_dir(target)
             try:
-                n = self._write(out, d, partition_cols, max_records_per_file)
+                n = self._write(out, d, partition_cols, max_records_per_file, bucketing)
                 if validate is not None:
                     validate()
             except Exception:
@@ -812,22 +816,18 @@ class Catalog:
                 # eagerly rather than waiting for vacuum
                 shutil.rmtree(d, ignore_errors=True)
                 raise
-            last[:] = [dirs, rows, n]
+            last[:] = [dirs, rows, n, d]
             return d, _written_schema(out, partition_cols), n
 
         try:
-            version, *snap = txn.snapshot(target)
-            d, written, n = produce(*snap)
-            version = txn.commit_replace(
-                target, version, d, recompute=produce, schema=written, rows=n
-            )
+            version = txn.commit_replace(target, recompute=produce)
         except Exception:
             if created:
                 txn.discard_empty(target)
             raise
-        superseded, base_rows, rows = last
+        superseded, base_rows, rows, d = last
         self._retire(target, version, superseded)
-        return base_rows, rows
+        return base_rows, rows, d
 
     def _retire(self, target: str, version: int, superseded=()) -> None:
         """The retention decision after commit ``version``: a transactional
@@ -850,7 +850,8 @@ class Catalog:
         index's and the frame's (txn.merge_schema_json) — a lost race
         retries only the (tiny) manifest write, never the data."""
         created = not self.exists(name)
-        target = self._adopt(name)
+        self._assert_not_follower(name)
+        target = self.path(name)
         d = txn.new_data_dir(target)
         try:
             n = self._write(df, d, partition_cols, max_records_per_file)
@@ -864,20 +865,6 @@ class Catalog:
             partition_cols=partition_cols, rows=n,
         )
         self._retire(target, version)
-
-    def _adopt(self, name: str) -> str:
-        """The index path, after refusing a follower and bringing any data
-        an earlier version wrote outside the log under it (txn.adopt).
-        That layout kept its schema in ``_meta``, which moves into the
-        manifest."""
-        meta = self._read_meta(name)
-        self._assert_not_follower(name, meta)
-        target = self.path(name)
-        txn.adopt(target, meta.get("schema"))
-        if "schema" in meta:
-            del meta["schema"]
-            self._write_meta(name, meta)
-        return target
 
     def compact_index(self, name: str, target_files: int | None = None) -> None:
         """Compact an index's data into ``target_files`` files (default:
@@ -893,12 +880,7 @@ class Catalog:
         # flat would lose partition-pruned reads permanently
         partition_cols = ["_index"] if self._read_meta(idx).get("index_pattern") else []
 
-        def build(df: DataFrame) -> DataFrame:
-            if df is None:
-                raise ValueError(f"index {idx!r} has no committed data to compact")
-            return df.coalesce(n)
-
-        self._commit_build(idx, partition_cols, build)
+        self._commit_build(idx, partition_cols, lambda df: df.coalesce(n))
 
     # ------------------------------------------------- shrink / split / clone
     def _data_file_count(self, name: str) -> int:
@@ -1404,14 +1386,12 @@ class Catalog:
         """_count parity (A10).  The unfiltered count of plain (unfiltered-
         alias) targets is the sum of the row counts their manifests record
         — ES's shard-stats doc count: no Spark job, no file read, whatever
-        the index's file count.  A query, a filtered alias, or a target
-        whose manifest records no count (data an earlier layout wrote)
-        counts by scan."""
+        the index's file count.  A query or a filtered alias counts by
+        scan."""
         if query is None:
             pairs = self._resolve_parts(name)
-            rows = [txn.snapshot(self.path(idx))[3] for idx, _ in pairs]
-            if all(flt is None for _, flt in pairs) and None not in rows:
-                return sum(rows)
+            if all(flt is None for _, flt in pairs):
+                return sum(txn.snapshot(self.path(idx))[3] for idx, _ in pairs)
         return self.read_index(name, query=query).count()
 
     def snapshot_index(self, name: str, repo: str, snapshot: str) -> dict:
@@ -1457,9 +1437,7 @@ class Catalog:
             manifest = json.load(fh)
         df = self._read_dirs(name, [os.path.join(src, "data")], manifest.get("schema"))
         self._commit_build(target, [], lambda _: df, needs_existing=False)
-        # a snapshot an earlier version took carries its schema in the meta
-        meta = {k: v for k, v in (manifest.get("meta") or {}).items() if k != "schema"}
-        self._write_meta(target, {**meta, **self._read_meta(target)})
+        self._write_meta(target, {**(manifest.get("meta") or {}), **self._read_meta(target)})
 
     def list_snapshots(self, repo: str) -> list[dict]:
         """ES GET _snapshot/<repo>/_all: the repository's snapshot
@@ -2189,43 +2167,48 @@ class Catalog:
         bucket_cols: list[str],
         num_buckets: int,
         sort_cols: list[str] | None = None,
-        mode: str = "overwrite",
     ) -> None:
-        """Persist an index as a bucketed table (hash-partitioned into
-        ``num_buckets`` files by ``bucket_cols``, optionally sorted within
-        buckets). This is the 100 TB co-located-join path referenced from
-        the join corpus: two tables bucketed the same way on the join key
-        are joined with ZERO shuffle (verified in tests/test_skew_bucket.py
-        by asserting no Exchange in the plan).
+        """Replace index ``name`` with ``df`` as a bucketed snapshot
+        (hash-partitioned into ``num_buckets`` files by ``bucket_cols``,
+        optionally sorted within buckets). This is the 100 TB co-located-
+        join path referenced from the join corpus: two indices bucketed the
+        same way on the join key are joined with ZERO shuffle (verified in
+        tests/test_skew_bucket.py by asserting no Exchange in the plan).
 
-        Bucketing metadata lives in the session catalog (saveAsTable with
-        an explicit path -> external table at the index's managed path);
-        read back with ``read_bucketed`` — a plain parquet read of the same
-        path works too but loses the bucket metadata and re-shuffles."""
+        The write is a replace commit like any other: the bucketed files go
+        to a fresh data dir, and the manifest records their schema and row
+        count, so ``read_index``, ``count_index`` and wildcard reads see the
+        index like every other one.  The bucket metadata lives in the
+        session catalog (an external table at that data dir), and ``_meta``
+        records the dir; ``read_bucketed`` reads it back."""
         table = self._table_name(name)
-        writer = df.write.format("parquet").option("path", self.path(name)).mode(mode)
-        writer = writer.bucketBy(num_buckets, *bucket_cols)
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.saveAsTable(table)
-        self._write_meta(
-            name,
-            {
-                "bucket_cols": bucket_cols,
-                "num_buckets": num_buckets,
-                "table": table,
-            },
+        *_, d = self._commit_build(
+            name, [], lambda _: df, needs_existing=False,
+            bucketing=(table, num_buckets, bucket_cols, sort_cols),
         )
+        self._write_meta(name, {
+            **self._read_meta(name),
+            "bucket_cols": bucket_cols, "num_buckets": num_buckets,
+            "table": table, "bucketed_dir": d,
+        })
 
     def read_bucketed(self, name: str) -> DataFrame:
         """Read a bucketed index through the session catalog (keeps the
-        bucket-distribution metadata Catalyst needs to elide shuffles)."""
-        return self.spark.table(self._table_name(name))
+        bucket-distribution metadata Catalyst needs to elide shuffles).
+        Only the snapshot ``write_bucketed`` committed is bucketed: once a
+        later write (append, merge, compaction) has replaced or extended
+        it, this raises ValueError — ``read_index`` still reads the index,
+        and a new ``write_bucketed`` buckets it again."""
+        meta = self._read_meta(name)
+        if txn.latest(self.path(name))[1] != [meta.get("bucketed_dir")]:
+            raise ValueError(
+                f"index {name!r} holds no bucketed snapshot: it was never "
+                "written by write_bucketed, or a later write replaced it"
+            )
+        return self.spark.table(meta["table"])
 
     def _table_name(self, name: str) -> str:
-        import re as _re
-
-        return "esidx_" + _re.sub(r"[^A-Za-z0-9_]", "_", name)
+        return "esidx_" + re.sub(r"[^A-Za-z0-9_]", "_", name)
 
 
 def ccs_read(

@@ -47,12 +47,24 @@ def pushed_filters(plan: str) -> list[str]:
     return [p.strip() for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if p.strip()]
 
 
+def read_schemas(plan: str) -> list[str]:
+    """Every scan's `ReadSchema: ...` payload, in plan order."""
+    return re.findall(r"ReadSchema: (\S+)", plan)
+
+
 def read_schema_columns(plan: str) -> set[str]:
     """Column names the (first) scan actually reads — column-pruning probe."""
-    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
+    m = re.match(r"struct<([^>]*)>", (read_schemas(plan) or [""])[0])
     if not m:
         return set()
     return {c.split(":")[0].strip() for c in m.group(1).split(",") if c.strip()}
+
+
+def codegen_stages(text: str) -> int:
+    """How many whole-stage-codegen subtrees `explain("codegen")` text
+    reports (its `Found N WholeStageCodegen subtrees` line); 0 if none."""
+    m = re.search(r"Found (\d+) WholeStageCodegen", text)
+    return int(m.group(1)) if m else 0
 
 
 def complex_output_cols(schema) -> list[str]:

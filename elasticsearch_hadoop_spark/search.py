@@ -22,7 +22,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from elasticsearch_hadoop_spark.functions import sql
-from elasticsearch_hadoop_spark.plans import count_nodes, join_strategies, pushed_filters
+from elasticsearch_hadoop_spark.plans import (
+    codegen_stages,
+    count_nodes,
+    join_strategies,
+    pushed_filters,
+    read_schemas,
+)
 from elasticsearch_hadoop_spark.functions.text import (
     TOKEN_SPLIT_REGEX,
     any_term_sql,
@@ -1184,15 +1190,14 @@ def profile(df: DataFrame, execute: bool = True) -> dict:
         qe.executedPlan().execute().count()
     explain = df._sc._jvm.PythonSQLUtils.explainString
     physical = explain(qe, "formatted")
-    cg = re.search(r"Found (\d+) WholeStageCodegen", explain(qe, "codegen"))
     return {
         "parsed": qe.analyzed().toString(),
         "optimized": qe.optimizedPlan().toString(),
         "physical": physical,
         "pushed_filters": pushed_filters(physical),
-        "read_schemas": re.findall(r"ReadSchema: (\S+)", physical),
+        "read_schemas": read_schemas(physical),
         "join_strategies": join_strategies(physical),
-        "codegen_stages": int(cg.group(1)) if cg else 0,
+        "codegen_stages": codegen_stages(explain(qe, "codegen")),
         "exchanges": count_nodes(physical, "Exchange", "BroadcastExchange", "ShuffleExchange"),
     }
 

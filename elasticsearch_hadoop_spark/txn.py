@@ -13,9 +13,9 @@ and no concurrent write silently vanishes:
   mutated) that make up the snapshot, plus the snapshot's schema, which
   readers pass to Spark instead of inferring it from parquet footers, and
   its total row count ``rows``, which answers ``_count`` without a scan.
-  ``rows`` is null where no committer knew it (data adopted from an
-  earlier layout, a manifest an earlier version wrote, or an append on
-  top of either); the next replace commit records it again.
+  The log is the only index layout: an index exists once it holds a
+  committed version, and nothing outside ``_txn``, ``_data`` and
+  ``_stream`` is ever read.
 - Committing version N+1 is ``open(v{N+1}.json, O_CREAT|O_EXCL)`` — an
   atomic claim on POSIX filesystems (and on object stores via
   put-if-absent).  Exactly one concurrent writer wins; losers re-read the
@@ -25,7 +25,10 @@ and no concurrent write silently vanishes:
 - REPLACE commits (merge/upsert/delete-by-query rewrites) are
   read-modify-write: a lost race means the snapshot the rewrite was
   derived from is stale, so the caller's ``recompute`` hook re-runs the
-  derivation against the new snapshot (the MERGE INTO retry loop).
+  derivation against the new snapshot (the MERGE INTO retry loop).  A
+  derivation that fails after the log moved past its snapshot lost the
+  race too (the winner may have deleted the files it was reading), and
+  re-runs the same way.
 
 Readers resolve latest() and load exactly the manifest's directories —
 a reader never sees a half-commit, because data directories are complete
@@ -83,13 +86,10 @@ def init_log(index_path: str) -> None:
 
 
 def has_commit(index_path: str) -> bool:
-    """True once the log holds a committed version, or for a directory an
-    earlier version wrote outside any log (adopt brings it under one).  An
-    initialized log without a version — a first write that died before its
-    claim — is no index yet."""
-    if os.path.isdir(_txn_path(index_path)):
-        return bool(_versions(index_path))
-    return os.path.isdir(index_path)
+    """True once the log holds a committed version: the one definition of
+    "an index exists".  An initialized log without a version — a first
+    write that died before its claim — is no index yet."""
+    return bool(_versions(index_path))
 
 
 def discard_empty(index_path: str) -> None:
@@ -103,43 +103,6 @@ def discard_empty(index_path: str) -> None:
             return
 
 
-def adopt(index_path: str, schema: dict | None = None) -> bool:
-    """Bring an index directory under the log, ADOPTING the plain data an
-    earlier version wrote there (parquet in the index directory, which it
-    swapped in by rename): the entries move into a uuid data dir that an
-    append commit publishes with ``schema`` (that layout's ``_meta``
-    record), so they stay readable instead of vanishing behind an empty
-    manifest.  A no-op on a fresh or missing directory.
-
-    Runs on every write, so stray entries in the root of an index already
-    under the log (a crashed adoption) are swept in the same way.  Races
-    are survivable: the adopted dir lands through the append retry, and
-    entries a concurrent adopter moved first are skipped (its commit
-    carries them).  A crash between the renames and the commit leaves an
-    uncommitted uuid dir that vacuum's window keeps for inspection."""
-    entries = [
-        n
-        for n in (os.listdir(index_path) if os.path.isdir(index_path) else [])
-        if n not in (_TXN_DIR, _DATA_DIR, _STREAM_DIR) and not n.startswith(".")
-    ]
-    init_log(index_path)
-    if not entries:
-        return False
-    d = new_data_dir(index_path)
-    moved = 0
-    for n in entries:
-        try:
-            os.rename(os.path.join(index_path, n), os.path.join(d, n))
-            moved += 1
-        except FileNotFoundError:
-            continue  # a concurrent adopter moved it; their commit carries it
-    if not moved:
-        shutil.rmtree(d, ignore_errors=True)
-        return False
-    commit_append(index_path, d, schema=schema)
-    return True
-
-
 def latest(index_path: str) -> tuple[int, list[str]]:
     """(version, data dirs) of the newest committed manifest; (0, []) for a
     fresh log."""
@@ -150,7 +113,7 @@ def _versions(index_path: str) -> list[int]:
     """The committed versions the log holds, ascending."""
     try:
         names = os.listdir(_txn_path(index_path))
-    except FileNotFoundError:
+    except (FileNotFoundError, NotADirectoryError):  # no log, or no index dir
         return []
     return sorted(int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json"))
 
@@ -171,9 +134,9 @@ def _latest_body(index_path: str) -> tuple[int, dict]:
 
 def snapshot(
     index_path: str, version: int | None = None
-) -> tuple[int, list[str], dict | None, int | None]:
+) -> tuple[int, list[str], dict | None, int]:
     """(version, data dirs, recorded schema, recorded row count) of
-    committed ``version``, by default the newest; (0, [], None, None) for a
+    committed ``version``, by default the newest; (0, [], None, 0) for a
     fresh log.  The schema is the Spark StructType JSON the committer
     recorded in the manifest body, so dirs, schema and count always come
     from one snapshot.  A version file appears atomically with its full
@@ -185,7 +148,7 @@ def snapshot(
     if version is None:
         version, body = _latest_body(index_path)
         if not version:
-            return 0, [], None, None
+            return 0, [], None, 0
     else:
         body = manifest_body(index_path, version)
     dirs = [os.path.join(index_path, _DATA_DIR, d) for d in body["dirs"]]
@@ -212,24 +175,17 @@ def has_replace_commit(index_path: str, version: int | None = None) -> bool:
     """True if a commit up to ``version`` (default the newest) was a replace
     commit (overwrite, merge rewrite, compaction) — the condition under
     which a file stream over the data pool would deliver duplicates.  Each
-    manifest carries the answer as a running ``replaced`` flag, so this
-    reads one manifest however long the log was before pruning; a log an
-    earlier version wrote, without the flag, is scanned.  Raises KeyError
-    for an uncommitted or pruned explicit version."""
+    manifest carries the answer as a running ``replaced`` flag (try_commit
+    writes it), so this reads one manifest however long the log was before
+    pruning.  Raises KeyError for an uncommitted or pruned explicit
+    version."""
     if version is None:
         version, body = _latest_body(index_path)
         if not version:
             return False
     else:
         body = manifest_body(index_path, version)
-    if "replaced" in body:
-        return body["replaced"]
-    # v1 "replace" is just index creation — nothing is replaced
-    return any(
-        manifest_body(index_path, v).get("replace")
-        for v in _versions(index_path)
-        if 1 < v <= version
-    )
+    return body["replaced"]
 
 
 def manifest_body(index_path: str, version: int) -> dict:
@@ -410,29 +366,28 @@ def enable_streaming(index_path: str) -> str:
 def commit_append(
     index_path: str,
     data_dir: str,
-    max_retries: int = 500,
+    *,
+    rows: int,
     schema: dict | None = None,
     partition_cols=(),
-    rows: int | None = None,
+    max_retries: int = 500,
 ) -> int:
     """Publish ``data_dir``, which holds ``rows`` rows, as an append.  Lost
     races only re-read the manifest and re-claim — the data is already on
     disk, nothing recomputes.  Each attempt records the union of the
     winner's schema and ``schema`` (merge_schema_json), so concurrent
     appends of different new fields all stay visible, and the winner's
-    row count plus ``rows`` (none when either is unknown).  Jittered
-    backoff keeps a heavily-contended log fair (without it a loser can
-    starve: every retry pays a listdir while winners immediately contend
-    again).  Returns the committed version."""
+    row count plus ``rows``.  Jittered backoff keeps a heavily-contended
+    log fair (without it a loser can starve: every retry pays a listdir
+    while winners immediately contend again).  Returns the committed
+    version."""
     import random
 
     for attempt in range(max_retries):
         version, dirs, recorded, base = snapshot(index_path)
-        if not version:
-            base = 0  # a fresh log holds no rows
         meta = {
             "schema": merge_schema_json(recorded, schema, partition_cols),
-            "rows": None if base is None or rows is None else base + rows,
+            "rows": base + rows,
         }
         if try_commit(index_path, version + 1, dirs + [data_dir], meta=meta):
             return version + 1
@@ -442,8 +397,8 @@ def commit_append(
 
 def commit_replace(
     index_path: str,
-    base_version: int,
-    data_dir: str | None,
+    base_version: int | None = None,
+    data_dir: str | None = None,
     recompute=None,
     max_retries: int = 10,
     schema: dict | None = None,
@@ -457,26 +412,36 @@ def commit_replace(
     new_snapshot_schema, new_snapshot_rows) -> (new_data_dir, new_schema,
     new_rows)`` re-runs the caller's read-modify-write against the
     winner's snapshot (the optimistic MERGE INTO loop).  Without a
-    recompute hook a conflict is an error."""
-    version = base_version
+    recompute hook a conflict is an error.  With no ``base_version`` the
+    first derivation runs here too: ``recompute`` on the latest snapshot.
+
+    A ``recompute`` that raises after the log moved past the snapshot it
+    read lost the race as well (a winner may have deleted the files it
+    was reading, drop_superseded): it re-runs on the new snapshot, within
+    the same ``max_retries``.  One that raises on a snapshot that is still
+    the latest fails the commit with its own error."""
+    version, error = base_version, None
     for _ in range(max_retries):
-        dirs = [data_dir] if data_dir else []
+        if version is None:  # derive against the latest snapshot
+            version, dirs, recorded, recorded_rows = snapshot(index_path)
+            try:
+                data_dir, schema, rows = recompute(dirs, recorded, recorded_rows)
+            except Exception as ex:
+                if latest(index_path)[0] == version:
+                    raise
+                version, error = None, ex
+                continue
         meta = {"replace": True, "schema": schema, "rows": rows}
-        if try_commit(index_path, version + 1, dirs, meta=meta):
+        if try_commit(index_path, version + 1, [data_dir] if data_dir else [], meta=meta):
             return version + 1
         if recompute is None:
             raise CommitConflictError(
                 f"replace of {index_path} based on v{version} lost the race"
             )
-        version, dirs, recorded, recorded_rows = snapshot(index_path)
-        stale = data_dir
-        try:
-            data_dir, schema, rows = recompute(dirs, recorded, recorded_rows)
-        finally:
-            # never committed: drop it even when recompute raises
-            if stale:
-                shutil.rmtree(stale, ignore_errors=True)
-    raise CommitConflictError(f"replace of {index_path} lost {max_retries} races")
+        if data_dir:
+            shutil.rmtree(data_dir, ignore_errors=True)  # never committed
+        version = None
+    raise CommitConflictError(f"replace of {index_path} lost {max_retries} races") from error
 
 
 def drop_superseded(index_path: str, version: int, dirs=()) -> None:

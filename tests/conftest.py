@@ -35,6 +35,30 @@ def count_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def bounded(fn, seconds=180):
+    """Run ``fn`` in a daemon thread and return its result; fail (instead
+    of stalling the suite) if it has not returned after ``seconds``.  No
+    timeout plugin bounds a test, so every call that commits or waits on
+    an Observation goes through this."""
+    import threading
+
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as ex:  # noqa: BLE001 — re-raised below
+            out["error"] = ex
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(seconds)
+    assert not th.is_alive(), f"still running after {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out.get("value")
+
+
 def count_py4j_calls(fn):
     """Run ``fn()``; return its result and the number of Py4J commands it
     sent to the JVM.  Commands that release Python-collected JVM objects

@@ -18,6 +18,7 @@ from elasticsearch_hadoop_spark.catalog import (
     IndexExistsError,
     dedupe_last,
 )
+from tests.conftest import bounded
 
 
 @pytest.fixture()
@@ -1494,28 +1495,6 @@ def _recorded(spark, cat, name):
     return n
 
 
-def _bounded(fn, seconds=180):
-    """Run ``fn`` in a daemon thread and return its result; fail (instead
-    of stalling the suite) if it has not returned after ``seconds``."""
-    import threading
-
-    out = {}
-
-    def run():
-        try:
-            out["value"] = fn()
-        except BaseException as ex:  # noqa: BLE001 — re-raised below
-            out["error"] = ex
-
-    th = threading.Thread(target=run, daemon=True)
-    th.start()
-    th.join(seconds)
-    assert not th.is_alive(), f"still running after {seconds} s"
-    if "error" in out:
-        raise out["error"]
-    return out.get("value")
-
-
 def test_recorded_count_matches_scan_count(spark, sf_dir, tmp_path):
     # the recorded count must agree with the scan count across overwrite,
     # blind append, and merge shapes, and a filtered alias must count by
@@ -1599,43 +1578,19 @@ def test_count_index_reads_no_file_footer(spark, cat):
     assert (stats["many"]["doc_count"], jobs) == (300, 0)
 
 
-def test_manifest_without_rows_counts_by_scan_until_next_replace(spark, cat):
-    """A manifest that records no count (an earlier version's) makes
-    count_index scan; delete_by_query counts the base it rewrites, and its
-    commit records the count again."""
-    import json
-
-    from tests.conftest import count_jobs
-
-    cat.write_index(spark.range(6).withColumnRenamed("id", "k"), "t", id_col="k")
-    path = cat.path("t")
-    version = txn.latest(path)[0]
-    body = txn.manifest_body(path, version)
-    del body["rows"]
-    with open(txn._version_file(path, version), "w") as fh:
-        json.dump(body, fh)
-    n, jobs = count_jobs(spark, lambda: cat.count_index("t"))
-    assert n == 6 and jobs > 0
-    cat.write_index(spark.range(6, 8).withColumnRenamed("id", "k"), "t")
-    assert txn.snapshot(path)[3] is None  # an append on an unknown base
-    assert cat.count_index("t") == 8
-    assert cat.delete_by_query("t", {"range": {"k": {"lt": 2}}}) == 2
-    assert _recorded(spark, cat, "t") == 6
-
-
 def test_delete_by_query_match_all_returns(spark, cat):
     """match_all compiles to a constant-true predicate, so the kept-rows
     filter is constant-false and the optimizer prunes everything below
     it; the call must still return its count."""
     cat.write_index(spark.range(5).withColumnRenamed("id", "k"), "t", id_col="k")
-    assert _bounded(lambda: cat.delete_by_query("t", {"match_all": {}})) == 5
+    assert bounded(lambda: cat.delete_by_query("t", {"match_all": {}})) == 5
     assert _recorded(spark, cat, "t") == cat.read_index("t").count() == 0
 
 
 @pytest.mark.parametrize("query, matched", [({"match_all": {}}, 5), ({"match_none": {}}, 0)])
 def test_update_by_query_constant_predicates_return(spark, cat, query, matched):
     cat.write_index(spark.range(5).withColumnRenamed("id", "k"), "t", id_col="k")
-    assert _bounded(lambda: cat.update_by_query("t", query, {"k": F.col("k") + 10})) == matched
+    assert bounded(lambda: cat.update_by_query("t", query, {"k": F.col("k") + 10})) == matched
     assert _recorded(spark, cat, "t") == 5
 
 
@@ -1647,7 +1602,7 @@ def test_empty_write_records_zero(spark, cat, empty, mode):
     cat.write_index(spark.range(4), "t")
     df = spark.range(10)
     df = df.filter(F.lit(False)) if empty == "filter_false" else df.limit(0)
-    _bounded(lambda: cat.write_index(df, "t", mode=mode))
+    bounded(lambda: cat.write_index(df, "t", mode=mode))
     expect = 0 if mode == "overwrite" else 4
     assert txn.snapshot(cat.path("t"))[3] == expect
     assert cat.read_index("t").count() == expect
@@ -1678,7 +1633,7 @@ def test_first_write_update_is_missing(spark, cat, scripted, zorder):
     kw = {"zorder_by": ["x"], "zorder_bounds": {"x": (0.0, 4.0)}} if zorder else {}
     on_match = {"x": F.col("_new_x")} if scripted else None
     with pytest.raises(DocumentMissingError, match=r"\(2 total\)"):
-        _bounded(
+        bounded(
             lambda: cat.write_index(
                 df, "t", operation="update", id_col="k", on_match=on_match, **kw
             )

@@ -589,9 +589,10 @@ def test_from_metadata_columns(spark, tmp_path):
         esql("FROM logs-a METADATA _shard", catalog=cat)
 
 
-def test_search_profile_veneer(spark):
+def test_search_profile_veneer(spark, tmp_path):
     from pyspark.sql import functions as F
 
+    from elasticsearch_hadoop_spark.plans import read_schema_columns, read_schemas
     from elasticsearch_hadoop_spark.search import profile
 
     df = spark.range(100).withColumn("v", F.col("id") * 2)
@@ -601,6 +602,13 @@ def test_search_profile_veneer(spark):
     assert p["codegen_stages"] >= 1
     assert "physical" in p and "optimized" in p
     assert p["exchanges"] >= 1  # the broadcast exchange
+    assert p["read_schemas"] == []  # range() scans no file
+    # a pruned parquet scan reports the columns it reads
+    path = str(tmp_path / "t")
+    df.withColumn("w", F.lit("x")).write.parquet(path)
+    p = profile(spark.read.parquet(path).select("id", "v").filter(F.col("v") > 4))
+    assert p["read_schemas"] == read_schemas(p["physical"]) == ["struct<id:bigint,v:bigint>"]
+    assert read_schema_columns(p["physical"]) == {"id", "v"}
 
 
 def test_arg_swapped_date_and_locate_functions(spark):

@@ -11,7 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_hadoop_spark import txn
-from elasticsearch_hadoop_spark.catalog import Catalog
+from elasticsearch_hadoop_spark.catalog import VALID_OPERATIONS, Catalog
+from tests.conftest import bounded
 
 
 @pytest.fixture()
@@ -41,8 +42,8 @@ def test_append_retries_manifest_union(tmp_path):
     txn.init_log(p)
     d1, d2 = txn.new_data_dir(p), txn.new_data_dir(p)
     # simulate a writer that claimed v1 between d2's latest() and claim:
-    assert txn.commit_append(p, d1) == 1
-    assert txn.commit_append(p, d2) == 2
+    assert txn.commit_append(p, d1, rows=0) == 1
+    assert txn.commit_append(p, d2, rows=0) == 2
     _, dirs = txn.latest(p)
     assert sorted(map(str, dirs)) == sorted([d1, d2])
 
@@ -51,7 +52,7 @@ def test_replace_conflict_without_recompute_raises(tmp_path):
     p = str(tmp_path / "t")
     txn.init_log(p)
     base, _ = txn.latest(p)
-    txn.commit_append(p, txn.new_data_dir(p))  # someone else moved the log
+    txn.commit_append(p, txn.new_data_dir(p), rows=0)  # someone else moved the log
     with pytest.raises(txn.CommitConflictError):
         txn.commit_replace(p, base, txn.new_data_dir(p), recompute=None)
 
@@ -60,7 +61,7 @@ def test_replace_recompute_sees_winner_snapshot(tmp_path):
     p = str(tmp_path / "t")
     txn.init_log(p)
     winner = txn.new_data_dir(p)
-    txn.commit_append(p, winner)  # v1
+    txn.commit_append(p, winner, rows=0)  # v1
     seen = []
 
     def recompute(dirs, schema, rows):
@@ -78,7 +79,7 @@ def test_vacuum_sweeps_orphans_respecting_retention(tmp_path):
     txn.init_log(p)
     live = txn.new_data_dir(p)
     orphan = txn.new_data_dir(p)
-    txn.commit_append(p, live)
+    txn.commit_append(p, live, rows=0)
     # default retention window protects young dirs — an in-flight writer's
     # not-yet-committed data dir must never be swept
     assert txn.vacuum(p) == []
@@ -90,26 +91,6 @@ def test_vacuum_sweeps_orphans_respecting_retention(tmp_path):
     assert os.path.isdir(live)
 
 
-def test_adopt_preserves_plain_data(spark, tmp_path):
-    """An index directory in the layout an earlier version wrote (parquet
-    files in the index directory, the schema in ``_meta["schema"]``) is
-    adopted as a committed snapshot on the next write, not hidden behind an
-    empty manifest (silent data loss), and its schema moves into the
-    manifest."""
-    root = str(tmp_path / "idx")
-    cat = Catalog(spark, root)
-    old = _df(spark, 0, 5, "old")
-    old.write.parquet(cat.path("t"))
-    cat._write_meta("t", {"schema": old.schema.jsonValue()})
-    cat.write_index(_df(spark, 5, 8, "new"), "t")  # append under the log
-    got = {(r["k"], r["tag"]) for r in cat.read_index("t").collect()}
-    assert got == {(i, "old") for i in range(5)} | {(i, "new") for i in range(5, 8)}
-    assert "schema" not in cat._read_meta("t")
-    assert txn.latest(cat.path("t"))[0] == 2  # the adoption, then the append
-    tcat = Catalog(spark, root, transactional=True)
-    assert {(r["k"], r["tag"]) for r in tcat.read_index("t").collect()} == got
-
-
 def test_manifest_files_never_half_written(tmp_path):
     """latest() during a slow commit must never see an empty/partial
     manifest: the body is fully written before the link-claim publishes
@@ -119,7 +100,7 @@ def test_manifest_files_never_half_written(tmp_path):
     p = str(tmp_path / "t")
     txn.init_log(p)
     d = txn.new_data_dir(p)
-    txn.commit_append(p, d)
+    txn.commit_append(p, d, rows=0)
     tdir = os.path.join(p, "_txn")
     for n in os.listdir(tdir):
         body = open(os.path.join(tdir, n)).read()
@@ -301,7 +282,7 @@ def test_vacuum_ages_from_supersession_not_creation(tmp_path):
     p = str(tmp_path / "t")
     txn.init_log(p)
     d1 = txn.new_data_dir(p)
-    txn.commit_append(p, d1)  # v1
+    txn.commit_append(p, d1, rows=0)  # v1
     # make the data dir and the v1 manifest look hours old
     old = _t.time() - 7200
     os.utime(d1, (old, old))
@@ -316,58 +297,6 @@ def test_vacuum_ages_from_supersession_not_creation(tmp_path):
 
 
 # ------------------------------------------------- round-4 ADVICE hardening
-
-
-def test_adopt_survives_lost_v1_race(tmp_path):
-    """ADVICE r3: a writer that claims v1 while adoption is mid-move must
-    not orphan the plain data — the adopted dir lands via append-union."""
-    p = str(tmp_path / "t")
-    import os
-
-    os.makedirs(p)
-    with open(os.path.join(p, "old.parquet"), "w") as fh:
-        fh.write("plain-era bytes")
-    # competitor initializes the log and claims v1 first
-    txn.init_log(p)
-    txn.commit_append(p, txn.new_data_dir(p))
-    assert txn.latest(p)[0] == 1
-    # adoption must still publish the plain file, at v2
-    assert txn.adopt(p) is True
-    version, dirs = txn.latest(p)
-    assert version == 2
-    published = [
-        f for d in dirs for _, _, fs in os.walk(d) for f in fs if f == "old.parquet"
-    ]
-    assert published, "plain-era file not reachable from the latest manifest"
-
-
-def test_concurrent_adopts_lose_nothing(tmp_path):
-    """Two threads adopting the same plain directory: every plain file must
-    be referenced by the final manifest exactly once."""
-    import os
-
-    p = str(tmp_path / "t")
-    os.makedirs(p)
-    for i in range(20):
-        with open(os.path.join(p, f"f{i:02d}.parquet"), "w") as fh:
-            fh.write(f"bytes-{i}")
-    errs = []
-
-    def run():
-        try:
-            txn.adopt(p)
-        except Exception as e:  # noqa: BLE001
-            errs.append(e)
-
-    ts = [threading.Thread(target=run) for _ in range(2)]
-    [t.start() for t in ts]
-    [t.join() for t in ts]
-    assert not errs, errs
-    _, dirs = txn.latest(p)
-    seen = sorted(
-        f for d in dirs for _, _, fs in os.walk(d) for f in fs if f.endswith(".parquet")
-    )
-    assert seen == [f"f{i:02d}.parquet" for i in range(20)]
 
 
 def test_commit_fails_loudly_on_swept_dirs(tmp_path):
@@ -385,7 +314,7 @@ def test_commit_fails_loudly_on_swept_dirs(tmp_path):
 
 def test_stream_sees_only_committed_dirs(spark, cat):
     """ADVICE r3: the streaming read must not deliver rows from a
-    never-committed _data dir (crashed writer / adoption loser)."""
+    never-committed _data dir (crashed writer / losing replace writer)."""
     import os
 
     cat.write_index(_df(spark, 0, 50, "a"), "ev")
@@ -470,15 +399,15 @@ def test_merge_on_empty_committed_log(spark, cat):
         _df(spark, 0, 10, "x"), "fresh", operation="upsert", id_col="k"
     )
     assert cat.read_index("fresh").count() == 10
-    from elasticsearch_hadoop_spark.catalog import DocumentMissingError
+    from elasticsearch_hadoop_spark.catalog import DocumentMissingError, IndexNotFoundError
 
     txn.init_log(cat.path("fresh2"))
     with pytest.raises(DocumentMissingError):
         cat.write_index(
             _df(spark, 0, 5, "x"), "fresh2", operation="update", id_col="k"
         )
-    txn.init_log(cat.path("fresh3"))
-    with pytest.raises(ValueError, match="no committed data"):
+    txn.init_log(cat.path("fresh3"))  # a log without a version is no index
+    with pytest.raises(IndexNotFoundError, match="no such index"):
         cat.delete_by_query("fresh3", {"term": {"tag": "x"}})
 
 
@@ -492,14 +421,14 @@ def test_replace_commit_does_not_publish_to_stream_farm(tmp_path):
     d1 = txn.new_data_dir(p)
     with open(os.path.join(d1, "a.parquet"), "w") as fh:
         fh.write("x")
-    txn.commit_append(p, d1)
+    txn.commit_append(p, d1, rows=0)
     txn.enable_streaming(p)
     assert os.listdir(txn.stream_root(p)) == [os.path.basename(d1)]
     # append publishes
     d2 = txn.new_data_dir(p)
     with open(os.path.join(d2, "b.parquet"), "w") as fh:
         fh.write("y")
-    txn.commit_append(p, d2)
+    txn.commit_append(p, d2, rows=0)
     assert sorted(os.listdir(txn.stream_root(p))) == sorted(
         [os.path.basename(d1), os.path.basename(d2)]
     )
@@ -522,7 +451,7 @@ def test_vacuum_sweeps_orphaned_stream_mirrors(tmp_path):
     d1 = txn.new_data_dir(p)
     with open(os.path.join(d1, "a.parquet"), "w") as fh:
         fh.write("x")
-    txn.commit_append(p, d1)
+    txn.commit_append(p, d1, rows=0)
     txn.enable_streaming(p)
     name = os.path.basename(d1)
     # simulate the crashed half-sweep: _data gone, mirror left behind
@@ -551,7 +480,7 @@ def test_vacuum_sweeps_aged_publisher_tmp_farms(tmp_path):
     d1 = txn.new_data_dir(p)
     with open(os.path.join(d1, "a.parquet"), "w") as fh:
         fh.write("x")
-    txn.commit_append(p, d1)
+    txn.commit_append(p, d1, rows=0)
     old_farm = os.path.join(txn.stream_root(p), ".tmp-deadbeef-1234")
     os.makedirs(os.path.join(old_farm, "sub"))
     with open(os.path.join(old_farm, "sub", "a.parquet"), "w") as fh:
@@ -612,7 +541,8 @@ def test_crash_leaves_old_or_new_snapshot(spark, tmp_path, monkeypatch, step):
         raise _Crash(step)
 
     if step == "after_data_write":
-        monkeypatch.setattr(txn, "commit_replace", crash)
+        # commit_replace writes the data dir, then claims: die at the claim
+        monkeypatch.setattr(txn, "try_commit", crash)
     elif step == "after_manifest_claim":
         claim = txn.try_commit
 
@@ -777,9 +707,9 @@ def test_pruned_log_stays_one_manifest_over_many_commits(tmp_path, monkeypatch):
     txn.init_log(p)
     for i in range(300):
         if i == 150:
-            v = txn.commit_replace(p, txn.latest(p)[0], txn.new_data_dir(p))
+            v = txn.commit_replace(p, txn.latest(p)[0], txn.new_data_dir(p), rows=0)
         else:
-            v = txn.commit_append(p, txn.new_data_dir(p))
+            v = txn.commit_append(p, txn.new_data_dir(p), rows=0)
         txn.drop_superseded(p, v)
         assert os.listdir(os.path.join(p, "_txn")) == [f"v{v:012d}.json"]
         assert txn.has_replace_commit(p) == (i >= 150)
@@ -795,7 +725,7 @@ def test_claim_in_a_pruned_slot_is_withdrawn(tmp_path):
     p = str(tmp_path / "t")
     txn.init_log(p)
     for _ in range(3):
-        txn.commit_append(p, txn.new_data_dir(p))
+        txn.commit_append(p, txn.new_data_dir(p), rows=0)
     old = os.path.getmtime(txn._version_file(p, 3)) - 2 * txn.LOG_RETENTION_SECONDS
     for v in (1, 2, 3):
         os.utime(txn._version_file(p, v), (old, old))
@@ -806,7 +736,7 @@ def test_claim_in_a_pruned_slot_is_withdrawn(tmp_path):
     assert not txn.try_commit(p, 2, [txn.new_data_dir(p)])
     assert not txn.try_commit(p, 2, [txn.new_data_dir(p)], meta={"replace": True})
     assert txn._versions(p) == [3]
-    assert txn.commit_append(p, txn.new_data_dir(p)) == 4
+    assert txn.commit_append(p, txn.new_data_dir(p), rows=0) == 4
 
 
 def test_replace_drops_its_dir_when_recompute_raises(tmp_path):
@@ -816,7 +746,7 @@ def test_replace_drops_its_dir_when_recompute_raises(tmp_path):
 
     p = str(tmp_path / "t")
     txn.init_log(p)
-    txn.commit_append(p, txn.new_data_dir(p))  # the winner's v1
+    txn.commit_append(p, txn.new_data_dir(p), rows=0)  # the winner's v1
     stale = txn.new_data_dir(p)
 
     def recompute(dirs, schema, rows):
@@ -852,3 +782,231 @@ def test_rollover_resumes_after_dying_before_the_alias_step(spark, tmp_path, mon
     assert cat.rollover("g", max_docs=1)["new_index"] == "g-000002"
     assert cat.resolve_pattern("g") == ["g-000001", "g-000002"]
     assert cat.count_index("g") == 3
+
+
+def test_replace_rederives_when_derivation_fails_after_the_log_moved(tmp_path):
+    """A derivation that raises after another writer committed lost the
+    race: commit_replace re-runs it on the new snapshot instead of
+    failing, and starts from the latest snapshot when given no base."""
+    p = str(tmp_path / "t")
+    txn.init_log(p)
+    txn.commit_append(p, txn.new_data_dir(p), rows=1)  # v1
+    seen = []
+
+    def recompute(dirs, schema, rows):
+        seen.append((len(dirs), rows))
+        if len(seen) == 1:
+            txn.commit_append(p, txn.new_data_dir(p), rows=1)  # a winner's v2
+            raise _Crash("the snapshot this derivation read is gone")
+        return txn.new_data_dir(p), schema, rows
+
+    assert bounded(lambda: txn.commit_replace(p, recompute=recompute)) == 3
+    assert seen == [(1, 1), (2, 2)]
+    assert txn.snapshot(p)[3] == 2
+
+
+def test_rewrite_that_loses_to_a_dropping_winner_rederives(spark, tmp_path):
+    """In a default catalog the winner of a commit race deletes the
+    snapshot it superseded.  A rewrite whose job still reads that snapshot
+    must re-derive against the winner, not fail.  Single-threaded: the
+    build runs the competing upsert on its first call only, then returns
+    its now-stale frame."""
+    root = str(tmp_path / "idx")
+    cat = Catalog(spark, root)
+    bounded(lambda: cat.write_index(_df(spark, 0, 4, "base"), "t", id_col="k"))
+    calls = []
+
+    def build(existing):
+        calls.append(existing)
+        if len(calls) == 1:
+            cat.write_index(_df(spark, 10, 13, "winner"), "t", operation="upsert", id_col="k")
+        mine = _df(spark, 20, 22, "mine").withColumn("_id", F.col("k").cast("string"))
+        return existing.unionByName(mine)
+
+    bounded(lambda: cat._commit_build("t", [], build))
+    assert len(calls) == 2
+    assert _rows(spark, root) == (
+        {(i, "base") for i in range(4)}
+        | {(i, "winner") for i in range(10, 13)}
+        | {(i, "mine") for i in range(20, 22)}
+    )
+
+
+# ------------------------------------------------------------- one layout
+
+
+def _seeded(spark, cat, name="t", **kw):
+    cat.write_index(_df(spark, 0, 6, "a"), name, **kw)
+    return cat
+
+
+def _write_op(op):
+    ids = {"index": (4, 9), "create": (6, 9), "update": (0, 3), "upsert": (4, 9), "delete": (0, 2)}
+
+    def run(spark, cat, tmp_path):
+        _seeded(spark, cat, id_col="k").write_index(
+            _df(spark, *ids[op], "b"), "t", operation=op, id_col="k"
+        )
+        return ["t"]
+
+    return run
+
+
+def _mode(mode):
+    def run(spark, cat, tmp_path):
+        _seeded(spark, cat).write_index(_df(spark, 6, 9, "b"), "t", mode=mode)
+        return ["t"]
+
+    return run
+
+
+def _bucketed(spark, cat, tmp_path):
+    _seeded(spark, cat, name="layout_b", id_col="k")
+    cat.write_bucketed(_df(spark, 0, 9, "b"), "layout_b", ["k"], 2, sort_cols=["k"])
+    return ["layout_b"]
+
+
+def _compact(spark, cat, tmp_path):
+    _seeded(spark, cat).write_index(_df(spark, 6, 9, "b"), "t")
+    cat.compact_index("t", target_files=1)
+    return ["t"]
+
+
+def _delete_by_query(spark, cat, tmp_path):
+    _seeded(spark, cat).delete_by_query("t", {"range": {"k": {"lt": 2}}})
+    return ["t"]
+
+
+def _update_by_query(spark, cat, tmp_path):
+    _seeded(spark, cat).update_by_query("t", {"term": {"k": 1}}, {"tag": F.lit("u")})
+    return ["t"]
+
+
+def _restore(spark, cat, tmp_path):
+    repo = str(tmp_path / "repo")
+    _seeded(spark, cat).snapshot_index("t", repo, "s1")
+    cat.restore_index(repo, "s1", "t", rename_to="restored")
+    return ["restored"]
+
+
+def _clone(spark, cat, tmp_path):
+    _seeded(spark, cat).clone_index("t", "cloned")
+    return ["cloned"]
+
+
+def _resize(spark, cat, tmp_path):
+    _seeded(spark, cat).shrink_index("t", "shrunk", 1)
+    cat.split_index("shrunk", "split", 2)
+    return ["shrunk", "split"]
+
+
+def _rollover(spark, cat, tmp_path):
+    _seeded(spark, cat, name="g-000001").put_alias("g", "g-000001")
+    assert cat.rollover("g", max_docs=1)["rolled_over"]
+    return ["g-000001", "g-000002"]
+
+
+def _data_stream(spark, cat, tmp_path):
+    cat.create_data_stream("ds")
+    df = _df(spark, 0, 4, "a").withColumn("@timestamp", F.current_timestamp())
+    cat.write_data_stream(df, "ds", max_docs_per_generation=1)
+    cat.write_data_stream(df, "ds")
+    return [".ds-ds-000001", ".ds-ds-000002"]
+
+
+def _ccr_poll(spark, cat, tmp_path):
+    leader = _seeded(spark, Catalog(spark, str(tmp_path / "leader"), transactional=True), id_col="k")
+    cat.follow_index(leader, "t", "f")
+    leader.write_index(_df(spark, 3, 9, "b"), "t", operation="upsert", id_col="k")
+    cat.ccr_poll("f")
+    return ["f"]
+
+
+def _stream_append(spark, cat, tmp_path):
+    _seeded(spark, cat).read_index_stream("t")  # creates the _stream farm
+    cat.write_index(_df(spark, 6, 9, "b"), "t")
+    return ["t"]
+
+
+_WRITES = {
+    **{f"write_index_{op}": _write_op(op) for op in VALID_OPERATIONS},
+    "write_index_overwrite": _mode("overwrite"),
+    "write_index_append": _mode("append"),
+    "write_bucketed": _bucketed,
+    "compact_index": _compact,
+    "delete_by_query": _delete_by_query,
+    "update_by_query": _update_by_query,
+    "restore_index": _restore,
+    "clone_index": _clone,
+    "shrink_split": _resize,
+    "rollover": _rollover,
+    "write_data_stream": _data_stream,
+    "ccr_poll": _ccr_poll,
+    "stream_append": _stream_append,
+}
+
+
+@pytest.mark.parametrize("write", sorted(_WRITES))
+def test_every_write_leaves_one_layout(spark, tmp_path, write):
+    """After each public write API the index root holds only the log and
+    its data pool (plus the stream farm once streaming is enabled), and
+    the recorded count equals the scan count."""
+    import os
+
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    try:
+        names = bounded(lambda: _WRITES[write](spark, cat, tmp_path))
+        layout = {"_txn", "_data"} | ({"_stream"} if write == "stream_append" else set())
+        for name in names:
+            assert set(os.listdir(cat.path(name))) == layout, name
+            counted, scanned = bounded(
+                lambda: (cat.count_index(name), cat.read_index(name).count())
+            )
+            assert counted == scanned, name
+    finally:
+        spark.sql("DROP TABLE IF EXISTS esidx_layout_b")
+
+
+def test_bucketed_index_reads_like_any_other(spark, tmp_path):
+    """A bucketed index sits in the catalog like a plain one: listed,
+    read, counted from its manifest (0 jobs), part of wildcard reads and
+    _cat/indices; rewriting it re-points read_bucketed at the new
+    snapshot."""
+    from tests.conftest import count_jobs
+
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    try:
+        bounded(lambda: cat.write_index(_df(spark, 0, 5, "plain"), "plain"))
+        bounded(lambda: cat.write_bucketed(_df(spark, 10, 16, "b"), "bk", ["k"], 2, sort_cols=["k"]))
+        assert cat.list_indices() == ["bk", "plain"]
+        assert bounded(lambda: _rows(spark, cat.root, "bk")) == {(i, "b") for i in range(10, 16)}
+        assert count_jobs(spark, lambda: cat.count_index("bk")) == (6, 0)
+        assert bounded(lambda: cat.read_index("*").count()) == 11
+        assert {r["index"]: r["docs_count"] for r in cat.cat_indices()} == {"bk": 6, "plain": 5}
+        bucketed = bounded(lambda: {(r["k"], r["tag"]) for r in cat.read_bucketed("bk").collect()})
+        assert bucketed == {(i, "b") for i in range(10, 16)}
+        bounded(lambda: cat.write_bucketed(_df(spark, 20, 23, "c"), "bk", ["k"], 2))
+        assert bounded(lambda: cat.read_bucketed("bk").count()) == cat.count_index("bk") == 3
+    finally:
+        spark.sql("DROP TABLE IF EXISTS esidx_bk")
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite"])
+@pytest.mark.parametrize("transactional", [False, True])
+def test_read_bucketed_after_a_later_write_raises(spark, tmp_path, transactional, mode):
+    """Only the snapshot write_bucketed committed is bucketed: after a
+    later write read_bucketed raises a clear error instead of failing at
+    scan time (an overwrite in a default catalog deletes the bucketed
+    files), reading a superseded snapshot (a transactional catalog keeps
+    them) or missing appended rows."""
+    cat = Catalog(spark, str(tmp_path / "idx"), transactional=transactional)
+    try:
+        bounded(lambda: cat.write_bucketed(_df(spark, 0, 6, "b"), "bk", ["k"], 2))
+        bounded(lambda: cat.write_index(_df(spark, 4, 9, "w"), "bk", mode=mode))
+        with pytest.raises(ValueError, match="no bucketed snapshot"):
+            cat.read_bucketed("bk")
+        kept = set() if mode == "overwrite" else {(i, "b") for i in range(6)}
+        assert bounded(lambda: _rows(spark, cat.root, "bk")) == kept | {(i, "w") for i in range(4, 9)}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS esidx_bk")
+
