@@ -64,6 +64,9 @@ from elasticsearch_hadoop_spark import txn
 from elasticsearch_hadoop_spark.durations import parse_duration
 from elasticsearch_hadoop_spark.query_dsl import compile_query
 
+# the settings that make an index a CCR follower (follow_index)
+_CCR_KEYS = ("ccr_leader_root", "ccr_leader_index", "ccr_leader_version")
+
 _PATTERN_RE = re.compile(r"\{([A-Za-z0-9_.]+)(\|date:([^}]+))?\}")
 
 # Java SimpleDateFormat tokens used by the reference's IndexFormatter are a
@@ -129,7 +132,8 @@ class Catalog:
 
     Every write commits through the optimistic-concurrency manifest log in
     ``txn.py`` (Delta-protocol core: immutable uuid data dirs + O_EXCL
-    version-file claims), and the manifest records the index schema.
+    version-file claims), and the manifest is the index's whole metadata:
+    schema, row count and settings (``get_settings``/``put_settings``).
     Concurrent blind appends always both land (manifest-union retry, no
     data rewrite); concurrent merge/upsert/delete_by_query rewrites retry
     their read-modify-write against the winner's snapshot — ES's
@@ -177,8 +181,6 @@ class Catalog:
         breakers racing a fresh re-acquire) accepted as a documented
         tradeoff: the alternative is pid-liveness probing for a registry
         whose entries are themselves keep-alive-expiring hints."""
-        import time as _time
-
         lock = f"{self._pits_path()}.lock"
         for _ in range(500):
             try:
@@ -186,12 +188,12 @@ class Catalog:
                 break
             except FileExistsError:
                 try:
-                    if _time.time() - os.path.getmtime(lock) > 5.0:
+                    if time.time() - os.path.getmtime(lock) > 5.0:
                         os.unlink(lock)  # stale: holder died mid-operation
                         continue
                 except FileNotFoundError:
                     continue  # released (or another breaker won): retry now
-                _time.sleep(0.01)
+                time.sleep(0.01)
         else:
             raise TimeoutError(f"could not acquire PIT registry lock {lock}")
         try:
@@ -217,9 +219,6 @@ class Catalog:
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def _meta_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._meta.json")
-
     def exists(self, name: str) -> bool:
         # a directory whose first write died before committing is no index
         return txn.has_commit(self.path(name))
@@ -229,14 +228,27 @@ class Catalog:
 
     def drop_index(self, name: str) -> None:
         shutil.rmtree(self.path(name), ignore_errors=True)
-        if os.path.exists(self._meta_path(name)):
-            os.remove(self._meta_path(name))
 
-    def _read_meta(self, name: str) -> dict:
-        return _read_json(self._meta_path(name))
+    # ------------------------------------------------------------- settings
+    def get_settings(self, name: str) -> dict:
+        """ES ``GET /<index>/_settings``: the settings the index's latest
+        commit records (template pipeline and sort, ``mappings``,
+        ``created_at``, ``index_pattern``, CCR leader, ILM phase)."""
+        return txn.snapshot(self.path(self._one_index(name, "get_settings")))[4]
 
-    def _write_meta(self, name: str, meta: dict) -> None:
-        _write_json(self._meta_path(name), meta)
+    def put_settings(self, name: str, changes: dict) -> None:
+        """ES ``PUT /<index>/_settings``: merge ``changes`` (a None value
+        removes a key) into the settings of the snapshot each claim builds
+        on, as a commit of the same data retried like an append, so no
+        concurrent write or settings change is undone."""
+        path = self.path(self._one_index(name, "put_settings"))
+
+        def merge(base: dict | None) -> dict:
+            if base is None:  # dropped since it was resolved
+                raise IndexNotFoundError(f"no such index: {name!r}")
+            return txn.merge_settings(base, changes)
+
+        self._retire(path, txn.commit_append(path, None, rows=0, settings=merge))
 
     # --------------------------------------------------------------- aliases
     def _aliases_path(self) -> str:
@@ -304,13 +316,9 @@ class Catalog:
         fields from the recorded schema; none of them scans rows."""
         out: dict[str, dict] = {}
         for idx in self.resolve_pattern(name):
-            path = self.path(idx)
-            size = 0
-            for root, _dirs, files in os.walk(path):
-                size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
             out[idx] = {
                 "doc_count": self.count_index(idx),
-                "store_bytes": size,
+                "store_bytes": self._store_bytes(idx),
                 "fields": self._read_files(idx).columns,
             }
         return out
@@ -381,8 +389,8 @@ class Catalog:
         keep seeing every generation (alias union); writes via
         ``write_alias`` land in the newest.  The doc-count condition reads
         the count the write index's manifest records (count_index) — no
-        scan; age comes from index meta (creation-stamped here) with
-        dir-ctime fallback.
+        scan; age comes from the ``created_at`` setting every index's first
+        commit records.
 
         This is the time-partitioning idiom at 100 TB: generations bound
         per-index size so compaction/vacuum/Z-order work on bounded
@@ -405,8 +413,7 @@ class Catalog:
         if max_docs is not None:
             conditions["max_docs"] = docs >= max_docs
         if max_age_seconds is not None:
-            meta = self._read_meta(current)
-            created = meta.get("created_at") or os.path.getctime(self.path(current))
+            created = self.get_settings(current)["created_at"]
             # `now` makes age checks deterministic for testable ILM ticks
             ref = time.time() if now is None else now
             conditions["max_age"] = (ref - created) >= max_age_seconds
@@ -437,13 +444,13 @@ class Catalog:
         index creation touches no data nodes' segments.  Reads return 0
         rows with the recorded schema.  Index templates resolve here like
         any new-index creation (write_index parity)."""
-        txn.commit_replace(self.path(name), 0, None, schema=schema.jsonValue(), rows=0)
-        meta = {**self._template_meta(name), **self._read_meta(name)}
-        meta.update({"created_at": time.time(), "updated_at": time.time()})
-        self._write_meta(name, meta)
+        txn.commit_replace(
+            self.path(name), 0, None, schema=schema.jsonValue(), rows=0,
+            settings=self._settings_hook(name, self._template_settings(name)),
+        )
 
-    def _template_meta(self, name: str) -> dict:
-        """What a new index keeps in its ``_meta`` from the highest-priority
+    def _template_settings(self, name: str) -> dict:
+        """What a new index keeps in its settings from the highest-priority
         matching index template (composed_of merged in): its
         ``default_pipeline``, ``index_sort`` and ``mappings``."""
         tpl = self._match_template(name)
@@ -521,26 +528,24 @@ class Catalog:
         # a directory whose first write died before committing is not an
         # index yet: the retry creates it (template, mode="error")
         existed = self.exists(name)
-        prior_meta = self._read_meta(name) if existed else {}
         if existed and mode == "error":
             raise IndexExistsError(name)
         if existed and mode == "ignore":
             return
+        # index templates (ES _index_template): a NEW index resolves the
+        # highest-priority matching template at creation and records the
+        # resolved index.default_pipeline / index.sort in its first
+        # commit's settings; every later write re-reads them and applies
+        # them again — in ES, index.default_pipeline runs on EVERY indexing
+        # request to the index, not just the first batch (ADVICE r4).
+        created = None if existed else self._template_settings(name)
+        settings = txn.snapshot(self.path(name))[4] if existed else created
         if existed:
             # belt: the commit layer re-checks, but failing before the
             # ingest pipeline / sort work is the better error surface.
             # AFTER the mode=="ignore" return — SaveMode.Ignore against a
             # CCR follower is the documented no-op, not an error (r8 advice)
-            self._assert_not_follower(name, prior_meta)
-
-        # index templates (ES _index_template): a NEW index resolves the
-        # highest-priority matching template at creation and PERSISTS the
-        # resolved index.default_pipeline / index.sort into its _meta;
-        # every later write re-reads them from _meta and applies them
-        # again — in ES, index.default_pipeline runs on EVERY indexing
-        # request to the index, not just the first batch (ADVICE r4).
-        tpl_meta = {} if existed else self._template_meta(name)
-        settings = prior_meta if existed else tpl_meta
+            self._assert_not_follower(name, settings)
         pipeline_name = settings.get("default_pipeline")
         sort_field = settings.get("index_sort")
         if pipeline_name:
@@ -578,18 +583,20 @@ class Catalog:
             out = out.withColumn("_index", format_index_pattern(index_pattern))
 
         partition_cols = ["_index"] if index_pattern is not None else []
+        # compact_index and shrink/split keep the Hive layout it records
+        commit = {"created": created, "changes": {"index_pattern": index_pattern}}
 
         if id_col is None and (mode == "overwrite" or not self.exists(name)):
             # truncate-then-write parity; also the create path
             self._commit_build(
                 name, partition_cols, lambda _existing: cluster(out),
-                max_records_per_file=max_records_per_file, needs_existing=False,
+                max_records_per_file=max_records_per_file, needs_existing=False, **commit,
             )
         elif id_col is None and operation == "index":
             # plain append, no identity: blind parquet append, no read,
             # published via manifest-union retry — concurrent appends
             # both land, no data rewrite on a race.
-            self._append_files(cluster(out), name, partition_cols, max_records_per_file)
+            self._append_files(cluster(out), name, partition_cols, max_records_per_file, **commit)
         else:
             checks: list = []
 
@@ -614,20 +621,8 @@ class Catalog:
                 # failure leaves the index untouched.  checks[-1] is the
                 # latest build's closure (a lost race re-invokes build).
                 validate=(lambda: checks[-1]()) if operation == "update" else None,
+                **commit,
             )
-
-        # merge (not replace) the meta: created_at (rollover/data-stream
-        # age) and template mappings must survive later writes
-        meta = {**tpl_meta, **self._read_meta(name)}
-        meta.update(
-            {
-                "id_col": id_col,
-                "routing_col": routing_col,
-                "index_pattern": index_pattern,
-                "updated_at": time.time(),
-            }
-        )
-        self._write_meta(name, meta)
 
     def _merge(
         self,
@@ -751,17 +746,30 @@ class Catalog:
             (writer.sortBy(*sort_cols) if sort_cols else writer).saveAsTable(table, format="parquet")
         return written.get["n"]
 
-    def _assert_not_follower(self, name: str, meta: dict | None = None) -> None:
+    @staticmethod
+    def _assert_not_follower(name: str, settings: dict) -> None:
         """ES: a CCR follower index rejects every write/rewrite until
-        unfollowed.  Enforced at the commit layer so delete_by_query /
-        update_by_query / compact_index and future callers can't mutate a
-        follower (their local rewrite would silently be discarded by the
-        next ccr_poll manifest swap anyway)."""
-        meta = self._read_meta(name) if meta is None else meta
-        if "ccr_leader_root" in meta:
+        unfollowed.  Enforced at the commit layer (_settings_hook), so no
+        rewrite can mutate a follower (the next ccr_poll would discard it)."""
+        if "ccr_leader_root" in settings:
             raise ValueError(
                 f"{name!r} is a CCR follower (read-only) — unfollow_index first"
             )
+
+    def _settings_hook(self, name: str, created: dict | None = None, changes: dict | None = None):
+        """txn's ``settings`` hook for a data commit to ``name``: on the
+        snapshot the claim builds on, refuse a CCR follower and merge in
+        ``changes``; a claim that creates the index starts from ``created``
+        and the creation time (unless ``created`` carries a source's)."""
+
+        def derive(base: dict | None) -> dict:
+            if base is None:
+                base = {"created_at": time.time(), **(created or {})}
+            else:
+                self._assert_not_follower(name, base)
+            return txn.merge_settings(base, changes or {})
+
+        return derive
 
     def _commit_build(
         self,
@@ -772,6 +780,8 @@ class Catalog:
         needs_existing: bool = True,
         validate=None,
         bucketing=None,
+        created: dict | None = None,
+        changes: dict | None = None,
     ) -> tuple[int, int, str]:
         """Derive-and-replace commit: ``build(existing_df_or_None)`` returns
         the index's new full contents.  The result goes to an immutable
@@ -784,17 +794,19 @@ class Catalog:
         after another writer committed, whose retention may have deleted
         the snapshot the build was reading.  ``build`` gets None when the
         index has no committed version yet or ``needs_existing`` is false.
-        Returns the row counts of the snapshot the commit replaced and of
-        the one it wrote, and the committed data dir.
+        Settings come from ``_settings_hook(name, created, changes)``, plus
+        a bucketed write's ``bucketed_dir``.  Returns the row counts of the
+        snapshot the commit replaced and of the one it wrote, and the
+        committed data dir.
 
         ``validate`` (when given) runs after the build's write job finishes
         but BEFORE the result becomes visible (pre-publish) — the hook that
         lets contract checks ride the write job's own Observation metrics
         instead of paying a separate pre-check job; a raise aborts the
         commit with the index untouched."""
-        created = not self.exists(name)
-        self._assert_not_follower(name)
+        fresh = not self.exists(name)
         target = self.path(name)
+        hook = self._settings_hook(name, created, changes)
         # (dirs, rows, written rows, written dir) of the latest attempt —
         # the committed one once commit_replace returns
         last: list = []
@@ -819,10 +831,14 @@ class Catalog:
             last[:] = [dirs, rows, n, d]
             return d, _written_schema(out, partition_cols), n
 
+        def settings(base: dict | None) -> dict:
+            bucketed = {"bucketed_dir": last[3]} if bucketing else {}
+            return {**hook(base), **bucketed}
+
         try:
-            version = txn.commit_replace(target, recompute=produce)
+            version = txn.commit_replace(target, recompute=produce, settings=settings)
         except Exception:
-            if created:
+            if fresh:
                 txn.discard_empty(target)
             raise
         superseded, base_rows, rows, d = last
@@ -844,26 +860,29 @@ class Catalog:
         name: str,
         partition_cols: list[str],
         max_records_per_file: int | None = None,
+        created: dict | None = None,
+        changes: dict | None = None,
     ) -> None:
         """Blind append: write a complete uuid data dir, then publish it
         with a manifest-union claim whose schema is the union of the
         index's and the frame's (txn.merge_schema_json) — a lost race
-        retries only the (tiny) manifest write, never the data."""
-        created = not self.exists(name)
-        self._assert_not_follower(name)
+        retries only the (tiny) manifest write, never the data.  Settings
+        as in ``_commit_build``."""
+        fresh = not self.exists(name)
         target = self.path(name)
         d = txn.new_data_dir(target)
         try:
             n = self._write(df, d, partition_cols, max_records_per_file)
+            version = txn.commit_append(
+                target, d, schema=_written_schema(df, partition_cols),
+                partition_cols=partition_cols, rows=n,
+                settings=self._settings_hook(name, created, changes),
+            )
         except Exception:
             shutil.rmtree(d, ignore_errors=True)
-            if created:
+            if fresh:
                 txn.discard_empty(target)
             raise
-        version = txn.commit_append(
-            target, d, schema=_written_schema(df, partition_cols),
-            partition_cols=partition_cols, rows=n,
-        )
         self._retire(target, version)
 
     def compact_index(self, name: str, target_files: int | None = None) -> None:
@@ -878,7 +897,7 @@ class Catalog:
         n = target_files or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         # preserve dynamic-routing Hive layout: a routed index compacted
         # flat would lose partition-pruned reads permanently
-        partition_cols = ["_index"] if self._read_meta(idx).get("index_pattern") else []
+        partition_cols = ["_index"] if self.get_settings(idx).get("index_pattern") else []
 
         self._commit_build(idx, partition_cols, lambda df: df.coalesce(n))
 
@@ -920,22 +939,22 @@ class Catalog:
         # so neither index templates, default pipelines, nor id dedupe may
         # touch the data (write_index would apply all three to a new
         # index).  The source contributes its LIVE manifest only.
-        df = self._read_files(src)
-        meta = self._read_meta(src)
+        _, dirs, schema, _, settings = txn.snapshot(self.path(src))
+        df = self._read_dirs(src, dirs, schema)
         # shrink merges without a shuffle (ES hard-links segments into
         # fewer shards); split re-hashes rows across more files
         out = df.coalesce(target_shards) if kind == "shrink" else df.repartition(target_shards)
         # preserve dynamic-routing Hive layout, like compact_index
-        partition_cols = ["_index"] if meta.get("index_pattern") else []
-        self._commit_build(target, partition_cols, lambda _: out, needs_existing=False)
+        partition_cols = ["_index"] if settings.get("index_pattern") else []
         # ES copies index settings (minus shard count) to the target —
         # but NOT follower identity: a resize target is a regular index,
         # so the ccr_* keys are stripped (copying them would mint a target
         # that refuses all writes and that ccr_poll tries to sync; ES
         # likewise requires unfollow before resizing a follower).
-        tmeta = {k: v for k, v in meta.items() if not k.startswith("ccr_")}
-        tmeta.update(self._read_meta(target), resized_from=src)
-        self._write_meta(target, tmeta)
+        self._commit_build(
+            target, partition_cols, lambda _: out, needs_existing=False,
+            created=txn.merge_settings(settings, dict.fromkeys(_CCR_KEYS)),
+        )
         return {
             "source": src,
             "target": target,
@@ -947,7 +966,7 @@ class Catalog:
         """ES ``POST /<src>/_shrink/<dst>``: rewrite into FEWER data files
         (target must be a factor of the source's file count).  Uses
         coalesce — a merge without a shuffle, the Spark analogue of ES's
-        hard-link segment move.  Settings/_meta copy over; returns the
+        hard-link segment move.  Settings copy over; returns the
         shard arithmetic."""
         return self._resize_index(source, target, target_shards, "shrink")
 
@@ -965,13 +984,9 @@ class Catalog:
         if self.exists(target):
             raise IndexExistsError(f"target index {target!r} already exists")
         shutil.copytree(self.path(src), self.path(target))
-        meta = self._read_meta(src)
-        if meta:
-            # same follower-identity strip as _resize_index: the clone is a
-            # plain index (ES: unfollow before clone), not a second follower
-            self._write_meta(
-                target, {k: v for k, v in meta.items() if not k.startswith("ccr_")}
-            )
+        # the copied log carries the source's settings minus, as in
+        # _resize_index, follower identity (ES: unfollow before clone)
+        self.put_settings(target, dict.fromkeys(_CCR_KEYS))
         shards = self._data_file_count(src)
         return {
             "source": src,
@@ -990,7 +1005,7 @@ class Catalog:
         idx = self._one_index(name, "time travel")
         if not self.transactional:
             raise ValueError(f"index {idx!r} is not transactional")
-        _, dirs, schema, _ = txn.snapshot(self.path(idx), version)
+        _, dirs, schema, *_ = txn.snapshot(self.path(idx), version)
         return self._read_dirs(idx, dirs, schema)
 
     def open_point_in_time(
@@ -1008,18 +1023,15 @@ class Catalog:
         time-travel horizon caveat of read_index_version applies: a
         vacuum inside the window invalidates the pinned dirs."""
         import base64
-        import time as _time
 
         idx = self._one_index(name, "a point in time")
         if not self.transactional:
             raise ValueError(f"index {idx!r} is not transactional")
         version, _ = txn.latest(self.path(idx))
-        now = _time.time() if now is None else now
+        now = time.time() if now is None else now
         # a per-open nonce keeps every _pit open a DISTINCT context (ES
         # semantics) — without it two PITs on the same snapshot would
         # share one registry entry and close/extend each other
-        from elasticsearch_hadoop_spark.durations import parse_duration
-
         def _open(state: dict):
             state["seq"] += 1
             pit_id = base64.b64encode(
@@ -1042,9 +1054,8 @@ class Catalog:
         (ES's search_context_missing); a ``keep_alive`` extends the id
         from ``now``."""
         import base64
-        import time as _time
 
-        now = _time.time() if now is None else now
+        now = time.time() if now is None else now
 
         if keep_alive is None:
             # lock-free fast path: atomic-replace writes mean a plain read
@@ -1111,7 +1122,7 @@ class Catalog:
     def _read_files(self, idx: str) -> DataFrame:
         """One resolved index's current contents: the latest manifest's data
         dirs, read with the schema it records."""
-        _, dirs, schema, _ = txn.snapshot(self.path(idx))
+        _, dirs, schema, *_ = txn.snapshot(self.path(idx))
         return self._read_dirs(idx, dirs, schema)
 
     # ----------------------------------------------------------------- read
@@ -1399,11 +1410,10 @@ class Catalog:
         repository directory.  The committed row set materializes as
         parquet under ``repo/<snapshot>/<name>/data`` (exactly the latest
         committed version — in-flight writers are invisible by
-        construction), and
-        the index ``_meta`` travels with it.  Returns the snapshot
-        manifest.  Restore is ``restore_index``; snapshots are immutable
-        once taken (re-snapshotting the same name raises, like ES's
-        unique snapshot names)."""
+        construction), and the index's settings travel with it (none for
+        an alias or pattern ``name``).  Returns the snapshot manifest.
+        Restore is ``restore_index``; snapshots are immutable once taken
+        (re-snapshotting the same name raises, like ES's unique names)."""
         dest = os.path.join(repo, snapshot, name)
         if os.path.exists(dest):
             raise IndexExistsError(f"snapshot {snapshot!r} of {name!r} exists")
@@ -1412,7 +1422,7 @@ class Catalog:
         manifest = {
             "index": name,
             "snapshot": snapshot,
-            "meta": self._read_meta(name),
+            "settings": self.get_settings(name) if self.exists(name) else {},
             "schema": df.schema.jsonValue(),
         }
         _write_json(os.path.join(dest, "_snapshot.json"), manifest)
@@ -1424,7 +1434,8 @@ class Catalog:
         """ES ``_restore``: materialize a snapshot as a (new) index.  The
         target must not exist — ES likewise refuses to restore over an
         open index; pass ``rename_to`` for the rename-on-restore pattern.
-        The restored rows are the new index's first commit."""
+        The restored rows and the snapshot's settings are the new index's
+        first commit."""
         src = os.path.join(repo, snapshot, name)
         if not os.path.exists(os.path.join(src, "_snapshot.json")):
             raise ValueError(f"no snapshot {snapshot!r} of {name!r} in {repo!r}")
@@ -1436,8 +1447,9 @@ class Catalog:
         with open(os.path.join(src, "_snapshot.json")) as fh:
             manifest = json.load(fh)
         df = self._read_dirs(name, [os.path.join(src, "data")], manifest.get("schema"))
-        self._commit_build(target, [], lambda _: df, needs_existing=False)
-        self._write_meta(target, {**(manifest.get("meta") or {}), **self._read_meta(target)})
+        self._commit_build(
+            target, [], lambda _: df, needs_existing=False, created=manifest["settings"]
+        )
 
     def list_snapshots(self, repo: str) -> list[dict]:
         """ES GET _snapshot/<repo>/_all: the repository's snapshot
@@ -1461,9 +1473,10 @@ class Catalog:
         self, leader: "Catalog", leader_index: str, follower_index: str | None = None
     ) -> dict:
         """ES CCR ``PUT /<follower>/_ccr/follow``: bootstrap a follower of
-        an index of a transactional leader catalog and record the leader
-        pointer in the follower's _meta; ``ccr_poll`` pulls subsequent
-        changes.
+        an index of a transactional leader catalog.  Its first commit
+        holds the leader's data and settings plus the ``_CCR_KEYS``
+        pointer, so no follower lacks either; ``ccr_poll`` pulls later
+        changes.  A missing leader index raises IndexNotFoundError.
 
         The unit of replication is the leader's manifest version: data
         dirs are immutable once committed (txn.py), so a sync copies only
@@ -1483,88 +1496,69 @@ class Catalog:
                 "follow_index needs a transactional leader — the manifest "
                 "log IS the replication protocol"
             )
+        if not leader.exists(leader_index):
+            raise IndexNotFoundError(f"no such leader index: {leader_index!r}")
         if self.exists(follower_index):
             raise IndexExistsError(follower_index)
-        os.makedirs(self.path(follower_index), exist_ok=True)
-        txn.init_log(self.path(follower_index))
-        meta = leader._read_meta(leader_index)
-        meta.update(
-            {
-                "ccr_leader_root": leader.root,
-                "ccr_leader_index": leader_index,
-                "ccr_leader_version": 0,
-            }
-        )
-        self._write_meta(follower_index, meta)
-        return self.ccr_poll(follower_index)
+        # a fresh follower holds leader version 0
+        return self._ccr_sync(follower_index, dict(zip(_CCR_KEYS, (leader.root, leader_index, 0))))
 
     def ccr_poll(self, follower_index: str) -> dict:
         """Sync the follower to the leader's latest committed version.
         Idempotent; returns ``{"leader_version", "follower_version",
-        "synced"}`` where synced is False when already current."""
-        import shutil
-
-        meta = self._read_meta(follower_index)
-        if "ccr_leader_root" not in meta:
+        "synced"}`` where synced is False when already current, or when
+        the index was unfollowed while the poll copied."""
+        settings = self.get_settings(follower_index)
+        if "ccr_leader_root" not in settings:
             raise ValueError(f"{follower_index!r} is not a CCR follower")
-        lpath = os.path.join(meta["ccr_leader_root"], meta["ccr_leader_index"])
+        return self._ccr_sync(follower_index, settings)
+
+    def _ccr_sync(self, follower_index: str, pointer: dict) -> dict:
+        """Copy the leader's live dirs the follower lacks, then claim the
+        follower's next version naming them and the leader version.
+        ``pointer``: the follower's CCR settings as last read.  Each claim
+        builds on the follower's latest snapshot (leader settings plus
+        ``pointer`` for a new follower); if that is no follower (unfollowed
+        mid-copy) or holds this leader version or newer, none is made."""
+        lpath = os.path.join(pointer["ccr_leader_root"], pointer["ccr_leader_index"])
         fpath = self.path(follower_index)
-        lv, ldirs, lschema, lrows = txn.snapshot(lpath)
-        if lv == meta["ccr_leader_version"]:
-            return {
-                "leader_version": lv,
-                "follower_version": txn.latest(fpath)[0],
-                "synced": False,
-            }
+        lv, ldirs, lschema, lrows, lsettings = txn.snapshot(lpath)
+        not_synced = {"leader_version": lv, "synced": False}
+        if lv == pointer["ccr_leader_version"]:
+            return {**not_synced, "follower_version": txn.latest(fpath)[0]}
         froot = txn.data_root(fpath)
-        os.makedirs(froot, exist_ok=True)
         for d in ldirs:
             tgt = os.path.join(froot, os.path.basename(d.rstrip("/")))
             if not os.path.isdir(tgt):
-                # immutable-once-committed: a dir is copied at most once
-                # across the follower's lifetime, incremental by design.
-                # Copy to a private temp name and rename into place so a
-                # killed/concurrent poll never leaves a half-copied dir
-                # that a later poll would treat as complete — txn.py's
-                # "data dirs are complete before the manifest claim"
-                # invariant must hold on the follower too.
+                # immutable once committed: copied once, to a temp name
+                # renamed into place, so no poll sees a half-copied dir
+                # (txn.py's "complete before the claim", on the follower)
                 tmp = f"{tgt}.tmp.{uuid.uuid4().hex[:8]}"
                 shutil.copytree(d, tmp)
                 try:
                     os.rename(tmp, tgt)
-                except OSError:
-                    # another poll renamed its copy first — identical
-                    # content (immutable source), drop ours
+                except OSError:  # another poll renamed an identical copy first
                     shutil.rmtree(tmp, ignore_errors=True)
-        fv, fdirs = txn.latest(fpath)
-        fv += 1
-        if txn.try_commit(
-            fpath, fv, ldirs,
-            meta={"replace": True, "ccr_leader_version": lv, "schema": lschema, "rows": lrows},
-        ):
-            meta["ccr_leader_version"] = lv
-            live = {os.path.basename(d.rstrip("/")) for d in ldirs}
-            self._retire(fpath, fv, [d for d in fdirs if os.path.basename(d) not in live])
-        else:
-            # a concurrent poll won the claim — adopt the WINNER's leader
-            # version (it may be older or newer than ours; stamping our
-            # own lv could mark leader data as synced that the committed
-            # manifest does not contain)
-            fv = txn.latest(fpath)[0]
-            lv = txn.manifest_body(fpath, fv).get("ccr_leader_version", 0)
-            meta["ccr_leader_version"] = lv
-        self._write_meta(follower_index, meta)
-        return {"leader_version": lv, "follower_version": fv, "synced": True}
+        for _ in range(500):
+            fv, fdirs, _, _, base = txn.snapshot(fpath)
+            base = base if fv else {**lsettings, **pointer}
+            if "ccr_leader_root" not in base or base["ccr_leader_version"] >= lv:
+                return {**not_synced, "follower_version": fv}
+            meta = {"replace": True, "schema": lschema, "rows": lrows,
+                    "settings": {**base, "ccr_leader_version": lv}}
+            if txn.try_commit(fpath, fv + 1, ldirs, meta=meta):
+                live = {os.path.basename(d.rstrip("/")) for d in ldirs}
+                self._retire(fpath, fv + 1, [d for d in fdirs if os.path.basename(d) not in live])
+                return {"leader_version": lv, "follower_version": fv + 1, "synced": True}
+        raise txn.CommitConflictError(f"poll of {follower_index!r} lost 500 races")
 
     def unfollow_index(self, follower_index: str) -> None:
         """ES ``POST /<index>/_ccr/unfollow``: convert the follower into a
-        regular (writable) index by dropping the leader pointer."""
-        meta = self._read_meta(follower_index)
-        if "ccr_leader_root" not in meta:
+        regular (writable) index by dropping the leader pointer from its
+        settings."""
+        if "ccr_leader_root" not in self.get_settings(follower_index):
             raise ValueError(f"{follower_index!r} is not a CCR follower")
-        for k in ("ccr_leader_root", "ccr_leader_index", "ccr_leader_version"):
-            meta.pop(k, None)
-        self._write_meta(follower_index, meta)
+        self.put_settings(follower_index, dict.fromkeys(_CCR_KEYS))
 
     # ----------------------------------------------------------- templates
     def _templates_path(self) -> str:
@@ -1617,8 +1611,8 @@ class Catalog:
         """ES ``_index_template``: index_patterns + priority + a template
         of settings/mappings, optionally ``composed_of`` component
         templates (merged in order, the template's own block last).
-        Resolved when write_index CREATES a matching index and persisted
-        into the index ``_meta``; from then on ``index.default_pipeline``
+        Resolved when write_index CREATES a matching index and recorded
+        in the settings of its first commit; from then on ``index.default_pipeline``
         runs the registered ingest pipeline over EVERY batch written to
         that index (ES applies it per indexing request, not per index
         creation), ``index.sort.field`` stays the write sort (row-group-
@@ -1661,13 +1655,14 @@ class Catalog:
         return best
 
     def get_mapping(self, name: str) -> dict:
-        """GET <index>/_mapping: the template-applied (or put) mapping, else
-        a mapping derived from the recorded schema (dynamic-mapping
-        analogue)."""
-        meta = self._read_meta(name)
-        if meta.get("mappings"):
-            return meta["mappings"]
-        schema = self._read_files(name).schema
+        """GET <index>/_mapping: the mapping the index's settings record
+        (template-applied at creation, or put), else a mapping derived from
+        the recorded schema (dynamic-mapping analogue) — both from the
+        latest commit."""
+        _, _, schema, _, settings = txn.snapshot(self.path(self._one_index(name, "_mapping")))
+        if settings.get("mappings"):
+            return settings["mappings"]
+        schema = StructType.fromJson(schema)
         type_map = {
             "string": "keyword", "bigint": "long", "int": "integer",
             "double": "double", "float": "float", "boolean": "boolean",
@@ -1851,9 +1846,6 @@ class Catalog:
         if name not in aliases:
             backing = f".ds-{name}-000001"
             self.write_index(df, backing)
-            meta = self._read_meta(backing)
-            meta["created_at"] = time.time()
-            self._write_meta(backing, meta)
             self.put_alias(name, backing)
         else:
             self.write_alias(df, name)
@@ -1891,17 +1883,17 @@ class Catalog:
         """ES ``GET _cat/indices``: one row per managed index — name,
         docs.count, store.size (bytes on disk) — from the row counts the
         manifests record and a directory walk, no data scan."""
-        out = []
-        for n in self.list_indices():
-            size = 0
-            for root, _dirs, files in os.walk(self.path(n)):
-                size += sum(
-                    os.path.getsize(os.path.join(root, f)) for f in files
-                )
-            out.append(
-                {"index": n, "docs_count": self.count_index(n), "store_bytes": size}
-            )
-        return out
+        return [
+            {"index": n, "docs_count": self.count_index(n), "store_bytes": self._store_bytes(n)}
+            for n in self.list_indices()
+        ]
+
+    def _store_bytes(self, idx: str) -> int:
+        """Bytes on disk under the index: its log, data pool and stream farm."""
+        return sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _dirs, files in os.walk(self.path(idx)) for f in files
+        )
 
     def sql_query(self, sql: str, pattern: str = "*") -> DataFrame:
         """ES SQL (`_sql` endpoint) veneer: every managed index matching
@@ -2179,18 +2171,12 @@ class Catalog:
         to a fresh data dir, and the manifest records their schema and row
         count, so ``read_index``, ``count_index`` and wildcard reads see the
         index like every other one.  The bucket metadata lives in the
-        session catalog (an external table at that data dir), and ``_meta``
-        records the dir; ``read_bucketed`` reads it back."""
-        table = self._table_name(name)
-        *_, d = self._commit_build(
+        session catalog (an external table at that data dir), and the
+        commit's settings record the dir; ``read_bucketed`` reads it back."""
+        self._commit_build(
             name, [], lambda _: df, needs_existing=False,
-            bucketing=(table, num_buckets, bucket_cols, sort_cols),
+            bucketing=(self._table_name(name), num_buckets, bucket_cols, sort_cols),
         )
-        self._write_meta(name, {
-            **self._read_meta(name),
-            "bucket_cols": bucket_cols, "num_buckets": num_buckets,
-            "table": table, "bucketed_dir": d,
-        })
 
     def read_bucketed(self, name: str) -> DataFrame:
         """Read a bucketed index through the session catalog (keeps the
@@ -2199,13 +2185,13 @@ class Catalog:
         later write (append, merge, compaction) has replaced or extended
         it, this raises ValueError — ``read_index`` still reads the index,
         and a new ``write_bucketed`` buckets it again."""
-        meta = self._read_meta(name)
-        if txn.latest(self.path(name))[1] != [meta.get("bucketed_dir")]:
+        _, dirs, _, _, settings = txn.snapshot(self.path(name))
+        if dirs != [settings.get("bucketed_dir")]:
             raise ValueError(
                 f"index {name!r} holds no bucketed snapshot: it was never "
                 "written by write_bucketed, or a later write replaced it"
             )
-        return self.spark.table(meta["table"])
+        return self.spark.table(self._table_name(name))
 
     def _table_name(self, name: str) -> str:
         return "esidx_" + re.sub(r"[^A-Za-z0-9_]", "_", name)

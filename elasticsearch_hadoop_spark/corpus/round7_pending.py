@@ -389,8 +389,9 @@ def writepath_ilm_tick(spark, sf_dir):
     """ILM tick round trip: three rolled generations of orders slices at
     controlled ages; one apply_lifecycle tick forcemerges the two
     warm-age generations (delete's 60d horizon reached by neither), the
-    write index never transitions.  Output: per-index applied phase +
-    footer-stats doc count after the tick — compaction must not change a
+    write index never transitions; the ages are back-dated through
+    put_settings.  Output: per-index applied phase + manifest-recorded doc
+    count after the tick — compaction must not change a
     single row."""
     import time as _time
 
@@ -406,9 +407,7 @@ def writepath_ilm_tick(spark, sf_dir):
     for gen in (1, 2, 3):
         idx = f"ord-{gen:06d}"
         cat.write_index(orders.filter(F.col("o_orderkey") % 3 == gen - 1), idx)
-        meta = cat._read_meta(idx)
-        meta["created_at"] = now - ages[gen]
-        cat._write_meta(idx, meta)
+        cat.put_settings(idx, {"created_at": now - ages[gen]})
     cat.put_alias("ord", "ord-000001", "ord-000002", "ord-000003")
     policy = {"policy": {"phases": {
         "hot": {"actions": {}},
@@ -418,7 +417,7 @@ def writepath_ilm_tick(spark, sf_dir):
     }}}
     apply_lifecycle(cat, "ord", policy, now=now)
     rows = [
-        (idx, cat._read_meta(idx).get("ilm_phase", "hot"), cat.count_index(idx))
+        (idx, cat.get_settings(idx).get("ilm_phase", "hot"), cat.count_index(idx))
         for idx in cat._read_aliases()["ord"]
     ]
     return spark.createDataFrame(rows, "idx string, phase string, docs bigint").orderBy(

@@ -23,16 +23,17 @@ library call the caller schedules however they like, e.g. per streaming
 micro-batch or from a cron):
 
 - ``hot.rollover``            -> ``catalog.rollover`` (the doc count the
-  manifest records, no scan; creation-stamped age)
+  manifest records, no scan; age from the ``created_at`` setting)
 - ``warm.forcemerge``         -> ``catalog.compact_index`` with
   ``max_num_segments`` target files (a REPLACE commit, writers unblocked)
-- ``warm.readonly``           -> an index-meta marker (documented subset:
-  the single-writer catalog does not enforce it on write)
+- ``warm.readonly``           -> a ``readonly`` setting (documented subset:
+  the catalog does not enforce it on write)
 - ``cold.searchable_snapshot``-> ``catalog.snapshot_index`` into the
   policy's repository
 - ``delete.delete``           -> detach from the alias + drop the index
 
-Phase state is persisted in index meta (``ilm_phase``) so a re-tick is a
+Phase state is an index setting (``ilm_phase``), committed through
+``catalog.put_settings`` like any settings change, so a re-tick is a
 no-op for already-transitioned generations — the idempotence ES gets
 from its step registry.  At 100 TB this is the whole point: every action
 operates on ONE bounded generation (rollover bounds them), never the
@@ -165,9 +166,7 @@ def _backing_indices(catalog, target: str) -> list[str]:
 
 
 def _index_age(catalog, idx: str, now: float) -> float:
-    meta = catalog._read_meta(idx)
-    created = meta.get("created_at") or os.path.getctime(catalog.path(idx))
-    return now - created
+    return now - catalog.get_settings(idx)["created_at"]
 
 
 def _phase_for_age(phases: dict, age: float) -> str:
@@ -189,13 +188,12 @@ def explain_lifecycle(catalog, target: str, policy, now: float | None = None):
     out = []
     for idx in backing:
         age = _index_age(catalog, idx, now)
-        meta = catalog._read_meta(idx)
         out.append(
             {
                 "index": idx,
                 "age_seconds": age,
                 "phase": _phase_for_age(phases, age),
-                "applied_phase": meta.get("ilm_phase", "hot"),
+                "applied_phase": catalog.get_settings(idx).get("ilm_phase", "hot"),
                 "is_write_index": idx == backing[-1],
             }
         )
@@ -237,15 +235,13 @@ def apply_lifecycle(catalog, target: str, policy, now: float | None = None):
             continue  # only rolled-away generations move phases, like ES
         age = _index_age(catalog, idx, now)
         target_phase = _phase_for_age(phases, age)
-        meta = catalog._read_meta(idx)
-        applied = meta.get("ilm_phase", "hot")
+        applied = catalog.get_settings(idx).get("ilm_phase", "hot")
         if _PHASE_ORDER.index(target_phase) <= _PHASE_ORDER.index(applied):
             continue
         # walk EVERY declared phase between the applied one and the
         # target, in order — ES moves sequentially, so a generation whose
         # age jumped past warm (e.g. the tick cron was down) still
         # forcemerges before its cold snapshot
-        deleted = False
         for phase in _PHASE_ORDER[
             _PHASE_ORDER.index(applied) + 1: _PHASE_ORDER.index(target_phase) + 1
         ]:
@@ -255,15 +251,12 @@ def apply_lifecycle(catalog, target: str, policy, now: float | None = None):
             if phase == "delete":
                 if "delete" not in spec_actions:
                     continue  # validate_policy rejects this, belt-and-braces
-                aliases = catalog._read_aliases()
-                aliases[target] = [t for t in aliases[target] if t != idx]
-                with open(catalog._aliases_path(), "w") as f:
-                    json.dump(aliases, f)
+                remaining = _backing_indices(catalog, target)
+                catalog.put_alias(target, *[t for t in remaining if t != idx])
                 catalog.drop_index(idx)
                 actions.append(
                     {"index": idx, "phase": "delete", "action": "delete"}
                 )
-                deleted = True
                 break
             if "forcemerge" in spec_actions:
                 n = int(spec_actions["forcemerge"].get("max_num_segments", 1))
@@ -281,17 +274,11 @@ def apply_lifecycle(catalog, target: str, policy, now: float | None = None):
                      "action": "searchable_snapshot",
                      "repository": repo, "snapshot": snap}
                 )
+            stamp = {"ilm_phase": phase}
             if "readonly" in spec_actions:
-                actions.append(
-                    {"index": idx, "phase": phase, "action": "readonly"}
-                )
-            # record the transition (meta may have been rewritten by
-            # compact — re-read before stamping)
-            meta = catalog._read_meta(idx)
-            meta["ilm_phase"] = phase
-            if "readonly" in spec_actions:
-                meta["readonly"] = True
-            catalog._write_meta(idx, meta)
-        if deleted:
-            continue
+                actions.append({"index": idx, "phase": phase, "action": "readonly"})
+                stamp["readonly"] = True
+            # record the transition: one settings commit on top of whatever
+            # the actions above committed
+            catalog.put_settings(idx, stamp)
     return actions

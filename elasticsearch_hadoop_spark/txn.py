@@ -1,27 +1,31 @@
 """Optimistic-concurrency commit log: the one commit protocol of every
-managed index.
+managed index, and the one record of its metadata.
 
 The reference engine tolerates concurrent bulk writers natively
-(server-side versioning).  This module gives every Catalog write the same
-guarantee Spark-side, with the protocol Delta/Iceberg use reduced to its
-core, so that no write ever leaves a window with no index at the target
-and no concurrent write silently vanishes:
+(server-side versioning) and keeps index settings in cluster state.  This
+module gives every Catalog write the same guarantees Spark-side, with the
+protocol Delta/Iceberg use reduced to its core, so that no write ever
+leaves a window with no index at the target and no concurrent write or
+settings change silently vanishes:
 
 - An index's live data is defined by a MANIFEST, not by directory listing.
   Version N's manifest lives at ``<index>/_txn/v{N:012d}.json`` and names
   the data directories (each written exactly once, under a uuid, never
   mutated) that make up the snapshot, plus the snapshot's schema, which
-  readers pass to Spark instead of inferring it from parquet footers, and
-  its total row count ``rows``, which answers ``_count`` without a scan.
-  The log is the only index layout: an index exists once it holds a
-  committed version, and nothing outside ``_txn``, ``_data`` and
-  ``_stream`` is ever read.
+  readers pass to Spark instead of inferring it from parquet footers, its
+  total row count ``rows``, which answers ``_count`` without a scan, and
+  its ``settings`` (Delta's ``metaData`` action), which each commit
+  carries forward from the snapshot it builds on or derives from them
+  with a ``settings`` hook.  The log is the only index layout: an index
+  exists once it holds a committed version, and nothing outside
+  ``_txn``, ``_data`` and ``_stream`` is ever read.
 - Committing version N+1 is ``open(v{N+1}.json, O_CREAT|O_EXCL)`` — an
   atomic claim on POSIX filesystems (and on object stores via
   put-if-absent).  Exactly one concurrent writer wins; losers re-read the
   new latest version and retry.
 - APPEND commits retry trivially: the new data directory is already on
-  disk, only the manifest union is recomputed — no data rewrite.
+  disk, only the manifest union is recomputed — no data rewrite.  A
+  settings change is an append of nothing.
 - REPLACE commits (merge/upsert/delete-by-query rewrites) are
   read-modify-write: a lost race means the snapshot the rewrite was
   derived from is stale, so the caller's ``recompute`` hook re-runs the
@@ -118,11 +122,11 @@ def _versions(index_path: str) -> list[int]:
     return sorted(int(n[1:-5]) for n in names if n.startswith("v") and n.endswith(".json"))
 
 
-def _latest_body(index_path: str) -> tuple[int, dict]:
-    """(version, manifest body) of the newest committed version; (0, {})
-    for a fresh log.  Re-lists when drop_superseded prunes the listed
-    newest manifest before it is read (a newer one exists by then)."""
-    while True:
+def _body_at(index_path: str, version: int | None = None) -> tuple[int, dict]:
+    """(version, manifest body) of committed ``version``, by default the
+    newest (re-listed if drop_superseded prunes it before the read); (0,
+    {}) for version 0 and a fresh log.  KeyError for an uncommitted one."""
+    while version is None:
         versions = _versions(index_path)
         if not versions:
             return 0, {}
@@ -130,29 +134,37 @@ def _latest_body(index_path: str) -> tuple[int, dict]:
             return versions[-1], manifest_body(index_path, versions[-1])
         except KeyError:
             continue
+    return version, manifest_body(index_path, version) if version else {}
+
+
+def _state(index_path: str, body: dict) -> tuple[list[str], dict | None, int, dict]:
+    """(data dirs, schema, row count, settings) a manifest body records."""
+    dirs = [os.path.join(index_path, _DATA_DIR, d) for d in body.get("dirs", [])]
+    return dirs, body.get("schema"), body.get("rows", 0), body.get("settings", {})
 
 
 def snapshot(
     index_path: str, version: int | None = None
-) -> tuple[int, list[str], dict | None, int]:
-    """(version, data dirs, recorded schema, recorded row count) of
-    committed ``version``, by default the newest; (0, [], None, 0) for a
-    fresh log.  The schema is the Spark StructType JSON the committer
-    recorded in the manifest body, so dirs, schema and count always come
-    from one snapshot.  A version file appears atomically with its full
-    body (written to a private temp file, claimed via hard link — see
+) -> tuple[int, list[str], dict | None, int, dict]:
+    """(version, data dirs, recorded schema, recorded row count, settings)
+    of committed ``version``, by default the newest; (0, [], None, 0, {})
+    for a fresh log.  The schema is the Spark StructType JSON the
+    committer recorded in the manifest body, so all of them come from one
+    snapshot.  A version file appears atomically with its full body
+    (written to a private temp file, claimed via hard link — see
     try_commit), so whatever this lists is complete.
     Raises KeyError for an uncommitted explicit version (time travel — the
     Delta ``versionAsOf`` / ES point-in-time analogue; it works until
     vacuum sweeps the superseded dirs)."""
-    if version is None:
-        version, body = _latest_body(index_path)
-        if not version:
-            return 0, [], None, 0
-    else:
-        body = manifest_body(index_path, version)
-    dirs = [os.path.join(index_path, _DATA_DIR, d) for d in body["dirs"]]
-    return version, dirs, body.get("schema"), body.get("rows")
+    version, body = _body_at(index_path, version)
+    return (version, *_state(index_path, body))
+
+
+def merge_settings(base: dict, changes: dict) -> dict:
+    """``base`` with ``changes`` merged in; a None value removes its key
+    (ES ``PUT _settings`` with a null value resets a setting)."""
+    out = {**base, **changes}
+    return {k: v for k, v in out.items() if v is not None}
 
 
 def merge_schema_json(stored: dict | None, new: dict | None, last=()) -> dict | None:
@@ -179,19 +191,13 @@ def has_replace_commit(index_path: str, version: int | None = None) -> bool:
     writes it), so this reads one manifest however long the log was before
     pruning.  Raises KeyError for an uncommitted or pruned explicit
     version."""
-    if version is None:
-        version, body = _latest_body(index_path)
-        if not version:
-            return False
-    else:
-        body = manifest_body(index_path, version)
-    return body["replaced"]
+    return _body_at(index_path, version)[1].get("replaced", False)
 
 
 def manifest_body(index_path: str, version: int) -> dict:
-    """The raw manifest JSON of a committed version — includes any custom
-    meta keys the committer attached (e.g. CCR's ccr_leader_version).
-    Raises KeyError for an uncommitted version."""
+    """The raw manifest JSON of a committed version: its dirs, schema,
+    row count, settings and the running ``replaced`` flag.  Raises
+    KeyError for an uncommitted version."""
     path = _version_file(index_path, version)
     try:
         with open(path) as fh:
@@ -365,31 +371,41 @@ def enable_streaming(index_path: str) -> str:
 
 def commit_append(
     index_path: str,
-    data_dir: str,
+    data_dir: str | None,
     *,
     rows: int,
     schema: dict | None = None,
     partition_cols=(),
+    settings=None,
     max_retries: int = 500,
 ) -> int:
     """Publish ``data_dir``, which holds ``rows`` rows, as an append.  Lost
     races only re-read the manifest and re-claim — the data is already on
     disk, nothing recomputes.  Each attempt records the union of the
     winner's schema and ``schema`` (merge_schema_json), so concurrent
-    appends of different new fields all stay visible, and the winner's
-    row count plus ``rows``.  Jittered backoff keeps a heavily-contended
-    log fair (without it a loser can starve: every retry pays a listdir
-    while winners immediately contend again).  Returns the committed
-    version."""
+    appends of different new fields all stay visible, the winner's row
+    count plus ``rows``, and the winner's settings as ``settings(base)``
+    derives them (``base`` is None when the claim creates the index); the
+    hook runs on every attempt, and what it raises aborts the commit.  A
+    ``data_dir`` of None appends nothing (a settings change) and commits
+    nothing if the settings come out unchanged.  Jittered backoff keeps a
+    heavily-contended log fair (without it a loser can starve: every
+    retry pays a listdir while winners immediately contend again).
+    Returns the latest version afterwards."""
     import random
 
     for attempt in range(max_retries):
-        version, dirs, recorded, base = snapshot(index_path)
+        version, body = _body_at(index_path)
+        dirs, recorded, base_rows, base = _state(index_path, body)
+        new = settings(base if version else None) if settings else base
+        if data_dir is None and new == base:
+            return version
         meta = {
             "schema": merge_schema_json(recorded, schema, partition_cols),
-            "rows": base + rows,
+            "rows": base_rows + rows,
+            "settings": new,
         }
-        if try_commit(index_path, version + 1, dirs + [data_dir], meta=meta):
+        if try_commit(index_path, version + 1, dirs + ([data_dir] if data_dir else []), meta=meta):
             return version + 1
         time.sleep(random.random() * min(0.05, 0.001 * (attempt + 1)))
     raise CommitConflictError(f"append to {index_path} lost {max_retries} races")
@@ -403,6 +419,7 @@ def commit_replace(
     max_retries: int = 10,
     schema: dict | None = None,
     rows: int | None = None,
+    settings=None,
 ) -> int:
     """Publish ``data_dir`` (whose recorded schema is ``schema`` and which
     holds ``rows`` rows) as the FULL new snapshot, valid only if the index
@@ -414,6 +431,8 @@ def commit_replace(
     winner's snapshot (the optimistic MERGE INTO loop).  Without a
     recompute hook a conflict is an error.  With no ``base_version`` the
     first derivation runs here too: ``recompute`` on the latest snapshot.
+    The commit records the base's settings as the ``settings`` hook
+    derives them after the data; a raise there fails like a derivation.
 
     A ``recompute`` that raises after the log moved past the snapshot it
     read lost the race as well (a winner may have deleted the files it
@@ -422,16 +441,22 @@ def commit_replace(
     the latest fails the commit with its own error."""
     version, error = base_version, None
     for _ in range(max_retries):
-        if version is None:  # derive against the latest snapshot
-            version, dirs, recorded, recorded_rows = snapshot(index_path)
-            try:
-                data_dir, schema, rows = recompute(dirs, recorded, recorded_rows)
-            except Exception as ex:
-                if latest(index_path)[0] == version:
-                    raise
-                version, error = None, ex
-                continue
-        meta = {"replace": True, "schema": schema, "rows": rows}
+        derive = version is None
+        try:
+            # KeyError for a pruned explicit base: a newer version is committed
+            version, body = _body_at(index_path, version)
+            *state, base = _state(index_path, body)
+            if derive:
+                data_dir, schema, rows = recompute(*state)
+            settings_now = settings(base if version else None) if settings else base
+        except Exception as ex:
+            if data_dir:
+                shutil.rmtree(data_dir, ignore_errors=True)  # never committed
+            if not derive or latest(index_path)[0] == version:
+                raise
+            version, data_dir, error = None, None, ex
+            continue
+        meta = {"replace": True, "schema": schema, "rows": rows, "settings": settings_now}
         if try_commit(index_path, version + 1, [data_dir] if data_dir else [], meta=meta):
             return version + 1
         if recompute is None:
@@ -440,7 +465,7 @@ def commit_replace(
             )
         if data_dir:
             shutil.rmtree(data_dir, ignore_errors=True)  # never committed
-        version = None
+        version, data_dir = None, None
     raise CommitConflictError(f"replace of {index_path} lost {max_retries} races") from error
 
 

@@ -59,6 +59,15 @@ def bounded(fn, seconds=180):
     return out.get("value")
 
 
+def dying_dump(obj, fp, *args, **kwargs):
+    """A ``json.dump`` that writes a few bytes and dies, as on a full disk:
+    patch it in to check that a JSON document survives a torn write."""
+    import json
+
+    fp.write(json.dumps(obj)[:7])
+    raise OSError("disk full")
+
+
 def count_py4j_calls(fn):
     """Run ``fn()``; return its result and the number of Py4J commands it
     sent to the JVM.  Commands that release Python-collected JVM objects

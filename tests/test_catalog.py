@@ -18,7 +18,7 @@ from elasticsearch_hadoop_spark.catalog import (
     IndexExistsError,
     dedupe_last,
 )
-from tests.conftest import bounded
+from tests.conftest import bounded, dying_dump
 
 
 @pytest.fixture()
@@ -433,24 +433,16 @@ def test_read_index_builds_without_spark_jobs(spark, cat):
 
 def test_sidecar_json_write_is_atomic(spark, cat, monkeypatch):
     """A write that dies part-way through must leave the previous sidecar
-    intact: a torn _meta would make the index unreadable."""
+    intact: a torn alias map would make every alias and pattern read
+    fail."""
     import json
 
     cat.write_index(docs(spark, BASE), "torn")
     cat.put_alias("al", "torn")
-    before = cat._read_meta("torn")
-
-    def dying_dump(obj, fp, *args, **kwargs):
-        fp.write(json.dumps(obj)[:7])
-        raise OSError("disk full")
-
     monkeypatch.setattr(json, "dump", dying_dump)
-    with pytest.raises(OSError, match="disk full"):
-        cat._write_meta("torn", {**before, "extra": 1})
     with pytest.raises(OSError, match="disk full"):
         cat.put_alias("al2", "torn")
     monkeypatch.undo()
-    assert cat._read_meta("torn") == before
     assert cat._read_aliases() == {"al": ["torn"]}
     assert as_dicts(cat.read_index("torn")) == BASE
     assert not [f for f in os.listdir(cat.root) if ".tmp-" in f]
@@ -795,7 +787,7 @@ def test_default_pipeline_applies_to_every_write(spark, cat):
                     "logs2-app", id_col="k")
     got = {d["k"]: d["v"] for d in as_dicts(cat.read_index("logs2-app"))}
     assert got == {1: "a", 2: "b"}
-    assert cat._read_meta("logs2-app")["default_pipeline"] == "norm"
+    assert cat.get_settings("logs2-app")["default_pipeline"] == "norm"
 
 
 def test_index_template_priority_and_guards(spark, cat):
@@ -820,11 +812,9 @@ def test_index_template_priority_and_guards(spark, cat):
 
 def test_meta_merge_preserves_created_at(spark, cat):
     cat.write_index(docs(spark, BASE), "keepme", id_col="k")
-    meta = cat._read_meta("keepme")
-    meta["created_at"] = 123.0
-    cat._write_meta("keepme", meta)
+    cat.put_settings("keepme", {"created_at": 123.0})
     cat.write_index(docs(spark, [{"k": 9, "v": "z", "n": 90}]), "keepme", id_col="k")
-    assert cat._read_meta("keepme")["created_at"] == 123.0
+    assert cat.get_settings("keepme")["created_at"] == 123.0
 
 
 def test_filtered_alias_plus_direct_read_stays_unfiltered(spark, cat):

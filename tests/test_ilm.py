@@ -55,9 +55,7 @@ def _mk_gen(cat, spark, idx, n_docs, created_at):
         spark.createDataFrame([(i, f"d{i}") for i in range(n_docs)], "id int, v string"),
         idx,
     )
-    meta = cat._read_meta(idx)
-    meta["created_at"] = created_at
-    cat._write_meta(idx, meta)
+    cat.put_settings(idx, {"created_at": created_at})
 
 
 def test_parse_age_and_validate():
@@ -120,10 +118,10 @@ def test_tick_moves_generations_through_phases(cat, spark, policy, tmp_path):
     # cold snapshot landed in the repo
     assert any(s["snapshot"].startswith("ilm-cold-")
                for s in cat.list_snapshots(str(tmp_path / "snaprepo")))
-    # meta stamped
-    assert cat._read_meta("logs-000003")["ilm_phase"] == "warm"
-    assert cat._read_meta("logs-000003")["readonly"] is True
-    assert cat._read_meta("logs-000002")["ilm_phase"] == "cold"
+    # settings stamped
+    assert cat.get_settings("logs-000003")["ilm_phase"] == "warm"
+    assert cat.get_settings("logs-000003")["readonly"] is True
+    assert cat.get_settings("logs-000002")["ilm_phase"] == "cold"
 
     # idempotence: a second tick at the same instant is a no-op
     assert apply_lifecycle(cat, "ilm-logs", "logs", now=now) == []
@@ -138,9 +136,7 @@ def test_hot_rollover_through_policy(cat, spark, policy):
                         "action": "rollover", "new_index": "ev-000002"}]
     assert cat._read_aliases()["ev"] == ["ev-000001", "ev-000002"]
     # the write index never moves phases, however old it is
-    meta = cat._read_meta("ev-000002")
-    meta["created_at"] = now - 100 * DAY
-    cat._write_meta("ev-000002", meta)
+    cat.put_settings("ev-000002", {"created_at": now - 100 * DAY})
     acts = apply_lifecycle(cat, "ev", policy, now=now)
     assert all(a["index"] != "ev-000002" for a in acts)
 
@@ -153,6 +149,32 @@ def test_write_index_protected_and_errors(cat, spark, policy):
     assert apply_lifecycle(cat, "solo", policy, now=1e9) == []
     with pytest.raises(IlmError):
         apply_lifecycle(cat, "missing-alias", policy, now=1e9)
+
+
+def test_delete_phase_dying_mid_write_keeps_the_alias_map(cat, spark, monkeypatch):
+    """The delete phase detaches the generation through put_alias's
+    atomic replace: a write that dies part-way leaves the alias map whole
+    (a torn one would fail every alias and pattern read), and the next
+    tick deletes."""
+    import json
+
+    from tests.conftest import bounded, dying_dump
+
+    now = 1_000_000_000.0
+    bounded(lambda: _mk_gen(cat, spark, "del-000001", 2, now - 61 * DAY))
+    bounded(lambda: _mk_gen(cat, spark, "del-000002", 1, now - DAY))
+    cat.put_alias("del", "del-000001", "del-000002")
+    policy = {"policy": {"phases": {"delete": {"min_age": "60d", "actions": {"delete": {}}}}}}
+    monkeypatch.setattr(json, "dump", dying_dump)
+    with pytest.raises(OSError, match="disk full"):
+        bounded(lambda: apply_lifecycle(cat, "del", policy, now=now))
+    monkeypatch.undo()
+    assert cat._read_aliases() == {"del": ["del-000001", "del-000002"]}
+    assert bounded(lambda: apply_lifecycle(cat, "del", policy, now=now)) == [
+        {"index": "del-000001", "phase": "delete", "action": "delete"}
+    ]
+    assert cat._read_aliases() == {"del": ["del-000002"]}
+    assert not cat.exists("del-000001")
 
 
 def test_empty_delete_phase_rejected():
@@ -176,7 +198,7 @@ def test_skipped_phase_actions_still_run(cat, spark, tmp_path):
     assert kinds.index(("warm", "forcemerge")) < kinds.index(
         ("cold", "searchable_snapshot")
     )
-    assert cat._read_meta("jump-000001")["ilm_phase"] == "cold"
+    assert cat.get_settings("jump-000001")["ilm_phase"] == "cold"
     # the snapshot is of the compacted index: one data file inside it
     snaps = cat.list_snapshots(str(tmp_path / "snaprepo"))
     assert any(s["snapshot"] == "ilm-cold-jump-000001" for s in snaps)

@@ -76,7 +76,7 @@ def _leader_follower(spark, tmp_path):
 def test_resize_of_follower_mints_plain_writable_index(spark, tmp_path):
     _, fcat = _leader_follower(spark, tmp_path)
     fcat.shrink_index("t_f", "t_small", target_shards=1)
-    meta = fcat._read_meta("t_small")
+    meta = fcat.get_settings("t_small")
     assert not any(k.startswith("ccr_") for k in meta), meta
     # the resized target accepts writes (a follower would refuse)
     extra = spark.range(3).select((F.col("id") + 100).alias("k"), F.lit(0).cast("long").alias("v"))
@@ -87,7 +87,7 @@ def test_resize_of_follower_mints_plain_writable_index(spark, tmp_path):
 def test_clone_of_follower_mints_plain_writable_index(spark, tmp_path):
     _, fcat = _leader_follower(spark, tmp_path)
     fcat.clone_index("t_f", "t_clone")
-    meta = fcat._read_meta("t_clone")
+    meta = fcat.get_settings("t_clone")
     assert not any(k.startswith("ccr_") for k in meta), meta
     extra = spark.range(2).select((F.col("id") + 100).alias("k"), F.lit(0).cast("long").alias("v"))
     fcat.write_index(extra, "t_clone")

@@ -5,13 +5,15 @@ snapshot, and readers must only ever see committed manifests."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_hadoop_spark import txn
-from elasticsearch_hadoop_spark.catalog import VALID_OPERATIONS, Catalog
+from elasticsearch_hadoop_spark.catalog import VALID_OPERATIONS, Catalog, IndexNotFoundError
 from tests.conftest import bounded
 
 
@@ -228,7 +230,7 @@ def _append_fuzz(tmp_path, prune):
         sys.setswitchinterval(interval)
 
     assert sorted(versions) == list(range(1, 161))  # every version claimed once
-    v, live, _, rows = txn.snapshot(p)
+    v, live, _, rows, _ = txn.snapshot(p)
     assert v == 160
     assert sorted(map(str, live)) == sorted(dirs)  # no append lost
     assert rows == 160  # every retry re-added its count to the winner's
@@ -668,7 +670,7 @@ def test_failed_first_write_leaves_no_index(spark, tmp_path, failure):
         assert "logs-a" not in cat.list_indices()
     cat.write_index(_df(spark, 0, 3, "X"), "logs-a", mode="error", id_col="k")
     assert {r["tag"] for r in cat.read_index("logs-a").collect()} == {"x"}
-    assert cat._read_meta("logs-a")["default_pipeline"] == "norm"
+    assert cat.get_settings("logs-a")["default_pipeline"] == "norm"
     with pytest.raises(Exception, match="logs-a"):
         cat.write_index(_df(spark, 0, 3, "X"), "logs-a", mode="error", id_col="k")
 
@@ -832,6 +834,119 @@ def test_rewrite_that_loses_to_a_dropping_winner_rederives(spark, tmp_path):
     )
 
 
+# ------------------------------------------- settings commit with the data
+
+
+@pytest.mark.parametrize("step", ["before_claim", "after_manifest_claim", "before_drop"])
+def test_settings_crash_leaves_old_or_new_settings(spark, tmp_path, monkeypatch, step):
+    """A default catalog's put_settings dies before it claims its version,
+    after the claim, or before pruning the log.  A fresh Catalog then reads
+    exactly the old or the new settings, over unchanged data."""
+    root = str(tmp_path / "idx")
+    cat = Catalog(spark, root)
+    bounded(lambda: cat.write_index(_df(spark, 0, 5, "old"), "t", id_col="k"))
+    old = Catalog(spark, root).get_settings("t")
+
+    def crash(*_args, **_kwargs):
+        raise _Crash(step)
+
+    if step == "before_claim":
+        monkeypatch.setattr(txn, "try_commit", crash)
+    elif step == "after_manifest_claim":
+        claim = txn.try_commit
+
+        def claim_then_crash(*args, **kwargs):
+            assert claim(*args, **kwargs)
+            crash()
+
+        monkeypatch.setattr(txn, "try_commit", claim_then_crash)
+    else:
+        monkeypatch.setattr(txn, "drop_superseded", crash)
+    with pytest.raises(_Crash):
+        bounded(lambda: cat.put_settings("t", {"ilm_phase": "warm"}))
+    monkeypatch.undo()
+
+    new = {**old, "ilm_phase": "warm"}
+    assert Catalog(spark, root).get_settings("t") == (old if step == "before_claim" else new)
+    assert bounded(lambda: _rows(spark, root)) == {(i, "old") for i in range(5)}
+
+
+def _claims_after(monkeypatch, other):
+    """Run ``other()`` just before the next manifest claim, which then
+    loses the race to the version ``other`` committed."""
+    claim, pending = txn.try_commit, [other]
+
+    def claim_after_other(*args, **kwargs):
+        if pending:
+            pending.pop()()
+        return claim(*args, **kwargs)
+
+    monkeypatch.setattr(txn, "try_commit", claim_after_other)
+
+
+@pytest.mark.parametrize("loser", ["write_index", "put_settings"])
+def test_write_racing_put_settings_loses_neither(spark, tmp_path, monkeypatch, loser):
+    """An upsert and a settings change race for the same version, each
+    losing once: the upsert re-derives on the winner's settings, the
+    settings change merges into the winner's snapshot.  Both land."""
+    root = str(tmp_path / "idx")
+    cat = Catalog(spark, root)
+    bounded(lambda: cat.write_index(_df(spark, 0, 4, "base"), "t", id_col="k"))
+
+    def upsert():
+        cat.write_index(_df(spark, 2, 6, "new"), "t", operation="upsert", id_col="k")
+
+    def put():
+        cat.put_settings("t", {"ilm_phase": "warm"})
+
+    first, second = (upsert, put) if loser == "write_index" else (put, upsert)
+    _claims_after(monkeypatch, second)
+    bounded(first)
+    monkeypatch.undo()
+
+    assert txn.latest(cat.path("t"))[0] == 3  # the seed, the winner, the loser's retry
+    assert Catalog(spark, root).get_settings("t")["ilm_phase"] == "warm"
+    expect = {(i, "base") for i in range(2)} | {(i, "new") for i in range(2, 6)}
+    assert bounded(lambda: _rows(spark, root)) == expect
+
+
+def test_follow_of_a_missing_leader_index_leaves_nothing(spark, tmp_path):
+    """Following an index the leader does not have raises
+    IndexNotFoundError and leaves nothing at the follower's name: it does
+    not exist and takes a first write like any new index."""
+    leader = Catalog(spark, str(tmp_path / "leader"), transactional=True)
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    with pytest.raises(IndexNotFoundError, match="nope"):
+        bounded(lambda: cat.follow_index(leader, "nope", "f"))
+    assert os.listdir(cat.root) == [] and not cat.exists("f")
+    bounded(lambda: cat.write_index(_df(spark, 0, 3, "a"), "f"))
+    assert cat.count_index("f") == 3
+
+
+def test_unfollow_during_a_poll_holds(spark, tmp_path, monkeypatch):
+    """An unfollow that lands while a poll copies the leader's new data is
+    not undone: the poll re-reads the follower's snapshot before it claims,
+    finds no follower and commits nothing; the index then takes writes."""
+    leader = Catalog(spark, str(tmp_path / "leader"), transactional=True)
+    bounded(lambda: leader.write_index(_df(spark, 0, 6, "a"), "t", id_col="k"))
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    bounded(lambda: cat.follow_index(leader, "t", "f"))
+    bounded(lambda: leader.write_index(_df(spark, 6, 9, "b"), "t"))
+    copy = shutil.copytree
+
+    def unfollow_then_copy(*args, **kwargs):
+        cat.unfollow_index("f")
+        return copy(*args, **kwargs)
+
+    monkeypatch.setattr(shutil, "copytree", unfollow_then_copy)
+    assert bounded(lambda: cat.ccr_poll("f"))["synced"] is False
+    monkeypatch.undo()
+
+    assert not [k for k in cat.get_settings("f") if k.startswith("ccr_")]
+    bounded(lambda: cat.write_index(_df(spark, 20, 22, "c"), "f"))
+    assert cat.count_index("f") == 8
+
+
 # ------------------------------------------------------------- one layout
 
 
@@ -922,6 +1037,30 @@ def _ccr_poll(spark, cat, tmp_path):
     return ["f"]
 
 
+def _unfollow(spark, cat, tmp_path):
+    leader = _seeded(spark, Catalog(spark, str(tmp_path / "leader"), transactional=True))
+    cat.follow_index(leader, "t", "f")
+    cat.unfollow_index("f")
+    return ["f"]
+
+
+def _put_settings(spark, cat, tmp_path):
+    _seeded(spark, cat).put_settings("t", {"index_sort": "k"})
+    return ["t"]
+
+
+def _ilm_tick(spark, cat, tmp_path):
+    from elasticsearch_hadoop_spark.ilm import apply_lifecycle
+
+    for gen in ("ilm-000001", "ilm-000002"):
+        _seeded(spark, cat, name=gen)
+    cat.put_settings("ilm-000001", {"created_at": 0.0})
+    cat.put_alias("ilm", "ilm-000001", "ilm-000002")
+    warm = {"min_age": "1d", "actions": {"forcemerge": {"max_num_segments": 1}, "readonly": {}}}
+    assert apply_lifecycle(cat, "ilm", {"policy": {"phases": {"warm": warm}}})
+    return ["ilm-000001", "ilm-000002"]
+
+
 def _stream_append(spark, cat, tmp_path):
     _seeded(spark, cat).read_index_stream("t")  # creates the _stream farm
     cat.write_index(_df(spark, 6, 9, "b"), "t")
@@ -942,6 +1081,9 @@ _WRITES = {
     "rollover": _rollover,
     "write_data_stream": _data_stream,
     "ccr_poll": _ccr_poll,
+    "unfollow_index": _unfollow,
+    "put_settings": _put_settings,
+    "ilm_tick": _ilm_tick,
     "stream_append": _stream_append,
 }
 
@@ -949,13 +1091,15 @@ _WRITES = {
 @pytest.mark.parametrize("write", sorted(_WRITES))
 def test_every_write_leaves_one_layout(spark, tmp_path, write):
     """After each public write API the index root holds only the log and
-    its data pool (plus the stream farm once streaming is enabled), and
-    the recorded count equals the scan count."""
-    import os
-
+    its data pool (plus the stream farm once streaming is enabled), the
+    catalog root holds only indices and catalog-wide ``_*`` documents (no
+    per-index file beside an index), and the recorded count equals the
+    scan count."""
     cat = Catalog(spark, str(tmp_path / "idx"))
     try:
         names = bounded(lambda: _WRITES[write](spark, cat, tmp_path))
+        for entry in os.listdir(cat.root):
+            assert cat.exists(entry) or entry.startswith("_"), entry
         layout = {"_txn", "_data"} | ({"_stream"} if write == "stream_append" else set())
         for name in names:
             assert set(os.listdir(cat.path(name))) == layout, name
