@@ -181,6 +181,8 @@ class Catalog:
         breakers racing a fresh re-acquire) accepted as a documented
         tradeoff: the alternative is pid-liveness probing for a registry
         whose entries are themselves keep-alive-expiring hints."""
+        import time as _time
+
         lock = f"{self._pits_path()}.lock"
         for _ in range(500):
             try:
@@ -188,12 +190,12 @@ class Catalog:
                 break
             except FileExistsError:
                 try:
-                    if time.time() - os.path.getmtime(lock) > 5.0:
+                    if _time.time() - os.path.getmtime(lock) > 5.0:
                         os.unlink(lock)  # stale: holder died mid-operation
                         continue
                 except FileNotFoundError:
                     continue  # released (or another breaker won): retry now
-                time.sleep(0.01)
+                _time.sleep(0.01)
         else:
             raise TimeoutError(f"could not acquire PIT registry lock {lock}")
         try:
@@ -316,9 +318,13 @@ class Catalog:
         fields from the recorded schema; none of them scans rows."""
         out: dict[str, dict] = {}
         for idx in self.resolve_pattern(name):
+            path = self.path(idx)
+            size = 0
+            for root, _dirs, files in os.walk(path):
+                size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
             out[idx] = {
                 "doc_count": self.count_index(idx),
-                "store_bytes": self._store_bytes(idx),
+                "store_bytes": size,
                 "fields": self._read_files(idx).columns,
             }
         return out
@@ -527,7 +533,8 @@ class Catalog:
 
         # a directory whose first write died before committing is not an
         # index yet: the retry creates it (template, mode="error")
-        existed = self.exists(name)
+        version, *_, settings = txn.snapshot(self.path(name))
+        existed = bool(version)
         if existed and mode == "error":
             raise IndexExistsError(name)
         if existed and mode == "ignore":
@@ -539,7 +546,7 @@ class Catalog:
         # them again — in ES, index.default_pipeline runs on EVERY indexing
         # request to the index, not just the first batch (ADVICE r4).
         created = None if existed else self._template_settings(name)
-        settings = txn.snapshot(self.path(name))[4] if existed else created
+        settings = settings if existed else created
         if existed:
             # belt: the commit layer re-checks, but failing before the
             # ingest pipeline / sort work is the better error surface.
@@ -756,6 +763,14 @@ class Catalog:
                 f"{name!r} is a CCR follower (read-only) — unfollow_index first"
             )
 
+    def _refuse_follower(self, name: str) -> bool:
+        """Refuse a write to a CCR follower before it runs any job (the
+        settings hook re-checks the snapshot each claim builds on); True
+        when ``name`` has no commit yet, so the write creates it."""
+        version, *_, settings = txn.snapshot(self.path(name))
+        self._assert_not_follower(name, settings)
+        return not version
+
     def _settings_hook(self, name: str, created: dict | None = None, changes: dict | None = None):
         """txn's ``settings`` hook for a data commit to ``name``: on the
         snapshot the claim builds on, refuse a CCR follower and merge in
@@ -804,8 +819,8 @@ class Catalog:
         lets contract checks ride the write job's own Observation metrics
         instead of paying a separate pre-check job; a raise aborts the
         commit with the index untouched."""
-        fresh = not self.exists(name)
         target = self.path(name)
+        fresh = self._refuse_follower(name)
         hook = self._settings_hook(name, created, changes)
         # (dirs, rows, written rows, written dir) of the latest attempt —
         # the committed one once commit_replace returns
@@ -868,7 +883,7 @@ class Catalog:
         index's and the frame's (txn.merge_schema_json) — a lost race
         retries only the (tiny) manifest write, never the data.  Settings
         as in ``_commit_build``."""
-        fresh = not self.exists(name)
+        fresh = self._refuse_follower(name)
         target = self.path(name)
         d = txn.new_data_dir(target)
         try:
@@ -977,16 +992,20 @@ class Catalog:
         return self._resize_index(source, target, target_shards, "split")
 
     def clone_index(self, source: str, target: str) -> dict:
-        """ES ``POST /<src>/_clone/<dst>``: byte-identical copy with the
-        same layout (ES clones via hard links; copytree is the portable
-        analogue — no rows are read or rewritten)."""
+        """ES ``POST /<src>/_clone/<dst>``: byte-identical copy of the live
+        snapshot's data dirs, same layout (ES clones via hard links; a file
+        copy is the portable analogue — no rows are read or rewritten).
+        The clone's first commit records the source's schema, row count and
+        settings minus, as in _resize_index, follower identity (ES:
+        unfollow before clone), so no clone is ever a follower."""
         src = self._one_index(source, "_clone")
         if self.exists(target):
             raise IndexExistsError(f"target index {target!r} already exists")
-        shutil.copytree(self.path(src), self.path(target))
-        # the copied log carries the source's settings minus, as in
-        # _resize_index, follower identity (ES: unfollow before clone)
-        self.put_settings(target, dict.fromkeys(_CCR_KEYS))
+        _, dirs, schema, rows, settings = txn.snapshot(self.path(src))
+        meta = {"replace": True, "schema": schema, "rows": rows,
+                "settings": txn.merge_settings(settings, dict.fromkeys(_CCR_KEYS))}
+        if not txn.try_commit(self.path(target), 1, txn.copy_dirs(dirs, self.path(target)), meta):
+            raise IndexExistsError(f"target index {target!r} already exists")
         shards = self._data_file_count(src)
         return {
             "source": src,
@@ -1023,15 +1042,18 @@ class Catalog:
         time-travel horizon caveat of read_index_version applies: a
         vacuum inside the window invalidates the pinned dirs."""
         import base64
+        import time as _time
 
         idx = self._one_index(name, "a point in time")
         if not self.transactional:
             raise ValueError(f"index {idx!r} is not transactional")
         version, _ = txn.latest(self.path(idx))
-        now = time.time() if now is None else now
+        now = _time.time() if now is None else now
         # a per-open nonce keeps every _pit open a DISTINCT context (ES
         # semantics) — without it two PITs on the same snapshot would
         # share one registry entry and close/extend each other
+        from elasticsearch_hadoop_spark.durations import parse_duration
+
         def _open(state: dict):
             state["seq"] += 1
             pit_id = base64.b64encode(
@@ -1054,8 +1076,9 @@ class Catalog:
         (ES's search_context_missing); a ``keep_alive`` extends the id
         from ``now``."""
         import base64
+        import time as _time
 
-        now = time.time() if now is None else now
+        now = _time.time() if now is None else now
 
         if keep_alive is None:
             # lock-free fast path: atomic-replace writes mean a plain read
@@ -1526,20 +1549,8 @@ class Catalog:
         not_synced = {"leader_version": lv, "synced": False}
         if lv == pointer["ccr_leader_version"]:
             return {**not_synced, "follower_version": txn.latest(fpath)[0]}
-        froot = txn.data_root(fpath)
-        for d in ldirs:
-            tgt = os.path.join(froot, os.path.basename(d.rstrip("/")))
-            if not os.path.isdir(tgt):
-                # immutable once committed: copied once, to a temp name
-                # renamed into place, so no poll sees a half-copied dir
-                # (txn.py's "complete before the claim", on the follower)
-                tmp = f"{tgt}.tmp.{uuid.uuid4().hex[:8]}"
-                shutil.copytree(d, tmp)
-                try:
-                    os.rename(tmp, tgt)
-                except OSError:  # another poll renamed an identical copy first
-                    shutil.rmtree(tmp, ignore_errors=True)
-        for _ in range(500):
+        txn.copy_dirs(ldirs, fpath)
+        for attempt in range(500):
             fv, fdirs, _, _, base = txn.snapshot(fpath)
             base = base if fv else {**lsettings, **pointer}
             if "ccr_leader_root" not in base or base["ccr_leader_version"] >= lv:
@@ -1550,6 +1561,7 @@ class Catalog:
                 live = {os.path.basename(d.rstrip("/")) for d in ldirs}
                 self._retire(fpath, fv + 1, [d for d in fdirs if os.path.basename(d) not in live])
                 return {"leader_version": lv, "follower_version": fv + 1, "synced": True}
+            txn.backoff(attempt)
         raise txn.CommitConflictError(f"poll of {follower_index!r} lost 500 races")
 
     def unfollow_index(self, follower_index: str) -> None:
@@ -1883,17 +1895,17 @@ class Catalog:
         """ES ``GET _cat/indices``: one row per managed index — name,
         docs.count, store.size (bytes on disk) — from the row counts the
         manifests record and a directory walk, no data scan."""
-        return [
-            {"index": n, "docs_count": self.count_index(n), "store_bytes": self._store_bytes(n)}
-            for n in self.list_indices()
-        ]
-
-    def _store_bytes(self, idx: str) -> int:
-        """Bytes on disk under the index: its log, data pool and stream farm."""
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(self.path(idx)) for f in files
-        )
+        out = []
+        for n in self.list_indices():
+            size = 0
+            for root, _dirs, files in os.walk(self.path(n)):
+                size += sum(
+                    os.path.getsize(os.path.join(root, f)) for f in files
+                )
+            out.append(
+                {"index": n, "docs_count": self.count_index(n), "store_bytes": size}
+            )
+        return out
 
     def sql_query(self, sql: str, pattern: str = "*") -> DataFrame:
         """ES SQL (`_sql` endpoint) veneer: every managed index matching

@@ -242,6 +242,7 @@ def apply_lifecycle(catalog, target: str, policy, now: float | None = None):
         # target, in order — ES moves sequentially, so a generation whose
         # age jumped past warm (e.g. the tick cron was down) still
         # forcemerges before its cold snapshot
+        deleted = False
         for phase in _PHASE_ORDER[
             _PHASE_ORDER.index(applied) + 1: _PHASE_ORDER.index(target_phase) + 1
         ]:
@@ -257,6 +258,7 @@ def apply_lifecycle(catalog, target: str, policy, now: float | None = None):
                 actions.append(
                     {"index": idx, "phase": "delete", "action": "delete"}
                 )
+                deleted = True
                 break
             if "forcemerge" in spec_actions:
                 n = int(spec_actions["forcemerge"].get("max_num_segments", 1))
@@ -281,4 +283,6 @@ def apply_lifecycle(catalog, target: str, policy, now: float | None = None):
             # record the transition: one settings commit on top of whatever
             # the actions above committed
             catalog.put_settings(idx, stamp)
+        if deleted:
+            continue
     return actions

@@ -56,6 +56,7 @@ import contextlib
 import json
 import math
 import os
+import random
 import shutil
 import time
 import uuid
@@ -219,6 +220,30 @@ def new_data_dir(index_path: str) -> str:
     return path
 
 
+def copy_dirs(dirs: list[str], index_path: str) -> list[str]:
+    """Copy committed data dirs of another index into this one's pool under
+    their own names; returns the copies.  Immutable once committed: a dir
+    is copied at most once across the target's lifetime, incremental by
+    design.  Each goes to a private temp name renamed into place, so a
+    killed or concurrent copy never leaves a half-copied dir that a later
+    one would treat as complete — "data dirs are complete before the
+    manifest claim" must hold on the target too."""
+    out = []
+    for d in dirs:
+        tgt = os.path.join(data_root(index_path), os.path.basename(d.rstrip("/")))
+        if not os.path.isdir(tgt):
+            tmp = f"{tgt}.tmp.{uuid.uuid4().hex[:8]}"
+            shutil.copytree(d, tmp)
+            try:
+                os.rename(tmp, tgt)
+            except OSError:
+                # another copy renamed its copy first — identical content
+                # (immutable source), drop ours
+                shutil.rmtree(tmp, ignore_errors=True)
+        out.append(tgt)
+    return out
+
+
 def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None = None) -> bool:
     """Atomically claim ``version``; True iff this writer won.  The body is
     fully written to a private temp file first, then published with
@@ -369,6 +394,14 @@ def enable_streaming(index_path: str) -> str:
     return stream_root(index_path)
 
 
+def backoff(attempt: int) -> None:
+    """The jittered sleep after lost claim ``attempt`` of a retry loop that
+    re-claims without recomputing.  It keeps a heavily-contended log fair:
+    without it a loser can starve, since every retry pays a listdir while
+    winners immediately contend again."""
+    time.sleep(random.random() * min(0.05, 0.001 * (attempt + 1)))
+
+
 def commit_append(
     index_path: str,
     data_dir: str | None,
@@ -388,12 +421,8 @@ def commit_append(
     derives them (``base`` is None when the claim creates the index); the
     hook runs on every attempt, and what it raises aborts the commit.  A
     ``data_dir`` of None appends nothing (a settings change) and commits
-    nothing if the settings come out unchanged.  Jittered backoff keeps a
-    heavily-contended log fair (without it a loser can starve: every
-    retry pays a listdir while winners immediately contend again).
-    Returns the latest version afterwards."""
-    import random
-
+    nothing if the settings come out unchanged.  A lost claim sleeps
+    ``backoff`` before the next.  Returns the latest version afterwards."""
     for attempt in range(max_retries):
         version, body = _body_at(index_path)
         dirs, recorded, base_rows, base = _state(index_path, body)
@@ -407,7 +436,7 @@ def commit_append(
         }
         if try_commit(index_path, version + 1, dirs + ([data_dir] if data_dir else []), meta=meta):
             return version + 1
-        time.sleep(random.random() * min(0.05, 0.001 * (attempt + 1)))
+        backoff(attempt)
     raise CommitConflictError(f"append to {index_path} lost {max_retries} races")
 
 
@@ -452,7 +481,7 @@ def commit_replace(
         except Exception as ex:
             if data_dir:
                 shutil.rmtree(data_dir, ignore_errors=True)  # never committed
-            if not derive or latest(index_path)[0] == version:
+            if recompute is None or latest(index_path)[0] == version:
                 raise
             version, data_dir, error = None, None, ex
             continue

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from elasticsearch_hadoop_spark import txn
 from elasticsearch_hadoop_spark.catalog import Catalog
 from elasticsearch_hadoop_spark.esql import EsqlError, esql
 from elasticsearch_hadoop_spark.operators.similarity import hamming_topk
@@ -89,6 +90,9 @@ def test_clone_of_follower_mints_plain_writable_index(spark, tmp_path):
     fcat.clone_index("t_f", "t_clone")
     meta = fcat.get_settings("t_clone")
     assert not any(k.startswith("ccr_") for k in meta), meta
+    # the clone's one and only commit is already plain: it never is a follower
+    assert txn.latest(fcat.path("t_clone"))[0] == 1
+    assert txn.manifest_body(fcat.path("t_clone"), 1)["settings"] == meta
     extra = spark.range(2).select((F.col("id") + 100).alias("k"), F.lit(0).cast("long").alias("v"))
     fcat.write_index(extra, "t_clone")
     assert fcat.count_index("t_clone") == 22

@@ -947,6 +947,33 @@ def test_unfollow_during_a_poll_holds(spark, tmp_path, monkeypatch):
     assert cat.count_index("f") == 8
 
 
+_FOLLOWER_REWRITES = {
+    "delete_by_query": lambda cat, spark: cat.delete_by_query("f", {"term": {"k": 1}}),
+    "update_by_query": lambda cat, spark: cat.update_by_query("f", {"term": {"k": 1}}, {"tag": F.lit("u")}),
+    "compact_index": lambda cat, spark: cat.compact_index("f", target_files=1),
+    "write_bucketed": lambda cat, spark: cat.write_bucketed(_df(spark, 0, 3, "b"), "f", ["k"], 2),
+}
+
+
+@pytest.mark.parametrize("rewrite", sorted(_FOLLOWER_REWRITES))
+def test_follower_refuses_a_rewrite_before_any_job(spark, tmp_path, rewrite):
+    """A rewrite of a CCR follower is refused before it runs a Spark job
+    and leaves the follower's log as it was."""
+    from tests.conftest import count_jobs
+
+    leader = Catalog(spark, str(tmp_path / "leader"), transactional=True)
+    bounded(lambda: leader.write_index(_df(spark, 0, 6, "a"), "t", id_col="k"))
+    cat = Catalog(spark, str(tmp_path / "idx"))
+    bounded(lambda: cat.follow_index(leader, "t", "f"))
+
+    def refused():
+        with pytest.raises(ValueError, match="is a CCR follower"):
+            _FOLLOWER_REWRITES[rewrite](cat, spark)
+
+    assert bounded(lambda: count_jobs(spark, refused))[1] == 0
+    assert txn.latest(cat.path("f"))[0] == 1
+
+
 # ------------------------------------------------------------- one layout
 
 
