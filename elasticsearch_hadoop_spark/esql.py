@@ -13,7 +13,8 @@ by a pipe chain of processing commands,
 executed by Elastic's own block-at-a-time compute engine.  Here the same
 text compiles to the DataFrame algebra and Catalyst runs it — WHERE
 pushes to the scan, STATS is one partial+final hash aggregation,
-SORT+LIMIT fuses to TakeOrderedAndProject.  There is no second engine to
+SORT fuses with its LIMIT (or the result cap below) into
+TakeOrderedAndProject.  There is no second engine to
 maintain, which IS the Spark-first answer to ES|QL's executor.
 
 Supported commands (the documented core; anything else raises):
@@ -51,7 +52,8 @@ Supported commands (the documented core; anything else raises):
   variable-free token sequence (the categorize_text agg's documented
   deviation from ES's Drain-style merge applies here too).
 - ``SORT col [ASC|DESC] [NULLS FIRST|NULLS LAST][, ...]``
-- ``LIMIT n``
+- ``LIMIT n`` — clamped to ES's hard result cap,
+  ``esql.query.result_truncation_max_size`` (``RESULT_CAP``, 10,000).
 - ``KEEP c1, c2`` / ``DROP c1, c2`` (``*`` wildcards per ES|QL)
 - ``RENAME old AS new[, ...]``
 - ``MV_EXPAND col`` — one row per array element (explode).
@@ -93,6 +95,15 @@ Supported commands (the documented core; anything else raises):
   ``normalizer=minmax``.  Non-score columns merge with ``max`` ignoring
   nulls (deterministic; ES keeps the first non-null branch value).
 
+Result size: a pipeline whose result is in a SORT's order (the last
+SORT followed only by WHERE, EVAL, KEEP, DROP, RENAME or LIMIT) gets
+``LIMIT 10000`` appended, as ES appends its cap; the optimizer pushes it
+into the sort, which then plans as one TakeOrderedAndProject (no range
+exchange, no sampling job).  Any other pipeline stays uncapped: a cap
+there would keep arbitrary rows, and a root CollectLimit would run extra
+jobs.  ES's implicit default ``LIMIT 1000`` is NOT applied — results up to
+the cap are returned whole.
+
 Explicit non-goals (raise "unsupported command", by design):
 
 - ``SAMPLE p`` — needs a random source; every query here is checked
@@ -131,6 +142,15 @@ from elasticsearch_hadoop_spark.runtime_fields import _FLOAT_LIT
 
 class EsqlError(ValueError):
     pass
+
+
+# ES's hard cap on the rows an ES|QL query returns
+# (``esql.query.result_truncation_max_size``)
+RESULT_CAP = 10_000
+
+# commands after which the rows are still in the last SORT's order (the
+# optimizer pushes a LIMIT through them into that sort)
+_ORDER_KEEPING = {"WHERE", "EVAL", "KEEP", "DROP", "RENAME", "LIMIT"}
 
 
 # scalar functions an expression may call (ES|QL name -> Spark SQL name).
@@ -2101,7 +2121,7 @@ def esql(
 
     return _apply_stages(
         df, stages[1:], tables, catalog, enrich_policies, ts_spec=ts_spec,
-        score_requested=score_requested,
+        score_requested=score_requested, cap=True,
     )
 
 
@@ -2333,17 +2353,23 @@ def _apply_stages(
     enrich_policies,
     ts_spec: dict | None = None,
     score_requested: bool = False,
+    cap: bool = False,
 ) -> DataFrame:
+    """Run ``stage_list`` over ``df``.  With ``cap``, a result left in a
+    SORT's order is limited to ``RESULT_CAP`` rows (module docstring)."""
+    ordered = False
     for stage in stage_list:
         stage = stage.strip()
         cm = re.match(r"^([A-Za-z_]+)\b(.*)$", stage, flags=re.S)
         if not cm:
             raise EsqlError(f"bad command: {stage!r}")
         cmd, body = cm.group(1).upper(), cm.group(2).strip()
+        ordered = ordered and cmd in _ORDER_KEEPING
         if cmd == "WHERE":
             blanked_w = _blank_literals(body)
             if re.search(r"\bKNN\s*\(", blanked_w, flags=re.I):
                 df = _where_knn(df, body)
+                ordered = False
             elif (
                 score_requested
                 and "_score" in df.columns
@@ -2355,6 +2381,7 @@ def _apply_stages(
                 # carrying its own _score must not get BM25 silently
                 # added); a later DROP _score demotes WHERE to pure filter
                 df = _where_scored(df, body)
+                ordered = False  # the score attach is a join
             else:
                 df = df.filter(_where_pred(body))
         elif cmd == "EVAL":
@@ -2435,8 +2462,9 @@ def _apply_stages(
                     )
                 order.append(col)
             df = df.orderBy(*order)
+            ordered = True
         elif cmd == "LIMIT":
-            df = df.limit(int(body))
+            df = df.limit(min(int(body), RESULT_CAP))
         elif cmd == "KEEP":
             df = df.select(*_expand_cols(df, [c.strip() for c in _split_top(body)]))
         elif cmd == "DROP":
@@ -2584,4 +2612,4 @@ def _apply_stages(
             df = _fuse(df, body)
         else:
             raise EsqlError(f"unsupported command {cmd!r}")
-    return df
+    return df.limit(RESULT_CAP) if cap and ordered else df

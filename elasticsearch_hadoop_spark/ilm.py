@@ -50,6 +50,8 @@ import json
 import os
 import time
 
+from elasticsearch_hadoop_spark.catalog import _write_json
+
 _PHASE_ORDER = ["hot", "warm", "cold", "frozen", "delete"]
 
 
@@ -134,8 +136,7 @@ def put_lifecycle(catalog, name: str, policy: dict) -> None:
     except FileNotFoundError:
         policies = {}
     policies[name] = policy
-    with open(path, "w") as f:
-        json.dump(policies, f)
+    _write_json(path, policies)
 
 
 def get_lifecycle(catalog, name: str) -> dict:

@@ -136,9 +136,10 @@ def search(
     ``size`` (default 10) and ``from``.
 
     Scale: the score is one codegen projection; sort+size plans as
-    TakeOrderedAndProject (per-partition heaps).  ``from`` pages by
-    limiting to from+size FIRST, then row_number over that tiny set —
-    never a global window over the corpus."""
+    TakeOrderedAndProject (per-partition heaps of ``from + size`` rows).
+    ``from`` is Spark's Offset over that limit, which the planner folds
+    into the same TakeOrderedAndProject: a collected page is one job and
+    one stage, with no window and no exchange, whatever its ``from``."""
     pred, score = _pred_and_score(body.get("query", {"match_all": {}}))
     out = df.filter(pred).withColumn(score_col, score)
     if "min_score" in body:
@@ -165,17 +166,7 @@ def search(
     size = int(body.get("size", 10))
     offset = int(body.get("from", 0))
     page = out.orderBy(*order).limit(offset + size)
-    if offset:
-        w = Window.orderBy(*order)
-        page = (
-            page.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") > offset)
-            .drop("__rn")
-            # the filter/drop above is not contractually order-preserving;
-            # re-assert the sort (cheap: at most `size` rows remain)
-            .orderBy(*order)
-        )
-    return page
+    return page.offset(offset) if offset else page
 
 
 def search_after(

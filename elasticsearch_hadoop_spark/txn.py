@@ -259,6 +259,11 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
     size the retention window above the longest write job, the check turns
     a silent corruption into a crash for jobs that overrun it anyway.
 
+    ``meta`` may carry the running ``replaced`` flag when the caller knows
+    it (an append keeps the flag of the manifest it built on); otherwise
+    it is worked out here, reading the predecessor for a non-replace
+    claim, and a pruned predecessor loses the claim.
+
     A claim that lands in a version slot drop_superseded pruned is
     withdrawn and reported lost, like any lost race."""
     init_log(index_path)
@@ -274,17 +279,20 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
             f"commit of {index_path} v{version} references data dirs that no "
             f"longer exist (vacuumed mid-write?): {swept}"
         )
-    replaced = bool((meta or {}).get("replace")) and version > 1
-    if version > 1 and not replaced:
-        try:
-            replaced = has_replace_commit(index_path, version - 1)
-        except KeyError:
-            return False  # predecessor pruned: a newer version is committed
+    meta = meta or {}
+    replaced = meta.get("replaced")
+    if replaced is None:
+        replaced = bool(meta.get("replace")) and version > 1
+        if version > 1 and not replaced:
+            try:
+                replaced = has_replace_commit(index_path, version - 1)
+            except KeyError:
+                return False  # predecessor pruned: a newer version is committed
     body = {
         "version": version,
         "dirs": names,
         "ts": time.time(),
-        **(meta or {}),
+        **meta,
         "replaced": replaced,
     }
     tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
@@ -310,7 +318,7 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
     # backfill re-publish it.  Replace commits beyond v1 never publish:
     # they would re-deliver every row to a running stream, and new streams
     # over such logs are refused (has_replace_commit).
-    if (version == 1 or not (meta or {}).get("replace")) and os.path.isdir(
+    if (version == 1 or not meta.get("replace")) and os.path.isdir(
         stream_root(index_path)
     ):
         try:
@@ -433,6 +441,7 @@ def commit_append(
             "schema": merge_schema_json(recorded, schema, partition_cols),
             "rows": base_rows + rows,
             "settings": new,
+            "replaced": body.get("replaced", False),
         }
         if try_commit(index_path, version + 1, dirs + ([data_dir] if data_dir else []), meta=meta):
             return version + 1

@@ -35,6 +35,23 @@ def count_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def plan_nodes(df):
+    """The physical operators of ``df``'s executed plan, root first, as JVM
+    ``SparkPlan`` objects: an AQE wrapper is listed, then walked into, and
+    whole-stage-codegen wrappers are listed with their children.  Check
+    ``node.nodeName()`` and the node's own fields, not explain text."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop(0)
+        out.append(node)
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        else:
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def bounded(fn, seconds=180):
     """Run ``fn`` in a daemon thread and return its result; fail (instead
     of stalling the suite) if it has not returned after ``seconds``.  No

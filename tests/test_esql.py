@@ -1435,3 +1435,88 @@ def test_stats_top_validation_regressions(spark):
         esql('FROM t | STATS z = TOP(v, x, "desc") BY g', tables={"t": df})
     with pytest.raises(EsqlError, match="int32"):
         esql('FROM t | STATS z = TOP(v, 2147483648, "desc")', tables={"t": df})
+
+
+# ES|QL's result cap (esql.RESULT_CAP, ES's result_truncation_max_size)
+
+
+@pytest.fixture(scope="module")
+def many(spark):
+    """25,000 rows over 3 partitions: ``v`` is a permutation of
+    0..24,999, ``g`` has 12,000 groups, ``t`` 5."""
+    return {
+        "many": spark.range(0, 25_000, numPartitions=3).selectExpr(
+            "id", "(id * 7919) % 25000 AS v", "id % 12000 AS g", "id % 5 AS t"
+        )
+    }
+
+
+def test_sort_returns_the_first_10000_rows_in_order(spark, many):
+    rows = esql("FROM many | SORT v DESC | KEEP v", tables=many).collect()
+    assert [r["v"] for r in rows] == list(range(24_999, 14_999, -1))
+
+
+def test_limit_above_the_cap_returns_10000_rows(spark, many):
+    assert esql("FROM many | LIMIT 20000", tables=many).count() == 10_000
+    rows = esql("FROM many | SORT v | LIMIT 20000 | KEEP v", tables=many).collect()
+    assert [r["v"] for r in rows] == list(range(10_000))
+
+
+def test_unsorted_pipeline_returns_every_row(spark, many):
+    assert esql("FROM many | WHERE v >= 0 | EVAL w = v + 1", tables=many).count() == 25_000
+    assert esql("FROM many | STATS n = COUNT(*) BY g", tables=many).count() == 12_000
+    # a SORT whose order a later STATS discards leaves the result uncapped
+    assert esql("FROM many | SORT v | STATS n = COUNT(*) BY g", tables=many).count() == 12_000
+
+
+@pytest.mark.parametrize("partitions", [1, 7])
+def test_capped_result_is_the_same_at_any_partition_count(spark, many, partitions):
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        rows = esql(
+            "FROM many | STATS n = COUNT(*) BY g | SORT n DESC, g", tables=many
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    # g < 1,000 holds 3 ids, every other group 2
+    assert [(r["g"], r["n"]) for r in rows] == [
+        (g, 3 if g < 1_000 else 2) for g in range(10_000)
+    ]
+
+
+def test_sorted_stats_plans_one_top_n_in_two_jobs(spark, many):
+    """The bench's ``STATS ... BY | SORT`` shape: the appended cap makes
+    the sort a TakeOrderedAndProject over the aggregate — no range
+    exchange and no sampling job."""
+    from tests.conftest import count_jobs, plan_nodes
+
+    out = esql(
+        "FROM many | WHERE v >= 5 | STATS n = COUNT(*), top = MAX(v) BY t | SORT t",
+        tables=many,
+    )
+    nodes = plan_nodes(out)
+    names = [n.nodeName() for n in nodes]
+    assert names[:2] == ["AdaptiveSparkPlan", "TakeOrderedAndProject"]
+    assert "Sort" not in names
+    assert not any(
+        n.nodeName() == "Exchange"
+        and n.outputPartitioning().getClass().getSimpleName() == "RangePartitioning"
+        for n in nodes
+    )
+    rows, jobs = count_jobs(spark, out.collect)
+    assert [r["t"] for r in rows] == [0, 1, 2, 3, 4] and jobs == 2
+
+
+def test_sort_limit_and_sort_free_pipelines_keep_one_job(spark, many):
+    from tests.conftest import count_jobs, plan_nodes
+
+    top = esql("FROM many | SORT v DESC | LIMIT 5 | KEEP v", tables=many)
+    assert plan_nodes(top)[0].nodeName() == "TakeOrderedAndProject"
+    rows, jobs = count_jobs(spark, top.collect)
+    assert [r["v"] for r in rows] == [24_999, 24_998, 24_997, 24_996, 24_995]
+    assert jobs == 1
+    plain = esql("FROM many | WHERE v < 100 | EVAL w = v * 2", tables=many)
+    assert "CollectLimit" not in {n.nodeName() for n in plan_nodes(plain)}
+    rows, jobs = count_jobs(spark, plain.collect)
+    assert len(rows) == 100 and jobs == 1

@@ -85,6 +85,24 @@ def test_policy_storage(cat, policy):
         get_lifecycle(cat, "ghost")
 
 
+def test_put_lifecycle_dying_mid_write_keeps_the_old_policies(cat, policy, monkeypatch):
+    """A policy write that dies part-way leaves the stored policies whole:
+    a torn file would fail every later get_lifecycle."""
+    import json
+
+    from tests.conftest import dying_dump
+
+    put_lifecycle(cat, "logs", policy)
+    monkeypatch.setattr(json, "dump", dying_dump)
+    with pytest.raises(OSError, match="disk full"):
+        put_lifecycle(cat, "metrics", policy)
+    monkeypatch.undo()
+    assert get_lifecycle(cat, "logs") == policy
+    with pytest.raises(IlmError, match="no such ILM policy"):
+        get_lifecycle(cat, "metrics")
+    assert not glob.glob(os.path.join(cat.root, "_ilm_policies.json.tmp-*"))
+
+
 def test_tick_moves_generations_through_phases(cat, spark, policy, tmp_path):
     now = 1_000_000_000.0
     # three rolled-away generations at warm/cold/delete ages + a fresh

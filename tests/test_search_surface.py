@@ -493,6 +493,26 @@ class TestSearchScore:
         assert page1 == [8, 7, 6] and page2 == [5, 4, 3]
         assert "__rn" not in search(corpus, {**body, "from": 3}, id_col="k").columns
 
+    def test_from_plans_one_top_n(self, spark):
+        """``from`` is Spark's Offset folded into the page's top-N: one
+        job, and the root operator is a TakeOrderedAndProject that keeps
+        ``from + size`` rows and skips ``from`` of them — no Window, no
+        exchange."""
+        from elasticsearch_hadoop_spark.search import search
+        from tests.conftest import count_jobs, plan_nodes
+
+        corpus = spark.range(1, 9, numPartitions=3).selectExpr(
+            "id AS k", "id * 10.0 AS price"
+        )
+        body = {"query": {"match_all": {}}, "sort": [{"price": "desc"}], "size": 3, "from": 3}
+        page = search(corpus, body, id_col="k")
+        nodes = plan_nodes(page)
+        assert nodes[0].nodeName() == "TakeOrderedAndProject"
+        assert (nodes[0].limit(), nodes[0].offset()) == (6, 3)
+        assert not {"Window", "Exchange"} & {n.nodeName() for n in nodes}
+        rows, jobs = count_jobs(spark, page.collect)
+        assert [r["k"] for r in rows] == [5, 4, 3] and jobs == 1
+
     def test_min_score_and_field_sort(self, corpus):
         from elasticsearch_hadoop_spark.search import search
 

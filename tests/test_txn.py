@@ -718,6 +718,31 @@ def test_pruned_log_stays_one_manifest_over_many_commits(tmp_path, monkeypatch):
     assert txn.latest(p)[0] == 300 and len(txn.latest(p)[1]) == 150
 
 
+def test_append_claim_reads_one_manifest(tmp_path, monkeypatch):
+    """An append takes the running replace flag from the manifest it builds
+    on, so each claim reads that one manifest, and the flags of a mixed
+    append/replace log are the running OR of its replace commits."""
+    p = str(tmp_path / "t")
+    txn.init_log(p)
+    read = txn.manifest_body
+    reads = []
+
+    def counting(index_path, version):
+        reads.append(version)
+        return read(index_path, version)
+
+    monkeypatch.setattr(txn, "manifest_body", counting)
+    for kind in "aaraa":
+        reads.clear()
+        if kind == "r":
+            v = txn.commit_replace(p, txn.latest(p)[0], txn.new_data_dir(p), rows=0)
+        else:
+            v = txn.commit_append(p, txn.new_data_dir(p), rows=0)
+            assert reads == ([v - 1] if v > 1 else []), (v, reads)
+    monkeypatch.undo()
+    assert [read(p, v)["replaced"] for v in range(1, 6)] == [False, False, True, True, True]
+
+
 def test_claim_in_a_pruned_slot_is_withdrawn(tmp_path):
     """A writer that read the log before pruning may claim a version whose
     manifest was pruned; that claim must lose, not publish a snapshot
