@@ -52,8 +52,9 @@ Supported commands (the documented core; anything else raises):
   variable-free token sequence (the categorize_text agg's documented
   deviation from ES's Drain-style merge applies here too).
 - ``SORT col [ASC|DESC] [NULLS FIRST|NULLS LAST][, ...]``
-- ``LIMIT n`` — clamped to ES's hard result cap,
-  ``esql.query.result_truncation_max_size`` (``RESULT_CAP``, 10,000).
+- ``LIMIT n`` — a final ``LIMIT`` above ES's hard result cap,
+  ``esql.query.result_truncation_max_size`` (``RESULT_CAP``, 10,000),
+  returns 10,000 rows; one that a later command consumes keeps its ``n``.
 - ``KEEP c1, c2`` / ``DROP c1, c2`` (``*`` wildcards per ES|QL)
 - ``RENAME old AS new[, ...]``
 - ``MV_EXPAND col`` — one row per array element (explode).
@@ -95,14 +96,14 @@ Supported commands (the documented core; anything else raises):
   ``normalizer=minmax``.  Non-score columns merge with ``max`` ignoring
   nulls (deterministic; ES keeps the first non-null branch value).
 
-Result size: a pipeline whose result is in a SORT's order (the last
-SORT followed only by WHERE, EVAL, KEEP, DROP, RENAME or LIMIT) gets
-``LIMIT 10000`` appended, as ES appends its cap; the optimizer pushes it
-into the sort, which then plans as one TakeOrderedAndProject (no range
-exchange, no sampling job).  Any other pipeline stays uncapped: a cap
-there would keep arbitrary rows, and a root CollectLimit would run extra
-jobs.  ES's implicit default ``LIMIT 1000`` is NOT applied — results up to
-the cap are returned whole.
+Result size: a pipeline whose last SORT or LIMIT is followed only by
+WHERE, EVAL, KEEP, DROP or RENAME gets ``LIMIT 10000`` appended, as ES
+appends its cap once to the whole query; the optimizer pushes it into
+that sort, which then plans as one TakeOrderedAndProject (no range
+exchange, no sampling job), or merges it with that limit.  Any other
+pipeline stays uncapped: a cap there would keep arbitrary rows, and a
+root CollectLimit would run extra jobs.  ES's implicit default
+``LIMIT 1000`` is NOT applied — results up to the cap are returned whole.
 
 Explicit non-goals (raise "unsupported command", by design):
 
@@ -148,9 +149,9 @@ class EsqlError(ValueError):
 # (``esql.query.result_truncation_max_size``)
 RESULT_CAP = 10_000
 
-# commands after which the rows are still in the last SORT's order (the
-# optimizer pushes a LIMIT through them into that sort)
-_ORDER_KEEPING = {"WHERE", "EVAL", "KEEP", "DROP", "RENAME", "LIMIT"}
+# commands the optimizer pushes a LIMIT through, into the SORT or LIMIT
+# before them
+_CAP_PASSES = {"WHERE", "EVAL", "KEEP", "DROP", "RENAME"}
 
 
 # scalar functions an expression may call (ES|QL name -> Spark SQL name).
@@ -2355,21 +2356,22 @@ def _apply_stages(
     score_requested: bool = False,
     cap: bool = False,
 ) -> DataFrame:
-    """Run ``stage_list`` over ``df``.  With ``cap``, a result left in a
-    SORT's order is limited to ``RESULT_CAP`` rows (module docstring)."""
-    ordered = False
+    """Run ``stage_list`` over ``df``.  With ``cap``, a result whose
+    ``RESULT_CAP`` limit folds into its last SORT or LIMIT gets that limit
+    (module docstring)."""
+    folds = False
     for stage in stage_list:
         stage = stage.strip()
         cm = re.match(r"^([A-Za-z_]+)\b(.*)$", stage, flags=re.S)
         if not cm:
             raise EsqlError(f"bad command: {stage!r}")
         cmd, body = cm.group(1).upper(), cm.group(2).strip()
-        ordered = ordered and cmd in _ORDER_KEEPING
+        folds = folds and cmd in _CAP_PASSES
         if cmd == "WHERE":
             blanked_w = _blank_literals(body)
             if re.search(r"\bKNN\s*\(", blanked_w, flags=re.I):
                 df = _where_knn(df, body)
-                ordered = False
+                folds = False
             elif (
                 score_requested
                 and "_score" in df.columns
@@ -2381,7 +2383,7 @@ def _apply_stages(
                 # carrying its own _score must not get BM25 silently
                 # added); a later DROP _score demotes WHERE to pure filter
                 df = _where_scored(df, body)
-                ordered = False  # the score attach is a join
+                folds = False  # the score attach is a join
             else:
                 df = df.filter(_where_pred(body))
         elif cmd == "EVAL":
@@ -2462,9 +2464,10 @@ def _apply_stages(
                     )
                 order.append(col)
             df = df.orderBy(*order)
-            ordered = True
+            folds = True
         elif cmd == "LIMIT":
-            df = df.limit(min(int(body), RESULT_CAP))
+            df = df.limit(int(body))
+            folds = True
         elif cmd == "KEEP":
             df = df.select(*_expand_cols(df, [c.strip() for c in _split_top(body)]))
         elif cmd == "DROP":
@@ -2612,4 +2615,4 @@ def _apply_stages(
             df = _fuse(df, body)
         else:
             raise EsqlError(f"unsupported command {cmd!r}")
-    return df.limit(RESULT_CAP) if cap and ordered else df
+    return df.limit(RESULT_CAP) if cap and folds else df

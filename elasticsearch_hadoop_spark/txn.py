@@ -184,15 +184,13 @@ def merge_schema_json(stored: dict | None, new: dict | None, last=()) -> dict | 
     return {**stored, "fields": fields}
 
 
-def has_replace_commit(index_path: str, version: int | None = None) -> bool:
-    """True if a commit up to ``version`` (default the newest) was a replace
-    commit (overwrite, merge rewrite, compaction) — the condition under
-    which a file stream over the data pool would deliver duplicates.  Each
-    manifest carries the answer as a running ``replaced`` flag (try_commit
-    writes it), so this reads one manifest however long the log was before
-    pruning.  Raises KeyError for an uncommitted or pruned explicit
-    version."""
-    return _body_at(index_path, version)[1].get("replaced", False)
+def has_replace_commit(index_path: str) -> bool:
+    """True if any commit so far was a replace commit (overwrite, merge
+    rewrite, compaction) — the condition under which a file stream over
+    the data pool would deliver duplicates.  Each manifest carries the
+    answer as a running ``replaced`` flag (try_commit writes it), so this
+    reads one manifest however long the log was before pruning."""
+    return _body_at(index_path)[1].get("replaced", False)
 
 
 def manifest_body(index_path: str, version: int) -> dict:
@@ -259,10 +257,9 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
     size the retention window above the longest write job, the check turns
     a silent corruption into a crash for jobs that overrun it anyway.
 
-    ``meta`` may carry the running ``replaced`` flag when the caller knows
-    it (an append keeps the flag of the manifest it built on); otherwise
-    it is worked out here, reading the predecessor for a non-replace
-    claim, and a pruned predecessor loses the claim.
+    The manifest's running ``replaced`` flag is ``meta``'s ``replaced``
+    (an append keeps the flag of the manifest it built on) or set by a
+    ``replace`` claim above v1.
 
     A claim that lands in a version slot drop_superseded pruned is
     withdrawn and reported lost, like any lost race."""
@@ -280,14 +277,7 @@ def try_commit(index_path: str, version: int, dirs: list[str], meta: dict | None
             f"longer exist (vacuumed mid-write?): {swept}"
         )
     meta = meta or {}
-    replaced = meta.get("replaced")
-    if replaced is None:
-        replaced = bool(meta.get("replace")) and version > 1
-        if version > 1 and not replaced:
-            try:
-                replaced = has_replace_commit(index_path, version - 1)
-            except KeyError:
-                return False  # predecessor pruned: a newer version is committed
+    replaced = bool(meta.get("replaced")) or (bool(meta.get("replace")) and version > 1)
     body = {
         "version": version,
         "dirs": names,

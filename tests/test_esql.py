@@ -1462,6 +1462,20 @@ def test_limit_above_the_cap_returns_10000_rows(spark, many):
     assert [r["v"] for r in rows] == list(range(10_000))
 
 
+def test_limit_above_the_cap_keeps_its_value_before_other_commands(spark, many):
+    """ES caps the query's result once; a LIMIT a later command consumes
+    keeps its own value."""
+    [row] = esql("FROM many | LIMIT 20000 | STATS n = COUNT(*)", tables=many).collect()
+    assert row["n"] == 20_000
+    out = esql("FROM many | LIMIT 20000 | STATS n = COUNT(*) BY t", tables=many)
+    assert sum(r["n"] for r in out.collect()) == 20_000
+    forked = esql(
+        "FROM many | FORK (LIMIT 20000) (WHERE v < 3) | STATS n = COUNT(*) BY _fork",
+        tables=many,
+    )
+    assert {r["_fork"]: r["n"] for r in forked.collect()} == {"fork1": 20_000, "fork2": 3}
+
+
 def test_unsorted_pipeline_returns_every_row(spark, many):
     assert esql("FROM many | WHERE v >= 0 | EVAL w = v + 1", tables=many).count() == 25_000
     assert esql("FROM many | STATS n = COUNT(*) BY g", tables=many).count() == 12_000

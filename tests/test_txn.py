@@ -758,8 +758,8 @@ def test_claim_in_a_pruned_slot_is_withdrawn(tmp_path):
         os.utime(txn._version_file(p, v), (old, old))
     txn.drop_superseded(p, 3)
     assert txn._versions(p) == [3]
-    # an append reads its predecessor before claiming; a replace is caught
-    # after linking by the age of the version above it
+    # either claim links, then is withdrawn: the version above it is
+    # older than the retention window, so its slot was pruned
     assert not txn.try_commit(p, 2, [txn.new_data_dir(p)])
     assert not txn.try_commit(p, 2, [txn.new_data_dir(p)], meta={"replace": True})
     assert txn._versions(p) == [3]
